@@ -996,7 +996,7 @@ object SparkEntry {
         .write.mode("overwrite").parquet(path)
       GraphOps.pageRankWarmStart(
         GraphOps.edgesFromLineitem(li, PrMod),
-        s.read.parquet(path), PrWarmIters)
+        Tables.parquet(s, path), PrWarmIters)
     }),
     // Convergence-driven variant (driver-side scalar L1 stop). Iteration
     // count is data-dependent → no SQL oracle; driver records a
@@ -2226,7 +2226,7 @@ object SparkEntry {
       // Truth from the just-written postings artifact (one row per
       // (doc_id, w) by construction) — not a second corpus tokenize.
       CurationOps.rankEvalMulti(docs, Bm25Queries, tagged, 10,
-        docTerms = Some(s.read.parquet(s"$bmPath/postings")
+        docTerms = Some(Tables.parquet(s, s"$bmPath/postings")
           .select("doc_id", "w")))
     }),
     // Target-mix resampling by language: hash-thresholded downsampling
@@ -2938,7 +2938,7 @@ object SparkEntry {
         .select("l_orderkey", "l_quantity", "l_returnflag", "l_linestatus")
       val out = tmpPath("graft_sink_part", d)
       SinkOps.writeParquet(src, out, partitionBy = Seq("l_returnflag"))
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy("l_returnflag", "l_linestatus").agg(
           AggOps.exactSum(col("l_quantity")).as("sum_qty"),
           count(lit(1)).as("cnt"))
@@ -3419,7 +3419,7 @@ object SparkEntry {
       SinkOps.commitVersion(ld.filter(col("l_orderkey") % 2 === 1), tbl)
       val view = tmpPath("graft_cfivm_view", d)
       JoinOps.writeJoinView(o, SinkOps.readVersion(s, tbl, Some(1)), view)
-      s.read.parquet(view).unionByName(
+      Tables.parquet(s, view).unionByName(
         JoinOps.joinViewRows(o,
           broadcast(SinkOps.readChanges(s, tbl, 1, 3))))
         .groupBy(expr("o_custkey % 10").as("cust_bucket"))
@@ -3545,7 +3545,7 @@ object SparkEntry {
         }
         q.processAllAvailable() // two capped delta batches
       } finally q.stop()
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy((col("l_orderkey") % 7).as("okey_bucket"))
         .agg(count(lit(1)).as("n_rows"),
           AggOps.exactSum(col("l_quantity")).as("sum_qty"),
@@ -3640,7 +3640,7 @@ object SparkEntry {
       } finally q.stop()
       val sign = when(col("_change_type")
         .isin("insert", "update_postimage"), lit(1L)).otherwise(lit(-1L))
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy("event_type")
         .agg(sum(sign).as("cnt"),
           sum(col("value").cast("decimal(28,4)") * sign)
@@ -5101,7 +5101,7 @@ object SparkEntry {
         out, partitionBy = Seq("o_orderpriority"))
       SinkOps.deleteWhere(s, out, "o_orderpriority",
         col("o_custkey") % 97 === 0)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy("o_orderpriority").agg(
           count(lit(1)).as("cnt"),
           AggOps.exactSum(col("o_totalprice")).as("sum_price"),
@@ -5153,7 +5153,7 @@ object SparkEntry {
       val out = tmpPath("graft_sink_zstd", d)
       src.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
         .option("compression", "zstd").parquet(out)
-      s.read.parquet(out)
+      Tables.parquet(s, out)
         .groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           AggOps.exactSum(col("l_quantity")).as("sum_qty"),
@@ -5250,7 +5250,7 @@ object SparkEntry {
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(frag)
       val out = tmpPath("graft_compact_out", d)
       SinkOps.compact(s, frag, out, 4)
-      s.read.parquet(out).groupBy("l_returnflag")
+      Tables.parquet(s, out).groupBy("l_returnflag")
         .agg(count(lit(1)).as("n"),
           AggOps.exactSum(col("l_quantity")).as("sum_qty"))
     }),

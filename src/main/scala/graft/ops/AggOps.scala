@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -646,7 +647,7 @@ object AggOps {
   def hllMergeIncremental(arrivals: DataFrame, key: String,
                           path: String): DataFrame = {
     val spark = arrivals.sparkSession
-    val base = spark.read.parquet(path)
+    val base = Tables.parquet(spark, path)
       .groupBy("bucket").agg(max("reg").as("rb"))
     val arr = hllRegisters(arrivals, key)
       .select(col("bucket"), col("reg").as("ra"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -152,7 +153,7 @@ object BpeOps {
     * n_oov).
     */
   def tokenizeWithVocab(docs: DataFrame, path: String): DataFrame = {
-    val vocab = docs.sparkSession.read.parquet(path + "/vocab")
+    val vocab = Tables.parquet(docs.sparkSession, path + "/vocab")
     docs.select(col("doc_id"),
         explode(split(lower(col("text")), TextOps.WsRegex)).as("w"))
       .filter(col("w").rlike("^[a-z]+$") && length(col("w")) >= 2)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -233,21 +234,18 @@ object CurationOps {
     * past the scan is (doc_id, n_tok) pairs, and that tiny projection is
     * persisted so its two consumers (bucket totals + the layout join)
     * tokenize the corpus once, under the same caller-frees cache contract
-    * as paragraphDedup (cacheCounts=false opts out for long-lived
-    * sessions, re-tokenizing once instead of pinning an entry). Rows with
-    * a NULL doc_id or NULL text are excluded up front (a null id has no
-    * place in a total order; int64 `div` is order-preserving for all
-    * non-null ids, negative included).
+    * as paragraphDedup. Rows with a NULL doc_id or NULL text are
+    * excluded up front (a null id has no place in a total order; int64
+    * `div` is order-preserving for all non-null ids, negative included).
     */
   def packLayout(docs: DataFrame, budget: Long = 256L,
-                 bucketSpan: Long = 1L << 20,
-                 cacheCounts: Boolean = true): DataFrame = {
-    val t0 = docs.filter(col("text").isNotNull && col("doc_id").isNotNull)
+                 bucketSpan: Long = 1L << 20): DataFrame = {
+    val t = docs.filter(col("text").isNotNull && col("doc_id").isNotNull)
       .select(col("doc_id"),
         size(filter(split(col("text"), TextOps.WsRegex), x => x =!= ""))
           .cast("long").as("n_tok"))
       .withColumn("b", expr(s"doc_id div $bucketSpan"))
-    val t = if (cacheCounts) t0.persist() else t0
+      .persist()
     val bw = Window.orderBy("b").rowsBetween(Window.unboundedPreceding, -1)
     val boffs = t.groupBy("b").agg(sum("n_tok").as("bt"))
       .withColumn("boff", coalesce(sum("bt").over(bw), lit(0L)))
@@ -557,13 +555,13 @@ object CurationOps {
         throw new IllegalStateException(
           s"compactBm25Index: rename $tmp -> $live failed")
     }
-    swap(s"$path/postings", spark.read.parquet(s"$path/postings")
+    swap(s"$path/postings", Tables.parquet(spark, s"$path/postings")
       .repartition(targetFiles, col("w")))
-    swap(s"$path/doclen", spark.read.parquet(s"$path/doclen")
+    swap(s"$path/doclen", Tables.parquet(spark, s"$path/doclen")
       .coalesce(targetFiles))
-    swap(s"$path/termdf", spark.read.parquet(s"$path/termdf")
+    swap(s"$path/termdf", Tables.parquet(spark, s"$path/termdf")
       .groupBy("w").agg(sum("df").as("df")).coalesce(targetFiles))
-    swap(s"$path/stats", spark.read.parquet(s"$path/stats")
+    swap(s"$path/stats", Tables.parquet(spark, s"$path/stats")
       .agg(sum("nd").as("nd"), sum("ntok").as("ntok"),
         sum("ndl").as("ndl")))
   }
@@ -583,13 +581,13 @@ object CurationOps {
                       k: Int = 10): DataFrame = {
     val qwords = queries.flatMap(_._2.split(TextOps.WsRegex))
       .filter(_.nonEmpty).distinct
-    val tf = spark.read.parquet(s"$path/postings")
+    val tf = Tables.parquet(spark, s"$path/postings")
       .filter(col("w").isin(qwords: _*))
-    val dfT = spark.read.parquet(s"$path/termdf")
+    val dfT = Tables.parquet(spark, s"$path/termdf")
       .filter(col("w").isin(qwords: _*))
       .groupBy("w").agg(sum("df").as("df"))
-    val dl = spark.read.parquet(s"$path/doclen")
-    val stats = spark.read.parquet(s"$path/stats")
+    val dl = Tables.parquet(spark, s"$path/doclen")
+    val stats = Tables.parquet(spark, s"$path/stats")
       .agg(sum("nd").as("nd"), sum("ntok").as("ntok"),
         sum("ndl").as("ndl"))
       .select(col("nd"), avgdlOf)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -241,7 +242,7 @@ object DedupOps {
     // session and documents the call-after-write contract.
     val spark = known.sparkSession
     GraphOps.connectedComponents(
-        pairsFromBandRows(spark.read.parquet(path + "/bands"), minEst)
+        pairsFromBandRows(Tables.parquet(spark, path + "/bands"), minEst)
           .select(col("doc_a").as("a"), col("doc_b").as("b")))
       .select(col("node").as("doc_id"), col("cluster"))
       .write.mode("overwrite").parquet(path + "/clusters")
@@ -265,8 +266,8 @@ object DedupOps {
   def assignClustersIncremental(arrivals: DataFrame, indexPath: String,
                                 minEst: Double = 0.5): DataFrame = {
     val spark = arrivals.sparkSession
-    val idxBands = spark.read.parquet(indexPath + "/bands")
-    val clusters = spark.read.parquet(indexPath + "/clusters")
+    val idxBands = Tables.parquet(spark, indexPath + "/bands")
+    val clusters = Tables.parquet(spark, indexPath + "/clusters")
       .withColumnRenamed("doc_id", "idx_id")
     val arr = arrivals.filter(col("text").isNotNull)
     val assigned = nearIndexMatches(arr, idxBands, minEst)
@@ -332,7 +333,7 @@ object DedupOps {
       // few partitions and cap the write's parallelism.
       val n = if (targetFiles >= 1) targetFiles
               else graft.ops.SinkOps.derivedFileCount(spark, live)
-      spark.read.parquet(live).distinct().repartition(n)
+      Tables.parquet(spark, live).distinct().repartition(n)
         .write.mode("overwrite").parquet(tmp)
       val liveP = new org.apache.hadoop.fs.Path(live)
       val fs = liveP.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -380,8 +381,8 @@ object DedupOps {
   def dedupMinhashIncremental(arrivals: DataFrame, indexPath: String,
                               minEst: Double = 0.5): DataFrame = {
     val spark = arrivals.sparkSession
-    val idxBands = spark.read.parquet(indexPath + "/bands")
-    val idxDigests = spark.read.parquet(indexPath + "/digests")
+    val idxBands = Tables.parquet(spark, indexPath + "/bands")
+    val idxDigests = Tables.parquet(spark, indexPath + "/digests")
     val arr = arrivals.filter(col("text").isNotNull)
     val near = nearIndexMatches(arr, idxBands, minEst)
       .groupBy("doc_id").agg(count(lit(1)).as("n_near"))
@@ -592,7 +593,7 @@ object DedupOps {
     * (doc_id, idx) and the reassembly agg on doc_id), i.e. the minimum
     * any reassembling dedup must move.
     */
-  def paragraphDedup(paras: DataFrame, cacheOccurrences: Boolean = true): DataFrame = {
+  def paragraphDedup(paras: DataFrame): DataFrame = {
     // The occurrence table feeds two branches (keeper election + probe);
     // persist stops the chunk/explode pipeline running twice. MEMORY_AND_
     // DISK with spill is the standard trade at scale: re-deriving would
@@ -600,13 +601,9 @@ object DedupOps {
     // lazy, so the entry cannot be unpersisted here (unlike GraphOps'
     // loops, which act inside the op) — the caller frees it after its
     // action (`spark.catalog.clearCache()`, as Verify/Bench already do
-    // between queries). Long-lived sessions composing many curation ops
-    // can pass cacheOccurrences=false to trade the double derivation for
-    // zero pinned entries (same escape hatch as dedupBloomPrefilter's
-    // persistIncoming).
-    val occ0 = paras.select(col("doc_id"),
-      posexplode(col("paras")).as(Seq("idx", "para")))
-    val occ = if (cacheOccurrences) occ0.persist() else occ0
+    // between queries).
+    val occ = paras.select(col("doc_id"),
+      posexplode(col("paras")).as(Seq("idx", "para"))).persist()
     val keepers = occ
       .select(md5(col("para")).as("h"), col("doc_id"), col("idx"))
       .groupBy("h").agg(min(struct(col("doc_id"), col("idx"))).as("k"))
@@ -1077,7 +1074,7 @@ object DedupOps {
     */
   def substringDupIncremental(arrivals: DataFrame, path: String,
                               k: Int = 8): DataFrame = {
-    val idx = arrivals.sparkSession.read.parquet(path + "/grams")
+    val idx = Tables.parquet(arrivals.sparkSession, path + "/grams")
     dupSpanTail(gramPositions(arrivals, k), idx.select("sh"))
   }
 
@@ -1098,7 +1095,7 @@ object DedupOps {
       .select(col("doc_id"),
         size(filter(split(col("text"), TextOps.WsRegex), x => x =!= ""))
           .cast("long").as("n_tok"))
-    val clusters = known.sparkSession.read.parquet(path + "/clusters")
+    val clusters = Tables.parquet(known.sparkSession, path + "/clusters")
       .select(col("doc_id").as("node"), col("cluster"))
     val elected = clusters.join(toks, clusters("node") === toks("doc_id"))
       .groupBy("cluster")
@@ -1140,7 +1137,7 @@ object DedupOps {
     */
   def canonicalIncremental(arrivals: DataFrame,
                            indexPath: String): DataFrame = {
-    val led = arrivals.sparkSession.read.parquet(indexPath + "/canonicals")
+    val led = Tables.parquet(arrivals.sparkSession, indexPath + "/canonicals")
     val arrTok = arrivals.filter(col("text").isNotNull)
       .select(col("doc_id"),
         size(filter(split(col("text"), TextOps.WsRegex), x => x =!= ""))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -789,7 +790,7 @@ object GraphOps {
     val t3 = triangleCounts(
         delta.select(col("a").as("src"), col("b").as("dst")))
       .agg(coalesce(expr("sum(n_tri) div 3"), lit(0L)).as("t3"))
-    spark.read.parquet(basePath)
+    Tables.parquet(spark, basePath)
       .crossJoin(t1).crossJoin(t2).crossJoin(t3)
       .select(col("t_base"), col("t1"), col("t2"), col("t3"),
         (col("t_base") + col("t1") + col("t2") + col("t3"))

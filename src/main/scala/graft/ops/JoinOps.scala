@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -267,7 +268,7 @@ object JoinOps {
                      lBase: DataFrame, lDelta: DataFrame,
                      viewPath: String): DataFrame = {
     val spark = oBase.sparkSession
-    val stored = spark.read.parquet(viewPath)
+    val stored = Tables.parquet(spark, viewPath)
     val delta = joinViewRows(broadcast(oDelta), lBase)
       .unionByName(joinViewRows(oBase, broadcast(lDelta)))
       .unionByName(joinViewRows(broadcast(oDelta), lDelta))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -558,7 +559,7 @@ object MultimodalOps {
     */
   def imageNearDupIncremental(arrivalFps: DataFrame, indexPath: String,
                               maxHamming: Int = 3): DataFrame = {
-    val idx = arrivalFps.sparkSession.read.parquet(indexPath + "/bands")
+    val idx = Tables.parquet(arrivalFps.sparkSession, indexPath + "/bands")
     val near = ahashBandRows(arrivalFps).as("x").join(idx.as("y"),
         col("x.band") === col("y.band") && col("x.bk") === col("y.bk"))
       .select(col("x.asset_id").as("asset_id"),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -453,9 +454,9 @@ object SimilarityOps {
   def ivfProbeIncremental(queries: DataFrame, indexPath: String,
                           k: Int = 10): DataFrame = {
     val spark = queries.sparkSession
-    val cent = spark.read.parquet(indexPath + "/centroids")
-    val assign = spark.read.parquet(indexPath + "/assign")
-    val idxV = spark.read.parquet(indexPath + "/vectors")
+    val cent = Tables.parquet(spark, indexPath + "/centroids")
+    val assign = Tables.parquet(spark, indexPath + "/assign")
+    val idxV = Tables.parquet(spark, indexPath + "/vectors")
       .select(col("vec_id"), col("qv").as("vv"), col("n2").as("vn2"))
       .dropDuplicates("vec_id")
     val q = withQuant(queries).filter(col("n2") > 0)
@@ -586,8 +587,8 @@ object SimilarityOps {
   def pqProbeIncremental(queries: DataFrame, indexPath: String,
                          k: Int = 10): DataFrame = {
     val spark = queries.sparkSession
-    val cb = spark.read.parquet(indexPath + "/codebooks")
-    val codes = spark.read.parquet(indexPath + "/codes")
+    val cb = Tables.parquet(spark, indexPath + "/codebooks")
+    val codes = Tables.parquet(spark, indexPath + "/codes")
       .dropDuplicates("vec_id", "m")
     val q = withQuant(queries).filter(col("n2") > 0)
     val qdt = subVectors(q).join(broadcast(cb), "m")
@@ -699,7 +700,7 @@ object SimilarityOps {
     * shuffles raw vectors.
     */
   def applyScaler(emb: DataFrame, path: String): DataFrame = {
-    val sc = broadcast(emb.sparkSession.read.parquet(path + "/scaler"))
+    val sc = broadcast(Tables.parquet(emb.sparkSession, path + "/scaler"))
     emb.select(col("vec_id"),
         posexplode(quantize(col("embedding"))).as(Seq("dim", "q")))
       .select(col("vec_id"), col("dim").cast("long").as("dim"), col("q"))
@@ -816,13 +817,13 @@ object SimilarityOps {
           s"compactEmbedIndex: rename $tmp -> $live failed")
     }
     val vLive = path + "/vectors"
-    swap(vLive, spark.read.parquet(vLive).distinct()
+    swap(vLive, Tables.parquet(spark, vLive).distinct()
       .repartition(files(vLive)))
     // One exchange: hash-partitioning on exactly (t, bucket) satisfies
     // the occ window's required clustering, so the repartition both
     // sizes the write and feeds the window without a second shuffle.
     val bLive = path + "/buckets"
-    val b = spark.read.parquet(bLive)
+    val b = Tables.parquet(spark, bLive)
       .select("vec_id", "t", "bucket").distinct()
       .repartition(files(bLive), col("t"), col("bucket"))
     swap(bLive, b.withColumn("occ",
@@ -840,13 +841,13 @@ object SimilarityOps {
                                 minCos: Double, maxBucket: Int,
                                 tables: Int, planes: Int): DataFrame = {
     val spark = arr.sparkSession
-    val idxB = spark.read.parquet(indexPath + "/buckets")
+    val idxB = Tables.parquet(spark, indexPath + "/buckets")
       .filter(col("occ") <= maxBucket)
       .select(col("vec_id").as("idx_id"), col("t"), col("bucket"))
     // dropDuplicates: a replayed append (task retry) may land the same
     // vector twice; a duplicated join key would duplicate match rows.
     // vec_id-keyed, linear.
-    val idxV = spark.read.parquet(indexPath + "/vectors")
+    val idxV = Tables.parquet(spark, indexPath + "/vectors")
       .select(col("vec_id").as("idx_id"), col("qv").as("qb"),
         col("n2").as("nb"))
       .dropDuplicates("idx_id")
@@ -881,14 +882,14 @@ object SimilarityOps {
     // snapshot (spec-pinned); `known` identifies the session and
     // documents the call-after-write contract.
     val spark = known.sparkSession
-    val bo = spark.read.parquet(path + "/buckets")
+    val bo = Tables.parquet(spark, path + "/buckets")
       .filter(col("occ") <= maxBucket)
     val pairs = bo.as("x").join(bo.as("y"),
         col("x.t") === col("y.t") && col("x.bucket") === col("y.bucket") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
       .distinct()
-    val v = spark.read.parquet(path + "/vectors")
+    val v = Tables.parquet(spark, path + "/vectors")
     val va = v.select(col("vec_id").as("vec_a"), col("qv").as("qa"),
       col("n2").as("na"))
     val vb = v.select(col("vec_id").as("vec_b"), col("qv").as("qb"),
@@ -915,7 +916,7 @@ object SimilarityOps {
   def assignEmbedClustersIncremental(arrivals: DataFrame, indexPath: String,
                                      minCos: Double = 0.95): DataFrame = {
     val spark = arrivals.sparkSession
-    val clusters = spark.read.parquet(indexPath + "/clusters")
+    val clusters = Tables.parquet(spark, indexPath + "/clusters")
       .withColumnRenamed("vec_id", "idx_id")
     val arr = withQuant(arrivals).filter(col("n2") > 0)
     val assigned = embedIndexMatches(arr, indexPath, minCos,

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -96,7 +97,7 @@ object SinkOps {
   def compact(spark: org.apache.spark.sql.SparkSession, inPath: String,
               outPath: String, targetFiles: Int): Unit = {
     require(targetFiles >= 1)
-    spark.read.parquet(inPath).repartition(targetFiles)
+    Tables.parquet(spark, inPath).repartition(targetFiles)
       .write.mode(SaveMode.Overwrite).parquet(outPath)
   }
 
@@ -153,7 +154,7 @@ object SinkOps {
                   forget: org.apache.spark.sql.Column): Unit = {
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val t = s2.read.parquet(path)
+    val t = Tables.parquet(s2, path)
     val affected = t.filter(forget).select(partitionCol).distinct()
       .localCheckpoint(true)
     val survivors = t.join(broadcast(affected), Seq(partitionCol))
@@ -455,7 +456,7 @@ object SinkOps {
       s"data/c${java.util.UUID.randomUUID.toString.replace("-", "").take(12)}"
     val dataP = new org.apache.hadoop.fs.Path(root, dataDir)
     df.write.mode(SaveMode.Overwrite).parquet(dataP.toString)
-    val staged = spark.read.parquet(dataP.toString)
+    val staged = Tables.parquet(spark, dataP.toString)
     val bad = QualityOps.check(staged, keyCol, constraints)
       .filter(col("n_violations") > 0L)
       .collect() // bounded: at most one row per declared constraint
@@ -632,7 +633,7 @@ object SinkOps {
       s"stats columns must be non-empty and distinct: $cols")
     requireUntaggedNames(cols, "stats")
     val dirP = new org.apache.hadoop.fs.Path(root, dataDir)
-    val df = spark.read.parquet(dirP.toString)
+    val df = Tables.parquet(spark, dirP.toString)
     val kinds = cols.map { c =>
       df.schema(c).dataType match {
         case org.apache.spark.sql.types.StringType => StatKindStr
@@ -1946,9 +1947,8 @@ object SinkOps {
                               mergeSchema: Boolean): DataFrame = {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def read(ds: Seq[String]) =
-      spark.read.option("mergeSchema", mergeSchema.toString)
-        .parquet(ds.map(d =>
-          new org.apache.hadoop.fs.Path(root, d).toString): _*)
+      Tables.parquet(spark, Map("mergeSchema" -> mergeSchema.toString),
+        ds.map(d => new org.apache.hadoop.fs.Path(root, d).toString))
     val (parted, flat) =
       dirs.partition(d => readDirParts(fs, root, d).nonEmpty)
     if (parted.isEmpty) read(dirs)
@@ -1996,7 +1996,7 @@ object SinkOps {
             else acc
           } else {
             val (ddir, keyCol) = deleteParts(op)
-            acc.join(broadcast(spark.read.parquet(
+            acc.join(broadcast(Tables.parquet(spark,
                 new org.apache.hadoop.fs.Path(root, ddir).toString)
               .select(keyCol)), Seq(keyCol), "left_anti")
           }
@@ -2338,7 +2338,7 @@ object SinkOps {
         val keyCol = deleteParts(r.head)._2
         val delDir = s"deletes/v$v" + (if (nNew == 0) "" else s"-$nNew")
         nNew += 1
-        spark.read.parquet(r.map(l =>
+        Tables.parquet(spark, r.map(l =>
             new org.apache.hadoop.fs.Path(root, deleteParts(l)._1)
               .toString): _*)
           .distinct().write.mode(SaveMode.Overwrite)
@@ -2376,7 +2376,7 @@ object SinkOps {
     val keyCols = added.map(_._2).distinct
     require(keyCols.size == 1,
       s"mixed delete key columns in window: ${keyCols.mkString(", ")}")
-    spark.read.parquet(added.map(d =>
+    Tables.parquet(spark, added.map(d =>
         new org.apache.hadoop.fs.Path(root, d._1).toString): _*)
       .distinct()
   }
@@ -2990,11 +2990,10 @@ object SinkOps {
                          groups: Seq[(Seq[String], Seq[(String, String)])],
                          mergeSchema: Boolean = false): DataFrame =
     groups.filter(_._1.nonEmpty).map { case (files, dels) =>
-      dels.foldLeft(spark.read
-          .option("mergeSchema", mergeSchema.toString)
-          .parquet(files: _*)) {
+      dels.foldLeft(Tables.parquet(spark,
+          Map("mergeSchema" -> mergeSchema.toString), files)) {
         case (acc, (ddir, keyCol)) =>
-          acc.join(broadcast(spark.read.parquet(
+          acc.join(broadcast(Tables.parquet(spark,
               new org.apache.hadoop.fs.Path(root, ddir).toString)
             .select(keyCol)), Seq(keyCol), "left_anti")
       }
@@ -3595,12 +3594,12 @@ object SinkOps {
         // partition columns Spark strips into the directory names.
         val dfs = reads.groupBy(_.base).toSeq.sortBy(_._1.toString)
           .map { case (base, leaves) =>
-            spark.read.option("basePath", base.toString)
-              .parquet(leaves.map(_.leaf.toString): _*)
+            Tables.parquet(spark, Map("basePath" -> base.toString),
+              leaves.map(_.leaf.toString))
           }
         Some(dels.foldLeft(dfs.reduce(_.unionByName(_))) {
           case (acc, (ddir, keyCol)) =>
-            acc.join(broadcast(spark.read.parquet(
+            acc.join(broadcast(Tables.parquet(spark,
                 new org.apache.hadoop.fs.Path(root, ddir).toString)
               .select(keyCol)), Seq(keyCol), "left_anti")
         })
@@ -3835,12 +3834,12 @@ object SinkOps {
       else {
         val dfs = reads.groupBy(_._1).toSeq.sortBy(_._1.toString)
           .map { case (base, files) =>
-            spark.read.option("basePath", base.toString)
-              .parquet(files.map(_._2): _*)
+            Tables.parquet(spark, Map("basePath" -> base.toString),
+              files.map(_._2))
           }
         Some(dels.foldLeft(dfs.reduce(_.unionByName(_))) {
           case (acc, (ddir, keyCol)) =>
-            acc.join(broadcast(spark.read.parquet(
+            acc.join(broadcast(Tables.parquet(spark,
                 new org.apache.hadoop.fs.Path(root, ddir).toString)
               .select(keyCol)), Seq(keyCol), "left_anti")
         })
@@ -3975,7 +3974,7 @@ object SinkOps {
       val read = dels.foldLeft(readDirsGrouped(spark, root, dirs,
           mergeSchema = false)) {
         case (df, (ddir, keyCol)) =>
-          df.join(broadcast(spark.read.parquet(
+          df.join(broadcast(Tables.parquet(spark,
               new org.apache.hadoop.fs.Path(root, ddir).toString)
             .select(keyCol)), Seq(keyCol), "left_anti")
       }
@@ -4160,7 +4159,7 @@ object SinkOps {
     // (which ANSI-refuses strings) — point lookups on URLs/doc ids
     // are exactly what a dedup/decontam pipeline probes. Header tags
     // the column `name#str` so probes know to hash, not cast.
-    val src0 = spark.read.parquet(dirStr)
+    val src0 = Tables.parquet(spark, dirStr)
     val isStr = cols.map { c =>
       src0.schema(c).dataType match {
         case org.apache.spark.sql.types.StringType => true
@@ -5042,7 +5041,7 @@ object SinkOps {
           mergeSchema = false))
       val touched =
         if (delLines.isEmpty) None
-        else Some(spark.read.parquet(delLines.map(dl =>
+        else Some(Tables.parquet(spark, delLines.map(dl =>
             new org.apache.hadoop.fs.Path(root, dl._1).toString): _*)
           .distinct())
       (post, touched) match {
@@ -5169,7 +5168,7 @@ object SinkOps {
     val s2 = docs.sparkSession
     docs.withColumn("shard", pmod(col("doc_id"), lit(shards)))
       .write.mode(SaveMode.Overwrite).partitionBy("shard").parquet(path)
-    s2.read.parquet(path)
+    Tables.parquet(s2, path)
       .withColumn("shard_path",
         regexp_extract(input_file_name(), "shard=(\\d+)", 1).cast("long"))
       .groupBy(col("shard_path").as("shard"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -345,7 +346,7 @@ object TextStatsOps {
     */
   def scoreWithClassifier(docs: DataFrame, path: String,
                           posLang: String = "en"): DataFrame = {
-    val wts = docs.sparkSession.read.parquet(path + "/weights")
+    val wts = Tables.parquet(docs.sparkSession, path + "/weights")
     alphaToks(docs).join(wts, Seq("w"), "left")
       .groupBy("doc_id", "lang").agg(
         count(lit(1)).as("n_toks"),
@@ -389,7 +390,7 @@ object TextStatsOps {
     * O(training corpus).
     */
   def scoreWithLm(docs: DataFrame, path: String): DataFrame = {
-    val model = docs.sparkSession.read.parquet(path + "/bigrams")
+    val model = Tables.parquet(docs.sparkSession, path + "/bigrams")
     docs.select(col("doc_id"),
         explode(DedupOps.shingleArr(col("text"), 2)).as("g"))
       .groupBy("doc_id", "g").agg(count(lit(1)).as("cnt"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -260,7 +261,7 @@ object UnigramOps {
     * n_chars, n_tokens, n_oov).
     */
   def tokenizeWithPieces(docs: DataFrame, path: String): DataFrame = {
-    val pieces = docs.sparkSession.read.parquet(path + "/pieces")
+    val pieces = Tables.parquet(docs.sparkSession, path + "/pieces")
       .select(col("piece").as("p"), col("sc_ppm").as("sc"))
     val inst = docs.select(col("doc_id"),
         explode(split(lower(col("text")), TextOps.WsRegex)).as("w"))
@@ -372,7 +373,7 @@ object UnigramOps {
     * n_tokens, n_oov).
     */
   def wordpieceWithPieces(docs: DataFrame, path: String): DataFrame = {
-    val pieces = docs.sparkSession.read.parquet(path + "/pieces")
+    val pieces = Tables.parquet(docs.sparkSession, path + "/pieces")
       .select(col("piece").as("p"), col("sc_ppm").as("sc"))
     val inst = docs.select(col("doc_id"),
         explode(split(lower(col("text")), TextOps.WsRegex)).as("w"))

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -249,7 +250,7 @@ object StreamOps {
       parted.write.mode("overwrite").parquet(stagingDir)
     }
     val rs = replaySession(spark)
-    val staged = rs.read.parquet(stagingDir)
+    val staged = Tables.parquet(rs, stagingDir)
     val stream = rs.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", replayFilesPerTrigger(spark))
       .parquet(stagingDir)
@@ -448,7 +449,7 @@ object StreamOps {
 
     def runPhase(): Unit = {
       val rs = replaySession(spark)
-      val schema = rs.read.parquet(stagedDir).schema
+      val schema = Tables.parquet(rs, stagedDir).schema
       val stream = rs.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(liveDir)
         .withColumn("ts", timestamp_micros(col("tus")))
@@ -475,7 +476,7 @@ object StreamOps {
       reveal(1)
       runPhase() // late batch: every row below the restored watermark
     }
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
       .select(unix_micros(col("w_start")).as("w_start_us"),
         col("event_type"), col("n"), col("sum_value"))
   }
@@ -488,7 +489,7 @@ object StreamOps {
     if (StagedDirs.add(stagingDir))
       stageTimeSlices(events, stagingDir, gapUs, nSlices)
     val rs = replaySession(spark)
-    val staged = rs.read.parquet(stagingDir)
+    val staged = Tables.parquet(rs, stagingDir)
     // Time-ordered slices + the replay horizon make batch granularity
     // result-neutral here too (merging ADJACENT ordered slices keeps
     // cross-batch arrival order; gap evidence closes the same sessions
@@ -563,7 +564,7 @@ object StreamOps {
     def runPhase(): Unit = {
       import spark.implicits._
       val rs = replaySession(spark)
-      val schema = rs.read.parquet(stagedDir).schema
+      val schema = Tables.parquet(rs, stagedDir).schema
       val stream = rs.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(liveDir)
       val result = sessionizeStateful(
@@ -584,7 +585,7 @@ object StreamOps {
       reveal(nSlices / 2 until nSlices)
       runPhase() // phase 2: NEW query restored from the checkpoint
     }
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
       .select(col("user_id"), col("start_us"), col("end_us"), col("n_events"))
   }
 
@@ -751,7 +752,7 @@ object StreamOps {
       }
       rm(build)
     }
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     // AtomicReference, not a var: foreachBatch runs on the stream's
@@ -864,7 +865,7 @@ object StreamOps {
                             boundaries: Seq[Long]): DataFrame = {
     val spark = arrivals.sparkSession
     stageSlices(arrivals, stagingDir, "doc_id", boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val verdicts = new java.util.concurrent.atomic.AtomicReference(
@@ -878,7 +879,7 @@ object StreamOps {
         v.select(col("doc_id"), col("cluster"))
           .write.mode(SaveMode.Append).parquet(indexPath + "/clusters")
         // Ledger upsert: old ledger pinned eagerly, then overwritten.
-        val led = spark.read.parquet(indexPath + "/canonicals")
+        val led = Tables.parquet(spark, indexPath + "/canonicals")
           .localCheckpoint(true)
         val bestArr = v.groupBy("cluster")
           .agg(max(struct(col("n_tok"), (-col("doc_id")).as("neg"),
@@ -927,7 +928,7 @@ object StreamOps {
                             boundaries: Seq[Long]): DataFrame = {
     val spark = docs.sparkSession
     stageSlices(docs, stagingDir, "doc_id", boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val verdicts = new java.util.concurrent.atomic.AtomicReference(
@@ -976,7 +977,7 @@ object StreamOps {
                       boundaries: Seq[Long]): DataFrame = {
     val spark = queries.sparkSession
     stageSlices(queries, stagingDir, "q_id", boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val results = new java.util.concurrent.atomic.AtomicReference(
@@ -1046,7 +1047,7 @@ object StreamOps {
                                append: DataFrame => Unit): DataFrame = {
     val spark = arrivals.sparkSession
     stageSlices(arrivals, stagingDir, idCol, boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val verdicts = new java.util.concurrent.atomic.AtomicReference(
@@ -1099,7 +1100,7 @@ object StreamOps {
     graft.ops.JoinOps.writeJoinView(oDim, lBase,
       s"$viewPath/batch=base")
     stageSlices(lDelta, stagingDir, "l_orderkey", boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val q = stream.writeStream
@@ -1134,7 +1135,7 @@ object StreamOps {
     */
   private[graft] def readIvmView(spark: org.apache.spark.sql.SparkSession,
                           viewPath: String): DataFrame =
-    spark.read.parquet(viewPath).drop("batch")
+    Tables.parquet(spark, viewPath).drop("batch")
 
   /** Streaming sink into a MANIFEST-VERSIONED table — each micro-batch
     * commits as its own snapshot version (SinkOps.commitVersion), so
@@ -1158,7 +1159,7 @@ object StreamOps {
     root.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(root, true)
     stageSlices(rows, stagingDir, idCol, boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val q = stream.writeStream
@@ -1192,7 +1193,7 @@ object StreamOps {
     root.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(root, true)
     stageSlices(rows, stagingDir, idCol, boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val q = stream.writeStream
@@ -1226,7 +1227,7 @@ object StreamOps {
     root.getFileSystem(spark.sessionState.newHadoopConf())
       .delete(root, true)
     stageSlices(rows, stagingDir, idCol, boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val q = stream.writeStream
@@ -1272,7 +1273,7 @@ object StreamOps {
       .delete(root, true)
     graft.ops.SinkOps.commitVersion(base, tablePath)
     stageSlices(batches, stagingDir, "bseq", boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val q = stream.writeStream
@@ -1372,7 +1373,7 @@ object StreamOps {
         val delta = lines.filterNot(seen.containsKey)
         lines.foreach(seen.put(_, true))
         if (delta.nonEmpty) {
-          val rows = spark.read.parquet(delta.map(d =>
+          val rows = Tables.parquet(spark, delta.map(d =>
             new org.apache.hadoop.fs.Path(root, d).toString): _*)
           ivmBatchAppend(oDim, viewPath, batchId, rows)
         }
@@ -1399,7 +1400,7 @@ object StreamOps {
                        idCol: String, boundaries: Seq[Long]): DataFrame = {
     val spark = left.sparkSession
     stageSlices(left, stagingDir, idCol, boundaries)
-    val staged = spark.read.parquet(stagingDir)
+    val staged = Tables.parquet(spark, stagingDir)
     val stream = spark.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val acc = new java.util.concurrent.atomic.AtomicReference(
@@ -1536,7 +1537,7 @@ object StreamOps {
       rm(build)
     }
     val rs = replaySession(spark)
-    val schema = rs.read.parquet(stagingDir).schema
+    val schema = Tables.parquet(rs, stagingDir).schema
     // Collapsed cadence is safe here despite the FINITE watermark:
     // slices are value-partitioned by time, so merging ADJACENT slices
     // keeps every batch's min event time at or above the previous
@@ -1623,7 +1624,7 @@ object StreamOps {
       rm(build)
     }
     val rs = replaySession(spark)
-    val schema = rs.read.parquet(stagingDir).schema
+    val schema = Tables.parquet(rs, stagingDir).schema
     // Collapsed cadence is safe here despite the FINITE watermark:
     // slices are value-partitioned by time, so merging ADJACENT slices
     // keeps every batch's min event time at or above the previous
@@ -1698,7 +1699,7 @@ object StreamOps {
     // the paired set is batch-granularity-independent — the collapsed
     // cadence applies.
     def src(dir: String) = {
-      val staged = rs.read.parquet(dir)
+      val staged = Tables.parquet(rs, dir)
       rs.readStream.schema(staged.schema)
         .option("maxFilesPerTrigger", replayFilesPerTrigger(spark))
         .parquet(dir)
@@ -1829,7 +1830,7 @@ object StreamOps {
       writeSliceFile(sentinel, stagingDir, 1)
     }
     val rs = replaySession(spark)
-    val schema = rs.read.parquet(stagingDir).schema
+    val schema = Tables.parquet(rs, stagingDir).schema
     val stream = rs.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
       .withColumn("ts", timestamp_micros(col("tus")))
@@ -1872,7 +1873,7 @@ object StreamOps {
       writeSliceFile(sentinel, stagingDir, 1)
     }
     val rs = replaySession(spark)
-    val schema = rs.read.parquet(stagingDir).schema
+    val schema = Tables.parquet(rs, stagingDir).schema
     val stream = rs.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
       .withColumn("ts", timestamp_micros(col("tus")))
@@ -1884,7 +1885,7 @@ object StreamOps {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally q.stop()
-    spark.read.parquet(outDir)
+    Tables.parquet(spark, outDir)
       .filter(col("event_type") =!= "sentinel")
       .select(unix_micros(col("w_start")).as("w_start_us"),
         col("event_type"), col("n"), col("sum_value"))
@@ -1915,7 +1916,7 @@ object StreamOps {
     // parent session's overwrite mode is never touched.
     val rs = replaySession(spark)
     rs.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val schema = rs.read.parquet(stagingDir).schema
+    val schema = Tables.parquet(rs, stagingDir).schema
     // Per-batch partials fold to the same totals at any granularity
     // (sum of partials is associative; batch_id is bookkeeping the
     // read-back aggregates away) — the collapsed cadence applies.
@@ -1941,10 +1942,10 @@ object StreamOps {
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     try q.awaitTermination() finally q.stop()
-    val a = spark.read.parquet(outRaw).groupBy("event_type")
+    val a = Tables.parquet(spark, outRaw).groupBy("event_type")
       .agg(count(lit(1)).as("n_raw"),
         sum(col("value").cast("decimal(28,4)")).cast("double").as("sum_raw"))
-    val b = spark.read.parquet(outAgg).groupBy("event_type")
+    val b = Tables.parquet(spark, outAgg).groupBy("event_type")
       .agg(sum("pn").as("n_agg"),
         sum("psum").cast("double").as("sum_agg"))
     a.join(b, "event_type")

@@ -1,18 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 object DumpPlans {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // full graft SQL surface incl. the DML parser, as GraftSession —
-      // the SQL-tier queries parse DML at plan-dump time too
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.ansi.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = "32")
     val d = "/root/testdata/sf0.1"
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of headline queries (sf0.1)\n\n")
