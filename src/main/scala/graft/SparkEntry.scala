@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.ops._
+import graft.ops.SinkOps.SkipPred._
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -3093,7 +3094,8 @@ object SparkEntry {
             .repartitionByRange(4, col("event_id")),
           path, carryForward = true, statsCol = Some("event_id")); ()
       }
-      SinkOps.readVersionWhere(s, path, 100L, 299L)
+      SinkOps.readVersionWhere(s, path,
+          Seq(LongRange("event_id", 100L, 299L)))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
     // STRING ZONE MAPS (r15) — file skipping on a STRING clustering
@@ -3118,7 +3120,8 @@ object SparkEntry {
             .repartitionByRange(4, col("event_type")),
           path, carryForward = true, statsCol = Some("event_type")); ()
       }
-      SinkOps.readVersionWhereString(s, path, "event_type", "e", "s")
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringRange("event_type", "e", "s")))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"), sum("user_id").as("user_sum"))
     }),
@@ -3148,7 +3151,7 @@ object SparkEntry {
         max(unix_micros(col("ts").cast("timestamp")))).head()
       val (mnUs, mxUs) = (b.getLong(0), b.getLong(1))
       val (lo, hi) = (mnUs + (mxUs - mnUs) / 4, mnUs + (mxUs - mnUs) / 2)
-      SinkOps.readVersionWhereTs(s, path, "ts", lo, hi)
+      SinkOps.readVersionWhere(s, path, Seq(MicrosRange("ts", lo, hi)))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"), sum("user_id").as("user_sum"),
           min(unix_micros(col("ts").cast("timestamp"))).as("min_us"),
@@ -3179,9 +3182,9 @@ object SparkEntry {
       val b = ev.agg(min("event_id"), max("event_id")).head()
       val (mnId, mxId) = (b.getLong(0), b.getLong(1))
       val (lo, hi) = (mnId + (mxId - mnId) / 4, mnId + (mxId - mnId) / 2)
-      SinkOps.readVersionPartsWhereStats(s, path,
-          Seq("event_type" -> Seq("click", "view")),
-          Seq(("event_id", lo, hi)))
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringIn("event_type", Seq("click", "view")),
+            LongRange("event_id", lo, hi)))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"), sum("user_id").as("user_sum"),
           sum("event_id").as("id_sum"))
@@ -3205,8 +3208,9 @@ object SparkEntry {
         Seq("event_type"), bloomCols = Seq("event_id"))
       val probe = ev.filter(col("event_type") === "click")
         .agg(min("event_id")).head().getLong(0)
-      SinkOps.readVersionPartsEq(s, path,
-          Seq("event_type" -> Seq("click", "view")), "event_id", probe)
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringIn("event_type", Seq("click", "view")),
+            LongIn("event_id", Seq(probe))))
         .select("event_id", "user_id", "event_type", "value")
     }),
     // STRING BLOOM POINT LOOKUP (r15) — the key class a dedup /
@@ -3228,7 +3232,7 @@ object SparkEntry {
       SinkOps.commitVersionBloom(docs.repartition(8), path, "url")
       val probe = docs.filter(col("doc_id") === 7L)
         .select("url").collect().head.getString(0)
-      SinkOps.readVersionEqString(s, path, "url", probe)
+      SinkOps.readVersionWhere(s, path, Seq(StringIn("url", Seq(probe))))
         .select("doc_id", "lang", "n_chars")
     }),
     // DV-AWARE ZONE-MAP SKIP — file skipping on a table a CDC merge
@@ -3254,7 +3258,8 @@ object SparkEntry {
       SinkOps.deleteVersionKeys(
         ev.filter(col("event_id") % 7 === 0).select("event_id"),
         path, "event_id")
-      SinkOps.readVersionWhere(s, path, 100L, 299L)
+      SinkOps.readVersionWhere(s, path,
+          Seq(LongRange("event_id", 100L, 299L)))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
     // HIVE-PARTITION PRUNING on a versioned table under a live DV —
@@ -3280,8 +3285,8 @@ object SparkEntry {
       SinkOps.deleteVersionKeys(
         ev.filter(col("event_id") % 7 === 0).select("event_id"),
         path, "event_id")
-      SinkOps.readVersionPartIn(s, path, "event_type",
-          Seq("click", "purchase"))
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringIn("event_type", Seq("click", "purchase"))))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
     // NESTED (multi-column) hive partitioning — the Iceberg
@@ -3304,9 +3309,9 @@ object SparkEntry {
       SinkOps.commitVersionPartitionedCols(
         ev.filter(col("event_id") % 3 === 1), path,
         Seq("event_type", "vbkt"))
-      SinkOps.readVersionPartsWhere(s, path,
-          Seq("event_type" -> Seq("click", "view"),
-            "vbkt" -> Seq("1", "3")))
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringIn("event_type", Seq("click", "view")),
+            StringIn("vbkt", Seq("1", "3"))))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
     // PARTITION-SPEC EVOLUTION (round 14) — the table moves from
@@ -3329,9 +3334,9 @@ object SparkEntry {
       SinkOps.commitVersionPartitionedCols(
         ev.filter(col("event_id") % 2 === 1), path,
         Seq("event_type", "vbkt"))
-      SinkOps.readVersionPartsWhere(s, path,
-          Seq("event_type" -> Seq("click", "view"),
-            "vbkt" -> Seq("1", "3")))
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringIn("event_type", Seq("click", "view")),
+            StringIn("vbkt", Seq("1", "3"))))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
     // METADATA-ONLY grouped partition counts through SQL: the parts
@@ -3713,8 +3718,8 @@ object SparkEntry {
         path, tmpPath("graft_spart_stage", d), "event_id",
         Seq(lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3),
         Seq("event_type"))
-      SinkOps.readVersionPartIn(s, path, "event_type",
-          Seq("click", "signup"))
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringIn("event_type", Seq("click", "signup"))))
         .agg(count(lit(1)).as("n_rows"),
           sum("event_id").as("id_sum"))
         .select(col("n_rows"), col("id_sum"),
@@ -3738,8 +3743,8 @@ object SparkEntry {
         .withColumn("value", col("value") + 1000.0)
         .unionByName(ev.filter(col("event_id") % 6 === 1))
       SinkOps.mergeVersion(upd, path, "event_id")
-      SinkOps.readVersionPartIn(s, path, "event_type",
-          Seq("purchase", "view"))
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringIn("event_type", Seq("purchase", "view"))))
         .select(col("event_id"), col("event_type"), col("value"))
     }),
     // STREAMING DELTA-MANIFEST SINK — the production pairing: a
@@ -3820,7 +3825,7 @@ object SparkEntry {
           path, "event_id"); ()
       }
       val probe = e.agg(max("event_id")).head().getLong(0)
-      SinkOps.readVersionEq(s, path, probe)
+      SinkOps.readVersionWhere(s, path, Seq(LongIn("event_id", Seq(probe))))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
     // MULTI-COLUMN BLOOMS — a conjunction of point probes on TWO
@@ -3844,8 +3849,8 @@ object SparkEntry {
       val eMax = e.agg(max("event_id")).head().getLong(0)
       val u = e.filter(col("event_id") === eMax)
         .agg(min("user_id")).head().getLong(0)
-      SinkOps.readVersionEqs(s, path,
-          Seq(("event_id", eMax), ("user_id", u)))
+      SinkOps.readVersionWhere(s, path,
+          Seq(LongIn("event_id", Seq(eMax)), LongIn("user_id", Seq(u))))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
 
@@ -3868,8 +3873,10 @@ object SparkEntry {
       }
       val b = e.agg(min("user_id"), min("event_id"), max("event_id"))
         .head()
-      SinkOps.readVersionWhereEq(s, path, b.getLong(1),
-          (b.getLong(1) + b.getLong(2)) / 2, b.getLong(0))
+      SinkOps.readVersionWhere(s, path,
+          Seq(LongRange("event_id", b.getLong(1),
+              (b.getLong(1) + b.getLong(2)) / 2),
+            LongIn("user_id", Seq(b.getLong(0)))))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
     // OPTIMIZE ZORDER — full compaction under a 2-D Morton layout
@@ -3945,7 +3952,8 @@ object SparkEntry {
           .select(col("event_id"), col("user_id"), col("event_type"))
           .repartitionByRange(4, col("event_id")),
         path, carryForward = true, statsCol = Some("event_id"))
-      SinkOps.readVersionWhere(s, path, 100L, 299L, mergeSchema = true)
+      SinkOps.readVersionWhere(s, path,
+          Seq(LongRange("event_id", 100L, 299L)), mergeSchema = true)
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
 
@@ -4010,8 +4018,9 @@ object SparkEntry {
         e.filter(col("user_id") >= t2)
           .repartitionByRange(4, col("event_id")),
         path, carryForward = true, Seq("event_id", "user_id"))
-      SinkOps.readVersionWhereCols(s, path,
-          Seq(("event_id", elo, ehi), ("user_id", t1, t2 - 1)))
+      SinkOps.readVersionWhere(s, path,
+          Seq(LongRange("event_id", elo, ehi),
+            LongRange("user_id", t1, t2 - 1)))
         .select(col("event_id"), col("user_id"), col("event_type"))
     }),
     // SQL SKIP-TIER READ — graft_version_where splices the PRUNED
@@ -4307,8 +4316,8 @@ object SparkEntry {
         maxFilesPerLeaf = 4).collect().head
       val idle = SinkOps.maintain(s, path, targetRowsPerFile = 1L,
         maxFilesPerLeaf = 4).collect().head
-      SinkOps.readVersionPartIn(s, path, "event_type",
-          Seq("click", "view"))
+      SinkOps.readVersionWhere(s, path,
+          Seq(StringIn("event_type", Seq("click", "view"))))
         .agg(count(lit(1)).as("n_rows"), sum("user_id").as("user_sum"))
         .select(lit(gauges.getAs[String]("recommendation"))
             .as("advice"),
@@ -4788,9 +4797,9 @@ object SparkEntry {
         emin + (emax - emin + 1) / 2)
       val span3 = (umax - umin + 1) / 3
       val (ulo, uhi) = (umin + span3, umin + 2 * span3 - 1)
-      SinkOps.readVersionWhereCols(s, path,
-          Seq(("event_id", elo, ehi), ("user_id", ulo, uhi),
-            ("zkey", 0L, 2047L)))
+      SinkOps.readVersionWhere(s, path,
+          Seq(LongRange("event_id", elo, ehi), LongRange("user_id", ulo, uhi),
+            LongRange("zkey", 0L, 2047L)))
         .select(col("event_id"), col("user_id"), col("zkey"),
           col("event_type"))
     }),

@@ -15,6 +15,10 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // A failing query must leave no output behind: a previous run's
+      // parquet under the same name would pass the oracle compare.
+      val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      out.getFileSystem(spark.sessionState.newHadoopConf()).delete(out, true)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -226,18 +226,19 @@ object GraftFunctions {
     * through SQL: unlike `graft_version(path)` + WHERE (whose filter
     * pushes into the parquet scan but whose file index still lists
     * every snapshot file), this splices [[graft.ops.SinkOps
-    * .readVersionWhereCols]]'s PRUNED plan — zone-map sidecars drop
-    * non-intersecting files before any footer fetch, DV epochs
-    * resolved inline, exact residual filter kept.
+    * .readVersionWhere]]'s PRUNED plan under one `LongRange`: zone-map
+    * sidecars drop non-intersecting files before any footer fetch, DV
+    * epochs resolved inline, exact residual filter kept.
     */
   private def buildVersionWhere(exprs: Seq[Expression])
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan = {
     require(exprs.length == 4,
       s"graft_version_where expects (path, col, lo, hi), got ${exprs.length} arguments")
-    GraftSqlBridge.plan(graft.ops.SinkOps.readVersionWhereCols(
+    GraftSqlBridge.plan(graft.ops.SinkOps.readVersionWhere(
       SparkSession.active,
       tablePathArg(exprs.head, "graft_version_where path"),
-      Seq((constString(exprs(1), "graft_version_where col"),
+      Seq(graft.ops.SinkOps.SkipPred.LongRange(
+        constString(exprs(1), "graft_version_where col"),
         constLong(exprs(2), "graft_version_where lo"),
         constLong(exprs(3), "graft_version_where hi")))))
   }
@@ -250,8 +251,9 @@ object GraftFunctions {
 
   /** `graft_version_part(path, partCol, 'v1,v2' [, version])` — the
     * partition-pruned snapshot read through SQL
-    * ([[graft.ops.SinkOps.readVersionPartIn]]): planning consults
-    * only the `parts/` sidecars, so IO is O(matching partitions) —
+    * ([[graft.ops.SinkOps.readVersionWhere]] under one `StringIn`):
+    * planning consults only the `parts/` sidecars, so IO is
+    * O(matching partitions) —
     * the coarsest skip tier, SQL-reachable like the zone-map and
     * bloom reads. Values are a comma-separated list of verbatim
     * (unescaped) partition values.
@@ -265,11 +267,12 @@ object GraftFunctions {
       .split(',').map(_.trim).filter(_.nonEmpty).toSeq
     val v = if (exprs.length == 4)
       Some(constInt(exprs(3), "graft_version_part version")) else None
-    GraftSqlBridge.plan(graft.ops.SinkOps.readVersionPartIn(
+    GraftSqlBridge.plan(graft.ops.SinkOps.readVersionWhere(
       SparkSession.active,
       tablePathArg(exprs.head, "graft_version_part path"),
-      constString(exprs(1), "graft_version_part partCol"),
-      values, v))
+      Seq(graft.ops.SinkOps.SkipPred.StringIn(
+        constString(exprs(1), "graft_version_part partCol"), values)),
+      v))
   }
 
   val graftVersionPart: (FunctionIdentifier, ExpressionInfo,

@@ -221,7 +221,7 @@ object SinkOps {
 
   /** [[commitVersion]] with MULTI-COLUMN zone maps: every declared
     * column (each castable to long) gets per-file min/max in the ONE
-    * stats sidecar, so [[readVersionWhereCols]] prunes on a
+    * stats sidecar, so [[readVersionWhere]] prunes on a
     * CONJUNCTION of range predicates — skipping multiplies across
     * columns the way Iceberg's per-primitive-column stats do. The
     * single-column sidecar format is the k=1 case byte-for-byte;
@@ -704,7 +704,7 @@ object SinkOps {
   }
 
   /** Parsed stats sidecar of one data dir: the declared columns (with
-    * per-column string-typed flag from the `#str` header tag) and
+    * their kinds from the `#<kind>` header tags) and
     * per-file entries — (file name, per-column Option[(min,max)] as
     * RAW CELL STRINGS (decimal longs for numeric columns, escaped
     * truncated bounds for string columns), Option[row count]); None
@@ -713,7 +713,6 @@ object SinkOps {
     */
   private case class DirStats(cols: Seq[String], kinds: Seq[String],
       files: Seq[(String, Seq[Option[(String, String)]], Option[Long])]) {
-    def isStr: Seq[Boolean] = kinds.map(_ == StatKindStr)
     /** Numeric bounds of column i — refuses loudly on a kinded column
       * (a string's truncated bounds are inexact; a timestamp/date
       * column's bounds are stored as unix_micros/epoch-days, not the
@@ -724,8 +723,7 @@ object SinkOps {
       require(kinds(i).isEmpty,
         s"stats column ${cols(i)} is ${kinds(i)}-kinded — exact " +
           "plain-numeric use refused; prune through the matching " +
-          "surface (readVersionWhereString / readVersionWhereTs / " +
-          "readVersionWhereDate)")
+          "range predicate (StringRange / MicrosRange / DateRange)")
       mm(i).map { case (a, b) => (a.toLong, b.toLong) }
     }
   }
@@ -747,16 +745,22 @@ object SinkOps {
       p.getName + ".txt")
   }
 
+  /** The non-empty lines of a sidecar text file. */
+  private def sidecarLines(fs: org.apache.hadoop.fs.FileSystem,
+                           f: org.apache.hadoop.fs.Path): List[String] = {
+    val in = fs.open(f)
+    try scala.io.Source.fromInputStream(in, "UTF-8")
+      .getLines().filter(_.nonEmpty).toList
+    finally in.close()
+  }
+
   private def readDirStats(fs: org.apache.hadoop.fs.FileSystem,
                            root: org.apache.hadoop.fs.Path,
                            dataDir: String): Option[DirStats] = {
     val sf = sidecarFile(root, dataDir, "stats")
     if (!fs.exists(sf)) None
     else {
-      val in = fs.open(sf)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      finally in.close()
+      val lines = sidecarLines(fs, sf)
       val tagged = lines.head.split('\t').toSeq
       val kinds = tagged.map { t =>
         StatKindTags.find(t.endsWith).fold("")(_.stripPrefix("#"))
@@ -984,7 +988,7 @@ object SinkOps {
     // CURRENT spec is the LAST partitioned dir's (manifest order is
     // commit order), so layout-following writers (MERGE, OPTIMIZE)
     // land the NEW layout and OPTIMIZE converges the whole table to
-    // it. Reads prune each dir by its own spec (partGroups).
+    // it. Reads prune each dir by its own spec (planVersionWhere).
     cols.lastOption
   }
 
@@ -993,7 +997,7 @@ object SinkOps {
     * columns' bits ([[graft.ops.SortOps.zorderValue]]) so rows close
     * in EITHER dimension land in the same files, then declares
     * multi-column stats on both — after which a 2-D box predicate
-    * ([[readVersionWhereCols]]) prunes files on the INTERSECTION of
+    * ([[readVersionWhere]]) prunes files on the INTERSECTION of
     * two tight per-file ranges, which neither single-column clustering
     * can give (clustering on A makes B's per-file ranges span the
     * world). The Delta OPTIMIZE ZORDER production op over this table
@@ -1027,7 +1031,7 @@ object SinkOps {
     * all k columns' bits ([[graft.ops.SortOps.zorderValueK]] — the 2-D
     * Morton layout is the k = 2 case of the same bit budget, split k
     * ways) and declares multi-column stats on every dimension, so a
-    * k-D box predicate ([[readVersionWhereCols]]) prunes files on the
+    * k-D box predicate ([[readVersionWhere]]) prunes files on the
     * intersection of k tight per-file ranges — strictly tighter than
     * any lower-dimensional projection's prune when the predicate
     * constrains all k (spec-pinned for k = 3). Bit budget: k·bits ≤ 62
@@ -1494,11 +1498,7 @@ object SinkOps {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(conf)
-    val v = version.getOrElse {
-      val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
-      latest
-    }
+    val v = versionOr(fs, root, version)
     resolveSnapshot(spark, root, manifestDirs(fs, root, v), mergeSchema)
   }
 
@@ -1994,12 +1994,7 @@ object SinkOps {
             if (acc.columns.contains(c)) acc.withColumn(c,
               acc(c).cast(t))
             else acc
-          } else {
-            val (ddir, keyCol) = deleteParts(op)
-            acc.join(broadcast(Tables.parquet(spark,
-                new org.apache.hadoop.fs.Path(root, ddir).toString)
-              .select(keyCol)), Seq(keyCol), "left_anti")
-          }
+          } else applyDeletes(spark, root, acc, Seq(deleteParts(op)))
         }
       }
       .reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
@@ -2668,18 +2663,17 @@ object SinkOps {
     val probe = keys.select(keyCol).distinct()
     val candidates =
       try {
-        val keyIsString = keys.schema(keyCol).dataType ==
-          org.apache.spark.sql.types.StringType
-        val ks =
-          if (keyIsString) probe.collect()
-            .map(r => xxhash64String(r.getString(0))).toSeq
-          else probe.select(col(keyCol).cast("long"))
-            .collect().map(_.getLong(0)).toSeq
-        val (groups, _, _) = bloomGroupsIn(spark, path, Some(keyCol),
-          ks, Some(version), probeHashed = keyIsString)
-        if (groups.forall(_._1.isEmpty))
+        val pred =
+          if (keys.schema(keyCol).dataType ==
+              org.apache.spark.sql.types.StringType)
+            SkipPred.StringIn(keyCol, probe.collect().filterNot(_.isNullAt(0))
+              .map(_.getString(0)).toSeq)
+          else SkipPred.LongIn(keyCol, probe.select(col(keyCol).cast("long"))
+            .collect().filterNot(_.isNullAt(0)).map(_.getLong(0)).toSeq)
+        val plan = planVersionWhere(spark, path, Seq(pred), Some(version))
+        if (plan.filesKept == 0)
           readVersion(spark, path, Some(version)).limit(0)
-        else readGroups(spark, root, groups, mergeSchema = false)
+        else readGroups(spark, root, plan.epochs)
       } catch {
         case scala.util.control.NonFatal(_) =>
           readVersion(spark, path, Some(version))
@@ -2769,198 +2763,373 @@ object SinkOps {
       .foldLeft(0)(math.max)
   }
 
-  /** Zone-map file planning for [[readVersionWhere]]: resolve the
-    * snapshot's data dirs, load each dir's stats sidecar, and return
-    * (kept file paths, total file count, stats column). A file
-    * survives iff its [min,max] intersects [lo,hi]; statless files and
-    * whole dirs committed without stats are always kept (no stats ⇒
-    * no skip, never a wrong skip). Fails loudly when NO dir of the
-    * snapshot carries stats (the reader asked for a skip the table
-    * cannot answer) or when two dirs declare different stats columns.
-    * Driver-side work is O(|files|) manifest-scale text, zero data IO.
-    *
-    * REFUSES a manifest carrying delete sidecars: the flat list is
-    * meant to be read raw, and raw files under live deletion vectors
-    * would serve deleted rows — a safety valve that must live in code,
-    * not documentation (ADVICE r12). DV-carrying snapshots plan
-    * through [[pruneFileGroups]] (epoch-grouped, sidecars attached so
-    * the caller CANNOT ignore them) or read directly via
-    * [[readVersionWhere]].
-    */
-  def pruneFiles(spark: org.apache.spark.sql.SparkSession, path: String,
-                 lo: Long, hi: Long, version: Option[Int] = None)
-      : (Seq[String], Int, String) = {
-    val (groups, total, c) = pruneGroupsWhere(spark, path, lo, hi, version)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, c)
-  }
-
-  /** DV-aware PUBLIC planning view — one entry per manifest epoch:
-    * (kept files, applicable (deletesDir, keyCol) sidecars in manifest
-    * order), plus total files and the stats column. The epoch grouping
-    * is the load-bearing part: a caller holding the kept files also
-    * holds exactly the delete sidecars it must anti-join before
-    * serving rows ([[readVersionWhere]] is that read, prebuilt). A
-    * DV-free snapshot returns one (files, Nil) group.
-    */
-  def pruneFileGroups(spark: org.apache.spark.sql.SparkSession,
-                      path: String, lo: Long, hi: Long,
-                      version: Option[Int] = None)
-      : (Seq[(Seq[String], Seq[(String, String)])], Int, String) =
-    pruneGroupsWhere(spark, path, lo, hi, version)
-
-  /** Loud-refusal guard of the FLAT planning views on DV-carrying
-    * manifests (delete sidecars present ⇒ raw reads of the returned
-    * files would serve deleted rows).
-    */
-  private def requireFlat(
-      groups: Seq[(Seq[String], Seq[(String, String)])],
-      path: String): Unit =
-    require(groups.forall(_._2.isEmpty),
-      s"snapshot at $path carries unresolved deletion vectors — a " +
-        "flat file list would serve deleted rows if read raw; plan " +
-        "with the epoch-grouped variant (pruneFileGroups / " +
-        "planFileGroupsEq) or read via readVersionWhere/readVersionEq")
-
-  /** DV-aware zone-map planning core: per-dir file pruning with data
-    * dirs grouped by their trailing delete-sidecar set — the
-    * [[resolveSnapshot]] epochs — so the read path can apply
-    * merge-on-read deletes to exactly the dirs they scope. This is
-    * what keeps the skip tier usable while a CDC merge stream is
-    * hottest (production lakehouse readers prune files AND apply DVs
-    * in the same scan; refusing until compaction would blank the skip
-    * economics exactly when the table needs them). Returns one entry
-    * per epoch — (kept files, applicable (deletesDir, keyCol) sidecars
-    * in manifest order) — plus the total file count and stats column.
-    * Pruning under DVs stays sound: deletion never widens a file's
-    * true [min,max], so a skipped file still provably holds no
-    * matching live row.
-    */
-  private def pruneGroupsWhere(spark: org.apache.spark.sql.SparkSession,
-                               path: String, lo: Long, hi: Long,
-                               version: Option[Int])
-      : (Seq[(Seq[String], Seq[(String, String)])], Int, String) = {
-    val (groups, total, cols) =
-      pruneGroupsWhereCols(spark, path, Seq((None, lo, hi)), version)
-    (groups, total, cols.head)
-  }
-
-  /** Multi-predicate planning core: every predicate is a CONJUNCT —
-    * a file survives iff each predicate's column range intersects
-    * its declared per-file [min,max] (a column statless in a file, or
-    * a whole dir without a sidecar, never prunes — no wrong skip). A
-    * predicate column of None targets the FIRST declared column (the
-    * primary clustering column, the single-predicate compatibility
-    * path); a named column absent from the declared stats fails
-    * loudly (the reader asked for a skip the table cannot answer).
-    * Returns (per-epoch groups, total files, declared columns).
-    */
-  private def pruneGroupsWhereCols(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      preds: Seq[(Option[String], Long, Long)], version: Option[Int])
-      : (Seq[(Seq[String], Seq[(String, String)])], Int, Seq[String]) =
-    pruneGroupsWherePreds(spark, path,
-      preds.map { case (c, lo, hi) => LongStatPred(c, lo, hi) }, version)
-
-  /** A zone-map range predicate: numeric (exact long bounds — plain
-    * long-castable kind, or `tsus`/`day` kinds whose bounds are the
-    * stored unix_micros/epoch-days), or string (compared against the
-    * sidecar's truncated bounds in CODE POINT order — the engines'
-    * UTF-8 binary collation; sound because the stored min is ≤ and
-    * the stored max ≥ every true value). Every predicate refuses
-    * loudly against a column of a different kind — a micros probe of
-    * a seconds-stored legacy column (or vice versa) would be a
-    * silently-scaled wrong skip.
-    */
-  private sealed trait StatPred { def col: Option[String] }
-  private case class LongStatPred(col: Option[String], lo: Long,
-      hi: Long, kind: String = "") extends StatPred
-  private case class StrStatPred(col: Option[String], lo: String,
-      hi: String) extends StatPred
-
-  private def statSurfaceFor(kind: String): String = kind match {
-    case StatKindStr => "readVersionWhereString"
-    case StatKindTsUs => "readVersionWhereTs"
-    case StatKindDay => "readVersionWhereDate"
-    case _ => "readVersionWhere/WhereCols"
-  }
-
-  private def pruneGroupsWherePreds(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      preds: Seq[StatPred], version: Option[Int])
-      : (Seq[(Seq[String], Seq[(String, String)])], Int, Seq[String]) = {
-    require(preds.nonEmpty, "no predicates to plan")
-    preds.foreach {
-      case LongStatPred(c, lo, hi, _) => require(lo <= hi,
-        s"empty predicate range [$lo, $hi]${c.fold("")(" on " + _)}")
-      case StrStatPred(c, lo, hi) => require(cpCompare(lo, hi) <= 0,
-        s"empty predicate range [$lo, $hi]${c.fold("")(" on " + _)}")
-    }
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = version.getOrElse {
+  /** The requested version, or the committed head when None. */
+  private def versionOr(fs: org.apache.hadoop.fs.FileSystem,
+                        root: org.apache.hadoop.fs.Path,
+                        version: Option[Int]): Int =
+    version.getOrElse {
       val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
+      require(latest >= 1, s"no versions committed at $root")
       latest
     }
-    var declared: Option[Seq[String]] = None
-    var total = 0
-    def keptOf(d: String): Seq[String] = {
-      refusePartitionedDir(fs, root, d, "the zone-map planner")
-      val dirP = new org.apache.hadoop.fs.Path(root, d)
-      val parts = fs.listStatus(dirP).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-      total += parts.length
-      readDirStats(fs, root, d) match {
-        case None => parts.map(_.toString).toSeq
-        case Some(ds) =>
-          declared.foreach(prev => require(prev == ds.cols,
-            s"inconsistent stats columns across snapshot dirs: " +
-              s"${prev.mkString(",")} vs ${ds.cols.mkString(",")}"))
-          declared = Some(ds.cols)
-          val idx = preds.map { p =>
-            val i = p.col.fold(0)(ds.cols.indexOf)
-            require(i >= 0,
-              s"predicate on ${p.col.get} but dir $d declares stats " +
-                "for " + ds.cols.mkString(", "))
-            p match {
-              case LongStatPred(_, _, _, want) =>
-                require(ds.kinds(i) == want,
-                  s"${statSurfaceFor(want)} predicate on " +
-                    s"${if (ds.kinds(i).isEmpty) "plain-numeric"
-                      else ds.kinds(i) + "-kinded"} stats column " +
-                    s"${ds.cols(i)} — use ${statSurfaceFor(ds.kinds(i))}")
-              case _: StrStatPred => require(ds.isStr(i),
-                s"string range predicate on non-string stats column " +
-                  s"${ds.cols(i)} — use ${statSurfaceFor(ds.kinds(i))}")
-            }
-            (i, p)
-          }
-          val keep = ds.files.collect {
-            case (name, mm, _) if idx.forall { case (i, p) =>
-              mm(i).forall { case (mn, mx) => p match {
-                case LongStatPred(_, lo, hi, _) =>
-                  mn.toLong <= hi && mx.toLong >= lo
-                case StrStatPred(_, lo, hi) =>
-                  cpCompare(mn, hi) <= 0 && cpCompare(mx, lo) >= 0
-              } } } => name
-          }.toSet
-          parts.filter(p => keep.contains(p.getName))
-            .map(_.toString).toSeq
-      }
+
+  // ---- File skipping: one predicate type, one planner ----
+
+  /** A file-skipping predicate on one column, one case per sidecar
+    * kind. Ranges are inclusive. [[planVersionWhere]] picks the tier
+    * from what the table declares for the column:
+    *  - an `In` on a hive-partition column prunes partition leaves
+    *    through the `parts/` sidecars ([[StringIn]] only: partition
+    *    values are verbatim directory strings);
+    *  - an `In` on any other column prunes files through the `blooms/`
+    *    sidecars — a file is kept when its bitmap admits ANY value
+    *    (string values probe through xxhash64, the writer's hash);
+    *  - a range prunes files through the `stats/` zone maps of a
+    *    column of the matching kind.
+    * A single-value `In` is an equality probe. Every predicate also
+    * carries an exact residual ([[residual]]), so a skip read equals
+    * the full-scan filter by construction: a sidecar can only keep an
+    * extra file, never drop a matching one.
+    */
+  sealed trait SkipPred extends Product with Serializable {
+    def column: String
+  }
+
+  object SkipPred {
+    /** Plain long-castable stats column. */
+    final case class LongRange(column: String, lo: Long, hi: Long)
+        extends SkipPred
+    /** `#str` stats column: compared in code-point order (the engines'
+      * UTF-8 binary collation) against the truncated bounds.
+      */
+    final case class StringRange(column: String, lo: String, hi: String)
+        extends SkipPred
+    /** `#tsus` stats column: bounds in unix microseconds. */
+    final case class MicrosRange(column: String, lo: Long, hi: Long)
+        extends SkipPred
+    /** `#day` stats column: bounds stored as epoch days. */
+    final case class DateRange(column: String, lo: java.time.LocalDate,
+                               hi: java.time.LocalDate) extends SkipPred
+    /** Numeric bloom column. */
+    final case class LongIn(column: String, values: Seq[Long])
+        extends SkipPred
+    /** Partition column or `#str` bloom column. */
+    final case class StringIn(column: String, values: Seq[String])
+        extends SkipPred
+  }
+  import SkipPred._
+
+  /** One manifest epoch of a [[SkipPlan]]: the kept files, grouped by
+    * the base path that restores their partition columns (None = flat
+    * dirs, read together in one scan), and the delete sidecars
+    * (deletesDir, keyCol) that scope them, in manifest order.
+    */
+  final case class SkipEpoch(reads: Seq[(Option[String], Seq[String])],
+                             deletes: Seq[(String, String)]) {
+    def files: Seq[String] = reads.flatMap(_._2)
+  }
+
+  /** What a skip read WOULD open: per-epoch kept files with their
+    * delete sidecars, files kept of the files listed in kept leaves,
+    * and partition leaves kept of the leaves seen (a flat dir counts
+    * as one leaf). The epoch grouping is the load-bearing part: a
+    * caller holding the kept files also holds exactly the sidecars it
+    * must anti-join before serving rows.
+    */
+  final case class SkipPlan(path: String, epochs: Seq[SkipEpoch],
+                            filesListed: Int,
+                            leavesKept: Int, leavesTotal: Int) {
+    def filesKept: Int = epochs.map(_.files.size).sum
+
+    /** The kept files as one flat list. REFUSES a manifest carrying
+      * delete sidecars: raw reads of the list would serve deleted rows
+      * — a safety valve that must live in code, not documentation.
+      */
+    def files: Seq[String] = {
+      require(epochs.forall(_.deletes.isEmpty),
+        s"snapshot at $path carries unresolved deletion vectors — a " +
+          "flat file list would serve deleted rows if read raw; use " +
+          "the plan's epochs or read via readVersionWhere")
+      epochs.flatMap(_.files)
     }
-    val groups = epochGroups(manifestDirs(fs, root, v))
-      .map { case (dirs, dels) => (dirs.flatMap(keptOf), dels) }
-    (groups, total, declared.getOrElse(throw new IllegalStateException(
-      s"no stats sidecar in any dir of version $v at $path — " +
-        "commit with statsCol to enable zone-map reads")))
+  }
+
+  private def isIn(p: SkipPred): Boolean = p match {
+    case _: LongIn | _: StringIn => true
+    case _ => false
+  }
+
+  /** The range predicate that probes each stats kind ("" = plain
+    * numeric).
+    */
+  private val RangePredOfKind = Map(StatKindStr -> "StringRange",
+    StatKindTsUs -> "MicrosRange", StatKindDay -> "DateRange",
+    "" -> "LongRange")
+
+  /** Does a file's stored [min, max] (raw sidecar cells) intersect a
+    * range predicate? Long kinds compare the stored longs (tsus: unix
+    * micros, day: epoch days); strings compare in code-point order.
+    */
+  private def statAdmits(p: SkipPred, mn: String, mx: String): Boolean =
+    p match {
+      case StringRange(_, lo, hi) =>
+        cpCompare(mn, hi) <= 0 && cpCompare(mx, lo) >= 0
+      case LongRange(_, lo, hi) => mn.toLong <= hi && mx.toLong >= lo
+      case MicrosRange(_, lo, hi) => mn.toLong <= hi && mx.toLong >= lo
+      case DateRange(_, lo, hi) =>
+        mn.toLong <= hi.toEpochDay && mx.toLong >= lo.toEpochDay
+      case _ => true
+    }
+
+  private def requireSatisfiable(p: SkipPred): Unit = {
+    def empty(lo: Any, hi: Any) =
+      s"empty predicate range [$lo, $hi] on ${p.column}"
+    p match {
+      case LongRange(_, lo, hi) => require(lo <= hi, empty(lo, hi))
+      case MicrosRange(_, lo, hi) => require(lo <= hi, empty(lo, hi))
+      case DateRange(_, lo, hi) => require(!lo.isAfter(hi), empty(lo, hi))
+      case StringRange(_, lo, hi) =>
+        require(cpCompare(lo, hi) <= 0, empty(lo, hi))
+      case LongIn(c, vs) => require(vs.nonEmpty, s"no values requested for $c")
+      case StringIn(c, vs) =>
+        require(vs.nonEmpty, s"no values requested for $c")
+    }
+  }
+
+  /** The exact row filter of a predicate, applied after the sidecar
+    * prune. Range kinds share the writer's expression
+    * ([[statKindExpr]]) where the sidecar stores a derived value, so
+    * prune and filter can never disagree; `StringIn` compares the
+    * string form, which is what a partition column's directory value
+    * is whatever type Spark's partition inference gives it.
+    */
+  private def residual(p: SkipPred): Column = p match {
+    case LongRange(c, lo, hi) => col(c).cast("long").between(lo, hi)
+    case StringRange(c, lo, hi) => col(c).between(lit(lo), lit(hi))
+    case MicrosRange(c, lo, hi) =>
+      statKindExpr(c, StatKindTsUs).between(lo, hi)
+    case DateRange(c, lo, hi) => col(c).between(lit(lo), lit(hi))
+    case LongIn(c, vs) => col(c).cast("long").isin(vs: _*)
+    case StringIn(c, vs) => col(c).cast("string").isin(vs: _*)
+  }
+
+  /** Parsed bloom sidecar of one data dir: the declared columns, which
+    * of them hash strings (`#str` header tag), and per-file hex
+    * bitmaps keyed by the dir-relative file path.
+    */
+  private case class DirBlooms(cols: Seq[String], isStr: Seq[Boolean],
+                               files: Map[String, Seq[String]])
+
+  private def readDirBlooms(fs: org.apache.hadoop.fs.FileSystem,
+                            root: org.apache.hadoop.fs.Path,
+                            dataDir: String): Option[DirBlooms] = {
+    val bf = sidecarFile(root, dataDir, "blooms")
+    if (!fs.exists(bf)) None
+    else {
+      val lines = sidecarLines(fs, bf)
+      val tagged = lines.head.split('\t').toSeq
+      val cols = tagged.map(_.stripSuffix("#str"))
+      val files = lines.tail.map { ln =>
+        val fields = ln.split('\t')
+        require(fields.length == cols.length + 1,
+          s"malformed bloom line in $bf: $ln")
+        fields(0) -> fields.toSeq.tail
+      }.toMap
+      Some(DirBlooms(cols, tagged.map(_.endsWith("#str")), files))
+    }
+  }
+
+  /** The plan of a skip read of snapshot `version` (head when None)
+    * under a CONJUNCTION of predicates — skipping multiplies across
+    * tiers and columns. One walk of the manifest epochs
+    * ([[epochGroups]]); per data dir the partition leaves the `In`
+    * predicates on partition columns keep (a flat dir is its own
+    * leaf; a dir whose spec lacks a predicate column is not pruned by
+    * it — partition-spec evolution), then per listed file the stats
+    * and bloom sidecars of its dir. A file is kept iff every
+    * predicate's sidecar admits it. Dirs without the tier's sidecar
+    * are kept whole, and a bloom sidecar without a line for a file
+    * keeps it (never a wrong skip); a stats sidecar lists every file
+    * holding a row, so a file it lacks holds none. Zone maps stay
+    * sound under deletion vectors: deletes never widen a file's true
+    * [min, max] or add a bloom member.
+    *
+    * Driver-side work is manifest-scale text plus one listing per kept
+    * leaf; zero data IO. Loud refusals: an empty range or value set; a
+    * predicate column that no tier of the table declares; a kind
+    * mismatch either way (a long probe of a `#str` bloom, a
+    * `LongRange` on a `#tsus` column, …); no stats sidecar in any dir
+    * for a range; stats or bloom columns that differ across dirs; a
+    * malformed bloom line; a partition value that would need hive
+    * escaping; an unmaterialized rename or drop in the manifest.
+    */
+  def planVersionWhere(spark: org.apache.spark.sql.SparkSession,
+                       path: String, preds: Seq[SkipPred],
+                       version: Option[Int] = None): SkipPlan = {
+    require(preds.nonEmpty, "no predicates to plan")
+    preds.foreach(requireSatisfiable)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val v = versionOr(fs, root, version)
+    val epochs = epochGroups(manifestDirs(fs, root, v))
+    val dirs = epochs.flatMap(_._1)
+    val parts = dirs.map(d => d -> readDirParts(fs, root, d)).toMap
+    val specCols = dirs.flatMap(d => parts(d).toSeq.flatMap(_.cols))
+      .distinct
+    val (partPreds, filePreds) =
+      preds.partition(p => isIn(p) && specCols.contains(p.column))
+    val (inPreds, rangePreds) = filePreds.partition(isIn)
+    // The partition tier: verbatim string values only.
+    val partSets = partPreds.map {
+      case StringIn(c, vs) =>
+        vs.foreach(x => require(PartValueOk.matches(x),
+          s"partition value '$x' needs hive escaping — partition " +
+            "columns serve verbatim values only (letters, digits, _ . -)"))
+        (c, vs.toSet)
+      case p => throw new IllegalArgumentException(
+        s"${p.productPrefix} on partition column ${p.column} — " +
+          "partition values are verbatim directory strings; probe " +
+          "with StringIn")
+    }
+    // Sidecars load only for the tiers in use, each checked for one
+    // column set across the snapshot's dirs.
+    def consistent[T](what: String, load: String => Option[T])
+                     (cols: T => Seq[String]): Seq[(String, T)] = {
+      val got = dirs.flatMap(d => load(d).map(d -> _))
+      got.foreach { case (_, t) =>
+        require(cols(t) == cols(got.head._2),
+          s"inconsistent $what columns across snapshot dirs: " +
+            s"${cols(got.head._2).mkString(",")} vs " +
+            cols(t).mkString(","))
+      }
+      got
+    }
+    val stats =
+      if (rangePreds.isEmpty) Nil
+      else consistent("stats", readDirStats(fs, root, _))(_.cols)
+    val blooms =
+      if (inPreds.isEmpty) Nil
+      else consistent("bloom", readDirBlooms(fs, root, _))(_.cols)
+    val statIdx = rangePreds.map { p =>
+      val (d0, ds) = stats.headOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"no stats sidecar in any dir of version $v at $path — " +
+            "commit with statsCol to enable zone-map reads"))
+      val i = ds.cols.indexOf(p.column)
+      require(i >= 0, s"predicate on ${p.column} but dir $d0 declares " +
+        "stats for " + ds.cols.mkString(", "))
+      // Column names agree across dirs, kinds need not: a later commit
+      // may change a column's type, so every dir's kind is checked.
+      stats.foreach { case (d, dds) =>
+        val kind = dds.kinds(i)
+        require(RangePredOfKind.get(kind).contains(p.productPrefix),
+          s"${p.productPrefix} predicate on " +
+            (if (kind.isEmpty) "plain-numeric" else s"$kind-kinded") +
+            s" stats column ${p.column} of dir $d — use " +
+            RangePredOfKind.getOrElse(kind, kind))
+      }
+      (i, p)
+    }
+    // (column, probes a #str bloom, probe values as the bitmaps hash them)
+    val probes = inPreds.collect {
+      case LongIn(c, vs) => (c, false, vs)
+      case StringIn(c, vs) => (c, true, vs.map(xxhash64String))
+    }
+    val bloomIdx = probes.map { case (c, hashed, xs) =>
+      val i = blooms.headOption.fold(-1)(_._2.cols.indexOf(c))
+      require(i >= 0,
+        s"no partitioned dir of version $v at $path carries predicate " +
+          s"column $c (specs seen: ${specCols.mkString(", ")})" +
+          blooms.headOption.fold(" and no dir carries a bloom sidecar") {
+            case (d, b) => s", and dir $d declares blooms for " +
+              b.cols.mkString(", ") })
+      blooms.foreach { case (d, b) =>
+        require(b.isStr(i) == hashed,
+          if (hashed) s"bloom column $c of dir $d is numeric — probe it " +
+            "with LongIn, not strings"
+          else s"bloom column $c of dir $d is string-typed — probe it " +
+            "with StringIn (xxhash64 membership), not raw longs")
+      }
+      (i, xs)
+    }
+    val statsOf = stats.map { case (d, ds) =>
+      d -> ds.files.map(f => f._1 -> f._2).toMap }.toMap
+    val bloomsOf = blooms.toMap
+    val posCache = scala.collection.mutable.Map[(Long, Int), Seq[Int]]()
+    def bloomHit(hex: String, x: Long): Boolean =
+      posCache.getOrElseUpdate((x, hex.length * 4),
+        bloomPositions(x, hex.length * 4)).forall { bt =>
+        val b = Integer.parseInt(
+          hex.substring((bt >> 3) * 2, (bt >> 3) * 2 + 2), 16)
+        ((b >> (bt & 7)) & 1) == 1
+      }
+    def admits(d: String, rel: String): Boolean =
+      statsOf.get(d).forall(_.get(rel).exists { mm =>
+        statIdx.forall { case (i, p) =>
+          mm(i).forall { case (mn, mx) => statAdmits(p, mn, mx) } }
+      }) &&
+      bloomsOf.get(d).forall(_.files.get(rel).forall { hexes =>
+        bloomIdx.forall { case (i, xs) => xs.exists(bloomHit(hexes(i), _)) }
+      })
+    var filesListed = 0
+    var leavesKept = 0; var leavesTotal = 0
+    val planned = epochs.map { case (eDirs, dels) =>
+      val reads = eDirs.flatMap { d =>
+        val dirP = new org.apache.hadoop.fs.Path(root, d)
+        val leaves = parts(d).fold(Seq("")) { dp =>
+          dp.frags.map(_.frag).filter { f =>
+            val vals = dp.cols.zip(fragValues(f, dp.cols, d)).toMap
+            partSets.forall { case (c, vs) =>
+              vals.get(c).forall(vs.contains) }
+          }
+        }
+        leavesTotal += parts(d).fold(1)(_.frags.length)
+        leavesKept += leaves.length
+        val kept = leaves.flatMap { f =>
+          val files = fs.listStatus(
+              if (f.isEmpty) dirP else new org.apache.hadoop.fs.Path(dirP, f))
+            .map(_.getPath).filter(_.getName.endsWith(".parquet"))
+          filesListed += files.length
+          files.filter(p => admits(d,
+            if (f.isEmpty) p.getName else s"$f/${p.getName}"))
+            .map(_.toString)
+        }
+        if (kept.isEmpty) None
+        else Some((parts(d).map(_ => dirP.toString), kept.toSeq))
+      }
+      val flat = reads.filter(_._1.isEmpty).flatMap(_._2)
+      SkipEpoch((if (flat.isEmpty) Nil else Seq((None, flat))) ++
+        reads.filter(_._1.isDefined), dels)
+    }
+    SkipPlan(path, planned, filesListed, leavesKept, leavesTotal)
+  }
+
+  /** Read a snapshot under a conjunction of [[SkipPred]]s: only the
+    * files [[planVersionWhere]] keeps are read (skipped files cost
+    * zero IO, not even a footer fetch), each epoch anti-joins exactly
+    * the delete sidecars that scope it, and the exact residual of
+    * every predicate applies — the result equals the full-scan filter
+    * of the resolved snapshot by construction. `mergeSchema` reads
+    * the union schema across commits (additive evolution). Every file
+    * pruned: an empty result with the table's schema.
+    */
+  def readVersionWhere(spark: org.apache.spark.sql.SparkSession,
+                       path: String, preds: Seq[SkipPred],
+                       version: Option[Int] = None,
+                       mergeSchema: Boolean = false): DataFrame = {
+    val plan = planVersionWhere(spark, path, preds, version)
+    if (plan.filesKept == 0)
+      readVersion(spark, path, version, mergeSchema).filter(lit(false))
+    else readGroups(spark, new org.apache.hadoop.fs.Path(path),
+        plan.epochs, mergeSchema)
+      .filter(preds.map(residual).reduce(_ && _))
   }
 
   /** Group a manifest's data dirs by the SET of delete sidecars that
     * follow them — the [[resolveSnapshot]] epoch partition, shared by
-    * the skip planners. Returns (data dirs, applicable parsed
-    * sidecars in manifest order) per epoch; one `(all dirs, Nil)`
-    * group for a DV-free manifest.
+    * the skip planner and the DV-aware metadata aggregates. Returns
+    * (data dirs, applicable parsed sidecars in manifest order) per
+    * epoch; one `(all dirs, Nil)` group for a DV-free manifest.
     */
   private def epochGroups(lines: Seq[String])
       : Seq[(Seq[String], Seq[(String, String)])] = {
@@ -2980,230 +3149,41 @@ object SinkOps {
       .toSeq.map { case (dels, dirs) => (dirs.map(_._1), dels) }
   }
 
-  /** Read each planned epoch group and fold in its delete sidecars
-    * (broadcast anti-joins, arrival-sized keys), then union — the
-    * [[resolveSnapshot]] read shape over PRUNED file lists. Shared by
-    * the DV-aware skip readers.
+  /** Read each planned epoch — one scan per base path, flat dirs
+    * together — and fold in its delete sidecars, then union: the
+    * [[resolveSnapshot]] read shape over PRUNED file lists.
     */
   private def readGroups(spark: org.apache.spark.sql.SparkSession,
                          root: org.apache.hadoop.fs.Path,
-                         groups: Seq[(Seq[String], Seq[(String, String)])],
+                         epochs: Seq[SkipEpoch],
                          mergeSchema: Boolean = false): DataFrame =
-    groups.filter(_._1.nonEmpty).map { case (files, dels) =>
-      dels.foldLeft(Tables.parquet(spark,
-          Map("mergeSchema" -> mergeSchema.toString), files)) {
-        case (acc, (ddir, keyCol)) =>
-          acc.join(broadcast(Tables.parquet(spark,
-              new org.apache.hadoop.fs.Path(root, ddir).toString)
-            .select(keyCol)), Seq(keyCol), "left_anti")
-      }
+    epochs.filter(_.reads.nonEmpty).map { e =>
+      applyDeletes(spark, root, e.reads.map { case (base, files) =>
+        Tables.parquet(spark, Map("mergeSchema" -> mergeSchema.toString)
+          ++ base.map("basePath" -> _), files)
+      }.reduce(_.unionByName(_, allowMissingColumns = mergeSchema)),
+        e.deletes)
     }.reduce(_.unionByName(_, allowMissingColumns = mergeSchema))
 
-  /** Read a snapshot UNDER A RANGE PREDICATE on the declared stats
-    * column, planning only files whose zone map intersects [lo,hi]
-    * (then applying the exact residual filter) — manifest-level file
-    * skipping, the [[readVersion]] twin of parquet row-group pruning
-    * one level earlier: skipped files cost zero IO, not even a footer
-    * fetch. Equals the full-scan filter by construction (a skipped
-    * file provably holds no matching row); q_version_skip's oracle
-    * pins that equality, and the round-11 spec pins files-read <
-    * files-total under a selective predicate.
-    *
-    * DV-aware (round 12): a manifest carrying delete sidecars prunes
-    * AND resolves in the same read — kept files group by manifest
-    * epoch and each group anti-joins exactly the sidecars that scope
-    * it ([[resolveSnapshot]]'s ordered fold over pruned file lists),
-    * so zone-map reads stay usable under a live CDC merge stream
-    * instead of refusing until compaction. q_skip_dv pins equality to
-    * the resolved full-scan filter; the round-12 spec pins files-read
-    * < files-total on a DV-carrying manifest.
+  /** Merge-on-read: anti-join each (deletesDir, keyCol) sidecar in
+    * order (broadcast — sidecars are arrival-sized keys).
     */
-  def readVersionWhere(spark: org.apache.spark.sql.SparkSession,
-                       path: String, lo: Long, hi: Long,
-                       version: Option[Int] = None,
-                       mergeSchema: Boolean = false): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _, c) = pruneGroupsWhere(spark, path, lo, hi, version)
-    if (groups.forall(_._1.isEmpty))
-      // Every file pruned: an empty result with the table's schema
-      // (read zero rows of one dir rather than invent a schema).
-      readVersion(spark, path, version, mergeSchema).filter(lit(false))
-    else readGroups(spark, root, groups, mergeSchema)
-      .filter(col(c).cast("long").between(lo, hi))
-  }
-
-  /** Read a snapshot under a CONJUNCTION of range predicates over the
-    * table's declared multi-column zone maps
-    * ([[commitVersionStats]]): the planned file set intersects every
-    * predicate's prune — skipping MULTIPLIES across independently
-    * selective columns, the Iceberg per-column-stats economics (a
-    * date range keeping 10% of files times an id range keeping 10%
-    * plans ~1%). DV-aware like [[readVersionWhere]]; exact residual
-    * conjunction keeps results equal to the full-scan filter by
-    * construction. Predicates on undeclared columns fail loudly.
-    */
-  def readVersionWhereCols(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           preds: Seq[(String, Long, Long)],
-                           version: Option[Int] = None,
-                           mergeSchema: Boolean = false): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _, _) = pruneGroupsWhereCols(spark, path,
-      preds.map { case (c, lo, hi) => (Some(c): Option[String], lo, hi) },
-      version)
-    val residual = preds.map { case (c, lo, hi) =>
-      col(c).cast("long").between(lo, hi) }.reduce(_ && _)
-    if (groups.forall(_._1.isEmpty))
-      readVersion(spark, path, version, mergeSchema).filter(lit(false))
-    else readGroups(spark, root, groups, mergeSchema).filter(residual)
-  }
-
-  /** Read a snapshot UNDER A STRING RANGE PREDICATE on a declared
-    * string stats column (`[lo, hi]` inclusive, the engines' UTF-8
-    * binary collation): files are skipped when their TRUNCATED bounds
-    * ([[writeDirStats]] — Iceberg-style 16-code-point prefix min /
-    * incremented-prefix max) provably exclude the range, then the
-    * EXACT residual filter applies — truncation can only keep an
-    * extra file, never skip a matching one, so the result equals the
-    * full-scan filter by construction. DV-aware like
-    * [[readVersionWhere]]. A numeric stats column refuses loudly
-    * (use the numeric predicates).
-    */
-  def readVersionWhereString(spark: org.apache.spark.sql.SparkSession,
-                             path: String, column: String,
-                             lo: String, hi: String,
-                             version: Option[Int] = None,
-                             mergeSchema: Boolean = false): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _, _) = pruneGroupsWherePreds(spark, path,
-      Seq(StrStatPred(Some(column), lo, hi)), version)
-    if (groups.forall(_._1.isEmpty))
-      readVersion(spark, path, version, mergeSchema).filter(lit(false))
-    else readGroups(spark, root, groups, mergeSchema)
-      .filter(col(column).between(lit(lo), lit(hi)))
-  }
-
-  /** Planning view of [[readVersionWhereString]] — (kept files,
-    * total, declared stats columns); what the skip-economics specs
-    * probe.
-    */
-  def pruneFilesString(spark: org.apache.spark.sql.SparkSession,
-                       path: String, column: String,
-                       lo: String, hi: String,
-                       version: Option[Int] = None)
-      : (Seq[String], Int, Seq[String]) = {
-    val (groups, total, cols) = pruneGroupsWherePreds(spark, path,
-      Seq(StrStatPred(Some(column), lo, hi)), version)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, cols)
-  }
-
-  /** Read a snapshot under a MICROSECOND-granular range predicate
-    * (`[loMicros, hiMicros]` inclusive, unix_micros) on a declared
-    * TIMESTAMP stats column — the event-time zone map (r16): the
-    * sidecar stores per-file `unix_micros` bounds ([[writeDirStats]]
-    * `#tsus` kind), so an event-time clustering column — the most
-    * common production clustering key — range-reads at exact micros
-    * instead of the pre-r16 SECONDS-floor long cast. Prune and the
-    * exact residual share ONE expression ([[statKindExpr]]) by
-    * construction, so they can never disagree; DV-aware like
-    * [[readVersionWhere]]; a plain-numeric / string / date stats
-    * column refuses loudly (kind mismatch both ways).
-    */
-  def readVersionWhereTs(spark: org.apache.spark.sql.SparkSession,
-                         path: String, column: String,
-                         loMicros: Long, hiMicros: Long,
-                         version: Option[Int] = None,
-                         mergeSchema: Boolean = false): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _, _) = pruneGroupsWherePreds(spark, path,
-      Seq(LongStatPred(Some(column), loMicros, hiMicros, StatKindTsUs)),
-      version)
-    if (groups.forall(_._1.isEmpty))
-      readVersion(spark, path, version, mergeSchema).filter(lit(false))
-    else readGroups(spark, root, groups, mergeSchema)
-      .filter(statKindExpr(column, StatKindTsUs)
-        .between(loMicros, hiMicros))
-  }
-
-  /** Planning view of [[readVersionWhereTs]] — (kept files, total,
-    * declared stats columns); the skip-economics probe.
-    */
-  def pruneFilesTs(spark: org.apache.spark.sql.SparkSession,
-                   path: String, column: String,
-                   loMicros: Long, hiMicros: Long,
-                   version: Option[Int] = None)
-      : (Seq[String], Int, Seq[String]) = {
-    val (groups, total, cols) = pruneGroupsWherePreds(spark, path,
-      Seq(LongStatPred(Some(column), loMicros, hiMicros, StatKindTsUs)),
-      version)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, cols)
-  }
-
-  /** Read a snapshot under an inclusive DATE range (`yyyy-MM-dd`
-    * literals) on a declared DATE stats column — the `#day` kind
-    * twin of [[readVersionWhereTs]]: bounds are stored as epoch days
-    * (DateType never long-casts, so date clustering columns could not
-    * be stats columns at all before r16). The residual compares the
-    * column against the date literals directly (day granularity makes
-    * that identical to the epoch-day compare, and it stays a codegen'd
-    * date comparison).
-    */
-  def readVersionWhereDate(spark: org.apache.spark.sql.SparkSession,
-                           path: String, column: String,
-                           lo: String, hi: String,
-                           version: Option[Int] = None,
-                           mergeSchema: Boolean = false): DataFrame = {
-    val (loD, hiD) = (java.time.LocalDate.parse(lo).toEpochDay,
-      java.time.LocalDate.parse(hi).toEpochDay)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _, _) = pruneGroupsWherePreds(spark, path,
-      Seq(LongStatPred(Some(column), loD, hiD, StatKindDay)), version)
-    if (groups.forall(_._1.isEmpty))
-      readVersion(spark, path, version, mergeSchema).filter(lit(false))
-    else readGroups(spark, root, groups, mergeSchema)
-      .filter(col(column).between(to_date(lit(lo)), to_date(lit(hi))))
-  }
-
-  /** Planning view of [[readVersionWhereDate]] — (kept files, total,
-    * declared stats columns).
-    */
-  def pruneFilesDate(spark: org.apache.spark.sql.SparkSession,
-                     path: String, column: String,
-                     lo: String, hi: String,
-                     version: Option[Int] = None)
-      : (Seq[String], Int, Seq[String]) = {
-    val (loD, hiD) = (java.time.LocalDate.parse(lo).toEpochDay,
-      java.time.LocalDate.parse(hi).toEpochDay)
-    val (groups, total, cols) = pruneGroupsWherePreds(spark, path,
-      Seq(LongStatPred(Some(column), loD, hiD, StatKindDay)), version)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, cols)
-  }
-
-  /** Planning view of [[readVersionWhereCols]] — (kept files, total,
-    * declared stats columns) under the predicate conjunction; the
-    * skip-economics probe specs and operators use to see what a read
-    * WOULD open.
-    */
-  def pruneFilesCols(spark: org.apache.spark.sql.SparkSession,
-                     path: String, preds: Seq[(String, Long, Long)],
-                     version: Option[Int] = None)
-      : (Seq[String], Int, Seq[String]) = {
-    val (groups, total, cols) = pruneGroupsWhereCols(spark, path,
-      preds.map { case (c, lo, hi) => (Some(c): Option[String], lo, hi) },
-      version)
-    requireFlat(groups, path) // flat view: refuse DV manifests loudly
-    (groups.flatMap(_._1), total, cols)
-  }
+  private def applyDeletes(spark: org.apache.spark.sql.SparkSession,
+                           root: org.apache.hadoop.fs.Path,
+                           df: DataFrame,
+                           dels: Seq[(String, String)]): DataFrame =
+    dels.foldLeft(df) { case (acc, (ddir, keyCol)) =>
+      acc.join(broadcast(Tables.parquet(spark,
+          new org.apache.hadoop.fs.Path(root, ddir).toString)
+        .select(keyCol)), Seq(keyCol), "left_anti")
+    }
 
   // ---- Hive-partitioned versioned commits (partition pruning) ----
 
   /** [[commitVersion]] HIVE-PARTITIONED by `partCol`: the commit's data
     * dir holds one `partCol=value` subdirectory per distinct value, and
     * a `parts/` sidecar records exactly which partition values the dir
-    * carries — so a partition-scoped read ([[readVersionPartIn]]) plans
+    * carries — so a partition-scoped read ([[readVersionWhere]]) plans
     * from the SIDECAR, skipping whole data dirs (and, inside kept dirs,
     * whole partition subtrees) with zero IO, before any file listing.
     * This is the coarsest and cheapest skip tier — at 100 TB, partition
@@ -3220,7 +3200,7 @@ object SinkOps {
     * Loud contracts: `partCol` must exist in `df`; a commit whose
     * batch is empty (no partition subdirs written) refuses rather than
     * recording an unreadable snapshot; partition values must not need
-    * hive escaping (see [[readVersionPartIn]]).
+    * hive escaping (see [[PartValueOk]]).
     */
   def commitVersionPartitioned(df: DataFrame, path: String,
                                partCol: String,
@@ -3369,10 +3349,7 @@ object SinkOps {
     val sf = sidecarFile(root, dataDir, "parts")
     if (!fs.exists(sf)) None
     else {
-      val in = fs.open(sf)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-        .getLines().filter(_.nonEmpty).toList
-      finally in.close()
+      val lines = sidecarLines(fs, sf)
       val frags = lines.tail.map { ln =>
         ln.split('\t') match {
           case Array(f) => PartFrag(f, None, None) // legacy
@@ -3400,11 +3377,9 @@ object SinkOps {
     segs.zip(cols).map { case (s, c) => s.stripPrefix(c + "=") }
   }
 
-  /** The flat (file-listing) skip planners serve unpartitioned dirs
-    * only: a hive-partitioned dir has no direct `.parquet` children,
-    * so listing it flat would plan ZERO files — a silent wrong skip,
-    * the one failure a skip tier must never have. Refuse loudly and
-    * name the right tool.
+  /** For flat-only maintenance paths: a hive-partitioned dir has no
+    * direct `.parquet` children, so treating it as flat would see ZERO
+    * files. Refuse loudly and name the right tool.
     */
   private def refusePartitionedDir(fs: org.apache.hadoop.fs.FileSystem,
                                    root: org.apache.hadoop.fs.Path,
@@ -3412,9 +3387,7 @@ object SinkOps {
                                    tier: String): Unit =
     require(readDirParts(fs, root, dataDir).isEmpty,
       s"dir $dataDir is hive-partitioned — $tier serves flat dirs " +
-        "only; read partition-scoped via readVersionPartIn, compose " +
-        "partition + zone-map pruning via readVersionPartsWhereStats, " +
-        "or use compactVersions (which preserves the partition " +
+        "only; use compactVersions (which preserves the partition " +
         "layout) for maintenance")
 
   /** Partition values a requested set may name at this surface: the
@@ -3453,464 +3426,6 @@ object SinkOps {
     }
   }
 
-  /** Planning view of [[readVersionPartIn]] — (kept leaf dir paths,
-    * total partition subdirs across partitioned dirs, unpartitioned
-    * dirs kept whole). What a partition-scoped read WOULD list; the
-    * skip-economics probe for specs and operators.
-    */
-  def planPartsIn(spark: org.apache.spark.sql.SparkSession,
-                  path: String, partCol: String, values: Seq[String],
-                  version: Option[Int] = None)
-      : (Seq[String], Int, Seq[String]) = {
-    val (groups, total, whole) =
-      partGroups(spark, path, Seq((partCol, values)), version)
-    (groups.flatMap(_._1).map(_.leaf.toString), total,
-      whole.map(_.toString))
-  }
-
-  /** One kept read of the partition planner: the manifest dir line
-    * (sidecar key), its resolved base path (what restores partition
-    * columns), and the kept leaf fragment ("" = an unpartitioned dir
-    * kept whole, whose leaf IS the dir).
-    */
-  private case class PartRead(dir: String,
-                              base: org.apache.hadoop.fs.Path,
-                              frag: String) {
-    def leaf: org.apache.hadoop.fs.Path =
-      if (frag.isEmpty) base else new org.apache.hadoop.fs.Path(base, frag)
-  }
-
-  /** Epoch-grouped partition planning core over a CONJUNCTION of
-    * per-column value sets (any subset of the partition columns).
-    * Per epoch: (kept reads, delete sidecars). Also returns total
-    * partition leaves seen and the unpartitioned dirs (for the
-    * probe).
-    */
-  private def partGroups(spark: org.apache.spark.sql.SparkSession,
-                         path: String,
-                         preds: Seq[(String, Seq[String])],
-                         version: Option[Int])
-      : (Seq[(Seq[PartRead], Seq[(String, String)])],
-         Int, Seq[org.apache.hadoop.fs.Path]) = {
-    require(preds.nonEmpty &&
-        preds.map(_._1).distinct == preds.map(_._1),
-      s"partition predicates must be non-empty and per-column unique")
-    preds.foreach { case (c, vs) =>
-      require(vs.nonEmpty, s"no partition values requested for $c")
-      vs.foreach(v => require(PartValueOk.matches(v),
-        s"partition value '$v' needs hive escaping — this surface " +
-          "serves verbatim values only (letters, digits, _ . -)"))
-    }
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = version.getOrElse {
-      val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
-      latest
-    }
-    val wanted = preds.map { case (c, vs) => (c, vs.toSet) }
-    // PARTITION-SPEC EVOLUTION tolerance (round 14): a snapshot may
-    // mix dirs partitioned under DIFFERENT specs (the table moved from
-    // `date` to `date/tenant` without rewrite) — each dir prunes on
-    // the INTERSECTION of the predicate columns with ITS OWN spec, and
-    // the exact residual keeps the result equal to the full-scan
-    // filter (a dir lacking a predicate column is pruned less, never
-    // wrongly skipped). The typo guard stays loud one level up: every
-    // predicate column must exist in at least one dir's spec, else the
-    // reader asked for a skip NO layout can answer.
-    val allSpecCols = manifestDirs(fs, root, v).filterNot(isOpLine)
-      .flatMap(d => readDirParts(fs, root, d).map(_.cols).getOrElse(Nil))
-      .toSet
-    wanted.foreach { case (c, _) =>
-      require(allSpecCols.contains(c),
-        s"no partitioned dir of version $v at $path carries predicate " +
-          s"column $c (specs seen: ${allSpecCols.mkString(", ")})") }
-    var total = 0
-    val whole = scala.collection.mutable.ArrayBuffer
-      .empty[org.apache.hadoop.fs.Path]
-    val groups = epochGroups(manifestDirs(fs, root, v)).map {
-      case (dirs, dels) =>
-        val reads = dirs.flatMap { d =>
-          val dirP = new org.apache.hadoop.fs.Path(root, d)
-          readDirParts(fs, root, d) match {
-            case None =>
-              whole += dirP
-              Seq(PartRead(d, dirP, ""))
-            case Some(dp) =>
-              val applicable = wanted.filter(w => dp.cols.contains(w._1))
-              total += dp.frags.length
-              dp.frags.map(_.frag).filter { f =>
-                val vals = dp.cols.zip(fragValues(f, dp.cols, d)).toMap
-                applicable.forall { case (c, vs) => vs.contains(vals(c)) }
-              }.map(f => PartRead(d, dirP, f))
-          }
-        }
-        (reads, dels)
-    }
-    (groups, total, whole.toSeq)
-  }
-
-  /** Read a snapshot RESTRICTED TO a set of partition values of the
-    * table's hive-partition column ([[commitVersionPartitioned]]):
-    * planning consults only the `parts/` sidecars — a data dir whose
-    * value set misses the request is skipped whole, a kept dir lists
-    * only the matching `partCol=value` subtrees — so IO is O(matching
-    * partitions), not O(table), before zone maps or parquet footers
-    * enter. DV-aware like [[readVersionWhere]]: kept reads group by
-    * manifest epoch and each group anti-joins exactly the delete
-    * sidecars that scope it, so partition reads stay usable under a
-    * live CDC merge stream. Unpartitioned dirs in a mixed table are
-    * read whole (never wrongly skipped); the exact residual
-    * `partCol IN (values)` keeps the result equal to the full-scan
-    * filter by construction. Equality under DVs and files-listed <
-    * files-total are spec-pinned; q_part_prune's oracle pins the
-    * resolved equality end to end.
-    */
-  def readVersionPartIn(spark: org.apache.spark.sql.SparkSession,
-                        path: String, partCol: String,
-                        values: Seq[String],
-                        version: Option[Int] = None): DataFrame =
-    readVersionPartsWhere(spark, path, Seq((partCol, values)), version)
-
-  /** [[readVersionPartIn]] over a CONJUNCTION of per-column value
-    * sets on a NESTED ([[commitVersionPartitionedCols]]) layout: a
-    * leaf fragment survives iff every predicate column's value is in
-    * its set — pruning multiplies across partition columns exactly
-    * like the multi-column zone maps one tier down. Predicates may
-    * name any subset of the partition columns; a predicate on a
-    * column a partitioned dir lacks fails loudly (the reader asked
-    * for a skip the table cannot answer).
-    */
-  def readVersionPartsWhere(spark: org.apache.spark.sql.SparkSession,
-                            path: String,
-                            preds: Seq[(String, Seq[String])],
-                            version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _, _) = partGroups(spark, path, preds, version)
-    val epochs = groups.flatMap { case (reads, dels) =>
-      if (reads.isEmpty) None
-      else {
-        // One read per (basePath, leaves) group: basePath restores the
-        // partition columns Spark strips into the directory names.
-        val dfs = reads.groupBy(_.base).toSeq.sortBy(_._1.toString)
-          .map { case (base, leaves) =>
-            Tables.parquet(spark, Map("basePath" -> base.toString),
-              leaves.map(_.leaf.toString))
-          }
-        Some(dels.foldLeft(dfs.reduce(_.unionByName(_))) {
-          case (acc, (ddir, keyCol)) =>
-            acc.join(broadcast(Tables.parquet(spark,
-                new org.apache.hadoop.fs.Path(root, ddir).toString)
-              .select(keyCol)), Seq(keyCol), "left_anti")
-        })
-      }
-    }
-    val residual = preds.map { case (c, vs) =>
-      col(c).cast("string").isin(vs: _*) }.reduce(_ && _)
-    if (epochs.isEmpty)
-      readVersion(spark, path, version).filter(lit(false))
-    else epochs.reduce(_.unionByName(_)).filter(residual)
-  }
-
-  /** COMPOSED partition × zone-map planning core (r16): partition
-    * prune first (parts sidecars — whole dirs and leaf subtrees skip
-    * with zero IO), then per-FILE zone-map prune INSIDE the kept
-    * leaves against the stats sidecar's leaf-relative entries
-    * ([[commitVersionPartitionedCols]] with statsCols). Per epoch:
-    * (kept (basePath, file) pairs, delete sidecars); plus
-    * (files kept, files listed in kept leaves, leaves kept,
-    * leaves total) for the skip-economics probe. A dir without a
-    * stats sidecar (or a file without a stats line) is planned whole
-    * — never a wrong skip; kind/column checks are the flat planner's.
-    */
-  private def partStatsGroups(spark: org.apache.spark.sql.SparkSession,
-                              path: String,
-                              partPreds: Seq[(String, Seq[String])],
-                              statPreds: Seq[StatPred],
-                              version: Option[Int])
-      : (Seq[(Seq[(org.apache.hadoop.fs.Path, String)],
-              Seq[(String, String)])],
-         (Int, Int, Int, Int)) = {
-    require(statPreds.nonEmpty, "no zone-map predicates to plan — " +
-      "use readVersionPartsWhere for a pure partition read")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val (groups, leavesTotal, _) =
-      partGroups(spark, path, partPreds, version)
-    var declared: Option[Seq[String]] = None
-    var filesKept = 0; var filesListed = 0; var leavesKept = 0
-    val fileGroups = groups.map { case (reads, dels) =>
-      val kept = reads.flatMap { r =>
-        leavesKept += 1
-        val files = fs.listStatus(r.leaf).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-        filesListed += files.length
-        val chosen = readDirStats(fs, root, r.dir) match {
-          case None => files.toSeq
-          case Some(ds) =>
-            declared.foreach(prev => require(prev == ds.cols,
-              s"inconsistent stats columns across snapshot dirs: " +
-                s"${prev.mkString(",")} vs ${ds.cols.mkString(",")}"))
-            declared = Some(ds.cols)
-            val idx = statPreds.map { p =>
-              val i = p.col.fold(0)(ds.cols.indexOf)
-              require(i >= 0,
-                s"predicate on ${p.col.get} but dir ${r.dir} declares " +
-                  "stats for " + ds.cols.mkString(", "))
-              p match {
-                case LongStatPred(_, _, _, want) =>
-                  require(ds.kinds(i) == want,
-                    s"${statSurfaceFor(want)} predicate on " +
-                      s"${ds.cols(i)} of kind '${ds.kinds(i)}' — use " +
-                      statSurfaceFor(ds.kinds(i)))
-                case _: StrStatPred => require(ds.isStr(i),
-                  s"string range predicate on non-string stats " +
-                    s"column ${ds.cols(i)}")
-              }
-              (i, p)
-            }
-            val keep = ds.files.collect {
-              case (name, mm, _) if idx.forall { case (i, p) =>
-                mm(i).forall { case (mn, mx) => p match {
-                  case LongStatPred(_, lo, hi, _) =>
-                    mn.toLong <= hi && mx.toLong >= lo
-                  case StrStatPred(_, lo, hi) =>
-                    cpCompare(mn, hi) <= 0 && cpCompare(mx, lo) >= 0
-                } } } => name
-            }.toSet
-            val prefix = if (r.frag.isEmpty) "" else r.frag + "/"
-            files.filter(f => keep.contains(prefix + f.getName)).toSeq
-        }
-        filesKept += chosen.length
-        chosen.map(f => (r.base, f.toString))
-      }
-      (kept, dels)
-    }
-    (fileGroups, (filesKept, filesListed, leavesKept, leavesTotal))
-  }
-
-  /** Read a snapshot under BOTH a partition predicate and a
-    * conjunction of numeric zone-map range predicates — the standard
-    * 100 TB layout read (Delta: partition columns + file stats):
-    * partition pruning gives the first 100-1000× (whole subtrees, zero
-    * IO), per-file zone maps the next order inside kept leaves. Exact
-    * residuals on both levels keep the result equal to the full-scan
-    * filter by construction; DV-aware like every skip reader (kept
-    * files group by manifest epoch, each group anti-joins its delete
-    * sidecars). q_part_skip pins files-kept < kept-leaf files <
-    * total, and result ≡ full-scan filter (oracle).
-    */
-  def readVersionPartsWhereStats(spark: org.apache.spark.sql.SparkSession,
-                                 path: String,
-                                 partPreds: Seq[(String, Seq[String])],
-                                 statPreds: Seq[(String, Long, Long)],
-                                 version: Option[Int] = None)
-      : DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _) = partStatsGroups(spark, path, partPreds,
-      statPreds.map { case (c, lo, hi) =>
-        LongStatPred(Some(c), lo, hi) }, version)
-    val epochs = readPartFileGroups(spark, root, groups)
-    val residual = (partPreds.map { case (c, vs) =>
-      col(c).cast("string").isin(vs: _*) } ++
-      statPreds.map { case (c, lo, hi) =>
-        col(c).cast("long").between(lo, hi) }).reduce(_ && _)
-    if (epochs.isEmpty)
-      readVersion(spark, path, version).filter(lit(false))
-    else epochs.reduce(_.unionByName(_)).filter(residual)
-  }
-
-  /** Planning view of [[readVersionPartsWhereStats]] — (files kept,
-    * files listed in kept leaves, leaves kept, leaves total): the
-    * two-tier skip-economics probe (filesKept < filesListed shows the
-    * zone maps biting INSIDE kept partitions; leavesKept <
-    * leavesTotal shows the partition prune).
-    */
-  def planPartsWhereStats(spark: org.apache.spark.sql.SparkSession,
-                          path: String,
-                          partPreds: Seq[(String, Seq[String])],
-                          statPreds: Seq[(String, Long, Long)],
-                          version: Option[Int] = None)
-      : (Int, Int, Int, Int) =
-    partStatsGroups(spark, path, partPreds,
-      statPreds.map { case (c, lo, hi) =>
-        LongStatPred(Some(c), lo, hi) }, version)._2
-
-  /** All k probe bits set in a per-file bloom bitmap? The line's hex
-    * length IS the bitmap size (m = 4·|hex|). Shared by the flat and
-    * partitioned bloom planners.
-    */
-  private def bloomHexHit(hex: String, value: Long): Boolean =
-    bloomPositions(value, hex.length * 4).forall { bt =>
-      val b = Integer.parseInt(
-        hex.substring((bt >> 3) * 2, (bt >> 3) * 2 + 2), 16)
-      ((b >> (bt & 7)) & 1) == 1
-    }
-
-  /** COMPOSED partition × bloom planning core (r16): partition prune
-    * first (parts sidecars), then per-file bloom probe INSIDE the
-    * kept leaves against the sidecar's leaf-relative entries
-    * ([[commitVersionPartitionedCols]] with bloomCols). Same
-    * kind/column contracts as the flat bloom planner; files/dirs
-    * without bloom lines always planned (never a wrong skip).
-    */
-  private def partBloomGroups(spark: org.apache.spark.sql.SparkSession,
-                              path: String,
-                              partPreds: Seq[(String, Seq[String])],
-                              colName: String, value: Long,
-                              probeHashed: Boolean,
-                              version: Option[Int])
-      : (Seq[(Seq[(org.apache.hadoop.fs.Path, String)],
-              Seq[(String, String)])],
-         (Int, Int, Int, Int)) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val (groups, leavesTotal, _) =
-      partGroups(spark, path, partPreds, version)
-    var declared: Option[Seq[String]] = None
-    var filesKept = 0; var filesListed = 0; var leavesKept = 0
-    val fileGroups = groups.map { case (reads, dels) =>
-      val kept = reads.flatMap { r =>
-        leavesKept += 1
-        val files = fs.listStatus(r.leaf).map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-        filesListed += files.length
-        val bf = sidecarFile(root, r.dir, "blooms")
-        val chosen =
-          if (!fs.exists(bf)) files.toSeq
-          else {
-            val in = fs.open(bf)
-            val blines = try scala.io.Source
-              .fromInputStream(in, "UTF-8")
-              .getLines().filter(_.nonEmpty).toList
-            finally in.close()
-            val tagged = blines.head.split('\t').toSeq
-            val cs = tagged.map(_.stripSuffix("#str"))
-            val strCol = tagged.map(_.endsWith("#str"))
-            declared.foreach(prev => require(prev == cs,
-              s"inconsistent bloom columns across snapshot dirs: " +
-                s"${prev.mkString(",")} vs ${cs.mkString(",")}"))
-            declared = Some(cs)
-            val idx = cs.indexOf(colName)
-            require(idx >= 0,
-              s"probe on $colName but dir ${r.dir} declares blooms " +
-                "for " + cs.mkString(", "))
-            require(strCol(idx) == probeHashed,
-              if (strCol(idx))
-                s"bloom column ${cs(idx)} is string-typed — probe " +
-                  "with readVersionPartsEqString (xxhash64 " +
-                  "membership), not a raw long"
-              else
-                s"bloom column ${cs(idx)} is numeric — probe with " +
-                  "the long-valued readVersionPartsEq")
-            val maps = blines.tail.map { ln =>
-              val fields = ln.split('\t')
-              require(fields.length == cs.length + 1,
-                s"malformed bloom line in $bf: $ln")
-              fields(0) -> fields(1 + idx)
-            }.toMap
-            val prefix = if (r.frag.isEmpty) "" else r.frag + "/"
-            files.filter { p =>
-              maps.get(prefix + p.getName)
-                .forall(hex => bloomHexHit(hex, value))
-            }.toSeq
-          }
-        filesKept += chosen.length
-        chosen.map(f => (r.base, f.toString))
-      }
-      (kept, dels)
-    }
-    (fileGroups, (filesKept, filesListed, leavesKept, leavesTotal))
-  }
-
-  private def readPartFileGroups(spark: org.apache.spark.sql.SparkSession,
-                                 root: org.apache.hadoop.fs.Path,
-                                 groups: Seq[(Seq[(org.apache.hadoop.fs.Path,
-                                                   String)],
-                                              Seq[(String, String)])])
-      : Seq[DataFrame] =
-    groups.flatMap { case (reads, dels) =>
-      if (reads.isEmpty) None
-      else {
-        val dfs = reads.groupBy(_._1).toSeq.sortBy(_._1.toString)
-          .map { case (base, files) =>
-            Tables.parquet(spark, Map("basePath" -> base.toString),
-              files.map(_._2))
-          }
-        Some(dels.foldLeft(dfs.reduce(_.unionByName(_))) {
-          case (acc, (ddir, keyCol)) =>
-            acc.join(broadcast(Tables.parquet(spark,
-                new org.apache.hadoop.fs.Path(root, ddir).toString)
-              .select(keyCol)), Seq(keyCol), "left_anti")
-        })
-      }
-    }
-
-  /** Read a snapshot under a partition predicate AND a bloom point
-    * probe on a numeric lookup column — the partitioned twin of
-    * [[readVersionEq]]: partition prune to the kept subtrees, then
-    * only bloom-positive files inside them are opened (a date/tenant
-    * predicate plus a key lookup is the canonical 100 TB point read).
-    * Exact residuals keep the result ≡ the full-scan conjunction;
-    * DV-aware by epoch.
-    */
-  def readVersionPartsEq(spark: org.apache.spark.sql.SparkSession,
-                         path: String,
-                         partPreds: Seq[(String, Seq[String])],
-                         colName: String, value: Long,
-                         version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _) = partBloomGroups(spark, path, partPreds, colName,
-      value, probeHashed = false, version)
-    val epochs = readPartFileGroups(spark, root, groups)
-    val residual = (partPreds.map { case (c, vs) =>
-      col(c).cast("string").isin(vs: _*) } :+
-      (col(colName).cast("long") === value)).reduce(_ && _)
-    if (epochs.isEmpty)
-      readVersion(spark, path, version).filter(lit(false))
-    else epochs.reduce(_.unionByName(_)).filter(residual)
-  }
-
-  /** [[readVersionPartsEq]] for a STRING lookup column — membership
-    * hashes through xxhash64 exactly like [[readVersionEqString]].
-    */
-  def readVersionPartsEqString(spark: org.apache.spark.sql.SparkSession,
-                               path: String,
-                               partPreds: Seq[(String, Seq[String])],
-                               colName: String, value: String,
-                               version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _) = partBloomGroups(spark, path, partPreds, colName,
-      xxhash64String(value), probeHashed = true, version)
-    val epochs = readPartFileGroups(spark, root, groups)
-    val residual = (partPreds.map { case (c, vs) =>
-      col(c).cast("string").isin(vs: _*) } :+
-      (col(colName) === lit(value))).reduce(_ && _)
-    if (epochs.isEmpty)
-      readVersion(spark, path, version).filter(lit(false))
-    else epochs.reduce(_.unionByName(_)).filter(residual)
-  }
-
-  /** Planning view of [[readVersionPartsEq]]/[[readVersionPartsEqString]]
-    * — (files kept, files listed in kept leaves, leaves kept, leaves
-    * total).
-    */
-  def planPartsEq(spark: org.apache.spark.sql.SparkSession,
-                  path: String,
-                  partPreds: Seq[(String, Seq[String])],
-                  colName: String, value: Long,
-                  version: Option[Int] = None): (Int, Int, Int, Int) =
-    partBloomGroups(spark, path, partPreds, colName, value,
-      probeHashed = false, version)._2
-
-  def planPartsEqString(spark: org.apache.spark.sql.SparkSession,
-                        path: String,
-                        partPreds: Seq[(String, Seq[String])],
-                        colName: String, value: String,
-                        version: Option[Int] = None): (Int, Int, Int, Int) =
-    partBloomGroups(spark, path, partPreds, colName,
-      xxhash64String(value), probeHashed = true, version)._2
-
   /** [[partCountsOnly]] UNDER LIVE DELETION VECTORS — the bounded
     * composition ([[statsAggDv]]'s partition twin): epochs whose
     * trailing sidecar set is EMPTY answer entirely from the parts
@@ -3930,11 +3445,7 @@ object SinkOps {
                    version: Option[Int] = None): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = version.getOrElse {
-      val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
-      latest
-    }
+    val v = versionOr(fs, root, version)
     val groups = epochGroups(manifestDirs(fs, root, v))
     val (clean, dved) = groups.partition(_._2.isEmpty)
     var cols: Option[Seq[String]] = None
@@ -3971,13 +3482,8 @@ object SinkOps {
       s"no partitioned dir in version $v at $path — nothing declares " +
         "the partition columns"))
     val dvCounts: Seq[DataFrame] = dved.map { case (dirs, dels) =>
-      val read = dels.foldLeft(readDirsGrouped(spark, root, dirs,
-          mergeSchema = false)) {
-        case (df, (ddir, keyCol)) =>
-          df.join(broadcast(Tables.parquet(spark,
-              new org.apache.hadoop.fs.Path(root, ddir).toString)
-            .select(keyCol)), Seq(keyCol), "left_anti")
-      }
+      val read = applyDeletes(spark, root,
+        readDirsGrouped(spark, root, dirs, mergeSchema = false), dels)
       read.groupBy(pc.map(c => col(c).cast("string").as(c)): _*)
         .agg(count(lit(1)).as("n_rows"))
     }
@@ -4009,11 +3515,7 @@ object SinkOps {
                      version: Option[Int] = None): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = version.getOrElse {
-      val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
-      latest
-    }
+    val v = versionOr(fs, root, version)
     val lines = manifestDirs(fs, root, v)
     require(!lines.exists(isDeleteLine),
       s"metadata-only partition counts over version $v at $path " +
@@ -4246,7 +3748,8 @@ object SinkOps {
   /** [[commitVersionBloom]] with MULTI-COLUMN blooms: every declared
     * column gets its per-file bitmap in the ONE sidecar (k=1 format
     * byte-identical to the single-column original), so a CONJUNCTION
-    * of point probes ([[readVersionEqs]]) intersects independent
+    * of point probes ([[readVersionWhere]] with one `LongIn` per
+    * column) intersects independent
     * prunes — the bloom twin of multi-column zone maps, for lookup
     * keys no layout clusters.
     */
@@ -4259,308 +3762,6 @@ object SinkOps {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     writeDirBloom(spark, fs, root, s"data/v$v", bloomCols)
     v
-  }
-
-  /** Bloom file planning for [[readVersionEq]]: resolve the version
-    * and keep only files whose bloom bitmap has ALL k bits of the
-    * probe value set — plus every file without a bloom line (absent
-    * sidecar ⇒ planned, never a wrong skip). Returns (files kept,
-    * files total, bloom column). Like [[pruneFiles]], the flat view
-    * REFUSES a DV-carrying manifest (raw reads of the list would
-    * serve deleted rows — ADVICE r12): plan those through
-    * [[planFileGroupsEq]] or read via [[readVersionEq]].
-    */
-  def planFilesEq(spark: org.apache.spark.sql.SparkSession,
-                  path: String, value: Long,
-                  version: Option[Int] = None)
-      : (Seq[String], Int, String) = {
-    val (groups, total, c) =
-      bloomGroupsEq(spark, path, None, value, version)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, c)
-  }
-
-  /** [[planFilesEq]] probing a NAMED bloom column of a multi-bloom
-    * table.
-    */
-  def planFilesEqOn(spark: org.apache.spark.sql.SparkSession,
-                    path: String, colName: String, value: Long,
-                    version: Option[Int] = None)
-      : (Seq[String], Int, String) = {
-    val (groups, total, c) =
-      bloomGroupsEq(spark, path, Some(colName), value, version)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, c)
-  }
-
-  /** DV-aware PUBLIC bloom planning view — the [[pruneFileGroups]]
-    * twin for equality probes: per-epoch (kept files, applicable
-    * sidecars), total files, and the probed column (None probes the
-    * first declared bloom column).
-    */
-  def planFileGroupsEq(spark: org.apache.spark.sql.SparkSession,
-                       path: String, value: Long,
-                       colName: Option[String] = None,
-                       version: Option[Int] = None)
-      : (Seq[(Seq[String], Seq[(String, String)])], Int, String) =
-    bloomGroupsEq(spark, path, colName, value, version)
-
-  /** DV-aware bloom planning core — the [[pruneGroupsWhere]] twin for
-    * equality probes: per-dir bloom pruning with data dirs grouped by
-    * manifest epoch, so [[readVersionEq]] applies merge-on-read
-    * deletes to exactly the dirs they scope. `colName` None probes the
-    * FIRST declared bloom column (the single-column compatibility
-    * path); a named column absent from the declared blooms fails
-    * loudly.
-    */
-  /** `probeHashed` declares what the caller's `value` IS: false = a
-    * raw long probing a numeric bloom column; true = an xxhash64 of
-    * the probe string, probing a `#str` column. A kind mismatch
-    * refuses loudly — silently probing a string bitmap with an
-    * unhashed long would miss every member.
-    */
-  private def bloomGroupsEq(spark: org.apache.spark.sql.SparkSession,
-                            path: String, colName: Option[String],
-                            value: Long, version: Option[Int],
-                            probeHashed: Boolean = false)
-      : (Seq[(Seq[String], Seq[(String, String)])], Int, String) = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = version.getOrElse {
-      val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
-      latest
-    }
-    var declared: Option[Seq[String]] = None
-    var total = 0
-    def keptOf(d: String): Seq[String] = {
-      refusePartitionedDir(fs, root, d, "the bloom planner")
-      val dirP = new org.apache.hadoop.fs.Path(root, d)
-      val bf = sidecarFile(root, d, "blooms")
-      val parts = fs.listStatus(dirP).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-      total += parts.length
-      if (!fs.exists(bf)) parts.map(_.toString).toSeq
-      else {
-        val in = fs.open(bf)
-        val blines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toList
-        finally in.close()
-        val tagged = blines.head.split('\t').toSeq
-        val cs = tagged.map(_.stripSuffix("#str"))
-        val strCol = tagged.map(_.endsWith("#str"))
-        declared.foreach(prev => require(prev == cs,
-          s"inconsistent bloom columns across snapshot dirs: " +
-            s"${prev.mkString(",")} vs ${cs.mkString(",")}"))
-        declared = Some(cs)
-        val idx = colName.fold(0)(cs.indexOf)
-        require(idx >= 0,
-          s"probe on ${colName.get} but dir $d declares blooms for " +
-            cs.mkString(", "))
-        require(strCol(idx) == probeHashed,
-          if (strCol(idx))
-            s"bloom column ${cs(idx)} is string-typed — probe with " +
-              "readVersionEqString/planFilesEqString (xxhash64 " +
-              "membership), not a raw long"
-          else
-            s"bloom column ${cs(idx)} is numeric — probe with the " +
-              "long-valued readVersionEq/planFilesEq")
-        val maps = blines.tail.map { ln =>
-          val fields = ln.split('\t')
-          require(fields.length == cs.length + 1,
-            s"malformed bloom line in $bf: $ln")
-          fields(0) -> fields(1 + idx)
-        }.toMap
-        parts.flatMap { p =>
-          maps.get(p.getName) match {
-            case None => Some(p.toString) // no line: always plan
-            case Some(hexmap) =>
-              // The line's hex length IS the bitmap size: m = 4·|hex|.
-              val hit = bloomPositions(value, hexmap.length * 4)
-                .forall { bt =>
-                  val b = Integer.parseInt(
-                    hexmap.substring((bt >> 3) * 2, (bt >> 3) * 2 + 2),
-                    16)
-                  ((b >> (bt & 7)) & 1) == 1
-                }
-              if (hit) Some(p.toString) else None
-          }
-        }.toSeq
-      }
-    }
-    val groups = epochGroups(manifestDirs(fs, root, v))
-      .map { case (dirs, dels) => (dirs.flatMap(keptOf), dels) }
-    val resolvedCol = declared.map(cs => colName.getOrElse(cs.head))
-    (groups, total, resolvedCol.getOrElse(
-      throw new IllegalStateException(
-        s"no bloom sidecar in any dir of version $v at $path — " +
-          "commit with commitVersionBloom to enable point-lookup reads")))
-  }
-
-  /** Bloom planning for a SET of probe values — [[bloomGroupsEq]]'s
-    * multi-key sibling: a file is kept when its bitmap hits ANY of
-    * the values (the disjunctive probe a changefeed's key set needs).
-    * Probe positions are memoized per (value, bitmap size), so cost
-    * is O(values · files) bit tests worst case with early exit —
-    * values are arrival-sized by the callers' contract (a changefeed
-    * window's distinct keys), never table-sized.
-    */
-  private def bloomGroupsIn(spark: org.apache.spark.sql.SparkSession,
-                            path: String, colName: Option[String],
-                            values: Seq[Long], version: Option[Int],
-                            probeHashed: Boolean = false)
-      : (Seq[(Seq[String], Seq[(String, String)])], Int, String) = {
-    require(values.nonEmpty, "no probe values to plan")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = version.getOrElse {
-      val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
-      latest
-    }
-    val posCache =
-      scala.collection.mutable.Map[(Long, Int), Seq[Int]]()
-    var declared: Option[Seq[String]] = None
-    var total = 0
-    def keptOf(d: String): Seq[String] = {
-      refusePartitionedDir(fs, root, d, "the bloom planner")
-      val dirP = new org.apache.hadoop.fs.Path(root, d)
-      val bf = sidecarFile(root, d, "blooms")
-      val parts = fs.listStatus(dirP).map(_.getPath)
-        .filter(_.getName.endsWith(".parquet"))
-      total += parts.length
-      if (!fs.exists(bf)) parts.map(_.toString).toSeq
-      else {
-        val in = fs.open(bf)
-        val blines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().filter(_.nonEmpty).toList
-        finally in.close()
-        val tagged = blines.head.split('\t').toSeq
-        val cs = tagged.map(_.stripSuffix("#str"))
-        val strCol = tagged.map(_.endsWith("#str"))
-        declared.foreach(prev => require(prev == cs,
-          s"inconsistent bloom columns across snapshot dirs: " +
-            s"${prev.mkString(",")} vs ${cs.mkString(",")}"))
-        declared = Some(cs)
-        val idx = colName.fold(0)(cs.indexOf)
-        require(idx >= 0,
-          s"probe on ${colName.get} but dir $d declares blooms for " +
-            cs.mkString(", "))
-        require(strCol(idx) == probeHashed,
-          if (strCol(idx))
-            s"bloom column ${cs(idx)} is string-typed — probe with " +
-              "hashed values (xxhash64 membership), not raw longs"
-          else
-            s"bloom column ${cs(idx)} is numeric — probe with raw " +
-              "long values, not hashes")
-        val maps = blines.tail.map { ln =>
-          val fields = ln.split('\t')
-          require(fields.length == cs.length + 1,
-            s"malformed bloom line in $bf: $ln")
-          fields(0) -> fields(1 + idx)
-        }.toMap
-        parts.flatMap { p =>
-          maps.get(p.getName) match {
-            case None => Some(p.toString) // no line: always plan
-            case Some(hexmap) =>
-              val m = hexmap.length * 4
-              def bit(bt: Int): Boolean = {
-                val b = Integer.parseInt(
-                  hexmap.substring((bt >> 3) * 2, (bt >> 3) * 2 + 2),
-                  16)
-                ((b >> (bt & 7)) & 1) == 1
-              }
-              val hit = values.exists { value =>
-                posCache.getOrElseUpdate((value, m),
-                  bloomPositions(value, m)).forall(bit)
-              }
-              if (hit) Some(p.toString) else None
-          }
-        }.toSeq
-      }
-    }
-    val groups = epochGroups(manifestDirs(fs, root, v))
-      .map { case (dirs, dels) => (dirs.flatMap(keptOf), dels) }
-    val resolvedCol = declared.map(cs => colName.getOrElse(cs.head))
-    (groups, total, resolvedCol.getOrElse(
-      throw new IllegalStateException(
-        s"no bloom sidecar in any dir of version $v at $path — " +
-          "commit with commitVersionBloom to enable point-lookup " +
-          "reads")))
-  }
-
-  /** Flat planning view of the multi-key bloom probe — (kept files,
-    * total, probed column); the skip-economics probe for key-set
-    * lookups ([[classifyChanges]]' sidecar-served attribution).
-    */
-  def planFilesIn(spark: org.apache.spark.sql.SparkSession,
-                  path: String, colName: String, values: Seq[Long],
-                  version: Option[Int] = None)
-      : (Seq[String], Int, String) = {
-    val (groups, total, c) =
-      bloomGroupsIn(spark, path, Some(colName), values, version)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, c)
-  }
-
-  /** [[planFilesIn]] for a STRING bloom column — the probe strings
-    * hash through the writer's xxhash64.
-    */
-  def planFilesInString(spark: org.apache.spark.sql.SparkSession,
-                        path: String, colName: String,
-                        values: Seq[String],
-                        version: Option[Int] = None)
-      : (Seq[String], Int, String) = {
-    val (groups, total, c) = bloomGroupsIn(spark, path, Some(colName),
-      values.map(xxhash64String), version, probeHashed = true)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, c)
-  }
-
-  /** Read a snapshot under a CONJUNCTION of point probes over the
-    * table's declared multi-column blooms ([[commitVersionBlooms]]):
-    * the planned file set intersects every probe's prune — skipping
-    * multiplies across independent lookup keys, the bloom twin of
-    * [[readVersionWhereCols]]. DV-aware; exact residual conjunction
-    * keeps results equal to the full-scan filter by construction.
-    */
-  def readVersionEqs(spark: org.apache.spark.sql.SparkSession,
-                     path: String, preds: Seq[(String, Long)],
-                     version: Option[Int] = None): DataFrame = {
-    require(preds.nonEmpty, "no probes to plan")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val all = preds.map { case (c, x) =>
-      bloomGroupsEq(spark, path, Some(c), x, version) }
-    val keptSets = all.tail.map(_._1.flatMap(_._1).toSet)
-    val groups = all.head._1.map { case (fl, dels) =>
-      (fl.filter(f => keptSets.forall(_(f))).sorted, dels) }
-    val residual = preds.map { case (c, x) =>
-      col(c).cast("long") === x }.reduce(_ && _)
-    if (groups.forall(_._1.isEmpty))
-      readVersion(spark, path, version).filter(lit(false))
-    else readGroups(spark, root, groups).filter(residual)
-  }
-
-  /** Read a snapshot UNDER AN EQUALITY PREDICATE on the declared bloom
-    * column, planning only files whose bloom admits the probe value
-    * (then applying the exact residual filter — a bloom false positive
-    * costs one extra file read, never a wrong row). Equals the
-    * full-scan filter by construction: a bloom MISS proves the file
-    * holds no matching value (every present value set all its bits at
-    * write time). The win zone maps cannot reach: a high-cardinality
-    * key under a layout NOT clustered on it — each file holds its own
-    * slice of ids, ranges overlap totally (zone maps prune nothing),
-    * but a point probe blooms to ~1 file + false positives.
-    */
-  def readVersionEq(spark: org.apache.spark.sql.SparkSession,
-                    path: String, value: Long,
-                    version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _, c) = bloomGroupsEq(spark, path, None, value, version)
-    if (groups.forall(_._1.isEmpty))
-      readVersion(spark, path, version).filter(lit(false))
-    else readGroups(spark, root, groups)
-      .filter(col(c).cast("long") === value)
   }
 
   /** The exact xxhash64 Spark's `xxhash64(col)` computes, evaluated
@@ -4576,46 +3777,12 @@ object SinkOps {
         org.apache.spark.sql.types.StringType)))
       .eval(null).asInstanceOf[Long]
 
-  /** Point lookup on a STRING bloom column (URLs, doc ids — the keys
-    * a dedup/decontam pipeline actually probes): the probe value
-    * hashes through the same xxhash64 the sidecar writer used, files
-    * whose bitmap misses are skipped with zero IO, and the EXACT
-    * residual equality keeps the result ≡ the full-scan filter (an
-    * xxhash64 collision can only keep an extra file/row for the
-    * residual to drop, never lose one). A numeric bloom column
-    * refuses loudly ([[readVersionEq]] is its probe).
-    */
-  def readVersionEqString(spark: org.apache.spark.sql.SparkSession,
-                          path: String, colName: String, value: String,
-                          version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (groups, _, _) = bloomGroupsEq(spark, path, Some(colName),
-      xxhash64String(value), version, probeHashed = true)
-    if (groups.forall(_._1.isEmpty))
-      readVersion(spark, path, version).filter(lit(false))
-    else readGroups(spark, root, groups)
-      .filter(col(colName) === lit(value))
-  }
-
-  /** Flat planning view of [[readVersionEqString]] — (kept files,
-    * total, probed column).
-    */
-  def planFilesEqString(spark: org.apache.spark.sql.SparkSession,
-                        path: String, colName: String, value: String,
-                        version: Option[Int] = None)
-      : (Seq[String], Int, String) = {
-    val (groups, total, c) = bloomGroupsEq(spark, path, Some(colName),
-      xxhash64String(value), version, probeHashed = true)
-    requireFlat(groups, path)
-    (groups.flatMap(_._1), total, c)
-  }
-
   /** Commit with BOTH pruning sidecars — zone maps on the clustering
     * column, blooms on the lookup key: the full Delta/Iceberg data-
     * skipping kit in one commit. The two indexes answer different
     * predicates (ranges need clustering; point probes on an
-    * unclustered key need blooms) and COMPOSE in
-    * [[readVersionWhereEq]].
+    * unclustered key need blooms) and COMPOSE in one
+    * [[readVersionWhere]].
     */
   def commitVersionIndexed(df: DataFrame, path: String,
                            statsCol: String, bloomCol: String,
@@ -4626,33 +3793,6 @@ object SinkOps {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     writeDirBloom(spark, fs, root, s"data/v$v", Seq(bloomCol))
     v
-  }
-
-  /** Read under a CONJUNCTION of a range predicate (zone-map column)
-    * and an equality predicate (bloom column): the planned file set is
-    * the INTERSECTION of the two sidecar prunes — skipping multiplies
-    * across independent indexes, which is the whole point of carrying
-    * both (a range that survives 10% of files times a probe that
-    * blooms to 1% plans ~0.1%). Exact residual filters keep results
-    * equal to the full-scan conjunction by construction.
-    */
-  def readVersionWhereEq(spark: org.apache.spark.sql.SparkSession,
-                         path: String, lo: Long, hi: Long,
-                         eqValue: Long,
-                         version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val (rGroups, _, rc) = pruneGroupsWhere(spark, path, lo, hi, version)
-    val (bGroups, _, ec) = bloomGroupsEq(spark, path, None, eqValue, version)
-    // Both planners walk the same manifest, so epochs line up — the
-    // composed plan intersects kept-file sets within each range epoch.
-    val bloomKept = bGroups.flatMap(_._1).toSet
-    val groups = rGroups.map { case (fl, dels) =>
-      (fl.filter(bloomKept).sorted, dels) }
-    if (groups.forall(_._1.isEmpty))
-      readVersion(spark, path, version).filter(lit(false))
-    else readGroups(spark, root, groups)
-      .filter(col(rc).cast("long").between(lo, hi) &&
-        col(ec).cast("long") === eqValue)
   }
 
   /** METADATA-ONLY aggregation: (n_rows, min, max) of the declared
@@ -4671,11 +3811,7 @@ object SinkOps {
                    version: Option[Int] = None): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = version.getOrElse {
-      val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
-      latest
-    }
+    val v = versionOr(fs, root, version)
     val lines = manifestDirs(fs, root, v)
     require(!lines.exists(isDeleteLine),
       s"stats-only read over version $v at $path which carries " +
@@ -4780,11 +3916,7 @@ object SinkOps {
                  version: Option[Int] = None): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = version.getOrElse {
-      val latest = latestVersion(fs, root)
-      require(latest >= 1, s"no versions committed at $path")
-      latest
-    }
+    val v = versionOr(fs, root, version)
     val groups = epochGroups(manifestDirs(fs, root, v))
     val (clean, dved) = groups.partition(_._2.isEmpty)
     var statsCols: Option[Seq[String]] = None
@@ -4842,18 +3974,15 @@ object SinkOps {
       s"version $v at $path holds no data dirs with stats sidecars"))
     if (dved.nonEmpty) {
       // One exact aggregate over the resolved DV-scoped epochs: dirs
-      // read once, arrival-sized sidecars broadcast-anti-joined.
-      val dvGroups = dved.map { case (dirs, dels) =>
-        (dirs.flatMap { d =>
-          fs.listStatus(new org.apache.hadoop.fs.Path(root, d))
-            .map(_.getPath).filter(_.getName.endsWith(".parquet"))
-            .map(_.toString).toSeq
-        }, dels)
-      }
+      // read once (each partitioned dir its own discovery root),
+      // arrival-sized sidecars broadcast-anti-joined.
       val aggs = cols.flatMap(c => Seq(
         min(col(c).cast("long")), max(col(c).cast("long")))) :+
         count(lit(1))
-      val r = readGroups(spark, root, dvGroups)
+      val r = dved.map { case (dirs, dels) =>
+          applyDeletes(spark, root,
+            readDirsGrouped(spark, root, dirs, mergeSchema = false), dels)
+        }.reduce(_.unionByName(_))
         .agg(aggs.head, aggs.tail: _*).collect().head
       nRows += r.getLong(2 * cols.length)
       cols.indices.foreach { i =>

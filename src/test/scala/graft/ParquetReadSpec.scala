@@ -107,7 +107,8 @@ class ParquetReadSpec extends SparkSpec {
     var df: org.apache.spark.sql.DataFrame = null
     assert(jobsDuring {
       Tables.events(spark, sfDir)
-      df = SinkOps.readVersionWhere(spark, path, 100L, 299L)
+      df = SinkOps.readVersionWhere(spark, path,
+        Seq(SinkOps.SkipPred.LongRange("event_id", 100L, 299L)))
     } === 0)
     assert(df.count() === ev.filter(col("event_id").between(100L, 299L)).count())
   }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{CurationOps, SimilarityOps, SinkOps}
+import graft.ops.SinkOps.SkipPred._
 
 /** Specs for the round-11 additions: hybrid dense+sparse retrieval,
   * the shared-truth multi-ranker evaluation, manifest-level zone-map
@@ -116,13 +117,16 @@ class Round11OpsSpec extends SparkSpec {
           .repartitionByRange(4, col("event_id")),
         path, carryForward = true, statsCol = Some("event_id")); ()
     }
-    val (kept, total, c) = SinkOps.pruneFiles(spark, path, 100L, 299L)
-    assert(c == "event_id")
+    val plan = SinkOps.planVersionWhere(spark, path,
+      Seq(LongRange("event_id", 100L, 299L)))
+    val (kept, total) = (plan.files, plan.filesListed)
+    assert(sidecarHeader(path, "stats") == "event_id")
     assert(total == 12, s"expected 3 commits x 4 files, got $total")
     assert(kept.size < total,
       s"no file skipped: kept ${kept.size} of $total")
     assert(kept.nonEmpty)
-    val got = SinkOps.readVersionWhere(spark, path, 100L, 299L)
+    val got = SinkOps.readVersionWhere(spark, path,
+        Seq(LongRange("event_id", 100L, 299L)))
       .select("event_id").collect().map(_.getLong(0)).sorted
     val want = ev.filter(col("event_id").between(100L, 299L))
       .select("event_id").collect().map(_.getLong(0)).sorted
@@ -135,10 +139,10 @@ class Round11OpsSpec extends SparkSpec {
     val path = tmp("r11_vskip0")
     SinkOps.commitVersion(ev.repartitionByRange(4, col("event_id")),
       path, carryForward = true, statsCol = Some("event_id"))
-    val (kept, total, _) =
-      SinkOps.pruneFiles(spark, path, 5000000L, 6000000L)
-    assert(kept.isEmpty && total == 4)
-    val out = SinkOps.readVersionWhere(spark, path, 5000000L, 6000000L)
+    val none = Seq(LongRange("event_id", 5000000L, 6000000L))
+    val plan = SinkOps.planVersionWhere(spark, path, none)
+    assert(plan.files.isEmpty && plan.filesListed == 4)
+    val out = SinkOps.readVersionWhere(spark, path, none)
     assert(out.count() == 0L)
     assert(out.columns.contains("event_type"))
   }
@@ -392,7 +396,8 @@ class Round11OpsSpec extends SparkSpec {
       path, "event_id")
     // DV-aware zone-map read (round 12): prunes AND resolves in one
     // read — equals the resolved full-scan filter over the same range.
-    val dvSkim = SinkOps.readVersionWhere(spark, path, 0L, 100L)
+    val dvSkim = SinkOps.readVersionWhere(spark, path,
+        Seq(LongRange("event_id", 0L, 100L)))
       .select("event_id").collect().map(_.getLong(0)).sorted
     val dvWant = SinkOps.readVersion(spark, path)
       .filter(col("event_id").between(0L, 100L))
@@ -408,7 +413,8 @@ class Round11OpsSpec extends SparkSpec {
       .select("event_id").collect().map(_.getLong(0)).sorted
     assert(got.sameElements(want))
     // Sidecars purged from the head: zone-map reads work again.
-    assert(SinkOps.readVersionWhere(spark, path, 0L, Long.MaxValue)
+    assert(SinkOps.readVersionWhere(spark, path,
+        Seq(LongRange("event_id", 0L, Long.MaxValue)))
       .count() == want.length.toLong)
   }
 
@@ -499,7 +505,8 @@ class Round11OpsSpec extends SparkSpec {
     assert(pinned.sameElements(preHead), "pinned pre-pack reader broken")
     // Whole head skippable: monolith stats carried + packed stats fresh.
     val lo = preHead(preHead.length / 2)
-    val skim = SinkOps.readVersionWhere(spark, path, lo, lo + 50)
+    val skim = SinkOps.readVersionWhere(spark, path,
+        Seq(LongRange("event_id", lo, lo + 50)))
       .select("event_id").collect().map(_.getLong(0)).sorted
     assert(skim.sameElements(preHead.filter(x => x >= lo && x <= lo + 50)))
     intercept[IllegalArgumentException] {
@@ -568,12 +575,15 @@ class Round11OpsSpec extends SparkSpec {
         path, "event_id"); ()
     }
     val probe = e.agg(max("event_id")).head().getLong(0)
-    val (files, total, c) = SinkOps.planFilesEq(spark, path, probe)
-    assert(c == "event_id")
+    val plan = SinkOps.planVersionWhere(spark, path,
+      Seq(LongIn("event_id", Seq(probe))))
+    val (files, total) = (plan.files, plan.filesListed)
+    assert(sidecarHeader(path, "blooms") == "event_id")
     assert(total >= 6, s"fixture produced too few files to skip: $total")
     assert(files.nonEmpty && files.size < total,
       s"bloom planned ${files.size}/$total files — no skipping")
-    val got = SinkOps.readVersionEq(spark, path, probe)
+    val got = SinkOps.readVersionWhere(spark, path,
+        Seq(LongIn("event_id", Seq(probe))))
       .select("event_id", "user_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted
     val want = SinkOps.readVersion(spark, path)
@@ -584,7 +594,8 @@ class Round11OpsSpec extends SparkSpec {
     // A value present nowhere: usually 0 files planned (false
     // positives possible but bounded); the read must be empty and
     // keep the table's schema either way.
-    val miss = SinkOps.readVersionEq(spark, path, -987654321L)
+    val miss = SinkOps.readVersionWhere(spark, path,
+      Seq(LongIn("event_id", Seq(-987654321L))))
     assert(miss.columns.contains("event_type"))
     assert(miss.count() == 0L)
   }
@@ -599,16 +610,18 @@ class Round11OpsSpec extends SparkSpec {
       Seq((1L, "a"), (2L, "b")).toDF("id", "s"), path, "id")
     // A plain commit (no bloom sidecar): its files always planned.
     SinkOps.commitVersion(Seq((3L, "c")).toDF("id", "s"), path)
-    val (files, total, _) = SinkOps.planFilesEq(spark, path, 3L)
+    def probe(k: Long) = Seq(LongIn("id", Seq(k)))
+    val plan = SinkOps.planVersionWhere(spark, path, probe(3L))
+    val (files, total) = (plan.files, plan.filesListed)
     assert(files.nonEmpty && total >= files.size)
-    assert(SinkOps.readVersionEq(spark, path, 3L).count() == 1L)
+    assert(SinkOps.readVersionWhere(spark, path, probe(3L)).count() == 1L)
     SinkOps.deleteVersionKeys(Seq(2L).toDF("id"), path, "id")
     // DV-aware bloom read (round 12): the probe resolves the delete
     // sidecar inline — deleted key reads empty, survivor unchanged (a
     // delete never ADDS values, so a bloom miss still proves absence).
-    assert(SinkOps.readVersionEq(spark, path, 2L).count() == 0L,
+    assert(SinkOps.readVersionWhere(spark, path, probe(2L)).count() == 0L,
       "deleted key served through a DV-manifest bloom read")
-    assert(SinkOps.readVersionEq(spark, path, 1L)
+    assert(SinkOps.readVersionWhere(spark, path, probe(1L))
       .select("s").head().getString(0) == "a")
   }
 
@@ -791,13 +804,19 @@ class Round11OpsSpec extends SparkSpec {
     val b = e.agg(min("user_id"), min("event_id"), max("event_id")).head()
     val (user, lo) = (b.getLong(0), b.getLong(1))
     val hi = (b.getLong(1) + b.getLong(2)) / 2
-    val (rf, total, _) = SinkOps.pruneFiles(spark, path, lo, hi)
-    val (ef, _, _) = SinkOps.planFilesEq(spark, path, user)
+    val range = LongRange("event_id", lo, hi)
+    val point = LongIn("user_id", Seq(user))
+    val rPlan = SinkOps.planVersionWhere(spark, path, Seq(range))
+    val (rf, total) = (rPlan.files, rPlan.filesListed)
+    val ef = SinkOps.planVersionWhere(spark, path, Seq(point)).files
     val composed = rf.toSet.intersect(ef.toSet)
     assert(composed.size <= math.min(rf.size, ef.size))
     assert(composed.size < total,
       s"composed prune planned all $total files")
-    val got = SinkOps.readVersionWhereEq(spark, path, lo, hi, user)
+    // The composed plan IS the intersection of the single prunes.
+    assert(SinkOps.planVersionWhere(spark, path, Seq(range, point))
+      .files.toSet == composed)
+    val got = SinkOps.readVersionWhere(spark, path, Seq(range, point))
       .select("event_id").collect().map(_.getLong(0)).sorted
     val want = SinkOps.readVersion(spark, path)
       .filter(col("event_id").between(lo, hi) && col("user_id") === user)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.SinkOps
+import graft.ops.SinkOps.SkipPred._
 
 /** Specs for the round-12 additions: DV-aware file skipping (zone-map
   * and bloom planning over manifests carrying unresolved deletion
@@ -36,23 +37,23 @@ class Round12OpsSpec extends SparkSpec {
       path, "event_id")
     // The skip economics SURVIVE the DV commit: files-read < total.
     // Planning goes through the EPOCH-GROUPED view — the r13 contract:
-    // flat pruneFiles REFUSES a DV manifest (raw reads of its list
-    // would serve deleted rows), and the grouped view hands each kept
+    // the flat file accessor REFUSES a DV manifest (raw reads of its
+    // list would serve deleted rows), and the epochs hand each kept
     // file set its applicable sidecars so a caller cannot ignore them.
-    val (groups, total, c) = SinkOps.pruneFileGroups(spark, path,
-      100L, 299L)
-    val kept = groups.flatMap(_._1)
-    assert(c == "event_id")
+    val range = Seq(LongRange("event_id", 100L, 299L))
+    val plan = SinkOps.planVersionWhere(spark, path, range)
+    val (kept, total) = (plan.epochs.flatMap(_.files), plan.filesListed)
+    assert(sidecarHeader(path, "stats") == "event_id")
     assert(kept.nonEmpty && kept.size < total,
       s"no skip under DV manifest: ${kept.size} of $total planned")
-    assert(groups.exists(_._2.nonEmpty),
+    assert(plan.epochs.exists(_.deletes.nonEmpty),
       "DV manifest planned with no sidecar attached to any epoch")
     val exFlat = intercept[IllegalArgumentException] {
-      SinkOps.pruneFiles(spark, path, 100L, 299L)
+      plan.files
     }
     assert(exFlat.getMessage.contains("deletion vectors"),
       exFlat.getMessage)
-    val got = SinkOps.readVersionWhere(spark, path, 100L, 299L)
+    val got = SinkOps.readVersionWhere(spark, path, range)
       .select("event_id").collect().map(_.getLong(0)).sorted
     val want = SinkOps.readVersion(spark, path)
       .filter(col("event_id").between(100L, 299L))
@@ -76,7 +77,8 @@ class Round12OpsSpec extends SparkSpec {
     // dirs committed before it, so the re-inserted row must survive.
     SinkOps.commitVersion(Seq((2L, "b2")).toDF("id", "s"), path,
       carryForward = true, statsCol = Some("id"))
-    val got = SinkOps.readVersionWhere(spark, path, 1L, 10L)
+    val got = SinkOps.readVersionWhere(spark, path,
+        Seq(LongRange("id", 1L, 10L)))
       .select("id", "s").collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert(got.sameElements(Array((1L, "a1"), (2L, "b2"))),
@@ -104,13 +106,15 @@ class Round12OpsSpec extends SparkSpec {
     // Point read (bloom column = user_id) through the DV manifest:
     // the updated key must read its POST-image exactly once (old row
     // anti-joined, new row in).
-    val got = SinkOps.readVersionEq(spark, path, u)
+    val got = SinkOps.readVersionWhere(spark, path,
+        Seq(LongIn("user_id", Seq(u))))
       .filter(col("event_id") === probe)
       .select("event_id", "event_type").collect()
     assert(got.length == 1, s"expected 1 row, got ${got.length}")
     assert(got.head.getString(1) == "merged")
     // Composed read under the DV manifest equals the resolved scan.
-    val comp = SinkOps.readVersionWhereEq(spark, path, 0L, probe, u)
+    val comp = SinkOps.readVersionWhere(spark, path,
+        Seq(LongRange("event_id", 0L, probe), LongIn("user_id", Seq(u))))
       .select("event_id", "event_type").collect()
       .map(r => (r.getLong(0), r.getString(1))).sorted
     val want = SinkOps.readVersion(spark, path)
@@ -275,18 +279,18 @@ class Round12OpsSpec extends SparkSpec {
           e.filter(p).repartitionByRange(4, col("event_id")),
           path, carryForward = true, Seq("event_id", "user_id")); ()
       }
-    val both = Seq(("event_id", elo, ehi), ("user_id", t1, t2 - 1))
-    val (keptBoth, total, cols) = SinkOps.pruneFilesCols(spark, path, both)
-    assert(cols == Seq("event_id", "user_id"))
-    val (keptE, _, _) = SinkOps.pruneFilesCols(spark, path,
-      Seq(("event_id", elo, ehi)))
-    val (keptU, _, _) = SinkOps.pruneFilesCols(spark, path,
-      Seq(("user_id", t1, t2 - 1)))
+    val both = Seq(LongRange("event_id", elo, ehi),
+      LongRange("user_id", t1, t2 - 1))
+    val planBoth = SinkOps.planVersionWhere(spark, path, both)
+    val (keptBoth, total) = (planBoth.files, planBoth.filesListed)
+    assert(sidecarHeader(path, "stats") == "event_id\tuser_id")
+    val keptE = SinkOps.planVersionWhere(spark, path, both.take(1)).files
+    val keptU = SinkOps.planVersionWhere(spark, path, both.drop(1)).files
     assert(keptBoth.nonEmpty, "conjunction pruned everything")
     assert(keptBoth.size < keptE.size && keptBoth.size < keptU.size,
       s"no multiplicative skip: both=${keptBoth.size} " +
         s"event=${keptE.size} user=${keptU.size} total=$total")
-    val got = SinkOps.readVersionWhereCols(spark, path, both)
+    val got = SinkOps.readVersionWhere(spark, path, both)
       .select("event_id").collect().map(_.getLong(0)).sorted
     val want = e.filter(col("event_id").between(elo, ehi) &&
         col("user_id").between(t1, t2 - 1))
@@ -295,7 +299,7 @@ class Round12OpsSpec extends SparkSpec {
       s"multi-column read diverged: ${got.length} vs ${want.length}")
     // A predicate on an undeclared column fails loudly.
     val ex = intercept[IllegalArgumentException] {
-      SinkOps.pruneFilesCols(spark, path, Seq(("value", 0L, 1L)))
+      SinkOps.planVersionWhere(spark, path, Seq(LongRange("value", 0L, 1L)))
     }
     assert(ex.getMessage.contains("declares stats for"))
     // statsOnlyAgg reports min/max for EVERY declared column.
@@ -328,12 +332,14 @@ class Round12OpsSpec extends SparkSpec {
       (b.getLong(1) - b.getLong(0)) / 4)
     val (ulo, uhi) = (b.getLong(2), b.getLong(2) +
       (b.getLong(3) - b.getLong(2)) / 4)
-    val box = Seq(("event_id", elo, ehi), ("user_id", ulo, uhi))
-    val (kept, total, _) = SinkOps.pruneFilesCols(spark, path, box)
+    val box = Seq(LongRange("event_id", elo, ehi),
+      LongRange("user_id", ulo, uhi))
+    val plan = SinkOps.planVersionWhere(spark, path, box)
+    val (kept, total) = (plan.files, plan.filesListed)
     assert(total >= 3, s"fixture too small to exercise pruning: $total")
     assert(kept.nonEmpty && kept.size < total,
       s"z-order box prune kept everything: ${kept.size} of $total")
-    val got = SinkOps.readVersionWhereCols(spark, path, box)
+    val got = SinkOps.readVersionWhere(spark, path, box)
       .select("event_id").collect().map(_.getLong(0)).sorted
     val want = e.filter(col("event_id").between(elo, ehi) &&
         col("user_id").between(ulo, uhi))
@@ -366,19 +372,20 @@ class Round12OpsSpec extends SparkSpec {
     val b = e.agg(min("event_id"), max("event_id"),
       min("user_id"), max("user_id")).head()
     val box = Seq(
-      ("event_id", b.getLong(0),
+      LongRange("event_id", b.getLong(0),
         b.getLong(0) + (b.getLong(1) - b.getLong(0)) / 4),
-      ("user_id", b.getLong(2),
+      LongRange("user_id", b.getLong(2),
         b.getLong(2) + (b.getLong(3) - b.getLong(2)) / 4))
-    val (kept, total, cols) = SinkOps.pruneFilesCols(spark, path, box)
-    assert(cols == Seq("event_id", "user_id"))
+    val plan = SinkOps.planVersionWhere(spark, path, box)
+    val (kept, total) = (plan.files, plan.filesListed)
+    assert(sidecarHeader(path, "stats", v) == "event_id\tuser_id")
     assert(kept.nonEmpty && (total < 3 || kept.size < total),
       s"2-D box pruned nothing: ${kept.size} of $total")
-    val got = SinkOps.readVersionWhereCols(spark, path, box)
+    val got = SinkOps.readVersionWhere(spark, path, box)
       .select("event_id").collect().map(_.getLong(0)).sorted
     val want = SinkOps.readVersion(spark, path, Some(v))
-      .filter(col("event_id").between(box(0)._2, box(0)._3) &&
-        col("user_id").between(box(1)._2, box(1)._3))
+      .filter(col("event_id").between(box(0).lo, box(0).hi) &&
+        col("user_id").between(box(1).lo, box(1).hi))
       .select("event_id").collect().map(_.getLong(0)).sorted
     assert(got.sameElements(want))
   }
@@ -491,9 +498,11 @@ class Round12OpsSpec extends SparkSpec {
       "executor-folded bloom sidecar diverged from the driver replica")
     // The folded sidecar still serves probes.
     val probe = ev.agg(max("event_id")).head().getLong(0)
-    val (kept, total, _) = SinkOps.planFilesEq(spark, path, probe)
+    val point = Seq(LongIn("event_id", Seq(probe)))
+    val plan = SinkOps.planVersionWhere(spark, path, point)
+    val (kept, total) = (plan.files, plan.filesListed)
     assert(kept.nonEmpty && kept.size <= total)
-    assert(SinkOps.readVersionEq(spark, path, probe).count() ==
+    assert(SinkOps.readVersionWhere(spark, path, point).count() ==
       ev.filter(col("event_id") === probe).count())
   }
 
@@ -514,13 +523,17 @@ class Round12OpsSpec extends SparkSpec {
     val eMax = e.agg(max("event_id")).head().getLong(0)
     val u = e.filter(col("event_id") === eMax)
       .agg(min("user_id")).head().getLong(0)
-    val (kE, total, cE) = SinkOps.planFilesEqOn(spark, path,
-      "event_id", eMax)
-    val (kU, _, cU) = SinkOps.planFilesEqOn(spark, path, "user_id", u)
-    assert(cE == "event_id" && cU == "user_id")
+    val probeE = LongIn("event_id", Seq(eMax))
+    val probeU = LongIn("user_id", Seq(u))
+    val planE = SinkOps.planVersionWhere(spark, path, Seq(probeE))
+    val (kE, total) = (planE.files, planE.filesListed)
+    val kU = SinkOps.planVersionWhere(spark, path, Seq(probeU)).files
+    assert(sidecarHeader(path, "blooms") == "event_id\tuser_id")
     assert(kE.size < total, "event_id probe pruned nothing")
-    val got = SinkOps.readVersionEqs(spark, path,
-        Seq(("event_id", eMax), ("user_id", u)))
+    // The two-probe plan intersects the single prunes.
+    assert(SinkOps.planVersionWhere(spark, path, Seq(probeE, probeU))
+      .files.toSet == kE.toSet.intersect(kU.toSet))
+    val got = SinkOps.readVersionWhere(spark, path, Seq(probeE, probeU))
       .select("event_id", "user_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted
     val want = e.filter(col("event_id") === eMax &&
@@ -528,11 +541,8 @@ class Round12OpsSpec extends SparkSpec {
       .select("event_id", "user_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).sorted
     assert(got.sameElements(want), "two-probe read diverged")
-    // planFilesEq (no column) still resolves the FIRST declared col.
-    val (k0, _, c0) = SinkOps.planFilesEq(spark, path, eMax)
-    assert(c0 == "event_id" && k0.toSet == kE.toSet)
     val ex = intercept[IllegalArgumentException] {
-      SinkOps.planFilesEqOn(spark, path, "value", 1L)
+      SinkOps.planVersionWhere(spark, path, Seq(LongIn("value", Seq(1L))))
     }
     assert(ex.getMessage.contains("declares blooms for"))
   }
@@ -551,8 +561,8 @@ class Round12OpsSpec extends SparkSpec {
     SinkOps.commitVersion(
       Seq((10L, "c", "en"), (20L, "d", "fr")).toDF("id", "s", "lang"),
       path, carryForward = true, Some("id"))
-    val got = SinkOps.readVersionWhere(spark, path, 1L, 12L,
-        mergeSchema = true)
+    val got = SinkOps.readVersionWhere(spark, path,
+        Seq(LongRange("id", 1L, 12L)), mergeSchema = true)
       .select("id", "s", "lang").collect()
       .map(r => (r.getLong(0), r.getString(1),
         Option(r.getString(2)).getOrElse("-"))).sortBy(_._1)
@@ -759,7 +769,9 @@ class Round12OpsSpec extends SparkSpec {
     }
     val skipSql = spark.sql(
       s"SELECT event_id FROM graft_version_where('$path3', 'event_id', 100, 199)")
-    val (kept, total, _) = SinkOps.pruneFiles(spark, path3, 100L, 199L)
+    val plan3 = SinkOps.planVersionWhere(spark, path3,
+      Seq(LongRange("event_id", 100L, 199L)))
+    val (kept, total) = (plan3.files, plan3.filesListed)
     assert(kept.size < total, "fixture produced no skip")
     assert(skipSql.collect().map(_.getLong(0)).sorted.sameElements(
       Tables.events(spark, sfDir)

@@ -133,7 +133,8 @@ class Round13EvoSpec extends SparkSpec {
       t, carryForward = true, statsCol = Some("event_id"))
     SinkOps.renameVersionColumn(spark, t, "value", "amount")
     val e1 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionWhere(spark, t, 100L, 299L).count()
+      SinkOps.readVersionWhere(spark, t,
+      Seq(SinkOps.SkipPred.LongRange("event_id", 100L, 299L))).count()
     }
     assert(e1.getMessage.contains("unmaterialized column rename"))
     val e2 = intercept[IllegalArgumentException] {
@@ -151,7 +152,8 @@ class Round13EvoSpec extends SparkSpec {
     assert(head.columns.contains("amount") &&
       !head.columns.contains("value"))
     // The skip tier is re-armed (fresh stats under the compaction).
-    val n = SinkOps.readVersionWhere(spark, t, 100L, 299L).count()
+    val n = SinkOps.readVersionWhere(spark, t,
+      Seq(SinkOps.SkipPred.LongRange("event_id", 100L, 299L))).count()
     val wantN = events.filter(col("event_id") % 2 === 0 &&
       col("event_id").between(100, 299)).count()
     assert(n == wantN, s"post-OPTIMIZE skip read drifted: $n vs $wantN")

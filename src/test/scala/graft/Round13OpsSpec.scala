@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.SinkOps
+import graft.ops.SinkOps.SkipPred._
 
 /** Specs for the round-13 additions: SQL DML for the versioned tier
   * (MERGE INTO / DELETE FROM / INSERT INTO through the injected
@@ -162,8 +163,11 @@ class Round13OpsSpec extends SparkSpec {
           FROM r13spec_maint WHERE id % 2 = $r""").collect(); ()
     }
     // SQL-declared sidecars skip: the range read plans < total files.
-    val (kept, total, c) = SinkOps.pruneFiles(spark, t, 50L, 149L)
-    assert(c == "id" && kept.nonEmpty && kept.size < total,
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(LongRange("id", 50L, 149L)))
+    val (kept, total) = (plan.files, plan.filesListed)
+    assert(sidecarHeader(t, "stats") == "id" && kept.nonEmpty &&
+        kept.size < total,
       s"SQL-declared stats pruned nothing: ${kept.size} of $total")
     val v = spark.sql(s"OPTIMIZE graft_table('$t') ZORDER BY (id, g)")
       .collect().head.getInt(0)
@@ -430,6 +434,25 @@ class Round13OpsSpec extends SparkSpec {
     }
   }
 
+  test("statsAggDv counts the live rows of a DV-scoped hive-" +
+      "partitioned dir next to a flat one (its files sit in leaf " +
+      "subtrees, not directly under the dir)") {
+    import spark.implicits._
+    val path = tmp("r13_statsdv_parted")
+    val mk = (lo: Long, hi: Long) =>
+      (lo to hi).map(i => (i, i * 10, s"p${i % 3}")).toDF("id", "v", "p")
+    SinkOps.commitVersionStats(mk(1, 40), path, carryForward = true,
+      Seq("id"))
+    SinkOps.commitVersionPartitionedCols(mk(41, 80), path, Seq("p"),
+      statsCols = Seq("id"))
+    SinkOps.deleteVersionKeys((1L to 80L by 5).toDF("id"), path, "id")
+    val got = SinkOps.statsAggDv(spark, path).collect().head
+    val live = (1L to 80L).filter(_ % 5 != 1)
+    assert(got.getLong(0) == live.length, s"n_rows ${got.getLong(0)}")
+    assert(got.getLong(1) == live.min && got.getLong(2) == live.max,
+      s"range [${got.getLong(1)}, ${got.getLong(2)}]")
+  }
+
   // ---- one-pass multi-column bloom writer ----
 
   test("the one-pass bloom writer's sidecar is BYTE-IDENTICAL to a " +
@@ -486,8 +509,9 @@ class Round13OpsSpec extends SparkSpec {
       .find(p => p(1) != "0" * (m / 4) && p(2) == "0" * (m / 4))
     assert(lowLine.isDefined, "expected one file all-null in b")
     // Conjunctive probe still exact.
-    val gotRow = SinkOps.readVersionEqs(spark, path,
-      Seq(("a", 300L), ("b", 900L))).select("s").collect()
+    val gotRow = SinkOps.readVersionWhere(spark, path,
+      Seq(LongIn("a", Seq(300L)), LongIn("b", Seq(900L))))
+      .select("s").collect()
     assert(gotRow.map(_.getString(0)).toSeq == Seq("r300"))
   }
 
@@ -499,15 +523,17 @@ class Round13OpsSpec extends SparkSpec {
       (1L to 100L).map(i => (i, s"x$i")).toDF("id", "s"), path,
       Seq("id"))
     SinkOps.deleteVersionKeys(Seq(7L, 9L).toDF("id"), path, "id")
+    def probe(k: Long) = Seq(LongIn("id", Seq(k)))
     val ex = intercept[IllegalArgumentException] {
-      SinkOps.planFilesEq(spark, path, 7L)
+      SinkOps.planVersionWhere(spark, path, probe(7L)).files
     }
     assert(ex.getMessage.contains("deletion vectors"), ex.getMessage)
-    val (groups, _, c) = SinkOps.planFileGroupsEq(spark, path, 9L)
-    assert(c == "id" && groups.exists(_._2.nonEmpty))
+    val plan = SinkOps.planVersionWhere(spark, path, probe(9L))
+    assert(sidecarHeader(path, "blooms") == "id" &&
+      plan.epochs.exists(_.deletes.nonEmpty))
     // The resolving read answers the probe honestly: key 9 is deleted.
-    assert(SinkOps.readVersionEq(spark, path, 9L).isEmpty)
-    assert(SinkOps.readVersionEq(spark, path, 10L).count() == 1)
+    assert(SinkOps.readVersionWhere(spark, path, probe(9L)).isEmpty)
+    assert(SinkOps.readVersionWhere(spark, path, probe(10L)).count() == 1)
   }
 
   // ---- k-D ZORDER ----
@@ -534,17 +560,19 @@ class Round13OpsSpec extends SparkSpec {
     SinkOps.commitVersion(grid, path)
     SinkOps.compactVersionsZOrderK(spark, path, Seq("x", "y", "w"),
       bits = 4, targetFiles = Some(16))
-    val box = Seq(("x", 0L, 7L), ("y", 0L, 7L), ("w", 0L, 7L))
-    val (kept3, total, _) = SinkOps.pruneFilesCols(spark, path, box)
+    val box = Seq(LongRange("x", 0L, 7L), LongRange("y", 0L, 7L),
+      LongRange("w", 0L, 7L))
+    val plan3 = SinkOps.planVersionWhere(spark, path, box)
+    val (kept3, total) = (plan3.files, plan3.filesListed)
     assert(total == 16, s"fixture produced $total files")
     Seq(box.take(2), box.drop(1), Seq(box.head, box.last)).foreach {
       proj =>
-        val (kept2, _, _) = SinkOps.pruneFilesCols(spark, path, proj)
+        val kept2 = SinkOps.planVersionWhere(spark, path, proj).files
         assert(kept3.size < kept2.size,
           s"3-D prune (${kept3.size}) not tighter than projection " +
-            s"${proj.map(_._1)} (${kept2.size})")
+            s"${proj.map(_.column)} (${kept2.size})")
     }
-    val got = SinkOps.readVersionWhereCols(spark, path, box)
+    val got = SinkOps.readVersionWhere(spark, path, box)
       .select("id").collect().map(_.getLong(0)).sorted
     val want = grid.filter(col("x") <= 7 && col("y") <= 7 &&
         col("w") <= 7)
@@ -606,17 +634,20 @@ class Round13OpsSpec extends SparkSpec {
       src, statsCol = "id", bloomCol = "k")
     SinkOps.cloneVersion(spark, src, dst)
     // Zone-map prune through the SOURCE's sidecar, on the clone.
-    val (groups, total, c) = SinkOps.pruneFileGroups(spark, dst,
-      50L, 149L)
-    assert(c == "id" && groups.flatMap(_._1).size < total,
+    val range = Seq(LongRange("id", 50L, 149L))
+    val plan = SinkOps.planVersionWhere(spark, dst, range)
+    assert(sidecarHeader(src, "stats") == "id" &&
+        plan.epochs.flatMap(_.files).size < plan.filesListed,
       "clone inherited no zone-map prune")
-    assert(SinkOps.readVersionWhere(spark, dst, 50L, 149L).count()
+    assert(SinkOps.readVersionWhere(spark, dst, range).count()
       == 100L)
     // Bloom point probe on the clone.
-    val (bk, bTotal, bc) = SinkOps.planFilesEq(spark, dst, 7L)
-    assert(bc == "k" && bk.size < bTotal,
+    val point = Seq(LongIn("k", Seq(7L)))
+    val bPlan = SinkOps.planVersionWhere(spark, dst, point)
+    assert(sidecarHeader(src, "blooms") == "k" &&
+        bPlan.files.size < bPlan.filesListed,
       "clone inherited no bloom prune")
-    assert(SinkOps.readVersionEq(spark, dst, 7L).count() ==
+    assert(SinkOps.readVersionWhere(spark, dst, point).count() ==
       (1L to 400L).count(i => i * 7 % 401 == 7L))
     // Metadata-only aggregate from the source's sidecar counts.
     val st = SinkOps.statsOnlyAgg(spark, dst).collect().head

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.SinkOps
+import graft.ops.SinkOps.SkipPred._
 
 /** Specs for hive-partitioned versioned commits: partition-value
   * sidecars, dir-level + subtree-level pruning with zero IO for
@@ -35,8 +36,8 @@ class Round13PartSpec extends SparkSpec {
       events.filter(col("event_id") % 7 === 0).select("event_id"),
       t, "event_id")
 
-    val got = SinkOps.readVersionPartIn(spark, t, "event_type",
-        Seq("click", "error"))
+    val got = SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("event_type", Seq("click", "error"))))
       .select("event_id", "user_id", "event_type")
     val want = SinkOps.readVersion(spark, t)
       .filter(col("event_type").isin("click", "error"))
@@ -60,15 +61,17 @@ class Round13PartSpec extends SparkSpec {
     SinkOps.commitVersionPartitioned(
       events.filter(col("event_id") % 2 === 1), t, "event_type")
 
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("signup"))))
     val (kept, total, whole) =
-      SinkOps.planPartsIn(spark, t, "event_type", Seq("signup"))
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
     assert(whole.isEmpty, "no unpartitioned dirs in this table")
-    assert(kept.length == 2 && total == 10,
+    assert(kept == 2 && total == 10,
       s"expected 2 kept of 10 subdirs (5 types x 2 commits): " +
-        s"${kept.length} of $total")
+        s"$kept of $total")
 
-    val files = SinkOps.readVersionPartIn(spark, t, "event_type",
-        Seq("signup"))
+    val files = SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("event_type", Seq("signup"))))
       .select(input_file_name().as("f")).distinct()
       .collect().map(_.getString(0))
     assert(files.nonEmpty)
@@ -82,8 +85,8 @@ class Round13PartSpec extends SparkSpec {
     val t = tmp("r13_part_empty")
     SinkOps.commitVersionPartitioned(
       events.filter(col("event_type") === "click"), t, "event_type")
-    val got = SinkOps.readVersionPartIn(spark, t, "event_type",
-      Seq("signup"))
+    val got = SinkOps.readVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("signup"))))
     assert(got.count() == 0)
     assert(got.columns.contains("event_type") &&
       got.columns.contains("event_id"))
@@ -95,10 +98,10 @@ class Round13PartSpec extends SparkSpec {
       events.filter(col("event_id") % 2 === 0), t, "event_type")
     SinkOps.commitVersionPartitioned(
       events.filter(col("event_id") % 2 === 1), t, "event_type")
-    val v1 = SinkOps.readVersionPartIn(spark, t, "event_type",
-      Seq("view"), version = Some(1)).count()
-    val v2 = SinkOps.readVersionPartIn(spark, t, "event_type",
-      Seq("view")).count()
+    val v1 = SinkOps.readVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("view"))), version = Some(1)).count()
+    val v2 = SinkOps.readVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("view")))).count()
     val wantV1 = events.filter(col("event_id") % 2 === 0 &&
       col("event_type") === "view").count()
     val wantV2 = events.filter(col("event_type") === "view").count()
@@ -112,7 +115,8 @@ class Round13PartSpec extends SparkSpec {
     SinkOps.commitVersionPartitioned(
       events.filter(col("event_id") % 2 === 0), t, "event_type")
     val e1 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionPartIn(spark, t, "user_id", Seq("1")).count()
+      SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("user_id", Seq("1")))).count()
     }
     // Since the round-14 spec-evolution tolerance the typo guard fires
     // one level up: the column is in NO dir's spec.
@@ -120,11 +124,12 @@ class Round13PartSpec extends SparkSpec {
       "no partitioned dir of version 1") &&
       e1.getMessage.contains("user_id"))
     intercept[IllegalArgumentException] {
-      SinkOps.readVersionPartIn(spark, t, "event_type", Nil).count()
+      SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("event_type", Nil))).count()
     }
     val e3 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionPartIn(spark, t, "event_type",
-        Seq("a/b")).count()
+      SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("event_type", Seq("a/b")))).count()
     }
     assert(e3.getMessage.contains("hive escaping"))
     intercept[IllegalArgumentException] {
@@ -149,9 +154,9 @@ class Round13PartSpec extends SparkSpec {
     SinkOps.commitVersionPartitionedCols(
       ev.filter(col("event_id") % 3 === 1), t, Seq("event_type", "vbkt"))
 
-    val preds = Seq("event_type" -> Seq("click", "view"),
-      "vbkt" -> Seq("1", "3"))
-    val got = SinkOps.readVersionPartsWhere(spark, t, preds)
+    val preds = Seq(StringIn("event_type", Seq("click", "view")),
+      StringIn("vbkt", Seq("1", "3")))
+    val got = SinkOps.readVersionWhere(spark, t, preds)
       .select("event_id", "user_id")
     val want = ev.filter(col("event_id") % 3 =!= 2)
       .filter(col("event_type").isin("click", "view") &&
@@ -162,17 +167,19 @@ class Round13PartSpec extends SparkSpec {
 
     // A single-column predicate still prunes the nested layout: one
     // of 5 types x 4 buckets x 2 commits keeps 8 of 40 leaves.
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("click"))))
     val (kept, total, whole) =
-      SinkOps.planPartsIn(spark, t, "event_type", Seq("click"))
-    assert(whole.isEmpty && kept.length == 8 && total == 40,
-      s"single-col prune over the nested layout: ${kept.length} of " +
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
+    assert(whole.isEmpty && kept == 8 && total == 40,
+      s"single-col prune over the nested layout: $kept of " +
         s"$total (whole=${whole.length})")
-    kept.foreach(p => assert(p.contains("event_type=click"), p))
+    plan.files.foreach(p => assert(p.contains("event_type=click"), p))
 
     // A predicate on a column the layout lacks fails loudly.
     val e = intercept[IllegalArgumentException] {
-      SinkOps.readVersionPartsWhere(spark, t,
-        Seq("user_id" -> Seq("1"))).count()
+      SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("user_id", Seq("1")))).count()
     }
     // r14 spec-evolution tolerance: the refusal is the global
     // no-spec-carries-it guard, not a per-dir message.
@@ -286,12 +293,14 @@ class Round13PartSpec extends SparkSpec {
           SELECT * FROM r13part_events WHERE event_id % 2 = 0""")
       .collect().head.getInt(0)
     assert(v == 1)
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("view"))))
     val (kept, total, whole) =
-      SinkOps.planPartsIn(spark, t, "event_type", Seq("view"))
-    assert(whole.isEmpty && kept.length == 1 && total == 5,
-      s"SQL-written partition commit planned ${kept.length} of $total")
-    val got = SinkOps.readVersionPartIn(spark, t, "event_type",
-      Seq("view")).count()
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
+    assert(whole.isEmpty && kept == 1 && total == 5,
+      s"SQL-written partition commit planned $kept of $total")
+    val got = SinkOps.readVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("view")))).count()
     val want = events.filter(col("event_id") % 2 === 0 &&
       col("event_type") === "view").count()
     assert(got == want)
@@ -335,15 +344,17 @@ class Round13PartSpec extends SparkSpec {
     assert(e2.getMessage.contains("compact without statsCol"))
 
     SinkOps.compactVersions(spark, t)
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("click"))))
     val (kept, total, whole) =
-      SinkOps.planPartsIn(spark, t, "event_type", Seq("click"))
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
     assert(whole.isEmpty,
       "compaction left flat dirs — partition layout not preserved")
-    assert(kept.length == 1 && total == 5,
+    assert(kept == 1 && total == 5,
       s"compacted head should be one dir of 5 subtrees: " +
-        s"${kept.length} of $total")
-    val got = SinkOps.readVersionPartIn(spark, t, "event_type",
-      Seq("click")).count()
+        s"$kept of $total")
+    val got = SinkOps.readVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("click")))).count()
     val want = events.filter(col("event_type") === "click" &&
       col("event_id") % 9 =!= 0).count()
     assert(got == want, s"post-OPTIMIZE partition read: $got vs $want")
@@ -372,12 +383,14 @@ class Round13PartSpec extends SparkSpec {
       "merge into a partitioned head with statsCols wrote no stats " +
         "sidecar")
     assert(new java.io.File(t, f"parts/v$vm.txt").exists)
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("click"))))
     val (_, _, whole) =
-      SinkOps.planPartsIn(spark, t, "event_type", Seq("click"))
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
     assert(whole.isEmpty,
       "merge landed a flat dir into a partitioned table")
-    val got = SinkOps.readVersionPartIn(spark, t, "event_type",
-        Seq("click"))
+    val got = SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("event_type", Seq("click"))))
       .filter(col("event_id") % 6 === 0)
       .agg(min(col("value"))).head().getDouble(0)
     assert(got >= 1000.0, s"merged update not visible: min value $got")
@@ -399,8 +412,10 @@ class Round13PartSpec extends SparkSpec {
           WHERE event_id IN
           (SELECT event_id FROM r13part_upd_events
            WHERE event_id % 10 = 0)""")
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("click"))))
     val (_, _, whole) =
-      SinkOps.planPartsIn(spark, t, "event_type", Seq("click"))
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
     assert(whole.isEmpty,
       "SQL UPDATE landed a flat dir into a partitioned table")
     val got = SinkOps.readVersion(spark, t).count()
@@ -423,9 +438,11 @@ class Round13PartSpec extends SparkSpec {
       assert(fs.exists(new org.apache.hadoop.fs.Path(t,
         s"parts/v$v.txt")), s"streamed v$v lacks a parts sidecar")
     }
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("error"))))
     val (kept, total, whole) =
-      SinkOps.planPartsIn(spark, t, "event_type", Seq("error"))
-    assert(whole.isEmpty && kept.length == 2 && total == 10)
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
+    assert(whole.isEmpty && kept == 2 && total == 10)
   }
 
   test("DESCRIBE HISTORY works on partitioned and mixed tables from " +
@@ -486,14 +503,16 @@ class Round13PartSpec extends SparkSpec {
     SinkOps.commitVersionPartitioned(
       events.filter(col("event_id") % 2 === 0), src, "event_type")
     SinkOps.cloneVersion(spark, src, dst)
-    val got = SinkOps.readVersionPartIn(spark, dst, "event_type",
-      Seq("purchase")).count()
+    val got = SinkOps.readVersionWhere(spark, dst,
+      Seq(StringIn("event_type", Seq("purchase")))).count()
     val want = events.filter(col("event_id") % 2 === 0 &&
       col("event_type") === "purchase").count()
     assert(got == want, s"clone partition read drifted: $got vs $want")
+    val plan = SinkOps.planVersionWhere(spark, dst,
+      Seq(StringIn("event_type", Seq("purchase"))))
     val (kept, total, whole) =
-      SinkOps.planPartsIn(spark, dst, "event_type", Seq("purchase"))
-    assert(whole.isEmpty && kept.length == 1 && total == 5,
-      s"clone planned ${kept.length} of $total (whole=${whole.length})")
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
+    assert(whole.isEmpty && kept == 1 && total == 5,
+      s"clone planned $kept of $total (whole=${whole.length})")
   }
 }

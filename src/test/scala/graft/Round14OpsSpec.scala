@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.ops.{QualityOps, SinkOps}
+import graft.ops.SinkOps.SkipPred._
 
 /** Round-14 specs: type widening as a manifest op, OCC retry for the
   * DV writers, the stage-then-check commit gate, expr/fk SQL CHECK
@@ -52,7 +53,7 @@ class Round14OpsSpec extends SparkSpec {
     assert(got == want)
     // The sidecar-planning tier refuses an unmaterialized widen...
     val e = intercept[IllegalArgumentException] {
-      SinkOps.readVersionWhere(spark, t, 0L, 10L)
+      SinkOps.readVersionWhere(spark, t, Seq(LongRange("vint", 0L, 10L)))
     }
     assert(e.getMessage.contains("rename/drop") ||
       e.getMessage.contains("evolution"),
@@ -64,7 +65,8 @@ class Round14OpsSpec extends SparkSpec {
     SinkOps.compactVersions(spark, t, Some("vint"))
     assert(SinkOps.readVersion(spark, t)
       .schema("vint").dataType == LongType)
-    assert(SinkOps.readVersionWhere(spark, t, 0L, 10L).count() ==
+    assert(SinkOps.readVersionWhere(spark, t,
+        Seq(LongRange("vint", 0L, 10L))).count() ==
       ev.filter(col("vint") >= 0 && col("vint") <= 10).count())
   }
 
@@ -169,7 +171,8 @@ class Round14OpsSpec extends SparkSpec {
     assert(v == 1)
     // Declared stats landed for the checked commit (the r13 silent
     // drop, closed): the skip read plans.
-    assert(SinkOps.readVersionWhere(spark, t, 0L, 100L).count() ==
+    assert(SinkOps.readVersionWhere(spark, t,
+        Seq(LongRange("event_id", 0L, 100L))).count() ==
       clean.filter(col("event_id").between(0, 100)).count())
     // The clean commit's own commit-unique dir is LIVE — record the
     // dirs now so the leak check below flags only NEW strays.
@@ -206,7 +209,8 @@ class Round14OpsSpec extends SparkSpec {
                             fk(o_custkey, graft_table('$dim'), c_custkey))
           SELECT * FROM r14_ck_orders""").collect().head.getInt(0)
     assert(v == 1)
-    assert(SinkOps.readVersionWhere(spark, t, 1L, 50L).count() ==
+    assert(SinkOps.readVersionWhere(spark, t,
+        Seq(LongRange("o_orderkey", 1L, 50L))).count() ==
       Tables.orders(spark, sfDir)
         .filter(col("o_orderkey").between(1, 50)).count())
     // expr violation: a negative price batch refuses with the expr in
@@ -274,7 +278,8 @@ class Round14OpsSpec extends SparkSpec {
       (col("event_id") % 4).cast("string"))
     val t2 = tmp("r14_part_guard_ok")
     SinkOps.commitVersionPartitioned(ok, t2, "pt")
-    assert(SinkOps.readVersionPartIn(spark, t2, "pt", Seq("0", "1"))
+    assert(SinkOps.readVersionWhere(spark, t2,
+        Seq(StringIn("pt", Seq("0", "1"))))
       .count() == ok.filter(col("pt").isin("0", "1")).count())
   }
 
@@ -327,14 +332,16 @@ class Round14OpsSpec extends SparkSpec {
       Seq("event_type", "vbkt"))
     // Prune-per-dir: an event_type predicate prunes BOTH dirs'
     // leaves (kept < total), and the conjunction result is exact.
+    val plan = SinkOps.planVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("click"))))
     val (kept, total, whole) =
-      SinkOps.planPartsIn(spark, t, "event_type", Seq("click"))
+      (plan.leavesKept, plan.leavesTotal, flatFiles(plan))
     assert(whole.isEmpty, "no dir should be kept whole — both are " +
       "partitioned and both carry event_type")
-    assert(kept.nonEmpty && kept.size < total,
-      s"expected real pruning: kept ${kept.size} of $total")
-    val got = SinkOps.readVersionPartsWhere(spark, t,
-      Seq("event_type" -> Seq("click"), "vbkt" -> Seq("2")))
+    assert(kept > 0 && kept < total,
+      s"expected real pruning: kept $kept of $total")
+    val got = SinkOps.readVersionWhere(spark, t,
+      Seq(StringIn("event_type", Seq("click")), StringIn("vbkt", Seq("2"))))
     val want = ev.filter(col("event_type") === "click" &&
       col("vbkt") === "2")
     assert(got.count() == want.count())
@@ -342,8 +349,8 @@ class Round14OpsSpec extends SparkSpec {
       want.agg(sum("event_id")).collect().head.getLong(0))
     // A predicate column NO spec carries refuses loudly (typo guard).
     val e = intercept[IllegalArgumentException] {
-      SinkOps.readVersionPartsWhere(spark, t,
-        Seq("no_such_col" -> Seq("x")))
+      SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("no_such_col", Seq("x"))))
     }
     assert(e.getMessage.contains("no partitioned dir"),
       s"wrong refusal: ${e.getMessage}")
@@ -351,8 +358,8 @@ class Round14OpsSpec extends SparkSpec {
     val batch = ev.filter(col("event_id") % 10 === 0)
       .withColumn("value", col("value") + 5000.0)
     SinkOps.mergeVersion(batch, t, "event_id")
-    assert(SinkOps.readVersionPartsWhere(spark, t,
-        Seq("vbkt" -> Seq("0")))
+    assert(SinkOps.readVersionWhere(spark, t,
+        Seq(StringIn("vbkt", Seq("0"))))
       .filter(col("value") >= 5000.0).count() ==
       batch.filter(col("vbkt") === "0").count())
     // OPTIMIZE converges the whole table to the latest spec:

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{QualityOps, SinkOps}
+import graft.ops.SinkOps.SkipPred._
 
 /** Round-15 specs: VACUUM vs in-flight/staged writers (staged
   * manifests' dirs are live; never-committed dirs get the retention
@@ -169,9 +170,10 @@ class Round15OpsSpec extends SparkSpec {
     // Range-cluster on s so files carry tight string bounds.
     SinkOps.commitVersion(df.repartitionByRange(5, col("s")), path,
       carryForward = true, Some("s"))
-    val (kept, total, cols) =
-      SinkOps.pruneFilesString(spark, path, "s", "a", "c")
-    assert(cols == Seq("s"))
+    val plan = SinkOps.planVersionWhere(spark, path,
+      Seq(StringRange("s", "a", "c")))
+    val (kept, total) = (plan.files, plan.filesListed)
+    assert(sidecarHeader(path, "stats") == "s#str")
     assert(kept.size < total,
       s"no pruning: kept ${kept.size} of $total")
     // Equality on ranges that cut inside truncated prefixes, cross
@@ -180,7 +182,8 @@ class Round15OpsSpec extends SparkSpec {
       ("prefixprefixprefix_B", "prefixprefixprefix_N"), // inside trunc
       ("b", "e"), ("zz", "zzz"))
     probes.foreach { case (lo, hi) =>
-      val got = SinkOps.readVersionWhereString(spark, path, "s", lo, hi)
+      val got = SinkOps.readVersionWhere(spark, path,
+          Seq(StringRange("s", lo, hi)))
         .select("id").collect().map(_.getLong(0)).sorted
       val want = strRows.filter { case (_, s) => s >= lo && s <= hi }
         .map(_._1).sorted
@@ -201,10 +204,10 @@ class Round15OpsSpec extends SparkSpec {
     // min bound (a prefix) must keep the file, the residual drops the
     // row — correct empty result, no crash, no wrong skip the other
     // way for a hi above the true value.
-    assert(SinkOps.readVersionWhereString(spark, path, "s",
-      "prefixprefixprefix_A", "prefixprefixprefix_B").count() == 0)
-    assert(SinkOps.readVersionWhereString(spark, path, "s",
-      "prefixprefixprefix_Z", "prefixprefixprefiy").count() == 1)
+    assert(SinkOps.readVersionWhere(spark, path, Seq(StringRange("s",
+      "prefixprefixprefix_A", "prefixprefixprefix_B"))).count() == 0)
+    assert(SinkOps.readVersionWhere(spark, path, Seq(StringRange("s",
+      "prefixprefixprefix_Z", "prefixprefixprefiy"))).count() == 1)
   }
 
   test("string zone maps refuse loudly where exactness would be " +
@@ -215,7 +218,8 @@ class Round15OpsSpec extends SparkSpec {
     SinkOps.commitVersion(strRows.toDF("id", "s"), path,
       carryForward = true, Some("s"))
     val e1 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionWhere(spark, path, 1L, 5L).collect()
+      SinkOps.readVersionWhere(spark, path, Seq(LongRange("s", 1L, 5L)))
+        .collect()
     }
     assert(e1.getMessage.contains("str-kinded"))
     val e2 = intercept[IllegalArgumentException] {
@@ -226,10 +230,10 @@ class Round15OpsSpec extends SparkSpec {
     SinkOps.commitVersion(strRows.toDF("id", "s"), pathN,
       carryForward = true, Some("id"))
     val e3 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionWhereString(spark, pathN, "id", "a", "b")
-        .collect()
+      SinkOps.readVersionWhere(spark, pathN,
+        Seq(StringRange("id", "a", "b"))).collect()
     }
-    assert(e3.getMessage.contains("non-string"))
+    assert(e3.getMessage.contains("plain-numeric"))
     val pathA = tmp("r15_strzm_refuse_arr")
     val e4 = intercept[IllegalArgumentException] {
       SinkOps.commitVersion(
@@ -248,26 +252,29 @@ class Round15OpsSpec extends SparkSpec {
     val docs = (1L to 200L).map(i => (i, s"https://h.example.com/p$i"))
       .toDF("id", "url").repartition(8)
     SinkOps.commitVersionBloom(docs, path, "url")
-    val (kept, total, c) =
-      SinkOps.planFilesEqString(spark, path, "url",
-        "https://h.example.com/p42")
-    assert(c == "url" && total == 8)
+    def probe(u: String) = Seq(StringIn("url", Seq(u)))
+    val plan = SinkOps.planVersionWhere(spark, path,
+      probe("https://h.example.com/p42"))
+    val (kept, total) = (plan.files, plan.filesListed)
+    assert(sidecarHeader(path, "blooms") == "url#str" && total == 8)
     assert(kept.size < total, s"no skip: ${kept.size} of $total")
-    val hit = SinkOps.readVersionEqString(spark, path, "url",
-      "https://h.example.com/p42").collect()
+    val hit = SinkOps.readVersionWhere(spark, path,
+      probe("https://h.example.com/p42")).collect()
     assert(hit.map(_.getLong(0)).toSeq == Seq(42L))
-    assert(SinkOps.readVersionEqString(spark, path, "url",
-      "https://h.example.com/absent)(").count() == 0)
+    assert(SinkOps.readVersionWhere(spark, path,
+      probe("https://h.example.com/absent)(")).count() == 0)
     // Kind mismatches refuse loudly.
     val e1 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionEq(spark, path, 42L).collect()
+      SinkOps.readVersionWhere(spark, path, Seq(LongIn("url", Seq(42L))))
+        .collect()
     }
     assert(e1.getMessage.contains("string-typed"))
     val pathN = tmp("r15_strbloom_num")
     SinkOps.commitVersionBloom((1L to 50L).map(i => (i, s"s$i"))
       .toDF("id", "s"), pathN, "id")
     val e2 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionEqString(spark, pathN, "id", "42").collect()
+      SinkOps.readVersionWhere(spark, pathN, Seq(StringIn("id", Seq("42"))))
+        .collect()
     }
     assert(e2.getMessage.contains("numeric"))
   }
@@ -287,8 +294,9 @@ class Round15OpsSpec extends SparkSpec {
     assert(out == Map("doc7" -> "update", "docNEW" -> "insert"))
     // Economics visible through the planning view: 2 keys probe < 4
     // files.
-    val (kept, total, _) = SinkOps.planFilesInString(spark, path,
-      "doc_id", Seq("doc7", "docNEW"), Some(1))
+    val plan = SinkOps.planVersionWhere(spark, path,
+      Seq(StringIn("doc_id", Seq("doc7", "docNEW"))), Some(1))
+    val (kept, total) = (plan.files, plan.filesListed)
     assert(total == 4 && kept.size < total)
   }
 
@@ -404,9 +412,10 @@ class Round15OpsSpec extends SparkSpec {
     (500L to 510L).foreach(i => assert(out(i) == "insert", s"id $i"))
     // Economics: the prior-snapshot probe plans only bloom-positive
     // files for the 22 changed keys.
-    val (kept, total, c) = SinkOps.planFilesIn(spark, path, "id",
-      ((150L to 160L) ++ (500L to 510L)).toSeq, Some(2))
-    assert(c == "id" && total == 8,
+    val plan = SinkOps.planVersionWhere(spark, path,
+      Seq(LongIn("id", ((150L to 160L) ++ (500L to 510L)).toSeq)), Some(2))
+    val (kept, total) = (plan.files, plan.filesListed)
+    assert(sidecarHeader(path, "blooms") == "id" && total == 8,
       s"fixture shape changed: $total files")
     assert(kept.size < total,
       s"no file skipped: ${kept.size} of $total")

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.SinkOps
+import graft.ops.SinkOps.SkipPred._
 
 /** Round-16 specs: micros/day-kinded zone maps, per-file stats inside
   * partitioned commits (partition prune × file skip), the CDF window
@@ -54,10 +55,13 @@ class Round16OpsSpec extends SparkSpec {
       max(unix_micros(col("ts").cast("timestamp")))).head()
     val (mn, mx) = (b.getLong(0), b.getLong(1))
     val (lo, hi) = (mn + (mx - mn) / 4, mn + (mx - mn) / 2)
-    val (kept, total, cols) = SinkOps.pruneFilesTs(spark, t, "ts", lo, hi)
-    assert(cols == Seq("ts") && total == 8)
+    val micros = Seq(MicrosRange("ts", lo, hi))
+    val plan = SinkOps.planVersionWhere(spark, t, micros)
+    val (kept, total) = (plan.files, plan.filesListed)
+    assert(firstLine(new java.io.File(t, "stats/v1.txt")) == "ts#tsus" &&
+      total == 8)
     assert(kept.size < total, s"no skip: ${kept.size} of $total")
-    val got = SinkOps.readVersionWhereTs(spark, t, "ts", lo, hi)
+    val got = SinkOps.readVersionWhere(spark, t, micros)
       .select("event_id")
     val want = events.filter(
         unix_micros(col("ts").cast("timestamp")).between(lo, hi))
@@ -66,10 +70,11 @@ class Round16OpsSpec extends SparkSpec {
       "micros range read != full-scan filter")
     // Kind mismatches refuse both ways.
     val e1 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionWhere(spark, t, lo, hi).collect()
+      SinkOps.readVersionWhere(spark, t, Seq(LongRange("ts", lo, hi)))
+        .collect()
     }
     assert(e1.getMessage.contains("tsus-kinded") &&
-      e1.getMessage.contains("readVersionWhereTs"))
+      e1.getMessage.contains("MicrosRange"))
     val tn = tmp("r16_tsus_num")
     SinkOps.commitVersion(events, tn, carryForward = true,
       Some("event_id"))
@@ -77,7 +82,8 @@ class Round16OpsSpec extends SparkSpec {
       "plain numeric stats header grew a tag — pre-r16 sidecars " +
         "must stay byte-identical")
     val e2 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionWhereTs(spark, tn, "event_id", lo, hi).collect()
+      SinkOps.readVersionWhere(spark, tn,
+        Seq(MicrosRange("event_id", lo, hi))).collect()
     }
     assert(e2.getMessage.contains("plain-numeric"))
     // Kinded columns refuse the exact metadata-agg surfaces.
@@ -100,9 +106,11 @@ class Round16OpsSpec extends SparkSpec {
     val mid = loD.plusDays(
       java.time.temporal.ChronoUnit.DAYS.between(loD, hiD) / 2)
     val (lo, hi) = (loD.toString, mid.toString)
-    val (kept, total, _) = SinkOps.pruneFilesDate(spark, t, "d", lo, hi)
+    val days = Seq(DateRange("d", loD, mid))
+    val plan = SinkOps.planVersionWhere(spark, t, days)
+    val (kept, total) = (plan.files, plan.filesListed)
     assert(kept.size < total, s"no skip: ${kept.size} of $total")
-    val got = SinkOps.readVersionWhereDate(spark, t, "d", lo, hi)
+    val got = SinkOps.readVersionWhere(spark, t, days)
       .select("event_id")
     val want = ev.filter(col("d").between(to_date(lit(lo)),
       to_date(lit(hi)))).select("event_id")
@@ -154,15 +162,15 @@ class Round16OpsSpec extends SparkSpec {
     val b = events.agg(min("event_id"), max("event_id")).head()
     val (mn, mx) = (b.getLong(0), b.getLong(1))
     val (lo, hi) = (mn + (mx - mn) / 4, mn + (mx - mn) / 2)
-    val partPreds = Seq("event_type" -> Seq("click", "view"))
-    val statPreds = Seq(("event_id", lo, hi))
-    val (fk, fl, lk, lt) =
-      SinkOps.planPartsWhereStats(spark, t, partPreds, statPreds)
+    val preds = Seq(StringIn("event_type", Seq("click", "view")),
+      LongRange("event_id", lo, hi))
+    val plan = SinkOps.planVersionWhere(spark, t, preds)
+    val (fk, fl, lk, lt) = (plan.filesKept, plan.filesListed,
+      plan.leavesKept, plan.leavesTotal)
     assert(lk < lt, s"partition prune did not bite: $lk of $lt leaves")
     assert(fk < fl,
       s"zone maps did not bite inside kept partitions: $fk of $fl")
-    val got = SinkOps.readVersionPartsWhereStats(spark, t, partPreds,
-        statPreds)
+    val got = SinkOps.readVersionWhere(spark, t, preds)
       .select("event_id", "user_id", "event_type")
     val want = SinkOps.readVersion(spark, t)
       .filter(col("event_type").isin("click", "view") &&
@@ -176,8 +184,7 @@ class Round16OpsSpec extends SparkSpec {
       events.filter(col("event_id") % 2 === 0)
         .withColumn("event_id", col("event_id") + lit(10000000L)),
       t, Seq("event_type"))
-    val got2 = SinkOps.readVersionPartsWhereStats(spark, t, partPreds,
-        statPreds)
+    val got2 = SinkOps.readVersionWhere(spark, t, preds)
       .select("event_id", "user_id", "event_type")
     val want2 = SinkOps.readVersion(spark, t)
       .filter(col("event_type").isin("click", "view") &&
@@ -207,13 +214,14 @@ class Round16OpsSpec extends SparkSpec {
       t, "event_id")
     val probe = events.filter(col("event_type") === "click")
       .agg(min("event_id")).head().getLong(0)
-    val partPreds = Seq("event_type" -> Seq("click", "view"))
-    val (fk, fl, lk, lt) =
-      SinkOps.planPartsEq(spark, t, partPreds, "event_id", probe)
+    val part = StringIn("event_type", Seq("click", "view"))
+    val point = Seq(part, LongIn("event_id", Seq(probe)))
+    val plan = SinkOps.planVersionWhere(spark, t, point)
+    val (fk, fl, lk, lt) = (plan.filesKept, plan.filesListed,
+      plan.leavesKept, plan.leavesTotal)
     assert(lk < lt, s"partition prune did not bite: $lk of $lt")
     assert(fk < fl, s"bloom did not bite inside kept leaves: $fk of $fl")
-    val got = SinkOps.readVersionPartsEq(spark, t, partPreds,
-        "event_id", probe)
+    val got = SinkOps.readVersionWhere(spark, t, point)
       .select("event_id", "user_id", "event_type")
     val want = SinkOps.readVersion(spark, t)
       .filter(col("event_type").isin("click", "view") &&
@@ -222,23 +230,23 @@ class Round16OpsSpec extends SparkSpec {
     assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty,
       "composed bloom read != resolved full-scan conjunction")
     // String key: same probe through xxhash64 membership.
-    val gotS = SinkOps.readVersionPartsEqString(spark, t, partPreds,
-        "ekey", s"k$probe")
+    val pointS = Seq(part, StringIn("ekey", Seq(s"k$probe")))
+    val gotS = SinkOps.readVersionWhere(spark, t, pointS)
       .select("event_id", "user_id", "event_type")
     assert(gotS.exceptAll(want).isEmpty && want.exceptAll(gotS).isEmpty,
       "string bloom composed read != full-scan conjunction")
-    val (fkS, flS, _, _) =
-      SinkOps.planPartsEqString(spark, t, partPreds, "ekey", s"k$probe")
+    val planS = SinkOps.planVersionWhere(spark, t, pointS)
+    val (fkS, flS) = (planS.filesKept, planS.filesListed)
     assert(fkS < flS, s"string bloom did not bite: $fkS of $flS")
     // Kind mismatches refuse both ways.
     val e1 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionPartsEq(spark, t, partPreds, "ekey", probe)
-        .collect()
+      SinkOps.readVersionWhere(spark, t,
+        Seq(part, LongIn("ekey", Seq(probe)))).collect()
     }
     assert(e1.getMessage.contains("string-typed"))
     val e2 = intercept[IllegalArgumentException] {
-      SinkOps.readVersionPartsEqString(spark, t, partPreds,
-        "event_id", "42").collect()
+      SinkOps.readVersionWhere(spark, t,
+        Seq(part, StringIn("event_id", Seq("42")))).collect()
     }
     assert(e2.getMessage.contains("numeric"))
     // Bloom on a partition column refuses at commit.

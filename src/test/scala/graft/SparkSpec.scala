@@ -8,6 +8,21 @@ import org.scalatest.BeforeAndAfterAll
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Header line of a versioned table's sidecar (`kind` is stats,
+    * blooms or parts) for data dir v: the declared columns.
+    */
+  def sidecarHeader(table: String, kind: String, v: Int = 1): String = {
+    val src = scala.io.Source.fromFile(
+      new java.io.File(table, s"$kind/v$v.txt"), "UTF-8")
+    try src.getLines().next() finally src.close()
+  }
+
+  /** Files a skip plan reads from flat (unpartitioned) dirs — a flat
+    * dir is kept whole by partition predicates.
+    */
+  def flatFiles(p: graft.ops.SinkOps.SkipPlan): Seq[String] =
+    p.epochs.flatMap(_.reads.filter(_._1.isEmpty).flatMap(_._2))
 }
 
 object SparkSpec {

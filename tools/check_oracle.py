@@ -3,10 +3,12 @@
 
 Usage: python3 tools/check_oracle.py [sfDir] [outDir] [--skip-verify] [names...]
 
-1. runs graft.Verify at sfDir -> outDir (parquet per query + oracle_sql.json)
+1. runs graft.Verify at sfDir -> outDir (parquet per query + oracle_sql.json);
+   named queries are passed on, so Verify builds only those
 2. registers each fixture table as a DuckDB view of its bare name
 3. runs each oracle SQL, compares against the Spark parquet:
    columns sorted by name, rows sorted, values compared exactly.
+   A named query without an oracle_sql.json entry fails the run.
 """
 import json, math, subprocess, sys
 
@@ -34,8 +36,10 @@ def main():
     out_dir = args[1] if len(args) > 1 else "/tmp/verify_out"
     only = set(args[2:])
     if "--skip-verify" not in sys.argv:
+        subset = f" {','.join(sorted(only))}" if only else ""
         r = subprocess.run(
-            ["sbt", "-batch", f'runMain graft.Verify {sf_dir} {out_dir}'],
+            ["sbt", "-batch",
+             f'runMain graft.Verify {sf_dir} {out_dir}{subset}'],
             capture_output=True, text=True)
         tail = "\n".join((r.stdout + r.stderr).splitlines()[-25:])
         if r.returncode != 0:
@@ -51,6 +55,9 @@ def main():
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
 
     n_pass = n_fail = 0
+    for name in sorted(only - oracle.keys()):
+        print(f"FAIL {name}: no oracle_sql.json entry")
+        n_fail += 1
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
