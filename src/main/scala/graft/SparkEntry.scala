@@ -135,17 +135,20 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionChecked(
-        o.filter(col("o_orderkey") % 3 === 0), path, "o_orderkey", Seq(
-          NotNull("o_orderstatus"),
-          InRange("o_totalprice", 0.0, 1e9),
-          Unique("o_orderkey"),
-          ForeignKey("o_custkey", Tables.customer(s, d), "c_custkey")))
+      SinkOps.commitVersion(
+        o.filter(col("o_orderkey") % 3 === 0), path,
+        SinkOps.CommitSpec(constraints = Some(SinkOps.Constraints(
+          "o_orderkey", Seq(
+            NotNull("o_orderstatus"),
+            InRange("o_totalprice", 0.0, 1e9),
+            Unique("o_orderkey"),
+            ForeignKey("o_custkey", Tables.customer(s, d), "c_custkey"))))))
       try {
-        SinkOps.commitVersionChecked(
+        SinkOps.commitVersion(
           dirtyOrders(o.filter(col("o_orderkey") % 3 === 1)), path,
-          "o_orderkey", Seq(NotNull("o_orderstatus"),
-            InRange("o_totalprice", 0.0, 1e9), Unique("o_orderkey")))
+          SinkOps.CommitSpec(constraints = Some(SinkOps.Constraints(
+            "o_orderkey", Seq(NotNull("o_orderstatus"),
+              InRange("o_totalprice", 0.0, 1e9), Unique("o_orderkey"))))))
         throw new IllegalStateException(
           "dirty batch was accepted — the gate leaked")
       } catch { case _: IllegalArgumentException => () }
@@ -3092,7 +3095,7 @@ object SparkEntry {
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 3 === r)
             .repartitionByRange(4, col("event_id")),
-          path, carryForward = true, statsCol = Some("event_id")); ()
+          path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
       }
       SinkOps.readVersionWhere(s, path,
           Seq(LongRange("event_id", 100L, 299L)))
@@ -3118,7 +3121,7 @@ object SparkEntry {
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 2 === r)
             .repartitionByRange(4, col("event_type")),
-          path, carryForward = true, statsCol = Some("event_type")); ()
+          path, SinkOps.CommitSpec(stats = Seq("event_type"))); ()
       }
       SinkOps.readVersionWhere(s, path,
           Seq(StringRange("event_type", "e", "s")))
@@ -3145,7 +3148,7 @@ object SparkEntry {
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 2 === r)
             .repartitionByRange(4, col("ts")),
-          path, carryForward = true, statsCol = Some("ts")); ()
+          path, SinkOps.CommitSpec(stats = Seq("ts"))); ()
       }
       val b = ev.agg(min(unix_micros(col("ts").cast("timestamp"))),
         max(unix_micros(col("ts").cast("timestamp")))).head()
@@ -3174,10 +3177,12 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       (0L to 1L).foreach { r =>
-        SinkOps.commitVersionPartitionedCols(
+        SinkOps.commitVersion(
           ev.filter(col("event_id") % 2 === r)
             .repartitionByRange(4, col("event_id")),
-          path, Seq("event_type"), statsCols = Seq("event_id")); ()
+          path,
+          SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")),
+            stats = Seq("event_id"))); ()
       }
       val b = ev.agg(min("event_id"), max("event_id")).head()
       val (mnId, mxId) = (b.getLong(0), b.getLong(1))
@@ -3204,8 +3209,9 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionPartitionedCols(ev.repartition(8), path,
-        Seq("event_type"), bloomCols = Seq("event_id"))
+      SinkOps.commitVersion(ev.repartition(8), path,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")),
+          blooms = Seq("event_id")))
       val probe = ev.filter(col("event_type") === "click")
         .agg(min("event_id")).head().getLong(0)
       SinkOps.readVersionWhere(s, path,
@@ -3229,7 +3235,8 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionBloom(docs.repartition(8), path, "url")
+      SinkOps.commitVersion(docs.repartition(8), path,
+        SinkOps.CommitSpec(blooms = Seq("url")))
       val probe = docs.filter(col("doc_id") === 7L)
         .select("url").collect().head.getString(0)
       SinkOps.readVersionWhere(s, path, Seq(StringIn("url", Seq(probe))))
@@ -3253,7 +3260,7 @@ object SparkEntry {
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 3 === r)
             .repartitionByRange(4, col("event_id")),
-          path, carryForward = true, statsCol = Some("event_id")); ()
+          path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
       }
       SinkOps.deleteVersionKeys(
         ev.filter(col("event_id") % 7 === 0).select("event_id"),
@@ -3278,10 +3285,12 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionPartitioned(
-        ev.filter(col("event_id") % 3 === 0), path, "event_type")
-      SinkOps.commitVersionPartitioned(
-        ev.filter(col("event_id") % 3 === 1), path, "event_type")
+      SinkOps.commitVersion(
+        ev.filter(col("event_id") % 3 === 0), path,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
+      SinkOps.commitVersion(
+        ev.filter(col("event_id") % 3 === 1), path,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
       SinkOps.deleteVersionKeys(
         ev.filter(col("event_id") % 7 === 0).select("event_id"),
         path, "event_id")
@@ -3303,12 +3312,14 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionPartitionedCols(
+      SinkOps.commitVersion(
         ev.filter(col("event_id") % 3 === 0), path,
-        Seq("event_type", "vbkt"))
-      SinkOps.commitVersionPartitionedCols(
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type",
+          "vbkt"))))
+      SinkOps.commitVersion(
         ev.filter(col("event_id") % 3 === 1), path,
-        Seq("event_type", "vbkt"))
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type",
+          "vbkt"))))
       SinkOps.readVersionWhere(s, path,
           Seq(StringIn("event_type", Seq("click", "view")),
             StringIn("vbkt", Seq("1", "3"))))
@@ -3329,11 +3340,13 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionPartitioned(
-        ev.filter(col("event_id") % 2 === 0), path, "event_type")
-      SinkOps.commitVersionPartitionedCols(
+      SinkOps.commitVersion(
+        ev.filter(col("event_id") % 2 === 0), path,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
+      SinkOps.commitVersion(
         ev.filter(col("event_id") % 2 === 1), path,
-        Seq("event_type", "vbkt"))
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type",
+          "vbkt"))))
       SinkOps.readVersionWhere(s, path,
           Seq(StringIn("event_type", Seq("click", "view")),
             StringIn("vbkt", Seq("1", "3"))))
@@ -3352,16 +3365,18 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionPartitioned(
-        ev.filter(col("event_id") % 2 === 0), path, "event_type")
+      SinkOps.commitVersion(
+        ev.filter(col("event_id") % 2 === 0), path,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
       // Hot-table shape: a delete sidecar scopes v1, the post-merge
       // commit is a clean epoch — clean answers from sidecars, only
       // the DV-scoped dir pays the resolve (partCountsDv).
       SinkOps.deleteVersionKeys(
         ev.filter(col("event_id") % 11 === 0).select("event_id"),
         path, "event_id")
-      SinkOps.commitVersionPartitioned(
-        ev.filter(col("event_id") % 2 === 1), path, "event_type")
+      SinkOps.commitVersion(
+        ev.filter(col("event_id") % 2 === 1), path,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
       s.sql(s"SELECT event_type, n_rows FROM graft_part_counts('$path')")
     }),
     // Partition pruning through the SQL front door, on a MIXED table
@@ -3377,8 +3392,9 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionPartitioned(
-        ev.filter(col("event_id") % 2 === 0), path, "event_type")
+      SinkOps.commitVersion(
+        ev.filter(col("event_id") % 2 === 0), path,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
       SinkOps.commitVersion(ev.filter(col("event_id") % 2 === 1), path)
       graft.functions.GraftFunctions.register(s)
       s.sql(
@@ -3473,7 +3489,8 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionBloom(e, path, "event_id")
+      SinkOps.commitVersion(e, path,
+        SinkOps.CommitSpec(blooms = Seq("event_id")))
       val batch = e.filter(col("event_id") % 5 === 0)
         .withColumn("event_type", lit("updated"))
         .withColumn("value", col("value") + lit(1000.0d))
@@ -3620,7 +3637,8 @@ object SparkEntry {
         val hp = new org.apache.hadoop.fs.Path(p)
         hp.getFileSystem(hconf).delete(hp, true); ()
       }
-      SinkOps.commitVersionBloom(e, path, "event_id")
+      SinkOps.commitVersion(e, path,
+        SinkOps.CommitSpec(blooms = Seq("event_id")))
       val q = s.readStream.format("graft")
         .option("readChangeFeed", "true")
         .option("keyColumn", "event_id")
@@ -3737,8 +3755,9 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersionPartitioned(
-        ev.filter(col("event_id") % 2 === 0), path, "event_type")
+      SinkOps.commitVersion(
+        ev.filter(col("event_id") % 2 === 0), path,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
       val upd = ev.filter(col("event_id") % 6 === 0)
         .withColumn("value", col("value") + 1000.0)
         .unionByName(ev.filter(col("event_id") % 6 === 1))
@@ -3784,7 +3803,7 @@ object SparkEntry {
       val fs = root.getFileSystem(s.sessionState.newHadoopConf())
       fs.delete(root, true)
       SinkOps.commitVersion(e.filter(col("event_id") % 4 =!= 3), path,
-        carryForward = true, Some("event_id"))
+        SinkOps.CommitSpec(stats = Seq("event_id")))
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(
           e.filter(col("event_id") % 4 === 3 && col("event_id") % 3 === r),
@@ -3792,7 +3811,8 @@ object SparkEntry {
       }
       val bigBytes = fs.getContentSummary(
         new org.apache.hadoop.fs.Path(root, "data/v1")).getLength
-      val v = SinkOps.compactSmallDirs(s, path, bigBytes, Some("event_id"))
+      val v = SinkOps.compactVersions(s, path,
+        SinkOps.Compaction.SmallDirs(bigBytes, Some("event_id")))
       SinkOps.readVersion(s, path, Some(v))
         .withColumn("src_dir", regexp_extract(input_file_name(),
           "data/(v[0-9]+)/", 1))
@@ -3819,10 +3839,10 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       (0 to 2).foreach { r =>
-        SinkOps.commitVersionBloom(
+        SinkOps.commitVersion(
           e.filter(col("user_id") % 3 === r)
             .repartition(4, col("user_id")),
-          path, "event_id"); ()
+          path, SinkOps.CommitSpec(blooms = Seq("event_id"))); ()
       }
       val probe = e.agg(max("event_id")).head().getLong(0)
       SinkOps.readVersionWhere(s, path, Seq(LongIn("event_id", Seq(probe))))
@@ -3841,10 +3861,10 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       (0 to 2).foreach { r =>
-        SinkOps.commitVersionBlooms(
+        SinkOps.commitVersion(
           e.filter((col("event_id") + col("user_id")) % 3 === r)
             .repartition(4, col("ts")),
-          path, Seq("event_id", "user_id")); ()
+          path, SinkOps.CommitSpec(blooms = Seq("event_id", "user_id"))); ()
       }
       val eMax = e.agg(max("event_id")).head().getLong(0)
       val u = e.filter(col("event_id") === eMax)
@@ -3866,10 +3886,12 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       (0 to 2).foreach { r =>
-        SinkOps.commitVersionIndexed(
+        SinkOps.commitVersion(
           e.filter(col("event_id") % 3 === r)
             .repartitionByRange(4, col("event_id")),
-          path, "event_id", "user_id"); ()
+          path,
+          SinkOps.CommitSpec(stats = Seq("event_id"),
+            blooms = Seq("user_id"))); ()
       }
       val b = e.agg(min("user_id"), min("event_id"), max("event_id"))
         .head()
@@ -3895,8 +3917,8 @@ object SparkEntry {
         SinkOps.commitVersion(ev.filter(col("event_id") % 3 === r),
           path); ()
       }
-      val v = SinkOps.compactVersionsZOrder(s, path, "event_id",
-        "user_id")
+      val v = SinkOps.compactVersions(s, path,
+        SinkOps.Compaction.ZOrder(Seq("event_id", "user_id"), bits = 20))
       SinkOps.readVersion(s, path, Some(v)).agg(
           count(lit(1)).as("n_rows"),
           sum("user_id").as("user_sum"),
@@ -3946,12 +3968,12 @@ object SparkEntry {
         ev.filter(col("event_id") % 2 === 1)
           .select(col("event_id"), col("user_id"))
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, statsCol = Some("event_id"))
+        path, SinkOps.CommitSpec(stats = Seq("event_id")))
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 2 === 0)
           .select(col("event_id"), col("user_id"), col("event_type"))
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, statsCol = Some("event_id"))
+        path, SinkOps.CommitSpec(stats = Seq("event_id")))
       SinkOps.readVersionWhere(s, path,
           Seq(LongRange("event_id", 100L, 299L)), mergeSchema = true)
         .select(col("event_id"), col("user_id"), col("event_type"))
@@ -3971,8 +3993,8 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       (0L to 3L).foreach { r =>
-        SinkOps.commitVersionDelta(e.filter(col("event_id") % 4 === r),
-          path, checkpointEvery = 3); ()
+        SinkOps.commitVersion(e.filter(col("event_id") % 4 === r),
+          path, SinkOps.CommitSpec(checkpointEvery = Some(3))); ()
       }
       def dig(df: DataFrame, v: Int) = df.agg(
           count(lit(1)).as("n_rows"),
@@ -4006,18 +4028,18 @@ object SparkEntry {
       val (t1, t2) = (umin + span3, umin + 2 * span3)
       val (elo, ehi) = (emin + (emax - emin + 1) / 4,
         emin + (emax - emin + 1) / 2)
-      SinkOps.commitVersionStats(
+      SinkOps.commitVersion(
         e.filter(col("user_id") < t1)
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, Seq("event_id", "user_id"))
-      SinkOps.commitVersionStats(
+        path, SinkOps.CommitSpec(stats = Seq("event_id", "user_id")))
+      SinkOps.commitVersion(
         e.filter(col("user_id") >= t1 && col("user_id") < t2)
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, Seq("event_id", "user_id"))
-      SinkOps.commitVersionStats(
+        path, SinkOps.CommitSpec(stats = Seq("event_id", "user_id")))
+      SinkOps.commitVersion(
         e.filter(col("user_id") >= t2)
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, Seq("event_id", "user_id"))
+        path, SinkOps.CommitSpec(stats = Seq("event_id", "user_id")))
       SinkOps.readVersionWhere(s, path,
           Seq(LongRange("event_id", elo, ehi),
             LongRange("user_id", t1, t2 - 1)))
@@ -4039,7 +4061,7 @@ object SparkEntry {
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 3 === r)
             .repartitionByRange(4, col("event_id")),
-          path, carryForward = true, statsCol = Some("event_id")); ()
+          path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
       }
       s.sql(s"""SELECT event_id, user_id, event_type
              FROM graft_version_where('$path', 'event_id', 150, 349)""")
@@ -4059,7 +4081,7 @@ object SparkEntry {
         .delete(root, true)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 3 === r), path,
-          carryForward = true, Some("event_id")); ()
+          SinkOps.CommitSpec(stats = Seq("event_id"))); ()
       }
       s.sql(s"""SELECT version, n_dirs, n_rows, min_stat, max_stat,
                  n_delete_commits, n_read_groups
@@ -4210,18 +4232,18 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       (0L to 1L).foreach { r =>
-        SinkOps.commitVersionStats(
+        SinkOps.commitVersion(
           e.filter(col("event_id") % 3 === r)
             .repartitionByRange(4, col("event_id")),
-          path, carryForward = true, Seq("event_id")); ()
+          path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
       }
       SinkOps.deleteVersionKeys(
         e.filter(col("event_id") % 7 === 0).select("event_id"),
         path, "event_id")
-      SinkOps.commitVersionStats(
+      SinkOps.commitVersion(
         e.filter(col("event_id") % 3 === 2)
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, Seq("event_id"))
+        path, SinkOps.CommitSpec(stats = Seq("event_id")))
       s.sql(s"""SELECT n_rows, min_event_id, max_event_id
              FROM graft_stats('$path')""")
     }),
@@ -4230,7 +4252,7 @@ object SparkEntry {
     // (Delta's maintenance SQL shape): three appends, `OPTIMIZE ...
     // ZORDER BY (event_id, user_id)` rewrites the head under the
     // Morton layout with both-column zone maps (the same
-    // compactVersionsZOrderK body as the Scala API), and `VACUUM ...
+    // compactVersions ZOrder body as the Scala API), and `VACUUM ...
     // KEEP 4` reclaims exactly the three pre-compaction dirs —
     // version, vacuum count, and lossless digest all in one row.
     "q_sql_maintenance" -> ((s, d) => {
@@ -4270,8 +4292,8 @@ object SparkEntry {
       val root = new org.apache.hadoop.fs.Path(path)
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
-      SinkOps.commitVersion(ev, path, carryForward = true,
-        Some("event_id"))
+      SinkOps.commitVersion(ev, path,
+        SinkOps.CommitSpec(stats = Seq("event_id")))
       Seq(5, 7).foreach { m =>
         SinkOps.deleteVersionKeys(
           ev.filter(col("event_id") % m === 0).select("event_id"),
@@ -4306,9 +4328,10 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       (0L to 5L).foreach { r =>
-        SinkOps.commitVersionPartitionedCols(
+        SinkOps.commitVersion(
           ev.filter(col("event_id") % 6 === r), path,
-          Seq("event_type")); ()
+          SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq(
+            "event_type")))); ()
       }
       val gauges = SinkOps.maintenanceAdvice(s, path,
         targetRowsPerFile = 1L, maxFilesPerLeaf = 4).collect().head
@@ -4372,8 +4395,8 @@ object SparkEntry {
       }
       // Adjacent delete run of 3 → coalesce_deletes.
       val pc = fresh("graft_adv_c")
-      SinkOps.commitVersion(ev, pc, carryForward = true,
-        Some("event_id"))
+      SinkOps.commitVersion(ev, pc,
+        SinkOps.CommitSpec(stats = Seq("event_id")))
       Seq(5, 7, 11).foreach { m =>
         SinkOps.deleteVersionKeys(
           ev.filter(col("event_id") % m === 0).select("event_id"),
@@ -4383,18 +4406,18 @@ object SparkEntry {
       val po = fresh("graft_adv_o")
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(ev.filter(col("event_id") % 4 === r),
-          po, carryForward = true, Some("event_id"))
+          po, SinkOps.CommitSpec(stats = Seq("event_id")))
         SinkOps.deleteVersionKeys(
           ev.filter(col("event_id") % (13 + r) === 0)
             .select("event_id"), po, "event_id"); ()
       }
       SinkOps.commitVersion(ev.filter(col("event_id") % 4 === 3), po,
-        carryForward = true, Some("event_id"))
+        SinkOps.CommitSpec(stats = Seq("event_id")))
       // Clean 4-file commit: under a 1M-rows/file target → bin_pack;
       // the SAME table under target 1 → none.
       val pb = fresh("graft_adv_b")
       SinkOps.commitVersion(ev.repartition(4), pb,
-        carryForward = true, Some("event_id"))
+        SinkOps.CommitSpec(stats = Seq("event_id")))
       s.sql(s"""
         SELECT 'runs' AS t, n_read_groups, max_delete_run,
                recommendation FROM graft_advice('$pc', 1, 4)
@@ -4457,7 +4480,7 @@ object SparkEntry {
     // SQL SKIP-TIER WRITE — the writer half of the skip economics
     // through SQL: INSERT INTO graft_table(path, 'event_id') declares
     // zone-map sidecars for each commit (the SQL spelling of
-    // commitVersionStats), with a REPARTITION_BY_RANGE hint supplying
+    // CommitSpec stats), with a REPARTITION_BY_RANGE hint supplying
     // the clustering that makes per-file ranges tight — then the
     // graft_version_where TVF plans only intersecting files. A table
     // built, maintained, AND skip-read entirely in SQL.
@@ -4636,12 +4659,12 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       SinkOps.commitVersion(e.filter(col("event_id") % 3 === 0), path)
-      val v = SinkOps.commitVersionRetrying(
+      val v = SinkOps.commitVersion(
         e.filter(col("event_id") % 3 === 2), path,
-        beforeAttempt = n => if (n == 1) {
+        SinkOps.CommitSpec(retries = 3, beforeAttempt = n => if (n == 1) {
           SinkOps.commitVersion(e.filter(col("event_id") % 3 === 1),
             path); ()
-        })
+        }))
       SinkOps.readVersion(s, path).agg(
           count(lit(1)).as("n_rows"),
           sum("user_id").as("user_sum"),
@@ -4668,18 +4691,19 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       SinkOps.commitVersion(e.filter(col("event_id") % 2 === 0), path)
-      val vMerge = SinkOps.mergeVersionRetrying(
+      val vMerge = SinkOps.mergeVersion(
         e.filter(col("event_id") % 10 === 0)
           .withColumn("event_type", lit("merged"))
           .withColumn("value", col("value") + 9000.0),
         path, "event_id",
-        beforeAttempt = n => if (n == 1) {
+        SinkOps.CommitSpec(retries = 3, beforeAttempt = n => if (n == 1) {
           SinkOps.commitVersion(e.filter(col("event_id") % 2 === 1),
             path); ()
-        })
-      val vDel = SinkOps.deleteVersionKeysRetrying(
+        }))
+      val vDel = SinkOps.deleteVersionKeys(
         e.filter(col("event_id") % 6 === 0).select("event_id"), path,
         "event_id",
+        retries = 3,
         beforeAttempt = n => if (n == 1) {
           SinkOps.commitVersion(
             e.filter(col("event_id") % 8 === 1)
@@ -4721,8 +4745,9 @@ object SparkEntry {
           SinkOps.commitVersion(e.filter(col("event_id") % 2 === 1),
             path); ()
         })
-      val vOpt = SinkOps.compactVersionsRetrying(s, path,
-        maxTries = 2, beforeAttempt = n => if (n == 1) {
+      val vOpt = SinkOps.compactVersions(s, path,
+        retries = 2,
+        beforeAttempt = n => if (n == 1) {
           SinkOps.commitVersion(
             e.filter(col("event_id") % 4 === 2)
               .withColumn("event_id", col("event_id") + 20000000L),
@@ -4750,18 +4775,18 @@ object SparkEntry {
       root.getFileSystem(s.sessionState.newHadoopConf())
         .delete(root, true)
       (0L to 1L).foreach { r =>
-        SinkOps.commitVersionStats(
+        SinkOps.commitVersion(
           e.filter(col("event_id") % 3 === r)
             .repartitionByRange(4, col("event_id")),
-          path, carryForward = true, Seq("event_id")); ()
+          path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
       }
       SinkOps.deleteVersionKeys(
         e.filter(col("event_id") % 7 === 0).select("event_id"),
         path, "event_id")
-      SinkOps.commitVersionStats(
+      SinkOps.commitVersion(
         e.filter(col("event_id") % 3 === 2)
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, Seq("event_id"))
+        path, SinkOps.CommitSpec(stats = Seq("event_id")))
       SinkOps.statsAggDv(s, path)
         .select("n_rows", "min_event_id", "max_event_id")
     }),
@@ -4787,8 +4812,9 @@ object SparkEntry {
         SinkOps.commitVersion(t.filter(col("event_id") % 2 === r),
           path); ()
       }
-      SinkOps.compactVersionsZOrderK(s, path,
-        Seq("event_id", "user_id", "zkey"), bits = 14)
+      SinkOps.compactVersions(s, path,
+        SinkOps.Compaction.ZOrder(Seq("event_id", "user_id", "zkey"),
+          bits = 14))
       val b = e.agg(min("user_id"), max("user_id"),
         min("event_id"), max("event_id")).head()
       val (umin, umax, emin, emax) =
@@ -4879,7 +4905,7 @@ object SparkEntry {
         .delete(root, true)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 3 === r), path,
-          carryForward = true, Some("event_id")); ()
+          SinkOps.CommitSpec(stats = Seq("event_id"))); ()
       }
       SinkOps.versionHistory(s, path)
         .select("version", "n_dirs", "n_rows", "min_stat", "max_stat",
@@ -4897,7 +4923,7 @@ object SparkEntry {
         .delete(root, true)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 3 === r),
-          path, carryForward = true, Some("event_id")); ()
+          path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
       }
       SinkOps.statsOnlyAgg(s, path)
         .select("n_rows", "min_event_id", "max_event_id")

@@ -22,7 +22,7 @@ import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
   *  - `INSERT INTO graft_table('<path>') <query>`
   *     → [[graft.ops.SinkOps.commitVersion]] (carry-forward append)
   *  - `INSERT OVERWRITE graft_table('<path>') <query>`
-  *     → commitVersion(carryForward = false) (snapshot replace)
+  *     → commitVersion with `carryForward = false` (snapshot replace)
   *  - `DELETE FROM graft_table('<path>') WHERE <keyCol> IN (<query>)`
   *     → [[graft.ops.SinkOps.deleteVersionKeys]] (merge-on-read DV —
   *       zero data files rewritten)
@@ -137,7 +137,7 @@ object GraftSqlParser {
 
   /** Trailing `RETRY <n>` clause of MERGE/DELETE and (r15) the
     * maintenance verbs OPTIMIZE/ALTER TABLE/RESTORE — opt-in OCC
-    * commit retry (the *Retrying SinkOps bodies), landing through up
+    * commit retry (`retries = n + 1` on the SinkOps verb), landing through up
     * to n version races (n retries = n+1 total attempts); without it
     * the verbs keep their bit-identical single-attempt shape.
     */
@@ -337,9 +337,9 @@ object GraftSqlParser {
       case Head(verb, path, statsCsvOrNull, tail) =>
         // Optional second graft_table argument: the STATS COLUMNS the
         // write declares (zone-map sidecars) — the SQL spelling of
-        // commitVersionStats/mergeVersion(statsCols), so a table built
-        // and maintained entirely through SQL stays skip-readable.
-        // Only writing verbs accept it.
+        // the CommitSpec `stats` of commitVersion/mergeVersion, so a
+        // table built and maintained entirely through SQL stays
+        // skip-readable. Only writing verbs accept it.
         val statsCols = Option(statsCsvOrNull)
           .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
           .getOrElse(Nil)
@@ -400,7 +400,7 @@ object GraftSqlParser {
             require(tail.trim.nonEmpty,
               s"INSERT into graft_table('$path') needs a source query")
             // Optional PARTITIONED BY (c1[, c2...]) prefix: the SQL
-            // spelling of commitVersionPartitionedCols — a table built
+            // spelling of a `Partitioned` CommitSpec layout — a table built
             // and read entirely through SQL keeps its coarsest skip
             // tier. Mutually exclusive with declared stats columns
             // (partitioned dirs are not zone-map servable).
@@ -422,7 +422,7 @@ object GraftSqlParser {
                 carryForward = v == "INSERT INTO", partCols, statsCols)
             } else query match {
               // Optional CHECK <keyCol> (constraints) prefix: the SQL
-              // spelling of commitVersionChecked — a violating batch
+              // spelling of CommitSpec `constraints` — a violating batch
               // refuses before any file lands, entirely from SQL.
               case CheckHead(keyCol, parenOn) =>
                 val (inner, rest) = balanced(parenOn.trim, path)
@@ -445,11 +445,7 @@ object GraftSqlParser {
                 val zc = cols.split(",").map(_.trim).filter(_.nonEmpty)
                 require(zc.length >= 2,
                   s"OPTIMIZE ... ZORDER BY needs >= 2 columns: $cols")
-                require(retries == 0,
-                  "RETRY on OPTIMIZE ... ZORDER BY is not supported " +
-                    "(the Morton rewrite has no OCC body yet) — run " +
-                    "it in a maintenance window")
-                GraftOptimizeCommand(path, zc.toSeq, None)
+                GraftOptimizeCommand(path, zc.toSeq, None, retries)
               case ClusterBy(c) =>
                 GraftOptimizeCommand(path, Nil, Some(c), retries)
               case other => throw new IllegalArgumentException(
@@ -622,7 +618,8 @@ object GraftSqlParser {
 }
 
 /** `INSERT INTO/OVERWRITE graft_table(path[, 'c1,c2']) <query>` →
-  * [[graft.ops.SinkOps.commitVersionStats]]. The source plan is
+  * [[graft.ops.SinkOps.commitVersion]] with the declared `stats`. The
+  * source plan is
   * analyzed and executed at run time by the session (full SQL
   * available — incl. REPARTITION_BY_RANGE hints, the SQL spelling of
   * the clustering that makes declared zone maps tight).
@@ -634,13 +631,15 @@ case class GraftInsertCommand(path: String, source: LogicalPlan,
   override val output: Seq[Attribute] = GraftSqlParser.versionOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(graft.ops.SinkOps.commitVersionStats(
-      GraftSqlBridge.ofRows(spark, source), path, carryForward,
-      statsCols)))
+    Seq(Row(graft.ops.SinkOps.commitVersion(
+      GraftSqlBridge.ofRows(spark, source), path,
+      graft.ops.SinkOps.CommitSpec(stats = statsCols,
+        carryForward = carryForward))))
 }
 
 /** `INSERT INTO/OVERWRITE graft_table(path) PARTITIONED BY (c1[, c2…])
-  * <query>` → [[graft.ops.SinkOps.commitVersionPartitionedCols]] —
+  * <query>` → [[graft.ops.SinkOps.commitVersion]] with a `Partitioned`
+  * layout —
   * the SQL writer half of the partition tier: the commit lands hive
   * subtrees plus the counted parts sidecar, so partition-pruned reads
   * (`graft_version_part`) and metadata counts (`graft_part_counts`)
@@ -655,15 +654,17 @@ case class GraftInsertPartitionedCommand(path: String,
   override val output: Seq[Attribute] = GraftSqlParser.versionOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(graft.ops.SinkOps.commitVersionPartitionedCols(
-      GraftSqlBridge.ofRows(spark, source), path, partCols,
-      carryForward, statsCols)))
+    Seq(Row(graft.ops.SinkOps.commitVersion(
+      GraftSqlBridge.ofRows(spark, source), path,
+      graft.ops.SinkOps.CommitSpec(
+        layout = graft.ops.SinkOps.Partitioned(partCols), stats = statsCols,
+        carryForward = carryForward))))
 }
 
 /** `INSERT INTO/OVERWRITE graft_table(path[, 'c1,c2']) CHECK <keyCol>
   * (not_null(c), range(c, lo, hi), in_set(c, 'a', …), unique(c),
   * expr(<boolean sql>), fk(c, graft_table('<dim>'), dim_c))
-  * <query>` → [[graft.ops.SinkOps.commitVersionChecked]] — the
+  * <query>` → [[graft.ops.SinkOps.commitVersion]] with `constraints` — the
   * constraint gate entirely from SQL: the batch stages once, a
   * violating staging refuses with the bounded report and leaves the
   * head untouched, and a clean one publishes (with zone-map sidecars
@@ -679,31 +680,32 @@ case class GraftInsertCheckedCommand(path: String, source: LogicalPlan,
   override val output: Seq[Attribute] = GraftSqlParser.versionOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(graft.ops.SinkOps.commitVersionChecked(
-      GraftSqlBridge.ofRows(spark, source), path, keyCol, checks,
-      carryForward, statsCols)))
+    Seq(Row(graft.ops.SinkOps.commitVersion(
+      GraftSqlBridge.ofRows(spark, source), path,
+      graft.ops.SinkOps.CommitSpec(stats = statsCols,
+        carryForward = carryForward,
+        constraints = Some(graft.ops.SinkOps.Constraints(keyCol, checks))))))
 }
 
 /** `OPTIMIZE graft_table(path) ['' | ZORDER BY (...) | CLUSTER BY
-  * (c)]` → full compaction ([[graft.ops.SinkOps.compactVersions]] /
-  * [[graft.ops.SinkOps.compactVersionsZOrderK]]) — the maintenance
-  * half of the SQL surface (Delta's OPTIMIZE shape): DVs resolved and
-  * purged, planning back to O(1) dirs, fresh zone maps under the
-  * declared layout.
+  * (c)] [RETRY n]` → [[graft.ops.SinkOps.compactVersions]] with a
+  * `Full` or `ZOrder` compaction — the maintenance half of the SQL
+  * surface (Delta's OPTIMIZE shape): DVs resolved and purged, planning
+  * back to O(1) dirs, fresh zone maps under the declared layout. RETRY
+  * n re-packs through up to n version races on every layout;
+  * `beforeAttempt` is the commit test seam.
   */
 case class GraftOptimizeCommand(path: String, zorderCols: Seq[String],
                                 clusterCol: Option[String],
-                                retries: Int = 0)
+                                retries: Int = 0,
+                                beforeAttempt: Int => Unit = _ => ())
     extends LeafRunnableCommand {
   override val output: Seq[Attribute] = GraftSqlParser.versionOutput
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(
-      if (zorderCols.nonEmpty)
-        graft.ops.SinkOps.compactVersionsZOrderK(spark, path, zorderCols)
-      else if (retries >= 1)
-        graft.ops.SinkOps.compactVersionsRetrying(spark, path,
-          clusterCol, maxTries = retries + 1)
-      else graft.ops.SinkOps.compactVersions(spark, path, clusterCol)))
+    Seq(Row(graft.ops.SinkOps.compactVersions(spark, path,
+      if (zorderCols.nonEmpty) graft.ops.SinkOps.Compaction.ZOrder(zorderCols)
+      else graft.ops.SinkOps.Compaction.Full(clusterCol),
+      retries = retries + 1, beforeAttempt = beforeAttempt)))
 }
 
 /** `RESTORE graft_table(path) VERSION AS OF v | TIMESTAMP AS OF ms`
@@ -833,10 +835,9 @@ case class GraftVacuumDryRunCommand(path: String, keep: Int,
 
 /** `DELETE FROM graft_table(path) WHERE k IN (<query>) [RETRY n]` →
   * [[graft.ops.SinkOps.deleteVersionKeys]] — merge-on-read sidecar,
-  * zero data files rewritten. With RETRY n the OCC-retrying body
-  * ([[graft.ops.SinkOps.deleteVersionKeysRetrying]]) lands the delete
-  * through up to n version races (opt-in: the clause changes the
-  * sidecar dir naming from `deletes/v<N>` to commit-unique, so the
+  * zero data files rewritten. RETRY n (`retries = n + 1`) lands the
+  * delete through up to n version races (opt-in: the clause changes
+  * the sidecar dir naming from `deletes/v<N>` to commit-unique, so the
   * default keeps the bit-identical single-attempt shape).
   */
 case class GraftDeleteCommand(path: String, keyCol: String,
@@ -845,24 +846,18 @@ case class GraftDeleteCommand(path: String, keyCol: String,
   override val output: Seq[Attribute] = GraftSqlParser.versionOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(keys)
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(
-      // maxTries = retries + 1: RETRY n means landing through up to n
-      // version RACES (n+1 total attempts), as documented — ADVICE
-      // r14 pinned the old maxTries = n as an off-by-one.
-      if (retries >= 1) graft.ops.SinkOps.deleteVersionKeysRetrying(
-        GraftSqlBridge.ofRows(spark, keys), path, keyCol,
-        maxTries = retries + 1)
-      else graft.ops.SinkOps.deleteVersionKeys(
-        GraftSqlBridge.ofRows(spark, keys), path, keyCol)))
+    // RETRY n lands through up to n version RACES: n + 1 attempts.
+    Seq(Row(graft.ops.SinkOps.deleteVersionKeys(
+      GraftSqlBridge.ofRows(spark, keys), path, keyCol,
+      retries = retries + 1)))
 }
 
 /** `MERGE INTO graft_table(path) USING (<query>) ON k [WHEN ...]
   * [RETRY n]` → [[graft.ops.SinkOps.mergeVersion]] — the one-commit
-  * DV upsert (delete sidecar + data dir), O(batch) write cost. With
-  * RETRY n the OCC-retrying body
-  * ([[graft.ops.SinkOps.mergeVersionRetrying]]) lands the merge
-  * through up to n version races — the shape a merge stream racing a
-  * nightly OPTIMIZE wants (opt-in, same naming note as DELETE).
+  * DV upsert (delete sidecar + data dir), O(batch) write cost. RETRY
+  * n (`retries = n + 1`) lands the merge through up to n version races
+  * — the shape a merge stream racing a nightly OPTIMIZE wants (opt-in,
+  * same naming note as DELETE).
   */
 case class GraftMergeCommand(path: String, keyCol: String,
                              source: LogicalPlan,
@@ -872,13 +867,11 @@ case class GraftMergeCommand(path: String, keyCol: String,
   override val output: Seq[Attribute] = GraftSqlParser.versionOutput
   override def innerChildren: Seq[LogicalPlan] = Seq(source)
   override def run(spark: SparkSession): Seq[Row] =
-    Seq(Row(
-      // maxTries = retries + 1 — same RETRY-n-races contract as DELETE.
-      if (retries >= 1) graft.ops.SinkOps.mergeVersionRetrying(
-        GraftSqlBridge.ofRows(spark, source), path, keyCol, statsCols,
-        maxTries = retries + 1)
-      else graft.ops.SinkOps.mergeVersion(
-        GraftSqlBridge.ofRows(spark, source), path, keyCol, statsCols)))
+    // Same RETRY-n-races contract as DELETE: n + 1 attempts.
+    Seq(Row(graft.ops.SinkOps.mergeVersion(
+      GraftSqlBridge.ofRows(spark, source), path, keyCol,
+      graft.ops.SinkOps.CommitSpec(stats = statsCols,
+        retries = retries + 1))))
 }
 
 /** `UPDATE graft_table(path) SET c = expr[, ...] WHERE k IN (<query>)`
@@ -918,6 +911,6 @@ case class GraftUpdateCommand(path: String, keyCol: String,
     val updated = matched.withColumns(
       assigns.map { case (n, e) => n -> GraftSqlBridge.column(e) }.toMap)
     Seq(Row(graft.ops.SinkOps.mergeVersion(updated, path, keyCol,
-      statsCols)))
+      graft.ops.SinkOps.CommitSpec(stats = statsCols))))
   }
 }

@@ -185,117 +185,92 @@ object SinkOps {
       .partitionBy(partitionCol).parquet(path)
   }
 
+  // ---- Versioned writes: one spec, one pipeline ----
+
+  /** Data layout of a commit's data dir. */
+  sealed trait Layout extends Product with Serializable
+
+  /** Parquet files directly under the data dir. */
+  case object Flat extends Layout
+
+  /** Hive subtrees `c1=a/c2=b/…` (nesting order) plus a `parts/`
+    * sidecar recording every leaf fragment with its row and file
+    * counts (from the parquet footers — zero data IO), so a
+    * partition-scoped read ([[readVersionWhere]]) plans from the
+    * sidecar and [[partCountsOnly]] answers grouped counts without
+    * opening a file. The coarsest skip tier (a date, a tenant, a
+    * language), which merges and OPTIMIZE follow once a table has it.
+    * Partition values must not need hive escaping ([[PartValueOk]]),
+    * and a batch that writes no partition dir refuses.
+    */
+  final case class Partitioned(cols: Seq[String]) extends Layout
+
+  /** The publish gate of a checked commit (the Delta `ADD CONSTRAINT
+    * CHECK` / Deequ shape): the STAGED FILES, not the input plan, are
+    * checked against [[QualityOps.check]] keyed by `keyCol`, so the
+    * rows checked are byte-for-byte the rows committed even when the
+    * input is non-deterministic. A violating batch refuses with the
+    * bounded report (constraint, count, sample key) and leaves the
+    * table byte-untouched.
+    */
+  final case class Constraints(keyCol: String,
+                               checks: Seq[QualityOps.Constraint]) {
+    require(checks.nonEmpty,
+      "no constraints declared — use commitVersion for ungated appends")
+  }
+
+  /** How a data-writing verb lays out and publishes one commit.
+    *  - `layout`: [[Flat]] or [[Partitioned]].
+    *  - `stats`: zone-map columns — per data FILE, the min/max of each
+    *    (long-castable, string, timestamp or date) column in the
+    *    `stats/` sidecar, so [[readVersionWhere]] plans only files
+    *    whose ranges meet the predicate, before any file IO. Tight
+    *    when the layout is range-clustered on the column.
+    *  - `blooms`: point-lookup columns — a per-file bitmap in the
+    *    `blooms/` sidecar skips equality probes under ANY layout.
+    *  - `carryForward`: the manifest carries the head's lines (an
+    *    append); false replaces the snapshot.
+    *  - `checkpointEvery`: a DELTA manifest — `base:<head>` plus the
+    *    new dir, with a full (checkpoint) manifest every n commits, so
+    *    manifest metadata grows O(versions + dirs); readers resolve the
+    *    chain transparently.
+    *  - `constraints`: the checked publish gate ([[Constraints]]).
+    *  - `batchKey`: an idempotency token — the first commit records its
+    *    version in a marker after the manifest, and a redelivered batch
+    *    returns it without committing, so history stays bit-identical
+    *    under at-least-once delivery.
+    *  - `retries`: manifest attempts through [[occRetryLoop]]; 1 is a
+    *    single loud attempt, more lands through version races.
+    *  - `beforeAttempt`: test seam, called with the 1-based attempt
+    *    number after the data and sidecars are written, just before
+    *    the manifest create — the race window itself.
+    */
+  final case class CommitSpec(layout: Layout = Flat,
+                              stats: Seq[String] = Nil,
+                              blooms: Seq[String] = Nil,
+                              carryForward: Boolean = true,
+                              checkpointEvery: Option[Int] = None,
+                              constraints: Option[Constraints] = None,
+                              batchKey: Option[String] = None,
+                              retries: Int = 1,
+                              beforeAttempt: Int => Unit = _ => ())
+
   /** Append a snapshot to a MANIFEST-VERSIONED table (the Iceberg/Delta
     * time-travel discipline, dependency-free): data files land under an
-    * immutable per-version directory, and version N's manifest lists
-    * every data directory composing that snapshot (v1..vN — append-only,
+    * immutable per-commit directory, and version N's manifest lists
+    * every data directory composing that snapshot (append-only,
     * nothing rewritten). Readers plan from the manifest, NEVER from a
     * directory listing, so a reader pinned to version N is isolated
     * from concurrent appends (snapshot isolation) and planning is one
     * manifest read, not a 100k-file listing. All file mutation goes
     * through the Hadoop `FileSystem` API so the layout works on any
-    * Hadoop-compatible store. Returns the new version number.
+    * Hadoop-compatible store. Returns the new version.
     */
   def commitVersion(df: DataFrame, path: String,
-                    carryForward: Boolean = true): Int =
-    commitVersion(df, path, carryForward, None)
-
-  /** [[commitVersion]] recording MANIFEST-LEVEL FILE STATISTICS: with
-    * `statsCol` declared (a clustering column castable to long), the
-    * commit also writes `stats/vN.txt` — per data FILE of the new dir,
-    * its min/max of that column (one bounded read-back of the commit's
-    * own files; the row count equals the file count, the sanctioned
-    * manifest-scale collect). [[readVersionWhere]] then plans only
-    * files whose [min,max] intersects the predicate — the zone-map
-    * skip that at 100 TB is the difference between opening 3 files and
-    * 100k, BEFORE any file IO (row-group pruning inside an opened file
-    * only starts after its footer is fetched). Composes with a
-    * range-clustered layout (repartitionByRange / Z-order): clustering
-    * is what makes per-file ranges tight. A file with a null min/max
-    * (all-null column) is recorded statless — always planned, never
-    * wrongly skipped.
-    */
-  def commitVersion(df: DataFrame, path: String, carryForward: Boolean,
-                    statsCol: Option[String]): Int =
-    commitVersionStats(df, path, carryForward, statsCol.toSeq)
-
-  /** [[commitVersion]] with MULTI-COLUMN zone maps: every declared
-    * column (each castable to long) gets per-file min/max in the ONE
-    * stats sidecar, so [[readVersionWhere]] prunes on a
-    * CONJUNCTION of range predicates — skipping multiplies across
-    * columns the way Iceberg's per-primitive-column stats do. The
-    * single-column sidecar format is the k=1 case byte-for-byte;
-    * column order in the sidecar is the declared order (the first
-    * column is the PRIMARY clustering column single-predicate readers
-    * default to).
-    */
-  def commitVersionStats(df: DataFrame, path: String,
-                         carryForward: Boolean,
-                         statsCols: Seq[String]): Int = {
-    val spark = df.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    // Version allocation consults BOTH manifest/ and staging/: a commit
-    // issued while a WAP batch is staged must not reuse (and clobber)
-    // the staged number. The carried-forward snapshot is the committed
-    // HEAD's — a pending staged (unpublished) version is invisible to
-    // commits by design; under the single-writer contract a WAP batch
-    // publishes or rolls back before the next commit's snapshot is
-    // expected to contain it.
-    val head = latestVersion(fs, root)
-    val v = math.max(head, latestStaged(fs, root)) + 1
-    requireVacant(fs, root, v)
-    val dataDir = s"data/v$v"
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-    if (statsCols.nonEmpty) writeDirStats(spark, fs, root, dataDir,
-      statsCols)
-    val prev = if (head == 0 || !carryForward) Nil
-      else manifestDirs(fs, root, head)
-    writeManifestLines(fs, root, v, prev :+ dataDir)
-    v
-  }
-
-  /** [[commitVersion]] with a BOUNDED OPTIMISTIC-CONCURRENCY RETRY
-    * LOOP — the commit shape that lets concurrent writers actually
-    * LAND instead of actually erroring (the Delta commit-loop
-    * discipline): the batch's data files are written ONCE under a
-    * COMMIT-UNIQUE directory (never `data/v<N>`, which a racing
-    * loser's Overwrite would clobber — manifest lines name arbitrary
-    * dirs, so nothing downstream assumes version-numbered names), and
-    * only the manifest attempt retries: on a version-number collision
-    * the loop re-reads the advanced head, re-resolves carry-forward
-    * (now INCLUDING the winner's lines — no lost update by
-    * construction), re-allocates, and re-attempts, up to `maxTries`
-    * before surfacing the existing loud failure. Retry cost is
-    * O(manifest) per attempt with ZERO data rewritten.
-    *
-    * `beforeAttempt` is a test seam (invoked with the 1-based attempt
-    * number AFTER version allocation, before the manifest attempt —
-    * the race window itself) so specs can interleave a competing
-    * writer deterministically; production callers leave it defaulted.
-    */
-  def commitVersionRetrying(df: DataFrame, path: String,
-                            carryForward: Boolean = true,
-                            statsCols: Seq[String] = Nil,
-                            maxTries: Int = 3,
-                            beforeAttempt: Int => Unit = _ => ()): Int = {
-    require(maxTries >= 1, s"maxTries must be >= 1: $maxTries")
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataDir =
-      s"data/c${java.util.UUID.randomUUID.toString.replace("-", "").take(12)}"
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-    if (statsCols.nonEmpty) writeDirStats(spark, fs, root, dataDir,
-      statsCols)
-    occRetryLoop(fs, root, path, dataDir, maxTries, beforeAttempt) {
-      head => (if (head == 0 || !carryForward) Nil
-        else manifestDirs(fs, root, head)) :+ dataDir
+                    spec: CommitSpec = CommitSpec()): Int =
+    commitPipeline(df.sparkSession, path, "commit", spec) { _ =>
+      Batch(spec, Some(df))
     }
-  }
 
   /** One micro-batch commit for the registered streaming sink
     * (`writeStream.format("graft")`) — IDEMPOTENT under the engine's
@@ -315,21 +290,17 @@ object SinkOps {
     */
   def commitStreamBatch(df: DataFrame, path: String, batchId: Long,
                         txnAppId: String = "",
-                        maxTries: Int = 3,
+                        retries: Int = 3,
                         beforeAttempt: Int => Unit = _ => ()): Option[Int] = {
     require(txnAppId.matches("[A-Za-z0-9_-]*"),
       s"txnAppId must be [A-Za-z0-9_-]*: '$txnAppId'")
     val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataDir =
-      if (txnAppId.isEmpty) s"data/b$batchId"
-      else s"data/b${txnAppId}_$batchId"
+    val (root, fs) = tableAt(spark, path)
+    val name =
+      if (txnAppId.isEmpty) s"b$batchId" else s"b${txnAppId}_$batchId"
+    val dataDir = s"data/$name"
     val latest = latestVersion(fs, root)
-    // "Was this batch committed" is O(1) in the common cases (r16,
-    // ADVICE — the oldest-first full walk paid O(versions) base-chain
-    // resolutions per micro-batch, O(n²) over a stream's life, worst
-    // exactly on the long-running pipeline this sink advertises):
+    // "Was this batch committed" is O(1) in the common cases:
     //  1. HEAD manifest references the dir — the live-replay hit (a
     //     carry-forward head references every committed batch dir).
     //  2. The dir is NOT on disk — never committed here, or its whole
@@ -340,8 +311,7 @@ object SinkOps {
     //     case walks history, newest-first with early exit.
     def referencedIn(vHi: Int, vLo: Int): Boolean =
       (vHi to vLo by -1).exists(v =>
-        fs.exists(new org.apache.hadoop.fs.Path(root,
-          f"manifest/v$v%05d.txt")) &&
+        hasVersion(fs, root, v) &&
           manifestDirs(fs, root, v).contains(dataDir))
     val committed = latest >= 1 && {
       if (manifestDirs(fs, root, latest).contains(dataDir)) true
@@ -350,65 +320,219 @@ object SinkOps {
       else latest >= 2 && referencedIn(latest - 1, 1)
     }
     if (committed) return None
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-    // The idempotence check ALSO runs inside the OCC loop (r16,
-    // ADVICE): two live incarnations replaying the same batchId (a
-    // zombie driver next to its replacement — the exact at-least-once
-    // scenario this function targets) can both pass the pre-check
-    // above; the loser's retry re-reads the advanced head, and if a
-    // version committed since the pre-check already references the
-    // dir, it SKIPS instead of appending it a second time (a manifest
-    // listing the dir twice would double-deliver its rows). Both
-    // incarnations wrote identical bytes (deterministic dir name), so
-    // whichever commit lands is correct.
-    try Some(occRetryLoop(fs, root, path, dataDir, maxTries,
-        beforeAttempt) {
-      head =>
+    // The idempotence check ALSO runs per manifest attempt: two live
+    // incarnations replaying the same batchId (a zombie driver next to
+    // its replacement) can both pass the pre-check above; the loser's
+    // retry re-reads the advanced head, and if a version committed
+    // since the pre-check already references the dir, it SKIPS instead
+    // of appending it a second time (a manifest listing the dir twice
+    // would double-deliver its rows). Both incarnations wrote identical
+    // bytes (deterministic dir name), so whichever commit lands is
+    // correct.
+    try Some(commitPipeline(spark, path, s"stream batch $name",
+        CommitSpec(retries = retries, beforeAttempt = beforeAttempt),
+        named = Some(name)) { _ =>
+      Batch(CommitSpec(), Some(df), prefix = Some { head =>
         if (head > latest && referencedIn(head, latest + 1))
           throw StreamBatchAlreadyCommitted
-        (if (head == 0) Nil else manifestDirs(fs, root, head)) :+
-          dataDir
+        if (head == 0) Nil else manifestDirs(fs, root, head)
+      })
     }) catch {
       case StreamBatchAlreadyCommitted => None
     }
   }
 
-  /** Control-flow signal of [[commitStreamBatch]]'s in-OCC-loop
+  /** Control-flow signal of [[commitStreamBatch]]'s per-attempt
     * idempotence check; never escapes the function.
     */
   private object StreamBatchAlreadyCommitted
       extends RuntimeException("stream batch already committed")
       with scala.util.control.NoStackTrace
 
-  /** The OCC manifest-attempt loop shared by every *Retrying writer:
-    * data/sidecar files are already on disk under commit-unique names
-    * (written ONCE by the caller); each attempt re-reads the advanced
-    * head, rebuilds its manifest lines via `linesFor` (so a racing
-    * winner's lines are INCLUDED — no lost update by construction),
-    * and re-attempts the manifest create. Only the version-race
-    * failures retry — the vacancy require (message-pinned) and the
-    * filesystem's own create-exists refusal; anything else (bad
-    * columns, IO errors) surfaces immediately. Retry cost is
-    * O(manifest) per attempt with ZERO data rewritten.
+  /** One attempt's payload for [[commitPipeline]]: the data to write
+    * under `spec` (layout, sidecars, gate, carry-forward), the keys of
+    * a delete sidecar with their key column, and the manifest lines
+    * the new entries follow when they are not the spec's carry-forward
+    * of the head.
+    */
+  private final case class Batch(spec: CommitSpec,
+                                 data: Option[DataFrame],
+                                 deleteKeys: Option[(DataFrame, String)] = None,
+                                 prefix: Option[Int => Seq[String]] = None)
+
+  /** The one commit pipeline behind every data-writing verb:
+    *  1. check the batch's spec against its schema ([[checkSpec]])
+    *     before any file is written;
+    *  2. write the data once under the spec's layout (and a delete
+    *     sidecar's keys);
+    *  3. write every sidecar the spec declares — parts, stats, blooms —
+    *     all before the manifest; a [[Constraints]] gate checks the
+    *     staged files first;
+    *  4. publish the manifest lines through [[occRetryLoop]].
+    *
+    * Dir naming: `v<N>` when one attempt publishes (the version is
+    * allocated before the write, and the vacancy check closes the
+    * clobber window for racers that committed first); a commit-unique
+    * `c<token>` when the data must exist before its version is known
+    * (`retries > 1`, or a gate that stages first); `named` for the
+    * stream sink's deterministic batch dirs. Steps 1-3 run once —
+    * before the first attempt, or inside it when the dir takes the
+    * attempt's version; `repack` re-runs them per attempt (a
+    * compaction's payload derives from the head, so a lost race
+    * invalidates it). A commit's own unique dir and sidecars are
+    * removed when it fails BEFORE the manifest create — a refusal, a
+    * constraint violation, a lost race — never after, and never a
+    * version-named or stream dir another writer may own.
+    * `spec.batchKey` goes through [[keyedVersion]] under `marker`.
+    */
+  private def commitPipeline(spark: org.apache.spark.sql.SparkSession,
+                             path: String, what: String, spec: CommitSpec,
+                             marker: String = "commits",
+                             named: Option[String] = None,
+                             repack: Boolean = false)
+                            (batchFor: Int => Batch): Int = {
+    val (root, fs) = tableAt(spark, path)
+    def at(rel: String) = new org.apache.hadoop.fs.Path(root, rel)
+    val unique = named.isEmpty &&
+      (spec.retries > 1 || spec.constraints.nonEmpty)
+    val versioned = named.isEmpty && !unique
+    var staged: Option[(String, Batch)] = None
+    def cleanup(): Unit = if (unique) staged.foreach { case (s, _) =>
+      Seq("data", "deletes").foreach(k => fs.delete(at(s"$k/$s"), true))
+      Seq("parts", "stats", "blooms")
+        .foreach(k => fs.delete(at(s"$k/$s.txt"), false))
+      staged = None
+    }
+    def write(head: Int, v: Int): (String, Batch) = {
+      val b = batchFor(head)
+      b.data.foreach(d => checkSpec(b.spec, d.schema))
+      val s = named.getOrElse(
+        if (unique) "c" + java.util.UUID.randomUUID.toString
+          .replace("-", "").take(12)
+        else { requireVacant(fs, root, v); s"v$v" })
+      staged = Some((s, b))
+      b.deleteKeys.foreach { case (keys, _) =>
+        writeParquet(keys, at(s"deletes/$s").toString) }
+      b.data.foreach { df =>
+        val dir = s"data/$s"
+        val partCols = b.spec.layout match {
+          case Partitioned(pc) => pc
+          case Flat => Nil
+        }
+        writeParquet(df, at(dir).toString, partCols)
+        b.spec.constraints.foreach(gate(spark, path, at(dir), _))
+        if (partCols.nonEmpty) writeDirParts(fs, root, dir, partCols,
+          spark.sessionState.newHadoopConf())
+        if (b.spec.stats.nonEmpty)
+          writeDirStats(spark, fs, root, dir, b.spec.stats)
+        if (b.spec.blooms.nonEmpty)
+          writeDirBloom(spark, fs, root, dir, b.spec.blooms)
+      }
+      (s, b)
+    }
+    def publish(): Int =
+      try {
+        if (!versioned && !repack) write(latestVersion(fs, root), 0)
+        occRetryLoop(fs, root, path, what, spec.retries,
+            spec.beforeAttempt) { (head, v) =>
+          if (repack) cleanup()
+          val (s, b) = staged.getOrElse(write(head, v))
+          val carried =
+            if (head == 0 || !b.spec.carryForward) Nil
+            else if (b.spec.checkpointEvery.exists(v % _ != 0))
+              Seq(s"$BasePrefix$head")
+            else manifestDirs(fs, root, head)
+          b.prefix.fold(carried)(_(head)) ++
+            b.deleteKeys.map(k => s"${DeletePrefix}deletes/$s:${k._2}") ++
+            b.data.map(_ => s"data/$s")
+        }
+      } catch {
+        case scala.util.control.NonFatal(e) => cleanup(); throw e
+      }
+    spec.batchKey.fold(publish())(k => keyedVersion(fs, root, marker, k)(
+      publish()))
+  }
+
+  /** Step 1 of [[commitPipeline]]: every refusal a spec can earn from
+    * the batch's schema, before any file is written — so a refused
+    * commit leaves no data dir, no sidecar and no head move.
+    */
+  private def checkSpec(spec: CommitSpec,
+                        schema: org.apache.spark.sql.types.StructType)
+      : Unit = {
+    spec.checkpointEvery.foreach(n => require(n >= 1,
+      s"checkpoint interval must be >= 1: $n"))
+    require(spec.carryForward || spec.checkpointEvery.isEmpty,
+      "a delta manifest carries the head forward — checkpointEvery " +
+        "needs carryForward")
+    spec.layout match {
+      case Partitioned(pc) =>
+        require(pc.nonEmpty && pc.distinct == pc,
+          s"partition columns must be non-empty and distinct: $pc")
+        pc.foreach(c => require(schema.fieldNames.contains(c),
+          s"partition column $c not in ${schema.fieldNames.mkString(", ")}"))
+        // Stats on a partition column refuse — its per-file "range" is
+        // the leaf value the parts tier already serves exactly.
+        (spec.stats ++ spec.blooms).foreach(c => require(!pc.contains(c),
+          s"stats/bloom column $c is a partition column — the parts " +
+            "sidecar already serves it exactly; declare sidecars on " +
+            "data columns"))
+      case Flat =>
+    }
+    Seq("stats" -> spec.stats, "bloom" -> spec.blooms).foreach {
+      case (what, cols) if cols.nonEmpty =>
+        require(cols.distinct == cols,
+          s"$what columns must be non-empty and distinct: $cols")
+        requireUntaggedNames(cols, what)
+        cols.foreach(c => sidecarKind(c, schema(c).dataType,
+          bloom = what == "bloom"))
+      case _ =>
+    }
+  }
+
+  /** The constraint gate of a checked commit, over its staged files. */
+  private def gate(spark: org.apache.spark.sql.SparkSession, path: String,
+                   dir: org.apache.hadoop.fs.Path, c: Constraints): Unit = {
+    val bad = QualityOps.check(Tables.parquet(spark, dir.toString),
+        c.keyCol, c.checks)
+      .filter(col("n_violations") > 0L)
+      .collect() // bounded: at most one row per declared constraint
+    if (bad.nonEmpty) throw new IllegalArgumentException(
+      s"commit to $path refused — constraint violations: " +
+        bad.map(r => s"${r.getAs[String]("check_name")}: " +
+          s"${r.getAs[Long]("n_violations")} rows " +
+          s"(sample key ${r.getAs[Long]("sample_key")})")
+          .mkString("; "))
+  }
+
+  /** The OCC manifest-attempt loop — the publish step of every commit
+    * and metadata verb: each attempt re-reads the advanced head,
+    * allocates the next version, rebuilds its manifest lines via
+    * `linesFor(head, v)` (so a racing winner's lines are INCLUDED — no
+    * lost update by construction), and attempts the manifest create.
+    * Only the version-race failures retry — the vacancy require
+    * (message-pinned) and the filesystem's own create-exists refusal;
+    * anything else (bad columns, IO errors) surfaces immediately. A
+    * single attempt surfaces the conflict itself; exhausting more
+    * attempts fails loudly with the conflict as cause.
     */
   private def occRetryLoop(fs: org.apache.hadoop.fs.FileSystem,
                            root: org.apache.hadoop.fs.Path,
                            path: String, what: String, maxTries: Int,
                            beforeAttempt: Int => Unit)
-                          (linesFor: Int => Seq[String]): Int = {
+                          (linesFor: (Int, Int) => Seq[String]): Int = {
     require(maxTries >= 1, s"maxTries must be >= 1: $maxTries")
     var attempt = 1
     while (true) {
       val head = latestVersion(fs, root)
       val v = math.max(head, latestStaged(fs, root)) + 1
-      val lines = linesFor(head)
+      val lines = linesFor(head, v)
       beforeAttempt(attempt)
-      def lost(e: Throwable): Unit = {
+      def lost(e: Exception): Unit = {
+        if (maxTries == 1) throw e
         if (attempt >= maxTries) throw new IllegalStateException(
-          s"commit of $what at $path lost $maxTries version " +
-            "races — concurrent-writer pressure exceeds the retry " +
-            "budget", e)
+          s"$what at $path lost $maxTries version races — " +
+            "concurrent-writer pressure exceeds the retry budget", e)
         attempt += 1
       }
       try {
@@ -423,74 +547,6 @@ object SinkOps {
       }
     }
     throw new IllegalStateException("unreachable")
-  }
-
-  /** [[commitVersion]] gated by a DECLARATIVE CONSTRAINT SUITE (the
-    * Delta `ALTER TABLE ADD CONSTRAINT CHECK` / Deequ publish-gate
-    * shape), STAGE-THEN-CHECK: the batch is written ONCE to a
-    * commit-unique data dir, the STAGED FILES (not the input plan) are
-    * checked against [[QualityOps.check]]'s expectations, and only a
-    * clean staging publishes a manifest — so the rows checked are
-    * byte-for-byte the rows committed even when `df` is
-    * non-deterministic or reads a mutating source (a re-evaluation
-    * gate would check one sample and land another). A violating batch
-    * refuses loudly with the full violation report (constraint, count,
-    * sample key), deletes its staging, and leaves the table
-    * byte-untouched (no manifest, no head move), so a bad upstream
-    * drop can never poison the snapshot lineage. Cost is one write +
-    * one read-back pass over the batch (row-local constraints fuse
-    * into ONE aggregate; uniqueness/FK each add a keyed pass) —
-    * O(batch), never O(table); the report is one bounded row per
-    * declared constraint. Returns the new version.
-    */
-  def commitVersionChecked(df: DataFrame, path: String, keyCol: String,
-                           constraints: Seq[QualityOps.Constraint],
-                           carryForward: Boolean = true,
-                           statsCols: Seq[String] = Nil): Int = {
-    require(constraints.nonEmpty,
-      "no constraints declared — use commitVersion for ungated appends")
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val dataDir =
-      s"data/c${java.util.UUID.randomUUID.toString.replace("-", "").take(12)}"
-    val dataP = new org.apache.hadoop.fs.Path(root, dataDir)
-    df.write.mode(SaveMode.Overwrite).parquet(dataP.toString)
-    val staged = Tables.parquet(spark, dataP.toString)
-    val bad = QualityOps.check(staged, keyCol, constraints)
-      .filter(col("n_violations") > 0L)
-      .collect() // bounded: at most one row per declared constraint
-    if (bad.nonEmpty) {
-      fs.delete(dataP, true)
-      throw new IllegalArgumentException(
-        s"commit to $path refused — constraint violations: " +
-          bad.map(r => s"${r.getAs[String]("check_name")}: " +
-            s"${r.getAs[Long]("n_violations")} rows " +
-            s"(sample key ${r.getAs[Long]("sample_key")})")
-            .mkString("; "))
-    }
-    // Publish failures (stats write error, version race) must not
-    // orphan the commit-unique staging on disk with no retry path
-    // (ADVICE r14): the data is a pure function of `df`, so cleanup
-    // then rethrow loses nothing — the caller re-runs or switches to
-    // commitVersionRetrying.
-    try {
-      if (statsCols.nonEmpty) writeDirStats(spark, fs, root, dataDir,
-        statsCols)
-      val head = latestVersion(fs, root)
-      val v = math.max(head, latestStaged(fs, root)) + 1
-      requireVacant(fs, root, v)
-      val prev = if (head == 0 || !carryForward) Nil
-        else manifestDirs(fs, root, head)
-      writeManifestLines(fs, root, v, prev :+ dataDir)
-      v
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        fs.delete(dataP, true)
-        if (statsCols.nonEmpty)
-          fs.delete(sidecarFile(root, dataDir, "stats"), false)
-        throw e
-    }
   }
 
   /** Per-file min/max of the declared columns for one immutable data
@@ -625,32 +681,69 @@ object SinkOps {
     case _ => col(c).cast("long")
   }
 
+  /** The header kind of a stats sidecar column of type `dt` (with
+    * `bloom`, of a bloom column: strings hash, everything else
+    * long-casts). Nested and binary columns refuse — such a sidecar
+    * could never prune.
+    */
+  private def sidecarKind(c: String,
+                          dt: org.apache.spark.sql.types.DataType,
+                          bloom: Boolean): String = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case StringType => StatKindStr
+      case TimestampType | TimestampNTZType if !bloom => StatKindTsUs
+      case DateType if !bloom => StatKindDay
+      case _: ArrayType | _: MapType | _: StructType | BinaryType =>
+        throw new IllegalArgumentException(
+          if (bloom) s"bloom column $c has type ${dt.sql} — " +
+            "point-lookup blooms need a long-castable or string column"
+          else s"stats column $c has type ${dt.sql} — zone maps need a " +
+            "long-castable, string, timestamp, or date column (a " +
+            "nested/binary sidecar could never prune)")
+      case _ => ""
+    }
+  }
+
+  /** A file URI's path relative to data dir `dirP`. For a flat dir
+    * that is exactly the file name; for a hive-partitioned dir it
+    * carries the leaf fragments (`date=2024-01-01/part-….parquet`),
+    * which is what lets the composed partition × zone-map / bloom
+    * reader key per-file sidecar lines INSIDE kept partitions.
+    */
+  private def relFile(fs: org.apache.hadoop.fs.FileSystem,
+                      dirP: org.apache.hadoop.fs.Path, uri: String): String = {
+    val qdir = fs.makeQualified(dirP)
+    val segs = scala.collection.mutable.ListBuffer.empty[String]
+    var cur = fs.makeQualified(
+      new org.apache.hadoop.fs.Path(new java.net.URI(uri)))
+    while (cur != null && cur != qdir) {
+      segs.prepend(cur.getName); cur = cur.getParent
+    }
+    require(cur != null, s"sidecar file $uri is not under $qdir")
+    segs.mkString("/")
+  }
+
+  /** Write `lines` as one UTF-8 text file (sidecars, markers,
+    * manifests).
+    */
+  private def writeLines(fs: org.apache.hadoop.fs.FileSystem,
+                         f: org.apache.hadoop.fs.Path, lines: Seq[String],
+                         overwrite: Boolean = true): Unit = {
+    val out = fs.create(f, overwrite)
+    try out.write(lines.mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+  }
+
   private def writeDirStats(spark: org.apache.spark.sql.SparkSession,
                             fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path,
                             dataDir: String, cols: Seq[String]): Unit = {
-    require(cols.nonEmpty && cols.distinct == cols,
-      s"stats columns must be non-empty and distinct: $cols")
-    requireUntaggedNames(cols, "stats")
     val dirP = new org.apache.hadoop.fs.Path(root, dataDir)
     val df = Tables.parquet(spark, dirP.toString)
-    val kinds = cols.map { c =>
-      df.schema(c).dataType match {
-        case org.apache.spark.sql.types.StringType => StatKindStr
-        case org.apache.spark.sql.types.TimestampType |
-             org.apache.spark.sql.types.TimestampNTZType => StatKindTsUs
-        case org.apache.spark.sql.types.DateType => StatKindDay
-        case _: org.apache.spark.sql.types.ArrayType |
-             _: org.apache.spark.sql.types.MapType |
-             _: org.apache.spark.sql.types.StructType |
-             org.apache.spark.sql.types.BinaryType =>
-          throw new IllegalArgumentException(
-            s"stats column $c has type ${df.schema(c).dataType.sql} — " +
-              "zone maps need a long-castable, string, timestamp, or " +
-              "date column (a nested/binary sidecar could never prune)")
-        case _ => ""
-      }
-    }
+    val kinds = cols.map(c =>
+      sidecarKind(c, df.schema(c).dataType, bloom = false))
     val aggs = cols.zip(kinds).flatMap { case (c, k) =>
       if (k == StatKindStr)
         Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"))
@@ -661,28 +754,11 @@ object SinkOps {
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    // File field: the path RELATIVE to the data dir. For a flat dir
-    // that is exactly the file name (pre-r16 sidecars byte-identical);
-    // for a hive-partitioned dir it carries the leaf fragments
-    // (`date=2024-01-01/part-….parquet`), which is what lets the
-    // composed partition × zone-map reader key per-file stats INSIDE
-    // kept partitions (r16 — the Delta stats-under-partitioning shape).
-    val qdir = fs.makeQualified(dirP)
-    def relName(uri: String): String = {
-      val segs = scala.collection.mutable.ListBuffer.empty[String]
-      var cur = fs.makeQualified(
-        new org.apache.hadoop.fs.Path(new java.net.URI(uri)))
-      while (cur != null && cur != qdir) {
-        segs.prepend(cur.getName); cur = cur.getParent
-      }
-      require(cur != null, s"stats file $uri is not under $qdir")
-      segs.mkString("/")
-    }
     val header = cols.zip(kinds)
       .map { case (c, k) => if (k.isEmpty) c else s"$c#$k" }
       .mkString("\t")
     val lines = header +: rows.map { r =>
-      val name = relName(r.getString(0))
+      val name = relFile(fs, dirP, r.getString(0))
       val mm = cols.indices.flatMap { i =>
         if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) Seq("", "")
         else if (kinds(i) == StatKindStr) Seq(
@@ -695,12 +771,7 @@ object SinkOps {
       (name +: mm :+ r.getLong(1 + 2 * cols.length).toString)
         .mkString("\t")
     }.sorted
-    val sf = new org.apache.hadoop.fs.Path(root,
-      s"stats/${dataDir.stripPrefix("data/")}.txt")
-    val out = fs.create(sf, true)
-    try out.write(lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeLines(fs, sidecarFile(root, dataDir, "stats"), lines)
   }
 
   /** Parsed stats sidecar of one data dir: the declared columns (with
@@ -745,7 +816,7 @@ object SinkOps {
       p.getName + ".txt")
   }
 
-  /** The non-empty lines of a sidecar text file. */
+  /** The non-empty lines of a sidecar, manifest or marker file. */
   private def sidecarLines(fs: org.apache.hadoop.fs.FileSystem,
                            f: org.apache.hadoop.fs.Path): List[String] = {
     val in = fs.open(f)
@@ -798,342 +869,171 @@ object SinkOps {
     }
   }
 
-  /** [[commitVersion]] writing a DELTA MANIFEST — only `base:<head>`
-    * plus the new data dir, with a FULL (checkpoint) manifest every
-    * `checkpointEvery` commits: manifest metadata drops from
-    * O(versions · dirs) to O(versions + dirs) while every reader
-    * resolves the base chain transparently (resolution cost bounded by
-    * the checkpoint interval). The shape a per-batch streaming sink
-    * needs at 1 M commits — the Delta checkpoint-parquet role.
-    * Carry-forward semantics only (a delta IS a carry-forward);
-    * readers, time travel, changefeeds, VACUUM (which re-checkpoints
-    * survivors whose base falls below the horizon) all compose,
-    * spec-pinned delta-chain ≡ full-chain. Returns the new version.
-    */
-  def commitVersionDelta(df: DataFrame, path: String,
-                         checkpointEvery: Int = 10,
-                         statsCols: Seq[String] = Nil): Int = {
-    require(checkpointEvery >= 1,
-      s"checkpoint interval must be >= 1: $checkpointEvery")
-    val spark = df.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val head = latestVersion(fs, root)
-    val v = math.max(head, latestStaged(fs, root)) + 1
-    requireVacant(fs, root, v)
-    val dataDir = s"data/v$v"
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-    if (statsCols.nonEmpty) writeDirStats(spark, fs, root, dataDir,
-      statsCols)
-    val lines =
-      if (head == 0 || v % checkpointEvery == 0)
-        (if (head == 0) Nil else manifestDirs(fs, root, head)) :+ dataDir
-      else Seq(s"$BasePrefix$head", dataDir)
-    writeManifestLines(fs, root, v, lines)
-    v
-  }
-
   /** Resolved manifest line list of a committed version (delta base
     * chains expanded) — the transaction-log view manifest-tailing
     * consumers seed their seen-sets from.
     */
   def manifestLines(spark: org.apache.spark.sql.SparkSession,
                     path: String, v: Int): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    manifestDirs(root.getFileSystem(spark.sessionState.newHadoopConf()),
-      root, v)
+    val (root, fs) = tableAt(spark, path)
+    manifestDirs(fs, root, v)
   }
 
-  /** Compact the latest snapshot into ONE data directory committed as a
-    * new version (the OPTIMIZE half of the versioned-table lifecycle:
-    * a long-running append stream accretes day-sized dirs; compaction
-    * rewrites the current state once and the new manifest lists a
-    * single dir — planning returns to O(1) dirs, and any accumulated
-    * deletion vectors are RESOLVED AND PURGED: the rewrite reads the
-    * anti-joined state, so the new manifest carries no delete lines —
-    * the read-amplification payback point of merge-on-read). Readers
-    * pinned to
-    * ANY earlier version are untouched: old data dirs and manifests are
-    * immutable, the rewrite only adds. Returns the compacted version.
-    */
-  def compactVersions(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Int =
-    compactVersions(spark, path, None)
+  /** How OPTIMIZE rewrites the head snapshot ([[compactVersions]]). */
+  sealed trait Compaction extends Product with Serializable
 
-  /** [[compactVersions]] regenerating MANIFEST FILE STATISTICS for the
-    * rewritten state: compaction is the natural re-clustering point,
-    * so with `statsCol` declared the compacted dir is range-clustered
-    * on it and fresh zone maps are written — a table whose head had
-    * accumulated DV commits (un-skippable, [[readVersionWhere]]
-    * refuses them) returns to being both O(1)-dir AND file-skippable
-    * in the one rewrite.
+  object Compaction {
+    /** Rewrite the whole snapshot into ONE data dir: planning returns
+      * to O(1) dirs and accumulated deletion vectors are RESOLVED AND
+      * PURGED (the read-amplification payback point of merge-on-read).
+      * A hive-partitioned head compacts back into its partition layout
+      * (flat and mixed-in flat dirs fold into it), one file per leaf.
+      * `clusterBy` range-clusters a flat rewrite on a column and
+      * zone-maps it, so a table whose head accreted DV commits returns
+      * to file-skippable in the same rewrite.
+      */
+    final case class Full(clusterBy: Option[String] = None)
+        extends Compaction
+
+    /** OPTIMIZE ZORDER over k ≥ 2 columns: the rewrite interleaves the
+      * columns' bits ([[graft.ops.SortOps.zorderValueK]]) so rows close
+      * in ANY subset of the dimensions share files, and zone-maps every
+      * dimension — a k-D box predicate then prunes on the intersection
+      * of k tight per-file ranges, which no single-column clustering
+      * gives. Values fold into `bits` bits for the LAYOUT key only
+      * (k·bits ≤ 62, checked loudly); `targetFiles` sizes the rewrite
+      * (default: the session's parallelism). Refuses a partitioned
+      * head (it would flatten the layout). Full-compaction semantics
+      * otherwise.
+      */
+    final case class ZOrder(cols: Seq[String], bits: Int = 14,
+                            targetFiles: Option[Int] = None)
+        extends Compaction
+
+    /** INCREMENTAL bin-packing: rewrite ONLY the head's data dirs below
+      * `smallBytes` into one packed dir (`clusterBy` clusters and
+      * zone-maps it); larger dirs carry over untouched with their
+      * sidecars — O(small tail) bytes per maintenance cycle instead of
+      * O(table). DV-aware: only the epoch after the LAST op line
+      * (delete sidecar or column rename) packs, since repacking dirs a
+      * sidecar scopes would change which deletes apply; small dirs
+      * behind one refuse, as does a hive-partitioned dir (a flat pack
+      * would disarm its pruning) and a pack with nothing below the
+      * threshold (a mis-sized threshold, not a success). The tail reads
+      * with mergeSchema, so schema-evolved commits pack under the union
+      * schema.
+      */
+    final case class SmallDirs(smallBytes: Long,
+                               clusterBy: Option[String] = None)
+        extends Compaction
+  }
+
+  /** OPTIMIZE — rewrite the head snapshot as a new version, laid out
+    * by `how` (the maintenance half of the versioned-table lifecycle).
+    * Readers pinned to ANY earlier version are untouched: old data dirs
+    * and manifests are immutable, the rewrite only adds. `retries` > 1
+    * lands through version races (a nightly OPTIMIZE racing a live
+    * merge stream): the payload derives from the snapshot, so each
+    * attempt RE-RESOLVES the advanced head and re-packs — the winner's
+    * rows are in the next pack by construction — and a losing attempt
+    * removes its stale pack. `beforeAttempt` is the [[CommitSpec]]
+    * test seam. Returns the new version.
     */
   def compactVersions(spark: org.apache.spark.sql.SparkSession,
-                      path: String, statsCol: Option[String]): Int = {
-    val resolved = readVersion(spark, path)
-    // A table with hive-partitioned commits compacts BACK INTO its
-    // partition layout (and refreshes the parts sidecar) — OPTIMIZE
-    // must never silently disarm the coarsest skip tier. Flat and
-    // mixed-in flat dirs fold into the layout too (compaction is how
-    // a mixed table converges to fully-partitioned).
-    headPartitionCols(spark, path) match {
-      case Some(pc) =>
-        require(statsCol.isEmpty,
-          s"table at $path is hive-partitioned by " +
-            s"${pc.mkString("/")} — partitioned dirs are not " +
-            "zone-map servable, so compacting them with statsCol " +
-            "would record unreachable sidecars; compact without " +
-            "statsCol")
-        // File sizing: cluster rows to their partition before the
-        // write so each hive leaf lands ONE file instead of one per
-        // task (32 tasks x k partitions of small files is exactly
-        // the small-file debt OPTIMIZE exists to pay off). Arrival
-        // commits keep their task-parallel layout; compaction is
-        // the right-sizing point.
-        commitVersionPartitionedCols(
-          resolved.repartition(pc.map(col): _*), path, pc,
-          carryForward = false)
-      case None =>
-        val clustered = statsCol.fold(resolved)(c =>
-          resolved.repartitionByRange(col(c)))
-        commitVersion(clustered, path, carryForward = false, statsCol)
+                      path: String,
+                      how: Compaction = Compaction.Full(),
+                      retries: Int = 1,
+                      beforeAttempt: Int => Unit = _ => ()): Int = {
+    how match {
+      case Compaction.ZOrder(zcols, _, _) =>
+        require(zcols.size >= 2 && zcols.distinct == zcols,
+          s"OPTIMIZE ZORDER needs >= 2 distinct columns: $zcols")
+      case _ =>
     }
-  }
-
-  /** [[compactVersions]] with the BOUNDED OCC RETRY — the nightly
-    * OPTIMIZE that loses a race to a live merge/append stream lands
-    * on retry instead of aborting. Unlike the metadata verbs, a
-    * compaction's PAYLOAD derives from the snapshot, so a lost race
-    * invalidates the packed data itself: each attempt RE-RESOLVES the
-    * advanced head and re-packs (O(snapshot) per attempt, bounded by
-    * `maxTries`) — the winner's rows are in the next pack by
-    * construction, never silently dropped. The pack lands under a
-    * COMMIT-UNIQUE dir (never `data/v<N>` — a racing loser's
-    * Overwrite would clobber it) and a losing attempt deletes its
-    * stale pack + sidecars before retrying. Hive-partitioned tables
-    * refuse (their OPTIMIZE converges the partition layout — run
-    * [[compactVersions]] in a maintenance window).
-    */
-  def compactVersionsRetrying(spark: org.apache.spark.sql.SparkSession,
-                              path: String,
-                              statsCol: Option[String] = None,
-                              maxTries: Int = 3,
-                              beforeAttempt: Int => Unit = _ => ())
-      : Int = {
-    require(maxTries >= 1, s"maxTries must be >= 1: $maxTries")
-    require(headPartitionCols(spark, path).isEmpty,
-      s"table at $path is hive-partitioned — the OCC-retrying " +
-        "OPTIMIZE packs flat snapshots only; use compactVersions")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    var attempt = 1
-    while (true) {
-      val head = latestVersion(fs, root)
+    val (root, fs) = tableAt(spark, path)
+    def cluster(df: DataFrame, c: Option[String]) =
+      c.fold(df)(c => df.repartitionByRange(col(c)))
+    commitPipeline(spark, path, "OPTIMIZE",
+        CommitSpec(retries = retries, beforeAttempt = beforeAttempt),
+        repack = true) { head =>
       require(head >= 1, s"no versions committed at $path")
+      val partCols = partitionColsAt(fs, root, head)
       // Pin the pack to the head this attempt allocated from: a racer
-      // landing after this read collides on the version number below
-      // and triggers the re-pack.
-      val resolved = readVersion(spark, path, Some(head))
-      val clustered = statsCol.fold(resolved)(c =>
-        resolved.repartitionByRange(col(c)))
-      val dataDir = s"data/c${java.util.UUID.randomUUID.toString
-        .replace("-", "").take(12)}"
-      clustered.write.mode(SaveMode.Overwrite)
-        .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-      statsCol.foreach(c =>
-        writeDirStats(spark, fs, root, dataDir, Seq(c)))
-      beforeAttempt(attempt)
-      val v = math.max(head, latestStaged(fs, root)) + 1
-      def lost(e: Throwable): Unit = {
-        // Stale pack: built from a superseded snapshot — remove it
-        // (plus its sidecars) so no orphan waits on the VACUUM grace.
-        fs.delete(new org.apache.hadoop.fs.Path(root, dataDir), true)
-        statsCol.foreach(_ => fs.delete(sidecarFile(root, dataDir,
-          "stats"), false))
-        if (attempt >= maxTries) throw new IllegalStateException(
-          s"OPTIMIZE of $path lost $maxTries version races — " +
-            "concurrent-writer pressure exceeds the retry budget", e)
-        attempt += 1
-      }
-      try {
-        writeManifestLines(fs, root, v, Seq(dataDir))
-        return v
-      } catch {
-        case e: IllegalArgumentException
-            if e.getMessage != null &&
-              e.getMessage.contains("commit conflict") => lost(e)
-        case e: org.apache.hadoop.fs.FileAlreadyExistsException =>
-          lost(e)
+      // landing after this read collides on the version number and
+      // triggers the re-pack.
+      lazy val snapshot = readVersion(spark, path, Some(head))
+      val replace = CommitSpec(carryForward = false)
+      how match {
+        case Compaction.Full(clusterBy) => partCols match {
+          case Some(pc) =>
+            require(clusterBy.isEmpty,
+              s"table at $path is hive-partitioned by " +
+                s"${pc.mkString("/")} — partitioned dirs are not " +
+                "zone-map servable, so compacting them with statsCol " +
+                "would record unreachable sidecars; compact without " +
+                "statsCol")
+            // Cluster rows to their partition so each hive leaf lands
+            // ONE file instead of one per task.
+            Batch(replace.copy(layout = Partitioned(pc)),
+              Some(snapshot.repartition(pc.map(col): _*)))
+          case None =>
+            Batch(replace.copy(stats = clusterBy.toSeq),
+              Some(cluster(snapshot, clusterBy)))
+        }
+        case Compaction.ZOrder(zcols, bits, targetFiles) =>
+          require(partCols.isEmpty,
+            s"table at $path is hive-partitioned — ZORDER would flatten " +
+              "the partition layout and disarm its pruning; use " +
+              "compactVersions (preserves the layout)")
+          val zd = snapshot.withColumn("_z", graft.ops.SortOps.zorderValueK(
+            zcols.map(c => pmod(col(c).cast("long"), lit(1L << bits))),
+            bits))
+          val parted = targetFiles.fold(zd.repartitionByRange(col("_z")))(
+            n => zd.repartitionByRange(n, col("_z")))
+          Batch(replace.copy(stats = zcols),
+            Some(parted.sortWithinPartitions("_z").drop("_z")))
+        case Compaction.SmallDirs(smallBytes, clusterBy) =>
+          val lines = manifestDirs(fs, root, head)
+          // Everything up to and including the last op line is frozen
+          // (its dirs' fold positions are load-bearing); a packed
+          // post-rename dir already carries the new names.
+          val (frozen, tailLines) = lines.splitAt(
+            lines.lastIndexWhere(isOpLine) + 1)
+          // A partitioned dir cannot join the flat multi-root pack read.
+          tailLines.foreach(d => require(readDirParts(fs, root, d).isEmpty,
+            s"dir $d is hive-partitioned — small-dir packing serves flat " +
+              "dirs only; use a Full compaction (which preserves the " +
+              "partition layout) for maintenance"))
+          val (small, big) = tailLines.partition { d =>
+            fs.getContentSummary(new org.apache.hadoop.fs.Path(root, d))
+              .getLength < smallBytes
+          }
+          require(small.nonEmpty,
+            s"no data dir under $smallBytes bytes in the packable " +
+              s"post-merge epoch at $path — nothing to pack (small dirs " +
+              "behind a delete sidecar need compactVersions)")
+          val tail = spark.read.option("mergeSchema", "true")
+            .parquet(small.map(d =>
+              new org.apache.hadoop.fs.Path(root, d).toString): _*)
+          Batch(replace.copy(stats = clusterBy.toSeq),
+            Some(cluster(tail, clusterBy)), prefix = Some(_ => frozen ++ big))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
-  /** The head snapshot's hive-partition columns (nesting order):
-    * Some(cols) when ANY head data dir carries a parts sidecar (all
-    * partitioned dirs must agree — loud otherwise), None on a
-    * fully-flat head.
+  /** Version v's hive-partition columns (nesting order): Some(cols)
+    * when ANY of its data dirs carries a parts sidecar, None on a
+    * fully-flat snapshot. Partition-SPEC EVOLUTION: a table mid-move
+    * from `date` to `date/tenant` mixes specs in one snapshot — the
+    * CURRENT spec is the LAST partitioned dir's (manifest order is
+    * commit order), so layout-following writers (MERGE, OPTIMIZE) land
+    * the NEW layout and OPTIMIZE converges the whole table to it.
     */
-  private def headPartitionCols(spark: org.apache.spark.sql.SparkSession,
-                                path: String): Option[Seq[String]] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val head = latestVersion(fs, root)
-    require(head >= 1, s"no versions committed at $path")
-    val cols = manifestDirs(fs, root, head).filterNot(isOpLine)
-      .flatMap(d => readDirParts(fs, root, d).map(_.cols))
-    // Partition-SPEC EVOLUTION (round 14): a table mid-move from
-    // `date` to `date/tenant` mixes specs in one snapshot — the
-    // CURRENT spec is the LAST partitioned dir's (manifest order is
-    // commit order), so layout-following writers (MERGE, OPTIMIZE)
-    // land the NEW layout and OPTIMIZE converges the whole table to
-    // it. Reads prune each dir by its own spec (planVersionWhere).
-    cols.lastOption
-  }
-
-  /** OPTIMIZE ZORDER — full compaction under a 2-D Morton layout with
-    * BOTH dimensions zone-mapped: the rewrite interleaves the two
-    * columns' bits ([[graft.ops.SortOps.zorderValue]]) so rows close
-    * in EITHER dimension land in the same files, then declares
-    * multi-column stats on both — after which a 2-D box predicate
-    * ([[readVersionWhere]]) prunes files on the INTERSECTION of
-    * two tight per-file ranges, which neither single-column clustering
-    * can give (clustering on A makes B's per-file ranges span the
-    * world). The Delta OPTIMIZE ZORDER production op over this table
-    * layer; like [[compactVersions]] it resolves and purges any
-    * accumulated deletion vectors and returns planning to O(1) dirs.
-    * Values are folded into `bits` bits for the LAYOUT key only
-    * (locality degrades gracefully past 2^bits; stored data and stats
-    * are untouched). Returns the new version.
-    */
-  def compactVersionsZOrder(spark: org.apache.spark.sql.SparkSession,
-                            path: String, colA: String, colB: String,
-                            bits: Int = 20): Int = {
-    require(headPartitionCols(spark, path).isEmpty,
-      s"table at $path is hive-partitioned — ZORDER would flatten " +
-        "the partition layout and disarm its pruning; use " +
-        "compactVersions (preserves the layout)")
-    val resolved = readVersion(spark, path)
-    val z = graft.ops.SortOps.zorderValue(
-      pmod(col(colA).cast("long"), lit(1L << bits)),
-      pmod(col(colB).cast("long"), lit(1L << bits)), bits).as("_z")
-    val laid = resolved.withColumn("_z", z)
-      .repartitionByRange(col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-    commitVersionStats(laid, path, carryForward = false,
-      Seq(colA, colB))
-  }
-
-  /** OPTIMIZE ZORDER over K DECLARED COLUMNS — the
-    * [[compactVersionsZOrder]] generalization: the rewrite interleaves
-    * all k columns' bits ([[graft.ops.SortOps.zorderValueK]] — the 2-D
-    * Morton layout is the k = 2 case of the same bit budget, split k
-    * ways) and declares multi-column stats on every dimension, so a
-    * k-D box predicate ([[readVersionWhere]]) prunes files on the
-    * intersection of k tight per-file ranges — strictly tighter than
-    * any lower-dimensional projection's prune when the predicate
-    * constrains all k (spec-pinned for k = 3). Bit budget: k·bits ≤ 62
-    * (checked loudly); values fold into `bits` bits for the LAYOUT key
-    * only. DVs resolved and purged, planning returns to O(1) dirs,
-    * like every full compaction. Returns the new version.
-    */
-  def compactVersionsZOrderK(spark: org.apache.spark.sql.SparkSession,
-                             path: String, zcols: Seq[String],
-                             bits: Int = 14,
-                             targetFiles: Option[Int] = None): Int = {
-    require(zcols.size >= 2 && zcols.distinct == zcols,
-      s"OPTIMIZE ZORDER needs >= 2 distinct columns: $zcols")
-    require(headPartitionCols(spark, path).isEmpty,
-      s"table at $path is hive-partitioned — ZORDER would flatten " +
-        "the partition layout and disarm its pruning; use " +
-        "compactVersions (preserves the layout)")
-    val resolved = readVersion(spark, path)
-    val z = graft.ops.SortOps.zorderValueK(
-      zcols.map(c => pmod(col(c).cast("long"), lit(1L << bits))),
-      bits).as("_z")
-    val zd = resolved.withColumn("_z", z)
-    // targetFiles sizes the rewrite (total bytes / desired file size,
-    // the Delta OPTIMIZE file-size knob); default leaves the range
-    // exchange at the session's parallelism.
-    val parted = targetFiles.fold(zd.repartitionByRange(col("_z")))(
-      n => zd.repartitionByRange(n, col("_z")))
-    val laid = parted.sortWithinPartitions("_z").drop("_z")
-    commitVersionStats(laid, path, carryForward = false, zcols)
-  }
-
-  /** INCREMENTAL OPTIMIZE — bin-packing compaction: rewrite ONLY the
-    * head snapshot's data dirs smaller than `smallBytes` into one
-    * packed dir; dirs at or above the threshold carry into the new
-    * manifest untouched — their files AND their per-dir zone-map stats
-    * sidecars survive byte-identical (stats are keyed by dir name, so
-    * they follow the dir across manifests for free). This is the
-    * OPTIMIZE production tables actually run: a streaming head accretes
-    * thousands of micro-batch-sized dirs next to a few historical
-    * monoliths, and full compaction ([[compactVersions]]) would rewrite
-    * the monoliths every time — O(table) churn per maintenance cycle —
-    * where bin-packing rewrites O(small tail) bytes only. With
-    * `statsCol` declared the packed dir is range-clustered on it and
-    * gets fresh zone maps, so the whole head stays file-skippable.
-    * Refuses when nothing is below the threshold (a no-op OPTIMIZE is a
-    * mis-sized threshold, not a success). DV-aware (round 12): on a
-    * manifest carrying delete sidecars, packing scopes to the
-    * POST-MERGE EPOCH — the data dirs after the LAST delete line, which
-    * share an empty trailing-sidecar set, so repacking them cannot
-    * change which deletes apply under the ordered-fold contract (this
-    * is where a live CDC merge stream accretes its micro-batch dirs, so
-    * OPTIMIZE keeps working exactly when the table is hottest); dirs at
-    * or behind a sidecar are frozen in place. Small dirs stuck BEHIND a
-    * sidecar refuse loudly — packing across delete scopes needs
-    * [[compactVersions]], which resolves and purges. Readers pinned
-    * to any earlier version are untouched. Returns the new version.
-    */
-  def compactSmallDirs(spark: org.apache.spark.sql.SparkSession,
-                       path: String, smallBytes: Long,
-                       statsCol: Option[String] = None): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val head = latestVersion(fs, root)
-    require(head >= 1, s"no versions committed at $path")
-    val lines = manifestDirs(fs, root, head)
-    // Everything up to and including the last op line (delete sidecar
-    // or column rename) is frozen (its dirs' fold positions are
-    // load-bearing); the packable tail is the epoch no op scopes. A
-    // packed post-rename dir already carries the new names, so the
-    // rename folding before it no-ops — position-safe by construction.
-    val (frozen, tailLines) = lines.splitAt(
-      lines.lastIndexWhere(isOpLine) + 1)
-    // A hive-partitioned dir cannot join the flat multi-root pack read
-    // (Spark refuses mixed roots) and packing it flat would silently
-    // disarm its partition pruning — refuse and name the right tool.
-    tailLines.foreach(d => refusePartitionedDir(fs, root, d,
-      "small-dir packing"))
-    val (small, big) = tailLines.partition { d =>
-      fs.getContentSummary(new org.apache.hadoop.fs.Path(root, d))
-        .getLength < smallBytes
-    }
-    require(small.nonEmpty,
-      s"no data dir under $smallBytes bytes in the packable " +
-        s"post-merge epoch at $path — nothing to pack (small dirs " +
-        "behind a delete sidecar need compactVersions)")
-    val v = math.max(head, latestStaged(fs, root)) + 1
-    requireVacant(fs, root, v)
-    val dataDir = s"data/v$v"
-    // mergeSchema: the small tail may span schema-evolved commits —
-    // the packed rewrite must carry the UNION schema (a plain read
-    // would silently drop columns absent from the inferred file
-    // schema while untouched big dirs keep them).
-    val tail = spark.read.option("mergeSchema", "true")
-      .parquet(small.map(d =>
-        new org.apache.hadoop.fs.Path(root, d).toString): _*)
-    val packed = statsCol.fold(tail)(c => tail.repartitionByRange(col(c)))
-    packed.write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-    statsCol.foreach(c => writeDirStats(spark, fs, root, dataDir, Seq(c)))
-    writeManifestLines(fs, root, v, frozen ++ big :+ dataDir)
-    v
-  }
+  private def partitionColsAt(fs: org.apache.hadoop.fs.FileSystem,
+                              root: org.apache.hadoop.fs.Path,
+                              v: Int): Option[Seq[String]] =
+    manifestDirs(fs, root, v).filterNot(isOpLine)
+      .flatMap(d => readDirParts(fs, root, d).map(_.cols)).lastOption
 
   /** VACUUM — expire history older than `keep`: manifests below `keep`
     * are removed and every data directory referenced by NO surviving
@@ -1145,57 +1045,31 @@ object SinkOps {
     * reading a partial snapshot. Returns the number of data dirs
     * deleted.
     *
-    * IN-FLIGHT WRITERS (r15): round 14 made concurrent writers
-    * first-class (OCC retry, SQL RETRY, WAP), so VACUUM no longer
-    * assumes a quiet table. Two guards, mirroring Delta's treatment of
+    * RETENTION HORIZON (the production VACUUM safety valve): a version
+    * committed within the last `retainMillis` SURVIVES even when `keep`
+    * would expire it, so a reader pinned mid-scan to a recent snapshot
+    * cannot lose files to an aggressive sweep (Delta's
+    * `deletedFileRetentionDuration` role). The guard resolves against
+    * writer-stamped commit timestamps (monotone, VACUUM-invariant —
+    * never file mtimes), so the effective horizon is the FIRST version
+    * younger than the cutoff. retainMillis 0 is the eager
+    * (caller-knows-best) behavior.
+    *
+    * IN-FLIGHT WRITERS: two guards, mirroring Delta's treatment of
     * uncommitted files: (1) dirs named by a STAGED manifest
     * (`staging/` — a WAP batch between stage and publish) are always
     * live; (2) a dir referenced by NO manifest anywhere — committed,
     * expired, or staged — is an in-flight OCC writer's dir (between
     * its data write and manifest create) or debris, and is reclaimed
-    * only once its mtime is older than `retainMillis` (Delta's
-    * `deletedFileRetentionDuration` role for uncommitted files; the
-    * eager retainMillis=0 overload keeps caller-knows-best semantics
-    * and reclaims it immediately). Dirs referenced ONLY by manifests
-    * this sweep expires are deliberate history GC and are deleted
-    * regardless of age, exactly as before.
+    * only once its mtime is older than `retainMillis` (at least
+    * [[inFlightFloorMillis]]). Dirs referenced ONLY by manifests this
+    * sweep expires are deliberate history GC and are deleted
+    * regardless of age.
     */
   def expireVersions(spark: org.apache.spark.sql.SparkSession,
-                     path: String, keep: Int): Int =
-    expireVersions(spark, path, keep, 0L)
-
-  /** [[expireVersions]] with a RETENTION HORIZON (the production
-    * VACUUM safety valve): a version committed within the last
-    * `retainMillis` SURVIVES even when `keep` would expire it, so a
-    * reader pinned mid-scan to a recent snapshot cannot lose files to
-    * an aggressive maintenance sweep (Delta's
-    * `deletedFileRetentionDuration` role). The guard resolves against
-    * writer-stamped commit timestamps (monotone, VACUUM-invariant —
-    * never file mtimes), so the effective horizon is the FIRST version
-    * younger than the cutoff: everything from it up survives intact.
-    * retainMillis 0 is the eager (caller-knows-best) behavior.
-    */
-  def expireVersions(spark: org.apache.spark.sql.SparkSession,
-                     path: String, keep: Int, retainMillis: Long): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val latest = latestVersion(fs, root)
-    require(keep >= 1 && keep <= latest,
-      s"keep=$keep outside committed versions 1..$latest")
-    val keepRequested = keep
-    val keepEff =
-      if (retainMillis <= 0) keepRequested
-      else {
-        val cutoff = System.currentTimeMillis() - retainMillis
-        (1 until keepRequested).find { v =>
-          fs.exists(new org.apache.hadoop.fs.Path(root,
-            f"manifest/v$v%05d.txt")) &&
-            manifestTs(fs, root, v).getOrElse(0L) >= cutoff
-        }.fold(keepRequested)(math.min(keepRequested, _))
-      }
-    expireFrom(spark, root, fs, latest, keepEff,
-      math.max(retainMillis, 0L)).length
-  }
+                     path: String, keep: Int,
+                     retainMillis: Long = 0L): Int =
+    expireFrom(spark, path, keep, retainMillis).length
 
   /** VACUUM DRY RUN — what [[expireVersions]] WOULD reclaim, with
     * nothing touched (no dir deleted, no manifest expired, no
@@ -1207,25 +1081,8 @@ object SinkOps {
     */
   def vacuumDryRun(spark: org.apache.spark.sql.SparkSession,
                    path: String, keep: Int,
-                   retainMillis: Long = 0L): Seq[String] = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val latest = latestVersion(fs, root)
-    require(keep >= 1 && keep <= latest,
-      s"keep=$keep outside committed versions 1..$latest")
-    val keepEff =
-      if (retainMillis <= 0) keep
-      else {
-        val cutoff = System.currentTimeMillis() - retainMillis
-        (1 until keep).find { v =>
-          fs.exists(new org.apache.hadoop.fs.Path(root,
-            f"manifest/v$v%05d.txt")) &&
-            manifestTs(fs, root, v).getOrElse(0L) >= cutoff
-        }.fold(keep)(math.min(keep, _))
-      }
-    expireFrom(spark, root, fs, latest, keepEff,
-      math.max(retainMillis, 0L), execute = false)
-  }
+                   retainMillis: Long = 0L): Seq[String] =
+    expireFrom(spark, path, keep, retainMillis, execute = false)
 
   /** Minimum age (mtime) a NEVER-REFERENCED dir must reach before an
     * EAGER (retainMillis = 0) VACUUM reclaims it — the in-flight OCC
@@ -1237,19 +1094,31 @@ object SinkOps {
   @volatile private[graft] var inFlightFloorMillis: Long = 5 * 60 * 1000L
 
   private def expireFrom(spark: org.apache.spark.sql.SparkSession,
-                         root: org.apache.hadoop.fs.Path,
-                         fs: org.apache.hadoop.fs.FileSystem,
-                         latest: Int, keep: Int,
-                         graceMillis: Long = 0L,
+                         path: String, keepRequested: Int,
+                         retainMillis: Long,
                          execute: Boolean = true): Seq[String] = {
+    val (root, fs) = tableAt(spark, path)
+    val latest = latestVersion(fs, root)
+    require(keepRequested >= 1 && keepRequested <= latest,
+      s"keep=$keepRequested outside committed versions 1..$latest")
+    val graceMillis = math.max(retainMillis, 0L)
+    // The retention horizon: the first version younger than the cutoff
+    // survives with everything after it.
+    val keep =
+      if (retainMillis <= 0) keepRequested
+      else {
+        val cutoff = System.currentTimeMillis() - retainMillis
+        (1 until keepRequested).find { v =>
+          hasVersion(fs, root, v) &&
+            manifestTs(fs, root, v).getOrElse(0L) >= cutoff
+        }.fold(keepRequested)(math.min(keepRequested, _))
+      }
     // Version numbers present on disk in the surviving range: a commit
     // issued while a LATER number was staged leaves a numbering gap
     // when that stage rolls back (stage 3, commit 4, rollback 3 ⇒
     // manifests 1,2,4) — dense-range walks would fail loudly on the
     // hole a routine WAP cycle legitimately left.
-    val present = (keep to latest).filter(v =>
-      fs.exists(new org.apache.hadoop.fs.Path(root,
-        f"manifest/v$v%05d.txt")))
+    val present = (keep to latest).filter(hasVersion(fs, root, _))
     // Surviving DELTA manifests whose base chain reaches below the
     // horizon are RE-CHECKPOINTED (rewritten as their resolved full
     // list — same snapshot, different encoding) BEFORE the old
@@ -1289,14 +1158,9 @@ object SinkOps {
       if (!fs.exists(stagingRoot)) Set.empty[String]
       else fs.listStatus(stagingRoot).toSeq
         .filter(_.getPath.getName.matches("v\\d+\\.txt"))
-        .flatMap { st =>
-          val in = fs.open(st.getPath)
-          val raw = try scala.io.Source.fromInputStream(in, "UTF-8")
-            .getLines().filter(_.nonEmpty).toList
-          finally in.close()
-          pathLines(raw.filterNot(isTsLine)
-            .filterNot(_.startsWith(BasePrefix)))
-        }.toSet
+        .flatMap(st => pathLines(stagedManifest(fs, root,
+          st.getPath.getName.stripPrefix("v").stripSuffix(".txt").toInt)._2))
+        .toSet
     val live = pathLines(present.flatMap(v =>
       manifestDirs(fs, root, v))).toSet ++ stagedLive
     // Dirs referenced by ANY manifest on disk — including the ones
@@ -1305,8 +1169,7 @@ object SinkOps {
     // at all (guard 2: in-flight OCC writer or debris) and gets the
     // mtime grace before reclamation.
     val everReferenced = pathLines((1 to latest)
-      .filter(v => fs.exists(new org.apache.hadoop.fs.Path(root,
-        f"manifest/v$v%05d.txt")))
+      .filter(hasVersion(fs, root, _))
       .flatMap(v => manifestDirs(fs, root, v))).toSet ++ stagedLive
     // NEVER-REFERENCED dirs (an in-flight OCC writer between its data
     // write and manifest create, or genuine debris) get an age floor
@@ -1352,10 +1215,7 @@ object SinkOps {
           }
         }
       }
-      (1 until keep).foreach { v =>
-        fs.delete(new org.apache.hadoop.fs.Path(root,
-          f"manifest/v$v%05d.txt"), false); ()
-      }
+      (1 until keep).foreach(v => fs.delete(manifestFile(root, v), false))
     }
     dead
   }
@@ -1371,9 +1231,7 @@ object SinkOps {
     * [[commitVersion]]. Returns the staged version number.
     */
   def stageVersion(df: DataFrame, path: String): Int = {
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
+    val (root, fs) = tableAt(df.sparkSession, path)
     // Staging-aware allocation, as in commitVersion: two interleaved
     // stage/commit writers can never collide on a version number (and
     // so can never clobber each other's data dirs).
@@ -1381,8 +1239,7 @@ object SinkOps {
     val v = math.max(head, latestStaged(fs, root)) + 1
     requireVacant(fs, root, v)
     val dataDir = s"data/v$v"
-    df.write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
+    writeParquet(df, new org.apache.hadoop.fs.Path(root, dataDir).toString)
     // The staged manifest RECORDS THE HEAD IT WAS BUILT ON as a
     // `base:<head>` first line instead of materializing the resolved
     // carry-forward list: publish verifies the head still equals that
@@ -1398,33 +1255,35 @@ object SinkOps {
     require(!fs.exists(mf),
       s"stage conflict: staging manifest v$v already exists under " +
         s"$root — a concurrent writer took this version number")
-    val out = fs.create(mf, false)
-    try out.write(lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeLines(fs, mf, lines, overwrite = false)
     v
   }
 
   /** Audit-side read of a staged (unpublished) version. */
   def readStaged(spark: org.apache.spark.sql.SparkSession, path: String,
                  v: Int): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val mf = new org.apache.hadoop.fs.Path(root, f"staging/v$v%05d.txt")
-    require(fs.exists(mf), s"no staged version $v under $root")
-    val in = fs.open(mf)
-    val raw = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
+    val (root, fs) = tableAt(spark, path)
     // Staged manifests are base-referenced ([[stageVersion]]): expand
     // the recorded base's resolved lines, then the staged additions.
-    val lines = raw.filterNot(isTsLine) match {
+    val (base, added) = stagedManifest(fs, root, v)
+    resolveSnapshot(spark, root,
+      (if (base == 0) Nil else manifestDirs(fs, root, base)) ++ added,
+      mergeSchema = false)
+  }
+
+  /** A staged manifest's recorded base head (0 when staged on an empty
+    * table) and its added lines.
+    */
+  private def stagedManifest(fs: org.apache.hadoop.fs.FileSystem,
+                             root: org.apache.hadoop.fs.Path,
+                             v: Int): (Int, Seq[String]) = {
+    val mf = new org.apache.hadoop.fs.Path(root, f"staging/v$v%05d.txt")
+    require(fs.exists(mf), s"no staged version $v under $root")
+    sidecarLines(fs, mf).filterNot(isTsLine) match {
       case h :: tail if h.startsWith(BasePrefix) =>
-        manifestDirs(fs, root, h.stripPrefix(BasePrefix).trim.toInt) ++
-          tail
-      case body => body
+        (h.stripPrefix(BasePrefix).trim.toInt, tail)
+      case body => (0, body)
     }
-    resolveSnapshot(spark, root, lines, mergeSchema = false)
   }
 
   /** Publish a staged version: ONE manifest rename — readers see either
@@ -1443,27 +1302,17 @@ object SinkOps {
     */
   def publishStaged(spark: org.apache.spark.sql.SparkSession,
                     path: String, v: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val src = new org.apache.hadoop.fs.Path(root, f"staging/v$v%05d.txt")
-    require(fs.exists(src), s"no staged version $v under $root")
-    val in = fs.open(src)
-    val raw = try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
-    val base = raw.filterNot(isTsLine).headOption match {
-      case Some(h) if h.startsWith(BasePrefix) =>
-        h.stripPrefix(BasePrefix).trim.toInt
-      case _ => 0 // staged on an empty table
-    }
+    val (root, fs) = tableAt(spark, path)
+    val base = stagedManifest(fs, root, v)._1
     val head = latestVersion(fs, root)
     require(head == base,
       s"stale staged version $v: built on head $base but the table " +
         s"head is now $head — its snapshot omits the intervening " +
         "commits; rollbackStaged and re-stage on top of the new head")
     fs.mkdirs(new org.apache.hadoop.fs.Path(root, "manifest"))
-    require(fs.rename(src,
-        new org.apache.hadoop.fs.Path(root, f"manifest/v$v%05d.txt")),
+    require(fs.rename(
+        new org.apache.hadoop.fs.Path(root, f"staging/v$v%05d.txt"),
+        manifestFile(root, v)),
       s"publish rename failed for staged version $v")
   }
 
@@ -1472,8 +1321,7 @@ object SinkOps {
     */
   def rollbackStaged(spark: org.apache.spark.sql.SparkSession,
                      path: String, v: Int): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     fs.delete(new org.apache.hadoop.fs.Path(root, s"data/v$v"), true)
     fs.delete(new org.apache.hadoop.fs.Path(root,
       f"staging/v$v%05d.txt"), false)
@@ -1483,9 +1331,8 @@ object SinkOps {
   /** The table's latest committed version (0 when uninitialized). */
   def currentVersion(spark: org.apache.spark.sql.SparkSession,
                      path: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    latestVersion(root.getFileSystem(spark.sessionState.newHadoopConf()),
-      root)
+    val (root, fs) = tableAt(spark, path)
+    latestVersion(fs, root)
   }
 
   /** Read a pinned snapshot of a [[commitVersion]] table. `version`
@@ -1495,9 +1342,7 @@ object SinkOps {
   def readVersion(spark: org.apache.spark.sql.SparkSession, path: String,
                   version: Option[Int] = None,
                   mergeSchema: Boolean = false): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
+    val (root, fs) = tableAt(spark, path)
     val v = versionOr(fs, root, version)
     resolveSnapshot(spark, root, manifestDirs(fs, root, v), mergeSchema)
   }
@@ -1509,8 +1354,7 @@ object SinkOps {
     */
   def commitTimestamp(spark: org.apache.spark.sql.SparkSession,
                       path: String, v: Int): Long = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     manifestTs(fs, root, v).getOrElse(throw new IllegalArgumentException(
       s"version $v at $path carries no commit timestamp (pre-" +
         "timestamp manifest) — timestamp time travel needs ts-stamped " +
@@ -1541,8 +1385,7 @@ object SinkOps {
     */
   def versionAsOf(spark: org.apache.spark.sql.SparkSession,
                   path: String, tsMillis: Long): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val latest = latestVersion(fs, root)
     require(latest >= 1, s"no versions committed at $path")
     // Committed version numbers present on disk (staging rollbacks can
@@ -1587,10 +1430,9 @@ object SinkOps {
   def restoreVersion(spark: org.apache.spark.sql.SparkSession,
                      path: String, v: Int, maxTries: Int = 1,
                      beforeAttempt: Int => Unit = _ => ()): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     occRetryLoop(fs, root, path, s"restore v$v", maxTries,
-        beforeAttempt) { head =>
+        beforeAttempt) { (head, _) =>
       require(head >= 1, s"no versions committed at $path")
       require(v < head,
         s"restore target v$v is not BEFORE the head v$head — " +
@@ -1632,8 +1474,7 @@ object SinkOps {
   def cloneVersion(spark: org.apache.spark.sql.SparkSession,
                    srcPath: String, dstPath: String,
                    version: Option[Int] = None): Int = {
-    val srcRoot = new org.apache.hadoop.fs.Path(srcPath)
-    val fs = srcRoot.getFileSystem(spark.sessionState.newHadoopConf())
+    val (srcRoot, fs) = tableAt(spark, srcPath)
     val v = version.getOrElse {
       val latest = latestVersion(fs, srcRoot)
       require(latest >= 1, s"no versions committed at $srcPath")
@@ -1648,9 +1489,7 @@ object SinkOps {
       } else if (isSchemaLine(l)) l // no path to absolutize — verbatim
       else abs(l)
     }
-    val dstRoot = new org.apache.hadoop.fs.Path(dstPath)
-    val dstFs = dstRoot.getFileSystem(
-      spark.sessionState.newHadoopConf())
+    val (dstRoot, dstFs) = tableAt(spark, dstPath)
     require(latestVersion(dstFs, dstRoot) == 0 &&
         latestStaged(dstFs, dstRoot) == 0,
       s"clone target $dstPath is not an empty table path")
@@ -1685,15 +1524,14 @@ object SinkOps {
       n.nonEmpty && !n.contains(':') && !n.contains('\n'),
       s"column name '$n' cannot ride a manifest line (empty, ':' or " +
         "newline)"))
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     // OCC (r15): every attempt RE-VALIDATES against the advanced
     // head's schema inside the loop — a racing commit may itself have
     // renamed/dropped the column, and a retry that skipped
     // re-validation would land a rename of a column that no longer
     // exists. Same discipline for drop/widen/restore below.
     occRetryLoop(fs, root, path, s"rename $oldName->$newName",
-        maxTries, beforeAttempt) { head =>
+        maxTries, beforeAttempt) { (head, _) =>
       require(head >= 1, s"no versions committed at $path")
       val schema = readVersion(spark, path).schema.fieldNames
       require(schema.contains(oldName),
@@ -1724,10 +1562,9 @@ object SinkOps {
     require(colName.nonEmpty && !colName.contains(':') &&
         !colName.contains('\n'),
       s"column name '$colName' cannot ride a manifest line")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     occRetryLoop(fs, root, path, s"drop $colName", maxTries,
-        beforeAttempt) { head =>
+        beforeAttempt) { (head, _) =>
       require(head >= 1, s"no versions committed at $path")
       val schema = readVersion(spark, path).schema.fieldNames
       require(schema.contains(colName),
@@ -1766,14 +1603,13 @@ object SinkOps {
       s"column name '$colName' cannot ride a manifest line")
     val target = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
       .parseDataType(newType).catalogString
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     // OCC re-validation per attempt: the racing winner may have
     // widened (or dropped) the column already — the retry must
     // re-check the column's CURRENT type in the advanced head, not
     // replay a stale decision.
     occRetryLoop(fs, root, path, s"widen $colName", maxTries,
-        beforeAttempt) { head =>
+        beforeAttempt) { (head, _) =>
       require(head >= 1, s"no versions committed at $path")
       val schema = readVersion(spark, path).schema
       val field = schema.fields.find(_.name == colName).getOrElse(
@@ -2010,25 +1846,22 @@ object SinkOps {
     * anti-join ([[resolveSnapshot]]); pinned readers of earlier
     * versions still see the deleted rows (time travel untouched);
     * [[compactVersions]] rewrites the resolved state and PURGES the
-    * sidecars (the read-amplification payback point). Returns the new
-    * version.
+    * sidecars. With `retries` > 1 each attempt re-carries the advanced
+    * head's lines, so the delete scopes everything committed before it
+    * — a race winner's rows included (serialized semantics by
+    * construction). Returns the new version.
     */
-  def deleteVersionKeys(keys: DataFrame, path: String,
-                        keyCol: String): Int = {
-    val spark = keys.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val head = latestVersion(fs, root)
-    require(head >= 1, s"no versions committed at $path — nothing to delete")
-    val v = math.max(head, latestStaged(fs, root)) + 1
-    requireVacant(fs, root, v)
-    val delDir = s"deletes/v$v"
-    keys.select(keyCol).distinct().write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, delDir).toString)
-    writeManifestLines(fs, root, v,
-      manifestDirs(fs, root, head) :+ s"$DeletePrefix$delDir:$keyCol")
-    v
-  }
+  def deleteVersionKeys(keys: DataFrame, path: String, keyCol: String,
+                        retries: Int = 1,
+                        beforeAttempt: Int => Unit = _ => ()): Int =
+    commitPipeline(keys.sparkSession, path, "delete",
+        CommitSpec(retries = retries, beforeAttempt = beforeAttempt)) {
+      head =>
+        require(head >= 1,
+          s"no versions committed at $path — nothing to delete")
+        Batch(CommitSpec(), None,
+          Some((keys.select(keyCol).distinct(), keyCol)))
+    }
 
   /** MERGE (upsert) as ONE version commit — the delete+reinsert
     * encoding every DV-based lakehouse MERGE compiles to: the batch's
@@ -2039,234 +1872,67 @@ object SinkOps {
     * sidecar entry a no-op — pure insert). Write cost is
     * O(batch) — no matched-row scan, no file rewrite; read cost until
     * the next [[compactVersions]] is one broadcast anti-join.
+    * A merge targets an EXISTING table, so it follows the head's
+    * partition layout (the Delta table-property discipline): a CDC
+    * merge stream into a partitioned table lands partitioned batch
+    * dirs with counted parts sidecars, so partition pruning never
+    * erodes under churn. `spec` declares the merged dir's sidecars,
+    * retries and batch key (its marker lives under `merges/`); it
+    * takes no layout and always carries forward. With retries, the
+    * merge's sidecar scopes a race winner's rows too (last merge wins
+    * on overlapping keys, by the ordered-fold contract).
     * Changefeed view of a merge: [[readChanges]] yields the batch rows
     * (post-images), [[readDeletedKeys]] the touched keys (pre-image
     * keys; insert-vs-update attribution needs the reader to probe the
     * prior snapshot — the classic CDF-without-row-tracking limit).
     * Returns the new version.
     */
-  def mergeVersion(updates: DataFrame, path: String,
-                   keyCol: String): Int =
-    mergeVersion(updates, path, keyCol, Nil)
-
-  /** [[mergeVersion]] declaring zone-map stats columns for the
-    * batch's data dir — keeps a merge-fed table FULLY covered by
-    * sidecars: DV-aware skip reads prune the merged dir too, and the
-    * metadata tier ([[versionHistory]], [[statsOnlyAgg]] after
-    * compaction) keeps its every-file-counted contract across merge
-    * commits.
-    */
-  def mergeVersion(updates: DataFrame, path: String,
-                   keyCol: String, statsCols: Seq[String]): Int = {
-    val spark = updates.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val head = latestVersion(fs, root)
-    require(head >= 1, s"no versions committed at $path — nothing to merge")
-    // A merge targets an EXISTING table, so it follows the head's
-    // partition layout (the Delta table-property discipline): a CDC
-    // merge stream into a partitioned table lands partitioned batch
-    // dirs with counted parts sidecars, so partition pruning never
-    // erodes under churn. Flat heads merge exactly as before.
-    val partCols = headPartitionCols(spark, path)
-    partCols.foreach { pc =>
-      // statsCols on a partitioned head compose (r16): the merged dir
-      // gets BOTH sidecars — parts for the coarse prune, leaf-relative
-      // per-file stats for the skip inside kept partitions.
-      statsCols.foreach(c => require(!pc.contains(c),
-        s"stats column $c is a partition column of $path — the parts " +
-          "sidecar already serves it exactly"))
-      pc.foreach(c => require(updates.columns.contains(c),
-        s"merge batch lacks the table's partition column $c"))
-    }
-    val v = math.max(head, latestStaged(fs, root)) + 1
-    requireVacant(fs, root, v)
-    val delDir = s"deletes/v$v"
-    val dataDir = s"data/v$v"
-    updates.select(keyCol).distinct().write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, delDir).toString)
-    partCols match {
-      case Some(pc) =>
-        updates.write.mode(SaveMode.Overwrite).partitionBy(pc: _*)
-          .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-        writeDirParts(fs, root, dataDir, pc, conf)
-      case None =>
-        updates.write.mode(SaveMode.Overwrite)
-          .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-    }
-    if (statsCols.nonEmpty) writeDirStats(spark, fs, root, dataDir,
-      statsCols)
-    writeManifestLines(fs, root, v,
-      manifestDirs(fs, root, head) :+
-        s"$DeletePrefix$delDir:$keyCol" :+ dataDir)
-    v
-  }
-
-  /** [[mergeVersion]] keyed by an IDEMPOTENCY TOKEN — the exactly-once
-    * discipline for merge commits under at-least-once delivery: the
-    * first commit of `batchKey` records its version in a
-    * `merges/<batchKey>.txt` marker (written AFTER the manifest — the
-    * commit point stays the manifest write), and a redelivered batch
-    * with the same key returns the recorded version WITHOUT committing
-    * — version history and the head stay bit-identical, where a plain
-    * [[mergeVersion]] replay would append a duplicate commit (head
-    * still correct by last-writer-wins, but history polluted and the
-    * read path one anti-join deeper until compaction). The
-    * [[graft.streaming.StreamOps]] ivmBatchAppend discipline, applied
-    * to DV merge commits. Single-writer contract as for
-    * [[commitVersion]]; a crash between manifest and marker re-merges
-    * the batch once on retry (the plain at-least-once window,
-    * shrunk to one commit).
-    */
-  def mergeVersionKeyed(updates: DataFrame, path: String,
-                        keyCol: String, batchKey: String): Int =
-    keyedVersion(updates.sparkSession, path, "merges", batchKey)(
-      mergeVersion(updates, path, keyCol))
-
-  /** [[deleteVersionKeys]] with the [[commitVersionRetrying]] OCC
-    * loop — the DV delete that LANDS under concurrent writers (a live
-    * CDC merge stream plus a retention sweep is exactly two): the
-    * key sidecar is written ONCE under a commit-unique name, and only
-    * the manifest attempt retries — each retry re-reads the advanced
-    * head and re-carries ITS lines, so the delete scopes everything
-    * committed before it (serialized semantics by construction: a DV
-    * delete's keys apply to whatever data precedes the sidecar in
-    * manifest order, including a race winner's). `beforeAttempt` is
-    * the [[commitVersionRetrying]] test seam.
-    */
-  def deleteVersionKeysRetrying(keys: DataFrame, path: String,
-                                keyCol: String, maxTries: Int = 3,
-                                beforeAttempt: Int => Unit = _ => ())
-      : Int = {
-    val spark = keys.sparkSession
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    require(latestVersion(fs, root) >= 1,
-      s"no versions committed at $path — nothing to delete")
-    val delDir = s"deletes/c${java.util.UUID.randomUUID.toString
-      .replace("-", "").take(12)}"
-    keys.select(keyCol).distinct().write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, delDir).toString)
-    occRetryLoop(fs, root, path, delDir, maxTries, beforeAttempt) {
-      head =>
-        require(head >= 1,
-          s"no versions committed at $path — nothing to delete")
-        manifestDirs(fs, root, head) :+ s"$DeletePrefix$delDir:$keyCol"
+  def mergeVersion(updates: DataFrame, path: String, keyCol: String,
+                   spec: CommitSpec = CommitSpec()): Int = {
+    require(spec.layout == Flat && spec.carryForward,
+      "a merge follows the head's partition layout and carries the " +
+        s"head forward — declare neither a layout nor a replace: $spec")
+    val (root, fs) = tableAt(updates.sparkSession, path)
+    commitPipeline(updates.sparkSession, path, "merge", spec,
+        marker = "merges") { head =>
+      require(head >= 1, s"no versions committed at $path — nothing to merge")
+      val partCols = partitionColsAt(fs, root, head)
+      partCols.foreach { pc =>
+        // Stats on a partitioned head compose: the merged dir gets
+        // BOTH sidecars — parts for the coarse prune, leaf-relative
+        // per-file stats for the skip inside kept partitions.
+        spec.stats.foreach(c => require(!pc.contains(c),
+          s"stats column $c is a partition column of $path — the parts " +
+            "sidecar already serves it exactly"))
+        pc.foreach(c => require(updates.columns.contains(c),
+          s"merge batch lacks the table's partition column $c"))
+      }
+      Batch(spec.copy(layout = partCols.fold[Layout](Flat)(Partitioned)),
+        Some(updates), Some((updates.select(keyCol).distinct(), keyCol)))
     }
   }
 
-  /** [[mergeVersion]] with the [[commitVersionRetrying]] OCC loop —
-    * the one-commit DV upsert that LANDS when a merge stream races a
-    * nightly OPTIMIZE or a second stream: delete sidecar and data dir
-    * are written ONCE under commit-unique names, and only the manifest
-    * attempt retries; each retry re-carries the advanced head's lines,
-    * so the merge's sidecar scopes a race winner's rows too — exactly
-    * what a serialized merge would do (last merge wins on overlapping
-    * keys, by the ordered-fold contract). The head's partition layout
-    * is resolved once at entry (a racer flipping the layout mid-merge
-    * is a schema change, not a version race — the mixed-table readers
-    * handle either landing). `beforeAttempt` is the test seam.
-    */
-  def mergeVersionRetrying(updates: DataFrame, path: String,
-                           keyCol: String,
-                           statsCols: Seq[String] = Nil,
-                           maxTries: Int = 3,
-                           beforeAttempt: Int => Unit = _ => ()): Int = {
-    val spark = updates.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    require(latestVersion(fs, root) >= 1,
-      s"no versions committed at $path — nothing to merge")
-    val partCols = headPartitionCols(spark, path)
-    partCols.foreach { pc =>
-      statsCols.foreach(c => require(!pc.contains(c),
-        s"stats column $c is a partition column of $path — the parts " +
-          "sidecar already serves it exactly"))
-      pc.foreach(c => require(updates.columns.contains(c),
-        s"merge batch lacks the table's partition column $c"))
-    }
-    val tok = java.util.UUID.randomUUID.toString.replace("-", "").take(12)
-    val delDir = s"deletes/c$tok"
-    val dataDir = s"data/c$tok"
-    updates.select(keyCol).distinct().write.mode(SaveMode.Overwrite)
-      .parquet(new org.apache.hadoop.fs.Path(root, delDir).toString)
-    partCols match {
-      case Some(pc) =>
-        updates.write.mode(SaveMode.Overwrite).partitionBy(pc: _*)
-          .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-        writeDirParts(fs, root, dataDir, pc, conf)
-      case None =>
-        updates.write.mode(SaveMode.Overwrite)
-          .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-    }
-    if (statsCols.nonEmpty) writeDirStats(spark, fs, root, dataDir,
-      statsCols)
-    occRetryLoop(fs, root, path, dataDir, maxTries, beforeAttempt) {
-      head =>
-        require(head >= 1,
-          s"no versions committed at $path — nothing to merge")
-        manifestDirs(fs, root, head) :+
-          s"$DeletePrefix$delDir:$keyCol" :+ dataDir
-    }
-  }
-
-  /** [[commitVersion]] keyed by an idempotency token — the
-    * [[mergeVersionKeyed]] discipline for plain append commits: the
-    * streaming versioned sink's redelivered micro-batch reuses its
-    * recorded version instead of appending a duplicate snapshot, so
-    * version history stays bit-identical under at-least-once delivery.
-    */
-  def commitVersionKeyed(df: DataFrame, path: String,
-                         batchKey: String,
-                         carryForward: Boolean = true,
-                         statsCols: Seq[String] = Nil): Int =
-    keyedVersion(df.sparkSession, path, "commits", batchKey)(
-      commitVersionStats(df, path, carryForward, statsCols))
-
-  /** [[commitVersionPartitionedCols]] keyed by an idempotency token —
-    * the [[commitVersionKeyed]] discipline for the partitioned sink
-    * path: a redelivered micro-batch reuses its recorded version, so
-    * a streaming partitioned table's history stays bit-identical
-    * under at-least-once delivery.
-    */
-  def commitVersionPartitionedKeyed(df: DataFrame, path: String,
-                                    partCols: Seq[String],
-                                    batchKey: String,
-                                    statsCols: Seq[String] = Nil): Int =
-    keyedVersion(df.sparkSession, path, "commits", batchKey)(
-      commitVersionPartitionedCols(df, path, partCols,
-        statsCols = statsCols))
-
-  /** Idempotency-marker wrapper shared by the keyed commit family: the
-    * first commit of `batchKey` records its version in
+  /** Idempotency-marker wrapper of keyed commits ([[CommitSpec]]
+    * `batchKey`): the first commit of `batchKey` records its version in
     * `<kind>/<batchKey>.txt` (written AFTER the manifest — the commit
     * point stays the manifest write); a redelivery returns the
     * recorded version without committing. A crash between manifest and
     * marker re-commits the batch once on retry (the plain
     * at-least-once window, shrunk to one commit).
     */
-  private def keyedVersion(spark: org.apache.spark.sql.SparkSession,
-                           path: String, kind: String,
+  private def keyedVersion(fs: org.apache.hadoop.fs.FileSystem,
+                           root: org.apache.hadoop.fs.Path, kind: String,
                            batchKey: String)(commit: => Int): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val marker = new org.apache.hadoop.fs.Path(root,
       s"$kind/$batchKey.txt")
     val recorded: Option[Int] =
       if (!fs.exists(marker)) None
       else {
-        val in = fs.open(marker)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim
-        finally in.close()
-        // A crash between marker create and write/close used to leave an
-        // empty or partial marker that every retry then "found" — the
-        // batch neither replayed nor returned (wedged forever, ADVICE
-        // r12). An unparsable marker is treated as ABSENT: delete it and
-        // re-commit — exactly the documented crash-before-marker
-        // at-least-once window, never a wedge.
+        val txt = sidecarLines(fs, marker).mkString.trim
+        // A crash between marker create and write/close can leave an
+        // empty or partial marker: an unparsable marker is treated as
+        // ABSENT — delete it and re-commit (the documented
+        // crash-before-marker at-least-once window, never a wedge).
         txt.toIntOption match {
           case some @ Some(_) => some
           case None => fs.delete(marker, false); None
@@ -2279,10 +1945,7 @@ object SinkOps {
       // retry overwrites, never a half-written marker.
       val tmp = new org.apache.hadoop.fs.Path(root,
         s"$kind/.$batchKey.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(v.toString
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
+      writeLines(fs, tmp, Seq(v.toString))
       require(fs.rename(tmp, marker),
         s"idempotency-marker rename failed for batch $batchKey")
       v
@@ -2307,42 +1970,38 @@ object SinkOps {
     */
   def coalesceDeletes(spark: org.apache.spark.sql.SparkSession,
                       path: String): Int = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val head = latestVersion(fs, root)
-    require(head >= 1, s"no versions committed at $path")
-    val lines = manifestDirs(fs, root, head)
-    // Split into maximal runs of delete lines sharing a keyCol.
-    val runs = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
-    lines.foreach { l =>
-      if (isDeleteLine(l) && runs.nonEmpty && runs.last.nonEmpty &&
-          isDeleteLine(runs.last.last) &&
-          deleteParts(runs.last.last)._2 == deleteParts(l)._2)
-        runs(runs.length - 1) = runs.last :+ l
-      else runs += Vector(l)
-    }
-    require(runs.exists(r => r.length >= 2 && isDeleteLine(r.head)),
-      s"no adjacent delete sidecars to coalesce at $path — " +
-        "read-amplification here needs compactVersions")
-    val v = math.max(head, latestStaged(fs, root)) + 1
-    requireVacant(fs, root, v)
-    var nNew = 0
-    val newLines = runs.toSeq.flatMap { r =>
-      if (r.length < 2 || !isDeleteLine(r.head)) r
-      else {
-        val keyCol = deleteParts(r.head)._2
-        val delDir = s"deletes/v$v" + (if (nNew == 0) "" else s"-$nNew")
-        nNew += 1
-        Tables.parquet(spark, r.map(l =>
-            new org.apache.hadoop.fs.Path(root, deleteParts(l)._1)
-              .toString): _*)
-          .distinct().write.mode(SaveMode.Overwrite)
-          .parquet(new org.apache.hadoop.fs.Path(root, delDir).toString)
-        Seq(s"$DeletePrefix$delDir:$keyCol")
+    val (root, fs) = tableAt(spark, path)
+    occRetryLoop(fs, root, path, "coalesce", 1, _ => ()) { (head, v) =>
+      require(head >= 1, s"no versions committed at $path")
+      val lines = manifestDirs(fs, root, head)
+      // Split into maximal runs of delete lines sharing a keyCol.
+      val runs = scala.collection.mutable.ArrayBuffer.empty[Vector[String]]
+      lines.foreach { l =>
+        if (isDeleteLine(l) && runs.nonEmpty && runs.last.nonEmpty &&
+            isDeleteLine(runs.last.last) &&
+            deleteParts(runs.last.last)._2 == deleteParts(l)._2)
+          runs(runs.length - 1) = runs.last :+ l
+        else runs += Vector(l)
+      }
+      require(runs.exists(r => r.length >= 2 && isDeleteLine(r.head)),
+        s"no adjacent delete sidecars to coalesce at $path — " +
+          "read-amplification here needs compactVersions")
+      requireVacant(fs, root, v)
+      var nNew = 0
+      runs.toSeq.flatMap { r =>
+        if (r.length < 2 || !isDeleteLine(r.head)) r
+        else {
+          val keyCol = deleteParts(r.head)._2
+          val delDir = s"deletes/v$v" + (if (nNew == 0) "" else s"-$nNew")
+          nNew += 1
+          writeParquet(Tables.parquet(spark, r.map(l =>
+              new org.apache.hadoop.fs.Path(root, deleteParts(l)._1)
+                .toString): _*).distinct(),
+            new org.apache.hadoop.fs.Path(root, delDir).toString)
+          Seq(s"$DeletePrefix$delDir:$keyCol")
+        }
       }
     }
-    writeManifestLines(fs, root, v, newLines)
-    v
   }
 
   /** Keys DELETED (or merge-touched) in (vFrom, vTo] — the delete half
@@ -2354,8 +2013,7 @@ object SinkOps {
   def readDeletedKeys(spark: org.apache.spark.sql.SparkSession,
                       path: String, vFrom: Int, vTo: Int): DataFrame = {
     require(vFrom < vTo, s"changefeed window empty: $vFrom >= $vTo")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val before = manifestDirs(fs, root, vFrom).toSet
     val addedAll = manifestDirs(fs, root, vTo).filterNot(before)
     // Mirror readChanges' guard so the two CDF halves stay symmetric:
@@ -2395,16 +2053,13 @@ object SinkOps {
     */
   def versionHistory(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val latest = latestVersion(fs, root)
     require(latest >= 1, s"no versions committed at $path")
     // Present versions only: a rolled-back WAP stage can leave a gap
     // in the numbering (and VACUUM leaves history starting above 1) —
     // the timeline reports what exists, never throws on a hole.
-    val rows = (1 to latest).filter(v =>
-      fs.exists(new org.apache.hadoop.fs.Path(root,
-        f"manifest/v$v%05d.txt"))).map { v =>
+    val rows = (1 to latest).filter(hasVersion(fs, root, _)).map { v =>
       val lines = manifestDirs(fs, root, v)
       // Rename lines are metadata-only (no dir, no rows) — the
       // timeline reports the version's dirs unchanged through them.
@@ -2413,45 +2068,21 @@ object SinkOps {
       var nRows = 0L; var nFiles = 0L
       var mn = Long.MaxValue; var mx = Long.MinValue; var any = false
       data.foreach { d =>
-        readDirStats(fs, root, d) match {
-          case Some(ds) =>
-            ds.files.foreach { case (_, mm, cnt) =>
-              val n = cnt.getOrElse(throw new IllegalStateException(
-                s"count-less stats line for dir $d (legacy format)"))
-              nRows += n; nFiles += 1
-              // min_stat/max_stat report the FIRST declared column —
-              // the primary clustering column by the
-              // commitVersionStats contract. String-typed stats carry
-              // truncated (inexact) bounds: the timeline reports the
-              // exact counts and leaves the range null rather than
-              // serve an approximate value as history.
-              if (ds.kinds.head.isEmpty) ds.longBounds(0, mm).foreach {
-                case (lo, hi) =>
-                  any = true
-                  mn = math.min(mn, lo)
-                  mx = math.max(mx, hi)
-              }
-            }
-          case None =>
-            // A hive-partitioned dir counts from its parts sidecar
-            // (rows + files per fragment; no min/max — partition
-            // values are exact, not ranges). History works on
-            // partitioned and mixed tables without data IO.
-            val dp = readDirParts(fs, root, d).getOrElse(
-              throw new IllegalArgumentException(
-                s"dir $d of version $v has no stats or parts " +
-                  "sidecar — metadata-only history needs every file " +
-                  "counted"))
-            dp.frags.foreach { pf =>
-              nRows += pf.rows.getOrElse(
-                throw new IllegalStateException(
-                  s"count-less parts line for dir $d (legacy format)"))
-              nFiles += pf.files.getOrElse(
-                throw new IllegalStateException(
-                  s"file-count-less parts line for dir $d " +
-                    "(legacy format)"))
-            }
+        dirCounts(fs, root, d, v, "metadata-only history").foreach {
+          case (_, n, k) => nRows += n; nFiles += k
         }
+        // min_stat/max_stat report the FIRST declared stats column —
+        // the primary clustering column. String-typed stats carry
+        // truncated (inexact) bounds: the timeline leaves the range
+        // null rather than serve an approximate value as history.
+        readDirStats(fs, root, d).filter(_.kinds.head.isEmpty)
+          .foreach(ds => ds.files.foreach { case (_, mm, _) =>
+            ds.longBounds(0, mm).foreach { case (lo, hi) =>
+              any = true
+              mn = math.min(mn, lo)
+              mx = math.max(mx, hi)
+            }
+          })
       }
       // Read-amplification visibility: how many epoch groups (hence
       // union branches, each with its own anti-join fold) a resolved
@@ -2468,6 +2099,32 @@ object SinkOps {
     import spark.implicits._
     rows.toDF("version", "n_dirs", "n_files", "n_rows",
       "min_stat", "max_stat", "n_delete_commits", "n_read_groups")
+  }
+
+  /** Row and file counts of data dir `d` from its sidecars, with no
+    * data IO: one (leaf fragment, rows, files) per partition leaf of a
+    * `parts/` sidecar, else one ("", rows, 1) per file of a `stats/`
+    * sidecar. A dir neither counts refuses, as does a legacy
+    * count-less line — `what` needs every file counted.
+    */
+  private def dirCounts(fs: org.apache.hadoop.fs.FileSystem,
+                        root: org.apache.hadoop.fs.Path, d: String,
+                        v: Int, what: String): Seq[(String, Long, Long)] = {
+    def legacy(kind: String) = throw new IllegalStateException(
+      s"count-less $kind line for dir $d (legacy format)")
+    readDirParts(fs, root, d) match {
+      case Some(dp) => dp.frags.map(pf => (pf.frag,
+        pf.rows.getOrElse(legacy("parts")),
+        pf.files.getOrElse(legacy("parts"))))
+      case None =>
+        val ds = readDirStats(fs, root, d).getOrElse(
+          throw new IllegalArgumentException(
+            s"dir $d of version $v has no stats or parts sidecar — " +
+              s"$what needs every file counted (commit with stats " +
+              "columns or a partition layout)"))
+        ds.files.map { case (_, _, n) =>
+          ("", n.getOrElse(legacy("stats")), 1L) }
+    }
   }
 
   /** MAINTENANCE ADVISOR — turn the gauges ([[versionHistory]]'s
@@ -2493,7 +2150,7 @@ object SinkOps {
     *     the layout while converging each leaf to right-sized files.
     *  4. `bin_pack` — avg rows/file < `targetRowsPerFile`: the
     *     small-file debt a streaming sink accrues;
-    *     [[compactSmallDirs]]/[[compactVersions]] right-sizes.
+    *     [[compactVersions]] (SmallDirs or Full) right-sizes.
     *  5. `none` — the table is healthy; a no-op maintenance run is
     *     wasted IO.
     *
@@ -2511,8 +2168,7 @@ object SinkOps {
         maxFilesPerLeaf >= 1,
       s"nonsensical thresholds: target=$targetRowsPerFile " +
         s"groups=$maxReadGroups leafFiles=$maxFilesPerLeaf")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val head = latestVersion(fs, root)
     require(head >= 1, s"no versions committed at $path")
     val lines = manifestDirs(fs, root, head)
@@ -2535,27 +2191,11 @@ object SinkOps {
     // subtree per commit is invisible to the flat file totals).
     val leafFiles = scala.collection.mutable.Map.empty[String, Long]
     data.foreach { d =>
-      readDirParts(fs, root, d) match {
-        case Some(dp) =>
-          dp.frags.foreach { pf =>
-            nRows += pf.rows.getOrElse(throw new IllegalStateException(
-              s"count-less parts line for dir $d (legacy format)"))
-            val k = pf.files.getOrElse(throw new IllegalStateException(
-              s"file-count-less parts line for dir $d (legacy format)"))
-            nFiles += k
-            leafFiles(pf.frag) = leafFiles.getOrElse(pf.frag, 0L) + k
-          }
-        case None =>
-          val ds = readDirStats(fs, root, d).getOrElse(
-            throw new IllegalArgumentException(
-              s"dir $d of version $head has no stats or parts " +
-                "sidecar — the advisor needs every file counted " +
-                "(commit with statsCols or partition columns)"))
-          ds.files.foreach { case (_, _, cnt) =>
-            nRows += cnt.getOrElse(throw new IllegalStateException(
-              s"count-less stats line for dir $d (legacy format)"))
-            nFiles += 1
-          }
+      dirCounts(fs, root, d, head, "the advisor").foreach {
+        case (frag, n, k) =>
+          nRows += n; nFiles += k
+          if (frag.nonEmpty)
+            leafFiles(frag) = leafFiles.getOrElse(frag, 0L) + k
       }
     }
     val maxLeaf = if (leafFiles.isEmpty) 0L else leafFiles.values.max
@@ -2579,7 +2219,7 @@ object SinkOps {
     * (`coalesce_deletes` → [[coalesceDeletes]], `optimize`/`bin_pack`
     * → [[compactVersions]] — the full rewrite resolves DV debt and
     * right-sizes files in one pass, partition layout preserved;
-    * [[compactSmallDirs]] stays the cheaper manual knob for packing
+    * `Compaction.SmallDirs` stays the cheaper manual knob for packing
     * just a flat tail, since it needs a byte threshold the advisor
     * does not guess), returning one row (action, version). `none`
     * performs NOTHING and returns the head version — a healthy table
@@ -2611,7 +2251,7 @@ object SinkOps {
     * pre-window snapshot for "did this key exist at vFrom".
     *
     * SIDECAR-SERVED (r15): when vFrom's dirs carry BLOOM sidecars
-    * declaring the key column ([[commitVersionBloom]]), the probe
+    * declaring the key column ([[CommitSpec]] `blooms`), the probe
     * plans from METADATA — the window's distinct keys (arrival-sized
     * by the changefeed contract, collected once) test each file's
     * bitmap and only bloom-POSITIVE files are read for the exact
@@ -2703,16 +2343,10 @@ object SinkOps {
                                  v: Int, lines: Seq[String],
                                  overwrite: Boolean = false,
                                  tsOverride: Option[Long] = None): Unit = {
-    val mf = new org.apache.hadoop.fs.Path(root, f"manifest/v$v%05d.txt")
-    if (!overwrite) require(!fs.exists(mf),
-      s"commit conflict: manifest v$v already exists under $root — " +
-        "a concurrent writer took this version number; re-read the " +
-        "head and retry")
+    val mf = manifestFile(root, v)
+    if (!overwrite) requireVacant(fs, root, v)
     val ts = tsOverride.getOrElse(nextCommitTs(fs, root))
-    val out = fs.create(mf, overwrite)
-    try out.write((lines :+ s"$TsPrefix$ts").mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeLines(fs, mf, lines :+ s"$TsPrefix$ts", overwrite)
   }
 
   /** Version-slot vacancy check BEFORE any data write: the manifest-
@@ -2722,13 +2356,12 @@ object SinkOps {
     * committed before this writer started writing. A racer landing
     * INSIDE the window still fails loudly at the final manifest
     * create; fully race-proof commits write their data once under a
-    * unique dir and retry only the manifest ([[commitVersionRetrying]]).
+    * unique dir and retry only the manifest ([[CommitSpec]] `retries`).
     */
   private def requireVacant(fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path,
                             v: Int): Unit =
-    require(!fs.exists(new org.apache.hadoop.fs.Path(root,
-        f"manifest/v$v%05d.txt")),
+    require(!hasVersion(fs, root, v),
       s"commit conflict: manifest v$v already exists under $root — " +
         "a concurrent writer took this version number; re-read the " +
         "head and retry")
@@ -2744,6 +2377,23 @@ object SinkOps {
       else 0L
     math.max(System.currentTimeMillis(), prev + 1)
   }
+
+  /** A table path's root and its Hadoop filesystem. */
+  private def tableAt(spark: org.apache.spark.sql.SparkSession,
+                      path: String)
+      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    (root, root.getFileSystem(spark.sessionState.newHadoopConf()))
+  }
+
+  /** Version v's manifest file. */
+  private def manifestFile(root: org.apache.hadoop.fs.Path,
+                           v: Int): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(root, f"manifest/v$v%05d.txt")
+
+  private def hasVersion(fs: org.apache.hadoop.fs.FileSystem,
+                         root: org.apache.hadoop.fs.Path, v: Int): Boolean =
+    fs.exists(manifestFile(root, v))
 
   private def latestVersion(fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path): Int =
@@ -2968,8 +2618,7 @@ object SinkOps {
                        version: Option[Int] = None): SkipPlan = {
     require(preds.nonEmpty, "no predicates to plan")
     preds.foreach(requireSatisfiable)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val v = versionOr(fs, root, version)
     val epochs = epochGroups(manifestDirs(fs, root, v))
     val dirs = epochs.flatMap(_._1)
@@ -3178,84 +2827,7 @@ object SinkOps {
         .select(keyCol)), Seq(keyCol), "left_anti")
     }
 
-  // ---- Hive-partitioned versioned commits (partition pruning) ----
-
-  /** [[commitVersion]] HIVE-PARTITIONED by `partCol`: the commit's data
-    * dir holds one `partCol=value` subdirectory per distinct value, and
-    * a `parts/` sidecar records exactly which partition values the dir
-    * carries — so a partition-scoped read ([[readVersionWhere]]) plans
-    * from the SIDECAR, skipping whole data dirs (and, inside kept dirs,
-    * whole partition subtrees) with zero IO, before any file listing.
-    * This is the coarsest and cheapest skip tier — at 100 TB, partition
-    * pruning (a date, a tenant, a language) is the first 100–1000×
-    * before zone maps or blooms see a file, which is why every
-    * production lakehouse (Hive layout, Delta partition columns,
-    * Iceberg identity partitions) leads with it. Plain [[readVersion]],
-    * time travel, DVs, changefeeds, and compaction all still work on
-    * such a table (Spark's partition discovery restores `partCol` from
-    * the directory names on every read path); mixing partitioned and
-    * unpartitioned commits in one table is allowed — an unpartitioned
-    * dir simply never dir-prunes (no wrong skip). Returns the version.
-    *
-    * Loud contracts: `partCol` must exist in `df`; a commit whose
-    * batch is empty (no partition subdirs written) refuses rather than
-    * recording an unreadable snapshot; partition values must not need
-    * hive escaping (see [[PartValueOk]]).
-    */
-  def commitVersionPartitioned(df: DataFrame, path: String,
-                               partCol: String,
-                               carryForward: Boolean = true): Int =
-    commitVersionPartitionedCols(df, path, Seq(partCol), carryForward)
-
-  /** [[commitVersionPartitioned]] with NESTED (multi-column) hive
-    * partitioning — the Iceberg multi-identity-partition shape: the
-    * data dir holds `c1=a/c2=b/…` subtrees and the parts sidecar
-    * records every leaf fragment WITH ITS ROW COUNT (from the parquet
-    * footers — driver metadata, zero data IO), so a partition-scoped
-    * read prunes on a conjunction over ANY subset of the partition
-    * columns and [[partCountsOnly]] answers grouped counts without
-    * opening a file. Column order is the directory nesting order.
-    */
-  def commitVersionPartitionedCols(df: DataFrame, path: String,
-                                   partCols: Seq[String],
-                                   carryForward: Boolean = true,
-                                   statsCols: Seq[String] = Nil,
-                                   bloomCols: Seq[String] = Nil): Int = {
-    require(partCols.nonEmpty && partCols.distinct == partCols,
-      s"partition columns must be non-empty and distinct: $partCols")
-    partCols.foreach(c => require(df.columns.contains(c),
-      s"partition column $c not in ${df.columns.mkString(", ")}"))
-    // Per-file zone maps INSIDE a partitioned commit (r16 — the Delta
-    // stats-under-partitioning layout, the standard 100 TB shape:
-    // partition prune to the date/tenant subtree, THEN file-skip
-    // inside it): statsCols writes the stats sidecar with leaf-
-    // relative file paths alongside the parts sidecar. Stats on a
-    // partition column refuse — its per-file "range" is the leaf
-    // value the parts tier already serves exactly.
-    (statsCols ++ bloomCols).foreach(c => require(!partCols.contains(c),
-      s"stats/bloom column $c is a partition column — the parts " +
-        "sidecar already serves it exactly; declare sidecars on data " +
-        "columns"))
-    val spark = df.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(conf)
-    val head = latestVersion(fs, root)
-    val v = math.max(head, latestStaged(fs, root)) + 1
-    requireVacant(fs, root, v)
-    val dataDir = s"data/v$v"
-    df.write.mode(SaveMode.Overwrite).partitionBy(partCols: _*)
-      .parquet(new org.apache.hadoop.fs.Path(root, dataDir).toString)
-    writeDirParts(fs, root, dataDir, partCols, conf)
-    if (statsCols.nonEmpty) writeDirStats(spark, fs, root, dataDir,
-      statsCols)
-    if (bloomCols.nonEmpty) writeDirBloom(spark, fs, root, dataDir,
-      bloomCols)
-    val prev = if (head == 0 || !carryForward) Nil
-      else manifestDirs(fs, root, head)
-    writeManifestLines(fs, root, v, prev :+ dataDir)
-    v
-  }
+  // ---- Hive-partition sidecar (partition pruning) ----
 
   /** Parsed parts sidecar: the partition columns (nesting order) and
     * the leaf fragments (`c1=a/c2=b`) with their row and file counts
@@ -3279,6 +2851,29 @@ object SinkOps {
     * data it describes; resolved against each data dir's own table
     * root like the stats/bloom sidecars, so shallow clones inherit it.
     */
+  /** Every parquet file under `dirP` (recursively: a hive-partitioned
+    * dir keeps its files in leaf subtrees) with its footer row count —
+    * driver-side metadata reads, zero data IO, no Spark job.
+    */
+  private def footerRowCounts(fs: org.apache.hadoop.fs.FileSystem,
+                              dirP: org.apache.hadoop.fs.Path,
+                              conf: org.apache.hadoop.conf.Configuration)
+      : Seq[(org.apache.hadoop.fs.Path, Long)] = {
+    val out = scala.collection.mutable.ListBuffer
+      .empty[(org.apache.hadoop.fs.Path, Long)]
+    val it = fs.listFiles(dirP, true)
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.getPath.getName.endsWith(".parquet")) {
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile
+            .fromStatus(st, conf))
+        out += st.getPath -> (try r.getRecordCount finally r.close())
+      }
+    }
+    out.toList
+  }
+
   private def writeDirParts(fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path,
                             dataDir: String, partCols: Seq[String],
@@ -3289,45 +2884,37 @@ object SinkOps {
     // paths (file:/…) while a caller-supplied root may be schemeless.
     val prefix = fs.makeQualified(dirP).toString + "/"
     val counts = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    val it = fs.listFiles(dirP, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val rel = st.getPath.getParent.toString.stripPrefix(prefix)
-        val segs = rel.split('/')
-        require(segs.length == partCols.length &&
-            segs.zip(partCols).forall { case (s, c) =>
-              s.startsWith(c + "=") },
-          s"unexpected partition layout under $dirP: file parent " +
-            s"'$rel' does not match columns ${partCols.mkString("/")}")
-        // COMMIT-TIME value guard (the read-side PartValueOk contract,
-        // enforced where it can still refuse): a value that hive
-        // ESCAPES ('a b' → 'a%20b') would make the sidecar fragment
-        // disagree with the resolved partition, and a value Spark's
-        // partition-type inference MANGLES ('01' → int 1) would make
-        // the read residual cast('string').isin('01') silently empty —
-        // both are wrong-skip classes, so the commit fails loudly
-        // instead of recording them.
-        segs.zip(partCols).foreach { case (seg, c) =>
-          val v = seg.substring(c.length + 1)
-          require(PartValueOk.matches(v),
-            s"partition value '$v' for column $c needs hive escaping " +
-              "— the partition tier serves verbatim values only " +
-              "(letters, digits, _ . -); refuse at commit rather " +
-              "than record a fragment reads cannot name")
-          require(partValueRoundTrips(v),
-            s"partition value '$v' for column $c does not survive " +
-              "Spark partition-type inference (it re-reads as a " +
-              "different canonical value, e.g. '01' as int 1) — use " +
-              "the canonical form or a non-numeric encoding")
-        }
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf))
-        val n = try r.getRecordCount finally r.close()
-        val (pr, pf) = counts.getOrElse(rel, (0L, 0L))
-        counts(rel) = (pr + n, pf + 1)
+    footerRowCounts(fs, dirP, conf).foreach { case (file, n) =>
+      val rel = file.getParent.toString.stripPrefix(prefix)
+      val segs = rel.split('/')
+      require(segs.length == partCols.length &&
+          segs.zip(partCols).forall { case (s, c) =>
+            s.startsWith(c + "=") },
+        s"unexpected partition layout under $dirP: file parent " +
+          s"'$rel' does not match columns ${partCols.mkString("/")}")
+      // COMMIT-TIME value guard (the read-side PartValueOk contract,
+      // enforced where it can still refuse): a value that hive
+      // ESCAPES ('a b' → 'a%20b') would make the sidecar fragment
+      // disagree with the resolved partition, and a value Spark's
+      // partition-type inference MANGLES ('01' → int 1) would make
+      // the read residual cast('string').isin('01') silently empty —
+      // both are wrong-skip classes, so the commit fails loudly
+      // instead of recording them.
+      segs.zip(partCols).foreach { case (seg, c) =>
+        val v = seg.substring(c.length + 1)
+        require(PartValueOk.matches(v),
+          s"partition value '$v' for column $c needs hive escaping " +
+            "— the partition tier serves verbatim values only " +
+            "(letters, digits, _ . -); refuse at commit rather " +
+            "than record a fragment reads cannot name")
+        require(partValueRoundTrips(v),
+          s"partition value '$v' for column $c does not survive " +
+            "Spark partition-type inference (it re-reads as a " +
+            "different canonical value, e.g. '01' as int 1) — use " +
+            "the canonical form or a non-numeric encoding")
       }
+      val (pr, pf) = counts.getOrElse(rel, (0L, 0L))
+      counts(rel) = (pr + n, pf + 1)
     }
     require(counts.nonEmpty,
       s"no ${partCols.mkString("/")} partition directories under " +
@@ -3336,11 +2923,7 @@ object SinkOps {
     val lines = partCols.mkString("/") +:
       counts.toSeq.sortBy(_._1).map { case (f, (n, k)) =>
         s"$f\t$n\t$k" }
-    val sf = sidecarFile(root, dataDir, "parts")
-    val out = fs.create(sf, true)
-    try out.write(lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
+    writeLines(fs, sidecarFile(root, dataDir, "parts"), lines)
   }
 
   private def readDirParts(fs: org.apache.hadoop.fs.FileSystem,
@@ -3376,19 +2959,6 @@ object SinkOps {
         s"${cols.mkString("/")} in $where")
     segs.zip(cols).map { case (s, c) => s.stripPrefix(c + "=") }
   }
-
-  /** For flat-only maintenance paths: a hive-partitioned dir has no
-    * direct `.parquet` children, so treating it as flat would see ZERO
-    * files. Refuse loudly and name the right tool.
-    */
-  private def refusePartitionedDir(fs: org.apache.hadoop.fs.FileSystem,
-                                   root: org.apache.hadoop.fs.Path,
-                                   dataDir: String,
-                                   tier: String): Unit =
-    require(readDirParts(fs, root, dataDir).isEmpty,
-      s"dir $dataDir is hive-partitioned — $tier serves flat dirs " +
-        "only; use compactVersions (which preserves the partition " +
-        "layout) for maintenance")
 
   /** Partition values a requested set may name at this surface: the
     * characters hive stores verbatim in directory names. Values that
@@ -3443,8 +3013,7 @@ object SinkOps {
   def partCountsDv(spark: org.apache.spark.sql.SparkSession,
                    path: String,
                    version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val v = versionOr(fs, root, version)
     val groups = epochGroups(manifestDirs(fs, root, v))
     val (clean, dved) = groups.partition(_._2.isEmpty)
@@ -3513,8 +3082,7 @@ object SinkOps {
                      path: String,
                      preds: Seq[(String, Seq[String])] = Nil,
                      version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val v = versionOr(fs, root, version)
     val lines = manifestDirs(fs, root, v)
     require(!lines.exists(isDeleteLine),
@@ -3608,9 +3176,6 @@ object SinkOps {
                             fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path,
                             dataDir: String, cols: Seq[String]): Unit = {
-    require(cols.nonEmpty && cols.distinct == cols,
-      s"bloom columns must be non-empty and distinct: $cols")
-    requireUntaggedNames(cols, "bloom")
     val dirStr = new org.apache.hadoop.fs.Path(root, dataDir).toString
     // Size the dir's bitmaps to its LARGEST file: m = nextPow2(16·n),
     // clamped to [2^13, 2^24] bits (1 KiB..2 MiB per file) — beyond
@@ -3620,25 +3185,9 @@ object SinkOps {
     // counts come from the parquet FOOTERS (driver-side metadata
     // reads, zero data IO, no Spark job) — sizing must not cost a
     // scan of its own.
-    val conf = spark.sessionState.newHadoopConf()
-    // Recursive walk: a hive-partitioned dir's parquet files live in
-    // leaf subtrees (r16 — blooms inside partitioned commits); for a
-    // flat dir the walk visits exactly the direct children as before.
     val dirP = new org.apache.hadoop.fs.Path(root, dataDir)
-    val maxN = {
-      var mx = 1L
-      val it = fs.listFiles(dirP, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.getPath.getName.endsWith(".parquet")) {
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile
-              .fromStatus(st, conf))
-          mx = math.max(mx, try r.getRecordCount finally r.close())
-        }
-      }
-      mx
-    }
+    val maxN = footerRowCounts(fs, dirP, spark.sessionState.newHadoopConf())
+      .map(_._2).foldLeft(1L)(math.max)
     val m = math.min(1L << 24,
       math.max(1L << 13,
         java.lang.Long.highestOneBit(16L * maxN - 1) << 1)).toInt
@@ -3662,20 +3211,8 @@ object SinkOps {
     // are exactly what a dedup/decontam pipeline probes. Header tags
     // the column `name#str` so probes know to hash, not cast.
     val src0 = Tables.parquet(spark, dirStr)
-    val isStr = cols.map { c =>
-      src0.schema(c).dataType match {
-        case org.apache.spark.sql.types.StringType => true
-        case _: org.apache.spark.sql.types.ArrayType |
-             _: org.apache.spark.sql.types.MapType |
-             _: org.apache.spark.sql.types.StructType |
-             org.apache.spark.sql.types.BinaryType =>
-          throw new IllegalArgumentException(
-            s"bloom column $c has type ${src0.schema(c).dataType.sql}" +
-              " — point-lookup blooms need a long-castable or " +
-              "string column")
-        case _ => false
-      }
-    }
+    val isStr = cols.map(c =>
+      sidecarKind(c, src0.schema(c).dataType, bloom = true) == StatKindStr)
     val posArrays = cols.zip(isStr).map { case (c, str) =>
       val base = if (str) xxhash64(col(c)) else col(c).cast("long")
       val vn = pmod(base, lit(BloomP))
@@ -3701,67 +3238,16 @@ object SinkOps {
     val zeroHex = "0" * (m / 4)
     val header = cols.zip(isStr)
       .map { case (c, str) => if (str) s"$c#str" else c }.mkString("\t")
-    // File field: path RELATIVE to the data dir (bare name for flat
-    // dirs — pre-r16 sidecars byte-identical; fragment-prefixed for
-    // hive leaves, keying the composed partition × bloom reader).
-    val qdir = fs.makeQualified(dirP)
-    def relName(uri: String): String = {
-      val segs = scala.collection.mutable.ListBuffer.empty[String]
-      var cur = fs.makeQualified(
-        new org.apache.hadoop.fs.Path(new java.net.URI(uri)))
-      while (cur != null && cur != qdir) {
-        segs.prepend(cur.getName); cur = cur.getParent
-      }
-      require(cur != null, s"bloom file $uri is not under $qdir")
-      segs.mkString("/")
-    }
     val lines = header +: folded
       .map { r =>
-        val name = relName(r.getString(0))
+        val name = relFile(fs, dirP, r.getString(0))
         (name, cols.indices.map(i => r.getString(1 + i)))
       }
       .filter(_._2.exists(_ != zeroHex)) // null-in-every-column files
       .sortBy(_._1)
       .map { case (name, hexes) => (name +: hexes).mkString("\t") }
       .toSeq
-    val bf = new org.apache.hadoop.fs.Path(root,
-      s"blooms/${dataDir.stripPrefix("data/")}.txt")
-    val out = fs.create(bf, true)
-    try out.write(lines.mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  /** [[commitVersion]] recording a per-file BLOOM sidecar of
-    * `bloomCol` — the point-lookup complement of zone-map stats: zone
-    * maps skip only when the layout is CLUSTERED on the column (ranges
-    * must be tight), blooms skip equality probes on a high-cardinality
-    * column under ANY layout — the Delta bloom-index / parquet
-    * bloom-filter role, one level earlier (a skipped file costs zero
-    * IO, not even a footer fetch). The two sidecars compose: cluster
-    * and zone-map the range column, bloom the lookup key.
-    */
-  def commitVersionBloom(df: DataFrame, path: String, bloomCol: String,
-                         carryForward: Boolean = true): Int =
-    commitVersionBlooms(df, path, Seq(bloomCol), carryForward)
-
-  /** [[commitVersionBloom]] with MULTI-COLUMN blooms: every declared
-    * column gets its per-file bitmap in the ONE sidecar (k=1 format
-    * byte-identical to the single-column original), so a CONJUNCTION
-    * of point probes ([[readVersionWhere]] with one `LongIn` per
-    * column) intersects independent
-    * prunes — the bloom twin of multi-column zone maps, for lookup
-    * keys no layout clusters.
-    */
-  def commitVersionBlooms(df: DataFrame, path: String,
-                          bloomCols: Seq[String],
-                          carryForward: Boolean = true): Int = {
-    val spark = df.sparkSession
-    val v = commitVersion(df, path, carryForward, None)
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    writeDirBloom(spark, fs, root, s"data/v$v", bloomCols)
-    v
+    writeLines(fs, sidecarFile(root, dataDir, "blooms"), lines)
   }
 
   /** The exact xxhash64 Spark's `xxhash64(col)` computes, evaluated
@@ -3777,24 +3263,6 @@ object SinkOps {
         org.apache.spark.sql.types.StringType)))
       .eval(null).asInstanceOf[Long]
 
-  /** Commit with BOTH pruning sidecars — zone maps on the clustering
-    * column, blooms on the lookup key: the full Delta/Iceberg data-
-    * skipping kit in one commit. The two indexes answer different
-    * predicates (ranges need clustering; point probes on an
-    * unclustered key need blooms) and COMPOSE in one
-    * [[readVersionWhere]].
-    */
-  def commitVersionIndexed(df: DataFrame, path: String,
-                           statsCol: String, bloomCol: String,
-                           carryForward: Boolean = true): Int = {
-    val spark = df.sparkSession
-    val v = commitVersion(df, path, carryForward, Some(statsCol))
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    writeDirBloom(spark, fs, root, s"data/v$v", Seq(bloomCol))
-    v
-  }
-
   /** METADATA-ONLY aggregation: (n_rows, min, max) of the declared
     * stats column for a whole snapshot, computed ENTIRELY from the
     * manifest's stats sidecars — zero data-file IO, the Iceberg
@@ -3809,8 +3277,7 @@ object SinkOps {
   def statsOnlyAgg(spark: org.apache.spark.sql.SparkSession,
                    path: String,
                    version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val v = versionOr(fs, root, version)
     val lines = manifestDirs(fs, root, v)
     require(!lines.exists(isDeleteLine),
@@ -3820,75 +3287,9 @@ object SinkOps {
       s"stats-only read over version $v at $path which carries an " +
         "unmaterialized column rename/drop — the sidecars hold " +
         "commit-time names; compactVersions first")
-    var statsCols: Option[Seq[String]] = None
-    var nRows = 0L
-    var nFiles = 0L
-    var mn: Array[Long] = null
-    var mx: Array[Long] = null
-    var any: Array[Boolean] = null
-    lines.foreach { d =>
-      val ds = readDirStats(fs, root, d).getOrElse(
-        throw new IllegalArgumentException(
-          s"dir $d of version $v has no stats sidecar — " +
-            "stats-only aggregation needs every file counted"))
-      statsCols.foreach(prev => require(prev == ds.cols,
-        s"inconsistent stats columns across snapshot dirs: " +
-          s"${prev.mkString(",")} vs ${ds.cols.mkString(",")}"))
-      if (statsCols.isEmpty) {
-        statsCols = Some(ds.cols)
-        mn = Array.fill(ds.cols.length)(Long.MaxValue)
-        mx = Array.fill(ds.cols.length)(Long.MinValue)
-        any = Array.fill(ds.cols.length)(false)
-      }
-      // Kinded stats cannot serve an exact metadata-only MIN/MAX of
-      // the COLUMN VALUE: string bounds are truncated, and tsus/day
-      // bounds are stored as unix_micros/epoch-days, not the column's
-      // own value space. Refuse rather than return an approximation
-      // (or a differently-scaled long) as exact.
-      require(ds.kinds.forall(_.isEmpty),
-        s"stats-only aggregation over kinded stats column(s) " +
-          ds.cols.zip(ds.kinds).collect { case (c, k) if k.nonEmpty =>
-            s"$c#$k" }.mkString(", ") +
-          s" at $path — truncated string bounds are inexact and " +
-          "tsus/day bounds are unix_micros/epoch-days, not column " +
-          "values; aggregate the data, or declare a plain numeric " +
-          "stats column")
-      ds.files.foreach { case (_, mm, cnt) =>
-        val n = cnt.getOrElse(throw new IllegalStateException(
-          s"count-less stats line for dir $d (legacy format) — " +
-            "recommit or compact with a statsCol to enable " +
-            "stats-only aggregation"))
-        nRows += n; nFiles += 1
-        mm.zipWithIndex.foreach {
-          case (Some((lo, hi)), i) =>
-            any(i) = true
-            mn(i) = math.min(mn(i), lo.toLong)
-            mx(i) = math.max(mx(i), hi.toLong)
-          case _ =>
-        }
-      }
-    }
-    val cols = statsCols.get
-    // One row, dynamic width: n_rows, then min_c/max_c per declared
-    // column (null when the column is all-null table-wide), n_files.
-    val fields = org.apache.spark.sql.types.StructField("n_rows",
-        org.apache.spark.sql.types.LongType, nullable = false) +:
-      cols.flatMap(c => Seq(
-        org.apache.spark.sql.types.StructField(s"min_$c",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField(s"max_$c",
-          org.apache.spark.sql.types.LongType, nullable = true))) :+
-      org.apache.spark.sql.types.StructField("n_files",
-        org.apache.spark.sql.types.LongType, nullable = false)
-    val values: Seq[Any] = (nRows: java.lang.Long) +:
-      cols.indices.flatMap(i => Seq[Any](
-        if (any(i)) (mn(i): java.lang.Long) else null,
-        if (any(i)) (mx(i): java.lang.Long) else null)) :+
-      (nFiles: java.lang.Long)
-    spark.createDataFrame(
-      java.util.Collections.singletonList(
-        org.apache.spark.sql.Row(values: _*)),
-      org.apache.spark.sql.types.StructType(fields))
+    // A DV-free, evolution-free snapshot is one clean epoch: pure
+    // sidecar math, no data read.
+    statsAggDv(spark, path, Some(v))
   }
 
   /** [[statsOnlyAgg]] UNDER LIVE DELETION VECTORS — the bounded
@@ -3914,8 +3315,7 @@ object SinkOps {
   def statsAggDv(spark: org.apache.spark.sql.SparkSession,
                  path: String,
                  version: Option[Int] = None): DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val v = versionOr(fs, root, version)
     val groups = epochGroups(manifestDirs(fs, root, v))
     val (clean, dved) = groups.partition(_._2.isEmpty)
@@ -3939,9 +3339,10 @@ object SinkOps {
         mx = Array.fill(ds.cols.length)(Long.MinValue)
         any = Array.fill(ds.cols.length)(false)
       }
-      // Kinded (string/tsus/day) bounds cannot serve an exact MIN/MAX
-      // of the column value — same refusal as the clean-epoch
-      // aggregate above.
+      // Kinded stats cannot serve an exact metadata-only MIN/MAX of
+      // the COLUMN VALUE: string bounds are truncated, and tsus/day
+      // bounds are stored as unix_micros/epoch-days, not the column's
+      // own value space. Refuse rather than return an approximation.
       require(ds.kinds.forall(_.isEmpty),
         s"stats-only aggregation over kinded stats column(s) " +
           ds.cols.zip(ds.kinds).collect { case (c, k) if k.nonEmpty =>
@@ -4029,8 +3430,7 @@ object SinkOps {
   def readChanges(spark: org.apache.spark.sql.SparkSession, path: String,
                   vFrom: Int, vTo: Int): DataFrame = {
     require(vFrom < vTo, s"changefeed window empty: $vFrom >= $vTo")
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val before = manifestDirs(fs, root, vFrom).toSet
     val addedAll = manifestDirs(fs, root, vTo).filterNot(before)
     // A rename INSIDE the window would make the feed's pre-rename dirs
@@ -4074,8 +3474,7 @@ object SinkOps {
     require(0 <= vFrom && vFrom < vTo,
       s"streaming window empty: ($vFrom, $vTo]")
     if (vFrom == 0) return readVersion(spark, path, Some(vTo))
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val before = manifestDirs(fs, root, vFrom)
     val after = manifestDirs(fs, root, vTo)
     val addedAll = after.filterNot(before.toSet)
@@ -4142,8 +3541,7 @@ object SinkOps {
       return readVersion(spark, path, Some(vTo))
         .withColumn(ct, lit("insert"))
         .withColumn(cv, lit(vTo.toLong))
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val (root, fs) = tableAt(spark, path)
     val perVersion = (vFrom + 1 to vTo).map { v =>
       val before = manifestDirs(fs, root, v - 1)
       val after = manifestDirs(fs, root, v)
@@ -4216,7 +3614,7 @@ object SinkOps {
     * repeats the whole carry-forward list; a per-batch streaming sink
     * writes one per commit). Resolution walks the base chain to the
     * nearest FULL manifest (the checkpoint, every Nth commit by
-    * [[commitVersionDelta]]), so chain length is bounded by the
+    * [[CommitSpec]] `checkpointEvery`), so chain length is bounded by the
     * checkpoint interval — the Delta checkpoint-parquet role in the
     * text manifest tier.
     */
@@ -4245,12 +3643,9 @@ object SinkOps {
   private def rawManifest(fs: org.apache.hadoop.fs.FileSystem,
                           root: org.apache.hadoop.fs.Path,
                           v: Int): Seq[String] = {
-    val mf = new org.apache.hadoop.fs.Path(root, f"manifest/v$v%05d.txt")
+    val mf = manifestFile(root, v)
     require(fs.exists(mf), s"version $v does not exist under $root")
-    val in = fs.open(mf)
-    try scala.io.Source.fromInputStream(in, "UTF-8")
-      .getLines().filter(_.nonEmpty).toList
-    finally in.close()
+    sidecarLines(fs, mf)
   }
 
   private def manifestDirs(fs: org.apache.hadoop.fs.FileSystem,

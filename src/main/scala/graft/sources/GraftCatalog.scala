@@ -174,7 +174,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
                            properties: util.Map[String, String]): Table = {
     require(partitions.isEmpty,
       "graft tables declare partitioning per commit (INSERT ... " +
-        "PARTITIONED BY / commitVersionPartitionedCols), not at " +
+        "PARTITIONED BY / CommitSpec layout = Partitioned), not at " +
         "CREATE TABLE")
     val dir = tableDir(ident)
     if (isTable(dir)) throw new TableAlreadyExistsException(ident)

@@ -172,7 +172,7 @@ class GraftSource extends TableProvider with DataSourceRegister
     val path = resolveTarget(lower, "sink")
     require(partitionColumns.isEmpty,
       "graft sink commits declare partitioning per table op " +
-        "(commitVersionPartitionedCols), not partitionBy on the " +
+        "(CommitSpec layout = Partitioned), not partitionBy on the " +
         "stream writer")
     require(outputMode == OutputMode.Append(),
       s"graft sink is append-only (one immutable commit per " +

@@ -7,8 +7,8 @@ import org.apache.spark.sql.execution.streaming.Sink
   * versioned table as a STREAMING SINK, closing the addressing
   * matrix's last face (batch read/write, SQL, catalog names, stream
   * read — and now stream write): every micro-batch lands as ONE
-  * versioned commit via
-  * [[graft.ops.SinkOps.commitStreamBatch]], so the stream's output is
+  * versioned commit via [[graft.ops.SinkOps.commitStreamBatch]] — the
+  * commit pipeline with a deterministic batch dir — so the stream's output is
   * immediately time-travelable, changefeed-consumable
   * ([[GraftStreamSource]] can tail it — graft→graft pipes compose),
   * and EXACTLY-ONCE: the batch's dir name is deterministic in
@@ -20,7 +20,8 @@ import org.apache.spark.sql.execution.streaming.Sink
   * a versioned table's history is immutable commits, not a mutable
   * result set). Options: `txnAppId` (namespaces batch dirs when
   * several independent streams feed one table), `retries` (OCC
-  * budget against concurrent batch writers, default 3 races).
+  * budget against concurrent batch writers: n races, n + 1 manifest
+  * attempts; default 2).
   */
 class GraftStreamSink(sqlContext: SQLContext, path: String,
                       txnAppId: String, maxTries: Int)
@@ -49,7 +50,7 @@ class GraftStreamSink(sqlContext: SQLContext, path: String,
     // shape), then commit.
     val batch = org.apache.spark.sql.GraftSqlBridge.asBatch(data)
     graft.ops.SinkOps.commitStreamBatch(batch, path, batchId,
-      txnAppId, maxTries)
+      txnAppId, retries = maxTries)
     ()
   }
 

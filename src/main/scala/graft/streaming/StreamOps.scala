@@ -1142,7 +1142,7 @@ object StreamOps {
     * the stream's history is queryable: any past version is a pinned,
     * immutable point-in-time read while the stream keeps appending —
     * the exactly-once versioned-sink shape (commits are BATCH-KEYED,
-    * [[graft.ops.SinkOps.commitVersionKeyed]]: a replayed micro-batch
+    * [[graft.ops.SinkOps.CommitSpec]] `batchKey`: a replayed micro-batch
     * reuses its recorded version instead of re-committing, so version
     * history stays bit-identical under at-least-once delivery; readers
     * of old versions never see torn state because a commit is
@@ -1164,8 +1164,8 @@ object StreamOps {
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.SinkOps.commitVersionKeyed(batch, tablePath,
-          s"batch-$batchId")
+        graft.ops.SinkOps.commitVersion(batch, tablePath,
+          graft.ops.SinkOps.CommitSpec(batchKey = Some(s"batch-$batchId")))
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1175,7 +1175,7 @@ object StreamOps {
   }
 
   /** [[versionedSinkReplay]] into a HIVE-PARTITIONED versioned table
-    * ([[graft.ops.SinkOps.commitVersionPartitionedCols]] per
+    * ([[graft.ops.SinkOps.commitVersion]] with a `Partitioned` layout per
     * micro-batch, batch-keyed): every commit lands partition subtrees
     * plus the counted parts sidecar, so the partition skip tier and
     * the metadata counts stay armed WHILE the stream runs — at 100 TB
@@ -1198,8 +1198,10 @@ object StreamOps {
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.SinkOps.commitVersionPartitionedKeyed(batch,
-          tablePath, partCols, s"batch-$batchId")
+        graft.ops.SinkOps.commitVersion(batch,
+          tablePath,
+          graft.ops.SinkOps.CommitSpec(layout = graft.ops.SinkOps.Partitioned(
+            partCols), batchKey = Some(s"batch-$batchId")))
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1209,7 +1211,7 @@ object StreamOps {
   }
 
   /** [[versionedSinkReplay]] writing DELTA MANIFESTS
-    * ([[graft.ops.SinkOps.commitVersionDelta]]) — the production
+    * (CommitSpec `checkpointEvery`) — the production
     * pairing: a per-batch streaming sink is exactly where full
     * manifests grow O(versions · dirs), so each micro-batch commit
     * carries only `base:<head>` + its one new dir, with a full
@@ -1232,8 +1234,8 @@ object StreamOps {
       .option("maxFilesPerTrigger", "1").parquet(stagingDir)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.SinkOps.commitVersionDelta(batch, tablePath,
-          checkpointEvery)
+        graft.ops.SinkOps.commitVersion(batch, tablePath,
+          graft.ops.SinkOps.CommitSpec(checkpointEvery = Some(checkpointEvery)))
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1256,7 +1258,7 @@ object StreamOps {
     * replay-harness discipline), each commit is data-files-then-
     * manifest so a reader never sees torn state, and intermediate
     * versions remain pinned time-travel reads. Commits are BATCH-KEYED
-    * ([[graft.ops.SinkOps.mergeVersionKeyed]]): a redelivered
+    * ([[graft.ops.SinkOps.mergeVersion]] with a `batchKey`): a redelivered
     * micro-batch reuses its recorded version instead of appending a
     * duplicate merge commit, so version history AND the head stay
     * bit-identical under at-least-once delivery — the ivmBatchAppend
@@ -1284,8 +1286,9 @@ object StreamOps {
         // the same discipline as the IVM family's ivmBatchAppend
         // (spec-pinned: version count and head bit-identical under
         // re-application).
-        graft.ops.SinkOps.mergeVersionKeyed(batch.drop("bseq"),
-          tablePath, keyCol, s"batch-$batchId")
+        graft.ops.SinkOps.mergeVersion(batch.drop("bseq"),
+          tablePath, keyCol,
+          graft.ops.SinkOps.CommitSpec(batchKey = Some(s"batch-$batchId")))
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

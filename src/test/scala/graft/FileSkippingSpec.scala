@@ -38,11 +38,12 @@ class FileSkippingSpec extends SparkSpec {
   private def partitionedTable(name: String): String = {
     val t = tmp(name)
     (0 to 1).foreach { r =>
-      SinkOps.commitVersionPartitionedCols(
+      SinkOps.commitVersion(
         events.filter(col("event_id") % 2 === r)
           .repartitionByRange(4, col("ts")),
-        t, Seq("event_type"), statsCols = Seq("ts"),
-        bloomCols = Seq("ekey")); ()
+        t,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")),
+          stats = Seq("ts"), blooms = Seq("ekey"))); ()
     }
     t
   }
@@ -139,8 +140,8 @@ class FileSkippingSpec extends SparkSpec {
     }
     val ev = events.limit(200)
     val t = tmp("fs_refuse")
-    SinkOps.commitVersionStats(ev, t, carryForward = true,
-      Seq("event_id", "ekey", "ts"))
+    SinkOps.commitVersion(ev, t,
+      SinkOps.CommitSpec(stats = Seq("event_id", "ekey", "ts")))
     refuses(t, LongRange("event_id", 5L, 4L))("empty predicate range")
     refuses(t, StringRange("ekey", "b", "a"))("empty predicate range")
     refuses(t, MicrosRange("ts", 5L, 4L))("empty predicate range")
@@ -149,7 +150,7 @@ class FileSkippingSpec extends SparkSpec {
     refuses(t, LongIn("event_id", Nil))("no values requested")
     refuses(t, StringIn("ekey", Nil))("no values requested")
     // Stats columns that differ across dirs.
-    SinkOps.commitVersion(ev, t, carryForward = true, Some("user_id"))
+    SinkOps.commitVersion(ev, t, SinkOps.CommitSpec(stats = Seq("user_id")))
     refuses(t, LongRange("event_id", 0L, 9L))(
       "inconsistent stats columns")
 
@@ -161,11 +162,14 @@ class FileSkippingSpec extends SparkSpec {
       "no dir carries a bloom sidecar")
 
     val bl = tmp("fs_refuse_bloom")
-    SinkOps.commitVersionBloom(ev, bl, "event_id")
-    SinkOps.commitVersionBloom(ev, bl, "user_id")
+    SinkOps.commitVersion(ev, bl,
+      SinkOps.CommitSpec(blooms = Seq("event_id")))
+    SinkOps.commitVersion(ev, bl,
+      SinkOps.CommitSpec(blooms = Seq("user_id")))
     refuses(bl, LongIn("event_id", Seq(1L)))("inconsistent bloom columns")
     val bad = tmp("fs_refuse_badbloom")
-    SinkOps.commitVersionBloom(ev, bad, "event_id")
+    SinkOps.commitVersion(ev, bad,
+      SinkOps.CommitSpec(blooms = Seq("event_id")))
     val sidecar = new java.io.File(bad, "blooms/v1.txt")
     new java.io.File(bad, "blooms/.v1.txt.crc").delete() // stale after edit
     val lines = scala.io.Source.fromFile(sidecar, "UTF-8")
@@ -194,15 +198,15 @@ class FileSkippingSpec extends SparkSpec {
     val (lo, hi) = (b.getLong(0), b.getLong(1))
     // Plain-numeric stats then `#tsus` stats on ts, and the reverse.
     val longFirst = tmp("fs_kind_drift_long_first")
-    SinkOps.commitVersionStats(asLong, longFirst, carryForward = true,
-      Seq("ts"))
-    SinkOps.commitVersionStats(ev, longFirst, carryForward = true,
-      Seq("ts"))
+    SinkOps.commitVersion(asLong, longFirst,
+      SinkOps.CommitSpec(stats = Seq("ts")))
+    SinkOps.commitVersion(ev, longFirst,
+      SinkOps.CommitSpec(stats = Seq("ts")))
     val tsFirst = tmp("fs_kind_drift_ts_first")
-    SinkOps.commitVersionStats(ev, tsFirst, carryForward = true,
-      Seq("ts"))
-    SinkOps.commitVersionStats(asLong, tsFirst, carryForward = true,
-      Seq("ts"))
+    SinkOps.commitVersion(ev, tsFirst,
+      SinkOps.CommitSpec(stats = Seq("ts")))
+    SinkOps.commitVersion(asLong, tsFirst,
+      SinkOps.CommitSpec(stats = Seq("ts")))
     Seq(longFirst, tsFirst).foreach { t =>
       assert(sidecarHeader(t, "stats", 1) != sidecarHeader(t, "stats", 2))
       refuses(t, LongRange("ts", lo, hi))("tsus-kinded")
@@ -211,11 +215,15 @@ class FileSkippingSpec extends SparkSpec {
     // A `#str` bloom then a numeric bloom on ekey, and the reverse.
     val asNum = ev.withColumn("ekey", col("event_id").cast("long"))
     val strFirst = tmp("fs_kind_drift_str_first")
-    SinkOps.commitVersionBloom(ev, strFirst, "ekey")
-    SinkOps.commitVersionBloom(asNum, strFirst, "ekey")
+    SinkOps.commitVersion(ev, strFirst,
+      SinkOps.CommitSpec(blooms = Seq("ekey")))
+    SinkOps.commitVersion(asNum, strFirst,
+      SinkOps.CommitSpec(blooms = Seq("ekey")))
     val numFirst = tmp("fs_kind_drift_num_first")
-    SinkOps.commitVersionBloom(asNum, numFirst, "ekey")
-    SinkOps.commitVersionBloom(ev, numFirst, "ekey")
+    SinkOps.commitVersion(asNum, numFirst,
+      SinkOps.CommitSpec(blooms = Seq("ekey")))
+    SinkOps.commitVersion(ev, numFirst,
+      SinkOps.CommitSpec(blooms = Seq("ekey")))
     Seq(strFirst, numFirst).foreach { t =>
       assert(sidecarHeader(t, "blooms", 1) != sidecarHeader(t, "blooms", 2))
       refuses(t, StringIn("ekey", Seq("k1")))("is numeric")

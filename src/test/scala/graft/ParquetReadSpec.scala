@@ -47,7 +47,8 @@ class ParquetReadSpec extends SparkSpec {
   test("footer schema equals Spark's on commit, partitioned and replay dirs") {
     val ev = Tables.events(spark, sfDir)
     val table = tmp("pr_commit")
-    SinkOps.commitVersion(ev, table, carryForward = true, statsCol = Some("event_id"))
+    SinkOps.commitVersion(ev, table,
+      SinkOps.CommitSpec(stats = Seq("event_id")))
     val data = new java.io.File(table, "data").listFiles().filter(_.isDirectory)
       .map(_.getPath).sorted
     assert(data.nonEmpty)
@@ -102,7 +103,7 @@ class ParquetReadSpec extends SparkSpec {
     (0L to 2L).foreach { r =>
       SinkOps.commitVersion(ev.filter(col("event_id") % 3 === r)
         .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, statsCol = Some("event_id"))
+        path, SinkOps.CommitSpec(stats = Seq("event_id")))
     }
     var df: org.apache.spark.sql.DataFrame = null
     assert(jobsDuring {

@@ -115,7 +115,7 @@ class Round11OpsSpec extends SparkSpec {
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 3 === r)
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, statsCol = Some("event_id")); ()
+        path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
     }
     val plan = SinkOps.planVersionWhere(spark, path,
       Seq(LongRange("event_id", 100L, 299L)))
@@ -138,7 +138,7 @@ class Round11OpsSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir)
     val path = tmp("r11_vskip0")
     SinkOps.commitVersion(ev.repartitionByRange(4, col("event_id")),
-      path, carryForward = true, statsCol = Some("event_id"))
+      path, SinkOps.CommitSpec(stats = Seq("event_id")))
     val none = Seq(LongRange("event_id", 5000000L, 6000000L))
     val plan = SinkOps.planVersionWhere(spark, path, none)
     assert(plan.files.isEmpty && plan.filesListed == 4)
@@ -390,7 +390,7 @@ class Round11OpsSpec extends SparkSpec {
     val path = tmp("r11_dv_cmp")
     SinkOps.commitVersion(
       ev.repartitionByRange(2, col("event_id")),
-      path, carryForward = true, statsCol = Some("event_id"))
+      path, SinkOps.CommitSpec(stats = Seq("event_id")))
     SinkOps.deleteVersionKeys(
       ev.filter(col("event_id") % 2 === 0).select("event_id"),
       path, "event_id")
@@ -406,7 +406,8 @@ class Round11OpsSpec extends SparkSpec {
       s"DV zone-map read diverged: ${dvSkim.length} vs ${dvWant.length}")
     val want = SinkOps.readVersion(spark, path)
       .select("event_id").collect().map(_.getLong(0)).sorted
-    val cv = SinkOps.compactVersions(spark, path, Some("event_id"))
+    val cv = SinkOps.compactVersions(spark, path,
+      SinkOps.Compaction.Full(Some("event_id")))
     assert(!manifestText(path, cv).contains("delete:"),
       "compaction failed to purge the delete sidecar lines")
     val got = SinkOps.readVersion(spark, path, Some(cv))
@@ -470,7 +471,7 @@ class Round11OpsSpec extends SparkSpec {
     val e = Tables.events(spark, sfDir).limit(3000)
     val path = tmp("r11_binpack")
     SinkOps.commitVersion(e.filter(col("event_id") % 4 =!= 3), path,
-      carryForward = true, Some("event_id"))
+      SinkOps.CommitSpec(stats = Seq("event_id")))
     (0 to 2).foreach { r =>
       SinkOps.commitVersion(
         e.filter(col("event_id") % 4 === 3 && col("event_id") % 3 === r),
@@ -487,8 +488,8 @@ class Round11OpsSpec extends SparkSpec {
       .select("event_id").collect().map(_.getLong(0)).sorted
     val bigBytes = fs.getContentSummary(
       new org.apache.hadoop.fs.Path(root, "data/v1")).getLength
-    val v = SinkOps.compactSmallDirs(spark, path, bigBytes,
-      Some("event_id"))
+    val v = SinkOps.compactVersions(spark, path,
+      SinkOps.Compaction.SmallDirs(bigBytes, Some("event_id")))
     assert(v == 5)
     assert(files("data/v1") == monolithBefore,
       "bin-packing touched the monolith dir")
@@ -510,7 +511,8 @@ class Round11OpsSpec extends SparkSpec {
       .select("event_id").collect().map(_.getLong(0)).sorted
     assert(skim.sameElements(preHead.filter(x => x >= lo && x <= lo + 50)))
     intercept[IllegalArgumentException] {
-      SinkOps.compactSmallDirs(spark, path, 1L) // nothing below 1 byte
+      // nothing below 1 byte
+      SinkOps.compactVersions(spark, path, SinkOps.Compaction.SmallDirs(1L))
     }
   }
 
@@ -523,7 +525,8 @@ class Round11OpsSpec extends SparkSpec {
     SinkOps.deleteVersionKeys(Seq(2L).toDF("id"), path, "id")
     // The only data dir precedes the sidecar — frozen, nothing packable.
     val ex = intercept[IllegalArgumentException] {
-      SinkOps.compactSmallDirs(spark, path, Long.MaxValue)
+      SinkOps.compactVersions(spark, path,
+        SinkOps.Compaction.SmallDirs(Long.MaxValue))
     }
     assert(ex.getMessage.contains("behind a delete sidecar"))
   }
@@ -569,10 +572,10 @@ class Round11OpsSpec extends SparkSpec {
     val e = Tables.events(spark, sfDir).limit(4000)
     val path = tmp("r11_bloom")
     (0 to 2).foreach { r =>
-      SinkOps.commitVersionBloom(
+      SinkOps.commitVersion(
         e.filter(col("user_id") % 3 === r)
           .repartition(4, col("user_id")),
-        path, "event_id"); ()
+        path, SinkOps.CommitSpec(blooms = Seq("event_id"))); ()
     }
     val probe = e.agg(max("event_id")).head().getLong(0)
     val plan = SinkOps.planVersionWhere(spark, path,
@@ -606,8 +609,9 @@ class Round11OpsSpec extends SparkSpec {
       "surviving key intact)") {
     import spark.implicits._
     val path = tmp("r11_bloom_dv")
-    SinkOps.commitVersionBloom(
-      Seq((1L, "a"), (2L, "b")).toDF("id", "s"), path, "id")
+    SinkOps.commitVersion(
+      Seq((1L, "a"), (2L, "b")).toDF("id", "s"), path,
+      SinkOps.CommitSpec(blooms = Seq("id")))
     // A plain commit (no bloom sidecar): its files always planned.
     SinkOps.commitVersion(Seq((3L, "c")).toDF("id", "s"), path)
     def probe(k: Long) = Seq(LongIn("id", Seq(k)))
@@ -750,9 +754,9 @@ class Round11OpsSpec extends SparkSpec {
     val path = tmp("r11_vh")
     SinkOps.commitVersion(
       Seq((1L, "a"), (2L, "b")).toDF("id", "s"), path,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.commitVersion(Seq((5L, "c")).toDF("id", "s"), path,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.deleteVersionKeys(Seq(2L).toDF("id"), path, "id")
     val h = SinkOps.versionHistory(spark, path)
       .orderBy("version").collect()
@@ -796,10 +800,12 @@ class Round11OpsSpec extends SparkSpec {
     val e = Tables.events(spark, sfDir).limit(4000)
     val path = tmp("r11_skip2")
     (0 to 2).foreach { r =>
-      SinkOps.commitVersionIndexed(
+      SinkOps.commitVersion(
         e.filter(col("event_id") % 3 === r)
           .repartitionByRange(4, col("event_id")),
-        path, "event_id", "user_id"); ()
+        path,
+        SinkOps.CommitSpec(stats = Seq("event_id"),
+          blooms = Seq("user_id"))); ()
     }
     val b = e.agg(min("user_id"), min("event_id"), max("event_id")).head()
     val (user, lo) = (b.getLong(0), b.getLong(1))
@@ -832,7 +838,7 @@ class Round11OpsSpec extends SparkSpec {
     val path = tmp("r11_statsonly")
     (0 to 1).foreach { r =>
       SinkOps.commitVersion(e.filter(col("event_id") % 2 === r),
-        path, carryForward = true, Some("event_id")); ()
+        path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
     }
     val got = SinkOps.statsOnlyAgg(spark, path).head()
     val want = e.agg(count(lit(1)), min("event_id"), max("event_id"))
@@ -850,7 +856,7 @@ class Round11OpsSpec extends SparkSpec {
     // DV manifests refuse too (sidecar keys subtract unknown counts).
     val path2 = tmp("r11_statsonly_dv")
     SinkOps.commitVersion(Seq((1L, "a")).toDF("id", "s"), path2,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.deleteVersionKeys(Seq(1L).toDF("id"), path2, "id")
     val ex2 = intercept[IllegalArgumentException] {
       SinkOps.statsOnlyAgg(spark, path2)

@@ -30,7 +30,7 @@ class Round12OpsSpec extends SparkSpec {
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 3 === r)
           .repartitionByRange(4, col("event_id")),
-        path, carryForward = true, statsCol = Some("event_id")); ()
+        path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
     }
     SinkOps.deleteVersionKeys(
       ev.filter(col("event_id") % 7 === 0).select("event_id"),
@@ -71,12 +71,12 @@ class Round12OpsSpec extends SparkSpec {
     SinkOps.commitVersion(
       Seq((1L, "a1"), (2L, "b1"), (3L, "c1")).toDF("id", "s")
         .repartitionByRange(2, col("id")),
-      path, carryForward = true, statsCol = Some("id"))
+      path, SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.deleteVersionKeys(Seq(2L, 3L).toDF("id"), path, "id")
     // Re-insert key 2 AFTER the sidecar — the delete scopes only to
     // dirs committed before it, so the re-inserted row must survive.
     SinkOps.commitVersion(Seq((2L, "b2")).toDF("id", "s"), path,
-      carryForward = true, statsCol = Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     val got = SinkOps.readVersionWhere(spark, path,
         Seq(LongRange("id", 1L, 10L)))
       .select("id", "s").collect()
@@ -92,10 +92,12 @@ class Round12OpsSpec extends SparkSpec {
       .localCheckpoint(true)
     val path = tmp("r12_dvmerge")
     (0 to 1).foreach { r =>
-      SinkOps.commitVersionIndexed(
+      SinkOps.commitVersion(
         ev.filter(col("event_id") % 2 === r)
           .repartitionByRange(4, col("event_id")),
-        path, "event_id", "user_id"); ()
+        path,
+        SinkOps.CommitSpec(stats = Seq("event_id"),
+          blooms = Seq("user_id"))); ()
     }
     val probe = ev.agg(max("event_id")).head().getLong(0)
     val u = ev.filter(col("event_id") === probe)
@@ -145,7 +147,8 @@ class Round12OpsSpec extends SparkSpec {
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     val bigBytes = fs.getContentSummary(
       new org.apache.hadoop.fs.Path(root, "data/v1")).getLength
-    val v = SinkOps.compactSmallDirs(spark, path, bigBytes)
+    val v = SinkOps.compactVersions(spark, path,
+      SinkOps.Compaction.SmallDirs(bigBytes))
     val after = SinkOps.readVersion(spark, path, Some(v)).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert(after.sameElements(before),
@@ -185,7 +188,8 @@ class Round12OpsSpec extends SparkSpec {
     val delta = tmp("r12_mf_delta")
     slices.foreach { df => SinkOps.commitVersion(df, full); () }
     slices.foreach { df =>
-      SinkOps.commitVersionDelta(df, delta, checkpointEvery = 3); ()
+      SinkOps.commitVersion(df, delta,
+        SinkOps.CommitSpec(checkpointEvery = Some(3))); ()
     }
     (1 to 5).foreach { v =>
       assert(SinkOps.manifestLines(spark, delta, v) ==
@@ -211,9 +215,9 @@ class Round12OpsSpec extends SparkSpec {
       "falls below the horizon: reads survive the expired history") {
     import spark.implicits._
     val path = tmp("r12_mf_vacuum")
-    (1 to 5).foreach { i =>
-      SinkOps.commitVersionDelta(Seq((i.toLong, s"s$i")).toDF("id", "s"),
-        path, checkpointEvery = 100); () // no checkpoint in range
+    (1 to 5).foreach { i => // no checkpoint in range
+      SinkOps.commitVersion(Seq((i.toLong, s"s$i")).toDF("id", "s"),
+        path, SinkOps.CommitSpec(checkpointEvery = Some(100))); ()
     }
     val before4 = SinkOps.readVersion(spark, path, Some(4))
       .select("id").collect().map(_.getLong(0)).sorted
@@ -244,9 +248,9 @@ class Round12OpsSpec extends SparkSpec {
       .localCheckpoint(true)
     val tbl = tmp("r12_scf_delta")
     (0 to 2).foreach { r =>
-      SinkOps.commitVersionDelta(
+      SinkOps.commitVersion(
         li.filter(col("l_orderkey") % 3 === r), tbl,
-        checkpointEvery = 100); ()
+        SinkOps.CommitSpec(checkpointEvery = Some(100))); ()
     }
     val view = graft.streaming.StreamOps.changefeedStreamReplay(
       o, tbl, 1, tmp("r12_scf_delta_view"))
@@ -275,9 +279,9 @@ class Round12OpsSpec extends SparkSpec {
         col("user_id") >= t1 && col("user_id") < t2,
         col("user_id") >= t2)
       .foreach { p =>
-        SinkOps.commitVersionStats(
+        SinkOps.commitVersion(
           e.filter(p).repartitionByRange(4, col("event_id")),
-          path, carryForward = true, Seq("event_id", "user_id")); ()
+          path, SinkOps.CommitSpec(stats = Seq("event_id", "user_id"))); ()
       }
     val both = Seq(LongRange("event_id", elo, ehi),
       LongRange("user_id", t1, t2 - 1))
@@ -323,8 +327,8 @@ class Round12OpsSpec extends SparkSpec {
         col("event_id"), col("user_id"), bits = 20))
       .repartitionByRange(8, col("_z"))
       .sortWithinPartitions("_z").drop("_z")
-    SinkOps.commitVersionStats(laid, path, carryForward = true,
-      Seq("event_id", "user_id"))
+    SinkOps.commitVersion(laid, path,
+      SinkOps.CommitSpec(stats = Seq("event_id", "user_id")))
     val b = e.agg(min("event_id"), max("event_id"),
       min("user_id"), max("user_id")).head()
     // A box covering ~1/4 × ~1/4 of each dimension's range.
@@ -361,8 +365,8 @@ class Round12OpsSpec extends SparkSpec {
       path, "event_id")
     val before = SinkOps.readVersion(spark, path)
       .select("event_id").collect().map(_.getLong(0)).sorted
-    val v = SinkOps.compactVersionsZOrder(spark, path, "event_id",
-      "user_id")
+    val v = SinkOps.compactVersions(spark, path,
+      SinkOps.Compaction.ZOrder(Seq("event_id", "user_id"), bits = 20))
     val lines = SinkOps.manifestLines(spark, path, v)
     assert(lines == Seq(s"data/v$v"),
       s"z-order compact left extra lines: $lines")
@@ -397,13 +401,14 @@ class Round12OpsSpec extends SparkSpec {
     val path = tmp("r12_readgroups")
     SinkOps.commitVersion(
       Seq((1L, "a"), (2L, "b")).toDF("id", "s"), path,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.mergeVersion(Seq((2L, "B")).toDF("id", "s"), path, "id",
-      Seq("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.mergeVersion(Seq((3L, "c")).toDF("id", "s"), path, "id",
-      Seq("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     // The history shows the debt curve 1 → 2 → 3 → 1.
-    val cv = SinkOps.compactVersions(spark, path, Some("id"))
+    val cv = SinkOps.compactVersions(spark, path,
+      SinkOps.Compaction.Full(Some("id")))
     val hist = SinkOps.versionHistory(spark, path)
       .select("version", "n_delete_commits", "n_read_groups")
       .collect().map(r => (r.getInt(0), r.getInt(1), r.getInt(2)))
@@ -424,12 +429,14 @@ class Round12OpsSpec extends SparkSpec {
     SinkOps.commitVersion(
       Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "s"), path)
     val b1 = Seq((2L, "B1"), (4L, "d")).toDF("id", "s")
-    val v1 = SinkOps.mergeVersionKeyed(b1, path, "id", "batch-1")
+    val v1 = SinkOps.mergeVersion(b1, path, "id",
+      SinkOps.CommitSpec(batchKey = Some("batch-1")))
     assert(v1 == 2)
     val headAfter = SinkOps.readVersion(spark, path).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     // Redelivery: same batch key — no new commit, same version back.
-    val vRe = SinkOps.mergeVersionKeyed(b1, path, "id", "batch-1")
+    val vRe = SinkOps.mergeVersion(b1, path, "id",
+      SinkOps.CommitSpec(batchKey = Some("batch-1")))
     assert(vRe == v1, s"redelivered batch re-committed: $vRe")
     assert(SinkOps.currentVersion(spark, path) == v1,
       "redelivery appended a duplicate merge commit")
@@ -437,8 +444,9 @@ class Round12OpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert(headRe.sameElements(headAfter), "head drifted on redelivery")
     // A genuinely new batch still commits.
-    val v2 = SinkOps.mergeVersionKeyed(
-      Seq((4L, "D2")).toDF("id", "s"), path, "id", "batch-2")
+    val v2 = SinkOps.mergeVersion(
+      Seq((4L, "D2")).toDF("id", "s"), path, "id",
+      SinkOps.CommitSpec(batchKey = Some("batch-2")))
     assert(v2 == 3)
     val fin = SinkOps.readVersion(spark, path).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
@@ -455,8 +463,9 @@ class Round12OpsSpec extends SparkSpec {
     val ev = Tables.events(spark, sfDir).limit(3000)
       .localCheckpoint(true)
     val path = tmp("r12_bloomfold")
-    SinkOps.commitVersionBloom(
-      ev.repartition(3, col("user_id")), path, "event_id")
+    SinkOps.commitVersion(
+      ev.repartition(3, col("user_id")), path,
+      SinkOps.CommitSpec(blooms = Seq("event_id")))
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
     def textOf(p: org.apache.hadoop.fs.Path): String = {
@@ -515,10 +524,10 @@ class Round12OpsSpec extends SparkSpec {
     val e = Tables.events(spark, sfDir)
     val path = tmp("r12_bloommulti")
     (0 to 2).foreach { r =>
-      SinkOps.commitVersionBlooms(
+      SinkOps.commitVersion(
         e.filter((col("event_id") + col("user_id")) % 3 === r)
           .repartition(4, col("ts")),
-        path, Seq("event_id", "user_id")); ()
+        path, SinkOps.CommitSpec(blooms = Seq("event_id", "user_id"))); ()
     }
     val eMax = e.agg(max("event_id")).head().getLong(0)
     val u = e.filter(col("event_id") === eMax)
@@ -556,11 +565,11 @@ class Round12OpsSpec extends SparkSpec {
     val path = tmp("r12_skipevo")
     SinkOps.commitVersion(
       Seq((1L, "a"), (5L, "b")).toDF("id", "s"), path,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     // Evolution: the second commit adds a `lang` column.
     SinkOps.commitVersion(
       Seq((10L, "c", "en"), (20L, "d", "fr")).toDF("id", "s", "lang"),
-      path, carryForward = true, Some("id"))
+      path, SinkOps.CommitSpec(stats = Seq("id")))
     val got = SinkOps.readVersionWhere(spark, path,
         Seq(LongRange("id", 1L, 12L)), mergeSchema = true)
       .select("id", "s", "lang").collect()
@@ -596,8 +605,8 @@ class Round12OpsSpec extends SparkSpec {
     // still works on a delta chain.
     val dpath = tmp("r12_commit_occ_d")
     (1 to 3).foreach { i =>
-      SinkOps.commitVersionDelta(Seq((i.toLong, "x")).toDF("id", "s"),
-        dpath, checkpointEvery = 100); ()
+      SinkOps.commitVersion(Seq((i.toLong, "x")).toDF("id", "s"),
+        dpath, SinkOps.CommitSpec(checkpointEvery = Some(100))); ()
     }
     SinkOps.expireVersions(spark, dpath, keep = 2)
     assert(SinkOps.readVersion(spark, dpath, Some(3)).count() == 3L)
@@ -612,14 +621,14 @@ class Round12OpsSpec extends SparkSpec {
     val path = tmp("r12_dvcoal")
     SinkOps.commitVersion(
       (1L to 30L).map(i => (i, s"s$i")).toDF("id", "s"), path,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     Seq(2L, 3L).foreach { m =>
       SinkOps.deleteVersionKeys(
         (1L to 30L).filter(_ % m == 0).toDF("id"), path, "id"); ()
     }
     // A data commit splits the run; a further delete follows it.
     SinkOps.commitVersion(Seq((4L, "re")).toDF("id", "s"), path,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.deleteVersionKeys(Seq(5L, 25L).toDF("id"), path, "id")
     val before = SinkOps.readVersion(spark, path).collect()
       .map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
@@ -662,15 +671,18 @@ class Round12OpsSpec extends SparkSpec {
       "commit") {
     import spark.implicits._
     val path = tmp("r12_commitkey")
-    val v1 = SinkOps.commitVersionKeyed(
-      Seq((1L, "a")).toDF("id", "s"), path, "batch-0")
+    val v1 = SinkOps.commitVersion(
+      Seq((1L, "a")).toDF("id", "s"), path,
+      SinkOps.CommitSpec(batchKey = Some("batch-0")))
     assert(v1 == 1)
-    val vRe = SinkOps.commitVersionKeyed(
-      Seq((1L, "a")).toDF("id", "s"), path, "batch-0")
+    val vRe = SinkOps.commitVersion(
+      Seq((1L, "a")).toDF("id", "s"), path,
+      SinkOps.CommitSpec(batchKey = Some("batch-0")))
     assert(vRe == 1 && SinkOps.currentVersion(spark, path) == 1,
       "redelivered append re-committed")
-    val v2 = SinkOps.commitVersionKeyed(
-      Seq((2L, "b")).toDF("id", "s"), path, "batch-1")
+    val v2 = SinkOps.commitVersion(
+      Seq((2L, "b")).toDF("id", "s"), path,
+      SinkOps.CommitSpec(batchKey = Some("batch-1")))
     assert(v2 == 2)
     assert(SinkOps.readVersion(spark, path).count() == 2L)
   }
@@ -743,9 +755,9 @@ class Round12OpsSpec extends SparkSpec {
     // DESCRIBE HISTORY through SQL (needs stats-covered commits).
     val path2 = tmp("r12_tvf_hist")
     SinkOps.commitVersion(Seq((1L, "a"), (2L, "b")).toDF("id", "s"),
-      path2, carryForward = true, Some("id"))
+      path2, SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.commitVersion(Seq((3L, "c")).toDF("id", "s"), path2,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     val hist = spark.sql(
         s"""SELECT version, n_rows, n_read_groups
             FROM graft_history('$path2') ORDER BY version""")
@@ -765,7 +777,7 @@ class Round12OpsSpec extends SparkSpec {
       SinkOps.commitVersion(
         Tables.events(spark, sfDir).filter(col("event_id") % 3 === r)
           .repartitionByRange(4, col("event_id")),
-        path3, carryForward = true, statsCol = Some("event_id")); ()
+        path3, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
     }
     val skipSql = spark.sql(
       s"SELECT event_id FROM graft_version_where('$path3', 'event_id', 100, 199)")

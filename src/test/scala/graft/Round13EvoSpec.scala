@@ -27,10 +27,11 @@ class Round13EvoSpec extends SparkSpec {
       "table byte-untouched") {
     val t = tmp("r13_checked")
     val clean = events.filter(col("event_id") % 2 === 0)
-    val v = SinkOps.commitVersionChecked(clean, t, "event_id", Seq(
+    val v = SinkOps.commitVersion(clean, t,
+      SinkOps.CommitSpec(constraints = Some(SinkOps.Constraints("event_id", Seq(
       QualityOps.NotNull("event_type"),
       QualityOps.InRange("value", -1e9, 1e9),
-      QualityOps.Unique("event_id")))
+      QualityOps.Unique("event_id"))))))
     assert(v == 1)
     assert(SinkOps.readVersion(spark, t).count() == clean.count())
 
@@ -39,9 +40,11 @@ class Round13EvoSpec extends SparkSpec {
         when(col("event_id") % 10 === 0, lit(null: String))
           .otherwise(col("event_type")))
     val e = intercept[IllegalArgumentException] {
-      SinkOps.commitVersionChecked(dirty, t, "event_id", Seq(
+      SinkOps.commitVersion(dirty, t,
+        SinkOps.CommitSpec(constraints = Some(SinkOps.Constraints("event_id",
+          Seq(
         QualityOps.NotNull("event_type"),
-        QualityOps.Unique("event_id")))
+        QualityOps.Unique("event_id"))))))
     }
     assert(e.getMessage.contains("not_null(event_type)"),
       s"report missing the violated constraint: ${e.getMessage}")
@@ -130,7 +133,7 @@ class Round13EvoSpec extends SparkSpec {
     SinkOps.commitVersion(
       events.filter(col("event_id") % 2 === 0)
         .repartitionByRange(4, col("event_id")),
-      t, carryForward = true, statsCol = Some("event_id"))
+      t, SinkOps.CommitSpec(stats = Seq("event_id")))
     SinkOps.renameVersionColumn(spark, t, "value", "amount")
     val e1 = intercept[IllegalArgumentException] {
       SinkOps.readVersionWhere(spark, t,
@@ -147,7 +150,8 @@ class Round13EvoSpec extends SparkSpec {
     assert(e3.getMessage.contains("crosses a column rename"))
 
     // OPTIMIZE resolves, materializes the new name, purges the line.
-    SinkOps.compactVersions(spark, t, Some("event_id"))
+    SinkOps.compactVersions(spark, t,
+      SinkOps.Compaction.Full(Some("event_id")))
     val head = SinkOps.readVersion(spark, t)
     assert(head.columns.contains("amount") &&
       !head.columns.contains("value"))

@@ -199,10 +199,10 @@ class Round13OpsSpec extends SparkSpec {
       "stays bit-identical to statsOnlyAgg on a DV-free snapshot") {
     import spark.implicits._
     val path = tmp("r13_tvf_statsdv")
-    SinkOps.commitVersionStats(
+    SinkOps.commitVersion(
       (1L to 50L).map(i => (i, s"s$i")).toDF("id", "s")
         .repartitionByRange(2, col("id")),
-      path, carryForward = true, Seq("id"))
+      path, SinkOps.CommitSpec(stats = Seq("id")))
     val clean = spark.sql(s"SELECT * FROM graft_stats('$path')")
       .collect().toSeq
     assert(clean == SinkOps.statsOnlyAgg(spark, path).collect().toSeq)
@@ -263,11 +263,13 @@ class Round13OpsSpec extends SparkSpec {
     val fs = fsOf(path)
     val marker = new org.apache.hadoop.fs.Path(path, "commits/b1.txt")
     fs.create(marker, true).close()
-    val v = SinkOps.commitVersionKeyed(
-      Seq((2L, "b")).toDF("id", "s"), path, "b1")
+    val v = SinkOps.commitVersion(
+      Seq((2L, "b")).toDF("id", "s"), path,
+      SinkOps.CommitSpec(batchKey = Some("b1")))
     assert(v == 2, s"truncated marker wedged the batch (got $v)")
-    val replay = SinkOps.commitVersionKeyed(
-      Seq((2L, "b")).toDF("id", "s"), path, "b1")
+    val replay = SinkOps.commitVersion(
+      Seq((2L, "b")).toDF("id", "s"), path,
+      SinkOps.CommitSpec(batchKey = Some("b1")))
     assert(replay == 2 && SinkOps.currentVersion(spark, path) == 2,
       "redelivery after repair re-committed")
   }
@@ -307,8 +309,8 @@ class Round13OpsSpec extends SparkSpec {
     import spark.implicits._
     val path = tmp("r13_asof_vacuum")
     (1 to 5).foreach { i =>
-      SinkOps.commitVersionDelta(Seq((i.toLong, s"s$i")).toDF("id", "s"),
-        path, checkpointEvery = 100); ()
+      SinkOps.commitVersion(Seq((i.toLong, s"s$i")).toDF("id", "s"),
+        path, SinkOps.CommitSpec(checkpointEvery = Some(100))); ()
     }
     val ts4 = SinkOps.commitTimestamp(spark, path, 4)
     val ts5 = SinkOps.commitTimestamp(spark, path, 5)
@@ -354,13 +356,13 @@ class Round13OpsSpec extends SparkSpec {
     val path = tmp("r13_occ")
     SinkOps.commitVersion(Seq((1L, "base")).toDF("id", "s"), path)
     var interfered = false
-    val v = SinkOps.commitVersionRetrying(
+    val v = SinkOps.commitVersion(
       Seq((3L, "mine")).toDF("id", "s"), path,
-      beforeAttempt = n => if (n == 1) {
+      SinkOps.CommitSpec(retries = 3, beforeAttempt = n => if (n == 1) {
         // The racer lands INSIDE the window (after allocation).
         SinkOps.commitVersion(Seq((2L, "racer")).toDF("id", "s"), path)
         interfered = true
-      })
+      }))
     assert(interfered && v == 3, s"retry landed at v$v")
     assert(SinkOps.readVersion(spark, path)
       .select("id").collect().map(_.getLong(0)).sorted
@@ -374,11 +376,11 @@ class Round13OpsSpec extends SparkSpec {
     // Budget exhaustion: a racer winning every attempt surfaces the
     // loud failure with the conflict as cause.
     val ex = intercept[IllegalStateException] {
-      SinkOps.commitVersionRetrying(
-        Seq((9L, "never")).toDF("id", "s"), path, maxTries = 2,
-        beforeAttempt = _ => {
+      SinkOps.commitVersion(
+        Seq((9L, "never")).toDF("id", "s"), path,
+        SinkOps.CommitSpec(retries = 2, beforeAttempt = _ => {
           SinkOps.commitVersion(Seq((8L, "w")).toDF("id", "s"), path); ()
-        })
+        }))
     }
     assert(ex.getMessage.contains("lost 2 version races"), ex.getMessage)
   }
@@ -395,18 +397,18 @@ class Round13OpsSpec extends SparkSpec {
     val mk = (lo: Long, hi: Long) =>
       (lo to hi).map(i => (i, i * 10)).toDF("id", "v")
         .repartitionByRange(2, col("id"))
-    SinkOps.commitVersionStats(mk(1, 40), path, carryForward = true,
-      Seq("id"))
+    SinkOps.commitVersion(mk(1, 40), path,
+      SinkOps.CommitSpec(stats = Seq("id")))
     // DV-free: statsAggDv ≡ statsOnlyAgg.
     assert(SinkOps.statsAggDv(spark, path).collect().toSeq ==
       SinkOps.statsOnlyAgg(spark, path).collect().toSeq,
       "DV-free statsAggDv diverges from statsOnlyAgg")
-    SinkOps.commitVersionStats(mk(41, 80), path, carryForward = true,
-      Seq("id"))
+    SinkOps.commitVersion(mk(41, 80), path,
+      SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.deleteVersionKeys(
       (1L to 80L by 5).toDF("id"), path, "id")
-    SinkOps.commitVersionStats(mk(81, 120), path, carryForward = true,
-      Seq("id"))
+    SinkOps.commitVersion(mk(81, 120), path,
+      SinkOps.CommitSpec(stats = Seq("id")))
     // statsOnlyAgg refuses the DV manifest; statsAggDv answers.
     intercept[IllegalArgumentException] {
       SinkOps.statsOnlyAgg(spark, path)
@@ -441,10 +443,11 @@ class Round13OpsSpec extends SparkSpec {
     val path = tmp("r13_statsdv_parted")
     val mk = (lo: Long, hi: Long) =>
       (lo to hi).map(i => (i, i * 10, s"p${i % 3}")).toDF("id", "v", "p")
-    SinkOps.commitVersionStats(mk(1, 40), path, carryForward = true,
-      Seq("id"))
-    SinkOps.commitVersionPartitionedCols(mk(41, 80), path, Seq("p"),
-      statsCols = Seq("id"))
+    SinkOps.commitVersion(mk(1, 40), path,
+      SinkOps.CommitSpec(stats = Seq("id")))
+    SinkOps.commitVersion(mk(41, 80), path,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("p")),
+        stats = Seq("id")))
     SinkOps.deleteVersionKeys((1L to 80L by 5).toDF("id"), path, "id")
     val got = SinkOps.statsAggDv(spark, path).collect().head
     val live = (1L to 80L).filter(_ % 5 != 1)
@@ -465,7 +468,8 @@ class Round13OpsSpec extends SparkSpec {
       (i, if (i <= 200) None else Some(i * 3), s"r$i")
     }.toDF("a", "b", "s").repartitionByRange(2, col("a"))
     val path = tmp("r13_bloom1pass")
-    SinkOps.commitVersionBlooms(df, path, Seq("a", "b"))
+    SinkOps.commitVersion(df, path,
+      SinkOps.CommitSpec(blooms = Seq("a", "b")))
     val fs = fsOf(path)
     val sidecar = {
       val in = fs.open(new org.apache.hadoop.fs.Path(path,
@@ -519,9 +523,9 @@ class Round13OpsSpec extends SparkSpec {
       "epoch-grouped planner hands kept files their sidecars") {
     import spark.implicits._
     val path = tmp("r13_bloomdv")
-    SinkOps.commitVersionBlooms(
+    SinkOps.commitVersion(
       (1L to 100L).map(i => (i, s"x$i")).toDF("id", "s"), path,
-      Seq("id"))
+      SinkOps.CommitSpec(blooms = Seq("id")))
     SinkOps.deleteVersionKeys(Seq(7L, 9L).toDF("id"), path, "id")
     def probe(k: Long) = Seq(LongIn("id", Seq(k)))
     val ex = intercept[IllegalArgumentException] {
@@ -558,8 +562,9 @@ class Round13OpsSpec extends SparkSpec {
     }.toDF("id", "x", "y", "w")
     val path = tmp("r13_zk")
     SinkOps.commitVersion(grid, path)
-    SinkOps.compactVersionsZOrderK(spark, path, Seq("x", "y", "w"),
-      bits = 4, targetFiles = Some(16))
+    SinkOps.compactVersions(spark, path,
+      SinkOps.Compaction.ZOrder(Seq("x", "y", "w"), bits = 4,
+        targetFiles = Some(16)))
     val box = Seq(LongRange("x", 0L, 7L), LongRange("y", 0L, 7L),
       LongRange("w", 0L, 7L))
     val plan3 = SinkOps.planVersionWhere(spark, path, box)
@@ -628,10 +633,10 @@ class Round13OpsSpec extends SparkSpec {
     import spark.implicits._
     val src = tmp("r13_clone_skip_src")
     val dst = tmp("r13_clone_skip_dst")
-    SinkOps.commitVersionIndexed(
+    SinkOps.commitVersion(
       (1L to 400L).map(i => (i, i * 7 % 401, s"s$i"))
         .toDF("id", "k", "s").repartitionByRange(4, col("id")),
-      src, statsCol = "id", bloomCol = "k")
+      src, SinkOps.CommitSpec(stats = Seq("id"), blooms = Seq("k")))
     SinkOps.cloneVersion(spark, src, dst)
     // Zone-map prune through the SOURCE's sidecar, on the clone.
     val range = Seq(LongRange("id", 50L, 149L))
@@ -660,13 +665,13 @@ class Round13OpsSpec extends SparkSpec {
       "and the sweep reference-counts across the hole") {
     import spark.implicits._
     val path = tmp("r13_gap")
-    SinkOps.commitVersionStats(Seq((1L, "a")).toDF("id", "s"), path,
-      carryForward = true, Seq("id"))
+    SinkOps.commitVersion(Seq((1L, "a")).toDF("id", "s"), path,
+      SinkOps.CommitSpec(stats = Seq("id")))
     // Stage v2, commit v3 while it is staged, then roll v2 back:
     // manifests 1 and 3 remain — a legitimate numbering gap.
     val sv = SinkOps.stageVersion(Seq((2L, "b")).toDF("id", "s"), path)
-    SinkOps.commitVersionStats(Seq((3L, "c")).toDF("id", "s"), path,
-      carryForward = true, Seq("id"))
+    SinkOps.commitVersion(Seq((3L, "c")).toDF("id", "s"), path,
+      SinkOps.CommitSpec(stats = Seq("id")))
     SinkOps.rollbackStaged(spark, path, sv)
     assert(SinkOps.currentVersion(spark, path) == 3)
     val hist = SinkOps.versionHistory(spark, path)

@@ -27,11 +27,13 @@ class Round13PartSpec extends SparkSpec {
     val t = tmp("r13_part_mixed")
     // v1 partitioned, v2 UNpartitioned (mixed table), v3 partitioned,
     // v4 a delete sidecar scoping all three.
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 3 === 0), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 3 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     SinkOps.commitVersion(events.filter(col("event_id") % 3 === 1), t)
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 3 === 2), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 3 === 2), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     SinkOps.deleteVersionKeys(
       events.filter(col("event_id") % 7 === 0).select("event_id"),
       t, "event_id")
@@ -56,10 +58,12 @@ class Round13PartSpec extends SparkSpec {
       "outside the kept partition subtrees (skipped partitions cost " +
       "zero IO)") {
     val t = tmp("r13_part_plan")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 1), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 1), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
 
     val plan = SinkOps.planVersionWhere(spark, t,
       Seq(StringIn("event_type", Seq("signup"))))
@@ -83,8 +87,9 @@ class Round13PartSpec extends SparkSpec {
       "schema; requesting values across epochs under carryForward " +
       "composes") {
     val t = tmp("r13_part_empty")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_type") === "click"), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_type") === "click"), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     val got = SinkOps.readVersionWhere(spark, t,
       Seq(StringIn("event_type", Seq("signup"))))
     assert(got.count() == 0)
@@ -94,10 +99,12 @@ class Round13PartSpec extends SparkSpec {
 
   test("time travel pins the partition read to the asked snapshot") {
     val t = tmp("r13_part_tt")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 1), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 1), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     val v1 = SinkOps.readVersionWhere(spark, t,
       Seq(StringIn("event_type", Seq("view"))), version = Some(1)).count()
     val v2 = SinkOps.readVersionWhere(spark, t,
@@ -112,8 +119,9 @@ class Round13PartSpec extends SparkSpec {
   test("loud contracts: wrong partition column, empty value list, " +
       "escape-needing value, missing data column, empty batch") {
     val t = tmp("r13_part_loud")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     val e1 = intercept[IllegalArgumentException] {
       SinkOps.readVersionWhere(spark, t,
         Seq(StringIn("user_id", Seq("1")))).count()
@@ -133,11 +141,13 @@ class Round13PartSpec extends SparkSpec {
     }
     assert(e3.getMessage.contains("hive escaping"))
     intercept[IllegalArgumentException] {
-      SinkOps.commitVersionPartitioned(events, t, "no_such_col")
+      SinkOps.commitVersion(events, t,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("no_such_col"))))
     }
     val e5 = intercept[IllegalArgumentException] {
-      SinkOps.commitVersionPartitioned(
-        events.filter(lit(false)), t, "event_type")
+      SinkOps.commitVersion(
+        events.filter(lit(false)), t,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     }
     assert(e5.getMessage.contains("empty batch"))
   }
@@ -149,10 +159,14 @@ class Round13PartSpec extends SparkSpec {
     val t = tmp("r13_part_nested")
     val ev = events.withColumn("vbkt",
       (col("event_id") % 4).cast("string"))
-    SinkOps.commitVersionPartitionedCols(
-      ev.filter(col("event_id") % 3 === 0), t, Seq("event_type", "vbkt"))
-    SinkOps.commitVersionPartitionedCols(
-      ev.filter(col("event_id") % 3 === 1), t, Seq("event_type", "vbkt"))
+    SinkOps.commitVersion(
+      ev.filter(col("event_id") % 3 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type",
+        "vbkt"))))
+    SinkOps.commitVersion(
+      ev.filter(col("event_id") % 3 === 1), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type",
+        "vbkt"))))
 
     val preds = Seq(StringIn("event_type", Seq("click", "view")),
       StringIn("vbkt", Seq("1", "3")))
@@ -190,10 +204,12 @@ class Round13PartSpec extends SparkSpec {
       "zero data-file IO, prune under predicates, and refuse DVs, " +
       "mixed flat dirs, and unmaterialized renames") {
     val t = tmp("r13_part_counts")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 1), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 1), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
 
     val got = SinkOps.partCountsOnly(spark, t)
     val want = events.groupBy("event_type")
@@ -227,8 +243,9 @@ class Round13PartSpec extends SparkSpec {
     assert(e1.getMessage.contains("deletion vectors"))
 
     val t2 = tmp("r13_part_counts_mixed")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t2, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t2,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     SinkOps.commitVersion(events.filter(col("event_id") % 2 === 1), t2)
     val e2 = intercept[IllegalArgumentException] {
       SinkOps.partCountsOnly(spark, t2)
@@ -244,8 +261,9 @@ class Round13PartSpec extends SparkSpec {
       "files can vanish), DV-scoped epochs pay the exact resolve, " +
       "and a DV-free table equals partCountsOnly") {
     val t = tmp("r13_part_cnt_dv")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     // DV-free: ≡ partCountsOnly.
     val a = SinkOps.partCountsDv(spark, t)
     val b = SinkOps.partCountsOnly(spark, t)
@@ -254,8 +272,9 @@ class Round13PartSpec extends SparkSpec {
     SinkOps.deleteVersionKeys(
       events.filter(col("event_id") % 11 === 0).select("event_id"),
       t, "event_id")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 1), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 1), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
 
     // The v3 (clean-epoch) dir answers from its sidecar: vanish its
     // parquet files and the grouped counts still come out right.
@@ -327,19 +346,22 @@ class Round13PartSpec extends SparkSpec {
       "sidecar refreshed), and the layout-flattening maintenance ops " +
       "refuse loudly") {
     val t = tmp("r13_part_opt")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     SinkOps.commitVersion(events.filter(col("event_id") % 2 === 1), t)
     SinkOps.deleteVersionKeys(
       events.filter(col("event_id") % 9 === 0).select("event_id"),
       t, "event_id")
 
     val e1 = intercept[IllegalArgumentException] {
-      SinkOps.compactVersionsZOrderK(spark, t, Seq("event_id", "user_id"))
+      SinkOps.compactVersions(spark, t,
+        SinkOps.Compaction.ZOrder(Seq("event_id", "user_id")))
     }
     assert(e1.getMessage.contains("ZORDER would flatten"))
     val e2 = intercept[IllegalArgumentException] {
-      SinkOps.compactVersions(spark, t, Some("event_id"))
+      SinkOps.compactVersions(spark, t,
+        SinkOps.Compaction.Full(Some("event_id")))
     }
     assert(e2.getMessage.contains("compact without statsCol"))
 
@@ -366,19 +388,22 @@ class Round13PartSpec extends SparkSpec {
       "naming a partition column refuses (r16: stats on DATA columns " +
       "now compose with partitioning — both sidecars land)") {
     val t = tmp("r13_part_merge")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     val upd = events.filter(col("event_id") % 6 === 0)
       .withColumn("value", col("value") + 1000.0)
     // Stats on the PARTITION column refuse — the parts tier already
     // serves it exactly.
     val ePart = intercept[IllegalArgumentException] {
-      SinkOps.mergeVersion(upd, t, "event_id", Seq("event_type"))
+      SinkOps.mergeVersion(upd, t, "event_id",
+        SinkOps.CommitSpec(stats = Seq("event_type")))
     }
     assert(ePart.getMessage.contains("is a partition column"))
     // Stats on a data column compose (r16): the merged partitioned
     // dir carries BOTH a parts and a stats sidecar.
-    val vm = SinkOps.mergeVersion(upd, t, "event_id", Seq("event_id"))
+    val vm = SinkOps.mergeVersion(upd, t, "event_id",
+      SinkOps.CommitSpec(stats = Seq("event_id")))
     assert(new java.io.File(t, f"stats/v$vm.txt").exists,
       "merge into a partitioned head with statsCols wrote no stats " +
         "sidecar")
@@ -404,8 +429,9 @@ class Round13PartSpec extends SparkSpec {
   test("SQL UPDATE on a partitioned table keeps the layout (routes " +
       "through the layout-following merge)") {
     val t = tmp("r13_part_sql_update")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     events.createOrReplaceTempView("r13part_upd_events")
     spark.sql(
       s"""UPDATE graft_table('$t') SET value = value + 50.0
@@ -451,12 +477,13 @@ class Round13PartSpec extends SparkSpec {
       "parts sidecars with their dirs, and the changefeed tails " +
       "partitioned commits") {
     val t = tmp("r13_part_hist")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), t, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     SinkOps.commitVersion(
       events.filter(col("event_id") % 2 === 1)
         .repartitionByRange(2, col("event_id")),
-      t, carryForward = true, statsCol = Some("event_id"))
+      t, SinkOps.CommitSpec(stats = Seq("event_id")))
 
     val hist = SinkOps.versionHistory(spark, t).collect()
       .map(r => r.getInt(0) -> r.getLong(3)).toMap
@@ -500,8 +527,9 @@ class Round13PartSpec extends SparkSpec {
       "partition read plans from the source's parts files") {
     val src = tmp("r13_part_clone_src")
     val dst = tmp("r13_part_clone_dst")
-    SinkOps.commitVersionPartitioned(
-      events.filter(col("event_id") % 2 === 0), src, "event_type")
+    SinkOps.commitVersion(
+      events.filter(col("event_id") % 2 === 0), src,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     SinkOps.cloneVersion(spark, src, dst)
     val got = SinkOps.readVersionWhere(spark, dst,
       Seq(StringIn("event_type", Seq("purchase")))).count()

@@ -180,9 +180,9 @@ class Round14CatalogSpec extends SparkSpec {
     val path = s"$wh/tvf/ev"
     import graft.ops.SinkOps
     SinkOps.commitVersion(events.filter(col("event_id") % 2 === 0),
-      path, carryForward = true, Some("event_id"))
+      path, SinkOps.CommitSpec(stats = Seq("event_id")))
     SinkOps.commitVersion(events.filter(col("event_id") % 2 === 1),
-      path, carryForward = true, Some("event_id"))
+      path, SinkOps.CommitSpec(stats = Seq("event_id")))
     val byName = spark.sql(
       "SELECT count(*) FROM graft_version('graft.tvf.ev', 1)")
       .collect().head.getLong(0)

@@ -30,7 +30,7 @@ class Round14OpsSpec extends SparkSpec {
     val ev = events.withColumn("vint",
       (col("event_id") % 1000).cast("int"))
     SinkOps.commitVersion(ev.filter(col("event_id") % 2 === 0), t,
-      carryForward = true, Some("vint"))
+      SinkOps.CommitSpec(stats = Seq("vint")))
     val v2 = spark.sql(
       s"ALTER TABLE graft_table('$t') ALTER COLUMN vint TYPE BIGINT")
       .collect().head.getInt(0)
@@ -45,7 +45,7 @@ class Round14OpsSpec extends SparkSpec {
     // equal the relational union.
     SinkOps.commitVersion(ev.filter(col("event_id") % 2 === 1)
       .withColumn("vint", col("vint").cast("bigint")), t,
-      carryForward = true, Some("vint"))
+      SinkOps.CommitSpec(stats = Seq("vint")))
     val got = SinkOps.readVersion(spark, t)
       .agg(count(lit(1)), sum("vint")).collect().head
     val want = ev.agg(count(lit(1)), sum(col("vint").cast("bigint")))
@@ -62,7 +62,7 @@ class Round14OpsSpec extends SparkSpec {
     // grouping on schema-filtered lines).
     assert(SinkOps.versionHistory(spark, t).count() == 3)
     // OPTIMIZE materializes: the line is purged, type stays bigint.
-    SinkOps.compactVersions(spark, t, Some("vint"))
+    SinkOps.compactVersions(spark, t, SinkOps.Compaction.Full(Some("vint")))
     assert(SinkOps.readVersion(spark, t)
       .schema("vint").dataType == LongType)
     assert(SinkOps.readVersionWhere(spark, t,
@@ -110,11 +110,12 @@ class Round14OpsSpec extends SparkSpec {
         lit("merged").as("event_type"), col("value"))
     val batchCnt = batch.count()
     var raced = false
-    val v = SinkOps.mergeVersionRetrying(batch, t, "event_id",
-      beforeAttempt = n => if (n == 1 && !raced) {
+    val v = SinkOps.mergeVersion(batch, t, "event_id",
+      SinkOps.CommitSpec(retries = 3,
+        beforeAttempt = n => if (n == 1 && !raced) {
         raced = true
         SinkOps.commitVersion(competing, t); ()
-      })
+      }))
     // Both landed: competing took v2, the merge retried into v3.
     assert(v == 3)
     val head = SinkOps.readVersion(spark, t)
@@ -134,9 +135,10 @@ class Round14OpsSpec extends SparkSpec {
     val t = tmp("r14_occ_del")
     SinkOps.commitVersion(events.select("event_id", "user_id"), t)
     var raced = false
-    val v = SinkOps.deleteVersionKeysRetrying(
+    val v = SinkOps.deleteVersionKeys(
       events.filter(col("event_id") % 5 === 0).select("event_id"), t,
       "event_id",
+      retries = 3,
       beforeAttempt = n => if (n == 1 && !raced) {
         raced = true
         SinkOps.commitVersion(
@@ -148,9 +150,9 @@ class Round14OpsSpec extends SparkSpec {
       .filter(col("event_id") % 5 === 0).count() == 0)
     // Persistent pressure: a racer on EVERY attempt exhausts maxTries.
     val e = intercept[IllegalStateException] {
-      SinkOps.deleteVersionKeysRetrying(
+      SinkOps.deleteVersionKeys(
         events.limit(5).select("event_id"), t, "event_id",
-        maxTries = 2,
+        retries = 2,
         beforeAttempt = _ => {
           SinkOps.commitVersion(events.limit(3)
             .select("event_id", "user_id"), t); ()
@@ -166,8 +168,10 @@ class Round14OpsSpec extends SparkSpec {
       "lands with its declared zone maps") {
     val t = tmp("r14_checked_stage")
     val clean = events.filter(col("event_id") % 2 === 0)
-    val v = SinkOps.commitVersionChecked(clean, t, "event_id",
-      Seq(QualityOps.NotNull("event_type")), statsCols = Seq("event_id"))
+    val v = SinkOps.commitVersion(clean, t,
+      SinkOps.CommitSpec(stats = Seq("event_id"),
+        constraints = Some(SinkOps.Constraints("event_id", Seq(
+          QualityOps.NotNull("event_type"))))))
     assert(v == 1)
     // Declared stats landed for the checked commit (the r13 silent
     // drop, closed): the skip read plans.
@@ -184,8 +188,9 @@ class Round14OpsSpec extends SparkSpec {
       when(col("event_id") % 4 === 0, lit(null: String))
         .otherwise(col("event_type")))
     intercept[IllegalArgumentException] {
-      SinkOps.commitVersionChecked(dirty, t, "event_id",
-        Seq(QualityOps.NotNull("event_type")))
+      SinkOps.commitVersion(dirty, t,
+        SinkOps.CommitSpec(constraints = Some(SinkOps.Constraints("event_id",
+          Seq(QualityOps.NotNull("event_type"))))))
     }
     // Refusal cleaned its staging: no NEW data dir remains.
     val stray = fs.listStatus(new org.apache.hadoop.fs.Path(root, "data"))
@@ -262,13 +267,15 @@ class Round14OpsSpec extends SparkSpec {
     val bad1 = events.limit(50).withColumn("pt",
       concat(col("event_type"), lit(" x")))
     val e1 = intercept[Exception] {
-      SinkOps.commitVersionPartitioned(bad1, t, "pt")
+      SinkOps.commitVersion(bad1, t,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("pt"))))
     }
     assert(e1.getMessage.contains("hive escaping"),
       s"wrong refusal: ${e1.getMessage}")
     val bad2 = events.limit(50).withColumn("pt", lit("01"))
     val e2 = intercept[Exception] {
-      SinkOps.commitVersionPartitioned(bad2, t, "pt")
+      SinkOps.commitVersion(bad2, t,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("pt"))))
     }
     assert(e2.getMessage.contains("inference"),
       s"wrong refusal: ${e2.getMessage}")
@@ -277,7 +284,8 @@ class Round14OpsSpec extends SparkSpec {
     val ok = events.limit(50).withColumn("pt",
       (col("event_id") % 4).cast("string"))
     val t2 = tmp("r14_part_guard_ok")
-    SinkOps.commitVersionPartitioned(ok, t2, "pt")
+    SinkOps.commitVersion(ok, t2,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("pt"))))
     assert(SinkOps.readVersionWhere(spark, t2,
         Seq(StringIn("pt", Seq("0", "1"))))
       .count() == ok.filter(col("pt").isin("0", "1")).count())
@@ -291,7 +299,7 @@ class Round14OpsSpec extends SparkSpec {
     val t = tmp("r14_hist_rename")
     val ev = events.select("event_id", "user_id", "value")
     SinkOps.commitVersion(ev.filter(col("event_id") % 2 === 0), t,
-      carryForward = true, Some("event_id"))
+      SinkOps.CommitSpec(stats = Seq("event_id")))
     SinkOps.deleteVersionKeys(
       ev.filter(col("event_id") % 6 === 0).select("event_id"), t,
       "event_id")
@@ -325,11 +333,13 @@ class Round14OpsSpec extends SparkSpec {
     val ev = events.withColumn("vbkt",
       (col("event_id") % 4).cast("string"))
       .select("event_id", "user_id", "event_type", "value", "vbkt")
-    SinkOps.commitVersionPartitioned(
-      ev.filter(col("event_id") % 2 === 0), t, "event_type")
-    SinkOps.commitVersionPartitionedCols(
+    SinkOps.commitVersion(
+      ev.filter(col("event_id") % 2 === 0), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
+    SinkOps.commitVersion(
       ev.filter(col("event_id") % 2 === 1), t,
-      Seq("event_type", "vbkt"))
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type",
+        "vbkt"))))
     // Prune-per-dir: an event_type predicate prunes BOTH dirs'
     // leaves (kept < total), and the conjunction result is exact.
     val plan = SinkOps.planVersionWhere(spark, t,
@@ -386,7 +396,7 @@ class Round14OpsSpec extends SparkSpec {
       s"wrong refusal: ${e.getMessage}")
     val t2 = tmp("r14_adv_gauges")
     SinkOps.commitVersion(events.select("event_id", "user_id"), t2,
-      carryForward = true, Some("event_id"))
+      SinkOps.CommitSpec(stats = Seq("event_id")))
     SinkOps.deleteVersionKeys(
       events.filter(col("event_id") % 3 === 0).select("event_id"), t2,
       "event_id")

@@ -169,7 +169,7 @@ class Round15OpsSpec extends SparkSpec {
     val df = strRows.toDF("id", "s")
     // Range-cluster on s so files carry tight string bounds.
     SinkOps.commitVersion(df.repartitionByRange(5, col("s")), path,
-      carryForward = true, Some("s"))
+      SinkOps.CommitSpec(stats = Seq("s")))
     val plan = SinkOps.planVersionWhere(spark, path,
       Seq(StringRange("s", "a", "c")))
     val (kept, total) = (plan.files, plan.filesListed)
@@ -199,7 +199,7 @@ class Round15OpsSpec extends SparkSpec {
     // One file, one long value: bounds are trunc("prefix…")/"…pref"+1.
     SinkOps.commitVersion(
       Seq((1L, "prefixprefixprefix_ZZZZ")).toDF("id", "s"), path,
-      carryForward = true, Some("s"))
+      SinkOps.CommitSpec(stats = Seq("s")))
     // hi sits between the truncated min and the true value; the exact
     // min bound (a prefix) must keep the file, the residual drops the
     // row — correct empty result, no crash, no wrong skip the other
@@ -216,7 +216,7 @@ class Round15OpsSpec extends SparkSpec {
       "nested stats column at commit") {
     val path = tmp("r15_strzm_refuse")
     SinkOps.commitVersion(strRows.toDF("id", "s"), path,
-      carryForward = true, Some("s"))
+      SinkOps.CommitSpec(stats = Seq("s")))
     val e1 = intercept[IllegalArgumentException] {
       SinkOps.readVersionWhere(spark, path, Seq(LongRange("s", 1L, 5L)))
         .collect()
@@ -228,7 +228,7 @@ class Round15OpsSpec extends SparkSpec {
     assert(e2.getMessage.contains("truncated"))
     val pathN = tmp("r15_strzm_refuse_num")
     SinkOps.commitVersion(strRows.toDF("id", "s"), pathN,
-      carryForward = true, Some("id"))
+      SinkOps.CommitSpec(stats = Seq("id")))
     val e3 = intercept[IllegalArgumentException] {
       SinkOps.readVersionWhere(spark, pathN,
         Seq(StringRange("id", "a", "b"))).collect()
@@ -238,7 +238,7 @@ class Round15OpsSpec extends SparkSpec {
     val e4 = intercept[IllegalArgumentException] {
       SinkOps.commitVersion(
         strRows.toDF("id", "s").withColumn("arr", array(col("s"))),
-        pathA, carryForward = true, Some("arr"))
+        pathA, SinkOps.CommitSpec(stats = Seq("arr")))
     }
     assert(e4.getMessage.contains("nested"))
   }
@@ -251,7 +251,8 @@ class Round15OpsSpec extends SparkSpec {
     val path = tmp("r15_strbloom")
     val docs = (1L to 200L).map(i => (i, s"https://h.example.com/p$i"))
       .toDF("id", "url").repartition(8)
-    SinkOps.commitVersionBloom(docs, path, "url")
+    SinkOps.commitVersion(docs, path,
+      SinkOps.CommitSpec(blooms = Seq("url")))
     def probe(u: String) = Seq(StringIn("url", Seq(u)))
     val plan = SinkOps.planVersionWhere(spark, path,
       probe("https://h.example.com/p42"))
@@ -270,8 +271,8 @@ class Round15OpsSpec extends SparkSpec {
     }
     assert(e1.getMessage.contains("string-typed"))
     val pathN = tmp("r15_strbloom_num")
-    SinkOps.commitVersionBloom((1L to 50L).map(i => (i, s"s$i"))
-      .toDF("id", "s"), pathN, "id")
+    SinkOps.commitVersion((1L to 50L).map(i => (i, s"s$i"))
+      .toDF("id", "s"), pathN, SinkOps.CommitSpec(blooms = Seq("id")))
     val e2 = intercept[IllegalArgumentException] {
       SinkOps.readVersionWhere(spark, pathN, Seq(StringIn("id", Seq("42"))))
         .collect()
@@ -284,7 +285,8 @@ class Round15OpsSpec extends SparkSpec {
     val path = tmp("r15_cdf_strbloom")
     val docs = (1L to 100L).map(i => (s"doc$i", s"body$i"))
       .toDF("doc_id", "body").repartition(4)
-    SinkOps.commitVersionBloom(docs, path, "doc_id")
+    SinkOps.commitVersion(docs, path,
+      SinkOps.CommitSpec(blooms = Seq("doc_id")))
     val batch = Seq(("doc7", "rewritten"), ("docNEW", "fresh"))
       .toDF("doc_id", "body")
     val v2 = SinkOps.mergeVersion(batch, path, "doc_id")
@@ -342,8 +344,9 @@ class Round15OpsSpec extends SparkSpec {
     }
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = SinkOps.compactVersionsRetrying(spark, path,
-      maxTries = 2, beforeAttempt = a => if (a == 1) {
+    val v = SinkOps.compactVersions(spark, path,
+      retries = 2,
+      beforeAttempt = a => if (a == 1) {
         SinkOps.commitVersion(Seq((4L, "racer")).toDF("id", "s"),
           path); ()
       })
@@ -358,7 +361,8 @@ class Round15OpsSpec extends SparkSpec {
       .length == 5, "stale pack left behind")
     // Budget exhaustion: every attempt loses → loud, not silent.
     val e = intercept[IllegalStateException] {
-      SinkOps.compactVersionsRetrying(spark, path, maxTries = 2,
+      SinkOps.compactVersions(spark, path,
+        retries = 2,
         beforeAttempt = _ => {
           SinkOps.commitVersion(
             Seq((99L, "again")).toDF("id", "s"), path); ()
@@ -374,20 +378,28 @@ class Round15OpsSpec extends SparkSpec {
     SinkOps.commitVersion(Seq((1L, "a")).toDF("id", "s"), path)
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // A nested stats column passes the constraint check but refuses
-    // inside writeDirStats — a publish-phase failure.
+    // The batch passes the constraint check and is staged with its
+    // stats, then a racer takes the version inside the publish window
+    // and the single manifest attempt loses — a publish-phase failure.
+    // (A nested stats column now refuses before anything is staged.)
     intercept[IllegalArgumentException] {
-      SinkOps.commitVersionChecked(
-        Seq((2L, "b")).toDF("id", "s")
-          .withColumn("arr", array(col("s"))),
-        path, "id",
-        Seq(QualityOps.NotNull("id")), statsCols = Seq("arr"))
+      SinkOps.commitVersion(Seq((2L, "b")).toDF("id", "s"), path,
+        SinkOps.CommitSpec(stats = Seq("id"),
+          constraints = Some(SinkOps.Constraints("id",
+            Seq(QualityOps.NotNull("id")))),
+          beforeAttempt = _ => {
+            SinkOps.commitVersion(Seq((3L, "r")).toDF("id", "s"), path)
+            ()
+          }))
     }
     val dirs = fs.listStatus(new org.apache.hadoop.fs.Path(root,
-      "data")).map(_.getPath.getName).toSeq
-    assert(dirs == Seq("v1"),
+      "data")).map(_.getPath.getName).toSeq.sorted
+    assert(dirs == Seq("v1", "v2"),
       s"publish failure orphaned staging: $dirs")
-    assert(SinkOps.readVersion(spark, path).count() == 1)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(root, "stats")) ||
+      fs.listStatus(new org.apache.hadoop.fs.Path(root, "stats")).isEmpty,
+      "publish failure orphaned the staged stats sidecar")
+    assert(SinkOps.readVersion(spark, path).count() == 2)
   }
 
   // ---- sidecar-served CDF attribution ----
@@ -399,8 +411,10 @@ class Round15OpsSpec extends SparkSpec {
     val mk = (lo: Long, hi: Long) => (lo to hi)
       .map(i => (i, s"v$i")).toDF("id", "s")
       .repartitionByRange(4, col("id"))
-    SinkOps.commitVersionBloom(mk(1L, 200L), path, "id")
-    SinkOps.commitVersionBloom(mk(201L, 400L), path, "id")
+    SinkOps.commitVersion(mk(1L, 200L), path,
+      SinkOps.CommitSpec(blooms = Seq("id")))
+    SinkOps.commitVersion(mk(201L, 400L), path,
+      SinkOps.CommitSpec(blooms = Seq("id")))
     val batch = ((150L to 160L) ++ (500L to 510L))
       .map(i => (i, s"new$i")).toDF("id", "s")
     val v3 = SinkOps.mergeVersion(batch, path, "id")
@@ -436,7 +450,7 @@ class Round15OpsSpec extends SparkSpec {
   }
 
   test("SQL maintenance verbs take RETRY n: ALTER/RESTORE/OPTIMIZE " +
-      "parse and land; RETRY on ZORDER refuses") {
+      "parse and land, OPTIMIZE ... ZORDER BY included") {
     val path = tmp("r15_occ_sql")
     SinkOps.commitVersion(Seq((1L, 1)).toDF("id", "vint"), path)
     SinkOps.commitVersion(Seq((2L, 2)).toDF("id", "vint"), path)
@@ -448,10 +462,8 @@ class Round15OpsSpec extends SparkSpec {
       .collect().head.getInt(0) == 5)
     assert(spark.sql(s"RESTORE graft_table('$path') VERSION AS OF 4 " +
       "RETRY 1").collect().head.getInt(0) == 6)
-    val e = intercept[Exception] {
-      spark.sql(s"OPTIMIZE graft_table('$path') ZORDER BY (id, vint) " +
-        "RETRY 2")
-    }
-    assert(e.getMessage.contains("ZORDER"))
+    assert(spark.sql(s"OPTIMIZE graft_table('$path') ZORDER BY " +
+      "(id, vlong) RETRY 2").collect().head.getInt(0) == 7)
+    assert(SinkOps.readVersion(spark, path).count() == 2)
   }
 }

@@ -50,7 +50,7 @@ class Round15StreamSpec extends SparkSpec {
       "only contract) — loudly, not silently wrong") {
     val path = tmp("r15_stream_dv")
     SinkOps.commitVersion((1L to 6L).map(i => (i, s"s$i"))
-      .toDF("id", "s"), path, carryForward = true)
+      .toDF("id", "s"), path)
     val q = spark.readStream.format("graft").load(path)
       .writeStream.format("memory").queryName("r15_gs_dv")
       .outputMode("append").start()
@@ -74,7 +74,7 @@ class Round15StreamSpec extends SparkSpec {
     val path = tmp("r15_stream_rate")
     (1 to 4).foreach { i =>
       SinkOps.commitVersion(Seq((i.toLong, s"s$i")).toDF("id", "s"),
-        path, carryForward = true); ()
+        path); ()
     }
     val q = spark.readStream.format("graft")
       .option("maxVersionsPerTrigger", "1").load(path)
@@ -94,7 +94,7 @@ class Round15StreamSpec extends SparkSpec {
       // 1 version per trigger = 3 delta batches.
       (5 to 7).foreach { i =>
         SinkOps.commitVersion(Seq((i.toLong, s"s$i")).toDF("id", "s"),
-          path, carryForward = true); ()
+          path); ()
       }
       q.processAllAvailable()
       assert(spark.table("r15_gs_rate").count() == 7)
@@ -111,15 +111,14 @@ class Round15StreamSpec extends SparkSpec {
     val out = tmp("r15_stream_restart_out")
     val ckpt = tmp("r15_stream_restart_ckpt")
     SinkOps.commitVersion(Seq((1L, "a"), (2L, "b")).toDF("id", "s"),
-      path, carryForward = true)
+      path)
     def start() = spark.readStream.format("graft").load(path)
       .writeStream.format("parquet")
       .option("path", out).option("checkpointLocation", ckpt)
       .outputMode("append").start()
     val q1 = start()
     try q1.processAllAvailable() finally q1.stop()
-    SinkOps.commitVersion(Seq((3L, "c")).toDF("id", "s"), path,
-      carryForward = true)
+    SinkOps.commitVersion(Seq((3L, "c")).toDF("id", "s"), path)
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
     val got = spark.read.parquet(out)
@@ -138,7 +137,7 @@ class Round15StreamSpec extends SparkSpec {
     val ckpt = tmp("r15_sink_ckpt")
     (1 to 3).foreach { i =>
       SinkOps.commitVersion(Seq((i.toLong, s"s$i")).toDF("id", "s"),
-        src, carryForward = true); ()
+        src); ()
     }
     // The sink appends to an EXISTING table — initialize with an
     // empty first commit (a typo'd sink path must never become a
@@ -156,7 +155,7 @@ class Round15StreamSpec extends SparkSpec {
       // batches, each landing as its own sink commit.
       (4 to 5).foreach { i =>
         SinkOps.commitVersion(Seq((i.toLong, s"s$i")).toDF("id", "s"),
-          src, carryForward = true); ()
+          src); ()
       }
       q.processAllAvailable()
     } finally q.stop()
@@ -178,15 +177,15 @@ class Round15StreamSpec extends SparkSpec {
     val dst = tmp("r15_sink_replay")
     SinkOps.commitVersion(Seq((0L, "init")).toDF("id", "s"), dst)
     val b = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
-    assert(SinkOps.commitStreamBatch(b, dst, batchId = 5).isDefined)
+    assert(SinkOps.commitStreamBatch(b, dst,5).isDefined)
     // Replay: same batchId → skipped, table unchanged.
-    assert(SinkOps.commitStreamBatch(b, dst, batchId = 5).isEmpty)
+    assert(SinkOps.commitStreamBatch(b, dst,5).isEmpty)
     assert(SinkOps.readVersion(spark, dst).count() == 3)
     // Compaction packs the head; the pre-pack manifest still
     // references data/b5 until VACUUM expires it → replay still
     // skipped, no duplicate rows re-entering the packed table.
     SinkOps.compactVersions(spark, dst)
-    assert(SinkOps.commitStreamBatch(b, dst, batchId = 5).isEmpty)
+    assert(SinkOps.commitStreamBatch(b, dst,5).isEmpty)
     assert(SinkOps.readVersion(spark, dst).count() == 3)
     // Crash window: a batch dir on disk referenced by NO manifest is
     // the data-write-then-crash shape — the deterministic replay
@@ -195,10 +194,10 @@ class Round15StreamSpec extends SparkSpec {
     Seq((9L, "crash")).toDF("id", "s").write.mode("overwrite")
       .parquet(new org.apache.hadoop.fs.Path(root, "data/b7").toString)
     assert(SinkOps.commitStreamBatch(
-      Seq((9L, "crash")).toDF("id", "s"), dst, batchId = 7).isDefined)
+      Seq((9L, "crash")).toDF("id", "s"), dst,7).isDefined)
     assert(SinkOps.readVersion(spark, dst).count() == 4)
     assert(SinkOps.commitStreamBatch(
-      Seq((9L, "crash")).toDF("id", "s"), dst, batchId = 7).isEmpty)
+      Seq((9L, "crash")).toDF("id", "s"), dst,7).isEmpty)
   }
 
   test("graft sink refusals are loud: uninitialized target path, " +
@@ -230,10 +229,8 @@ class Round15StreamSpec extends SparkSpec {
   test("graft stream pins schema at start and a startingVersion " +
       "stream skips the already-consumed prefix") {
     val path = tmp("r15_stream_startv")
-    SinkOps.commitVersion(Seq((1L, "a")).toDF("id", "s"), path,
-      carryForward = true)
-    SinkOps.commitVersion(Seq((2L, "b")).toDF("id", "s"), path,
-      carryForward = true)
+    SinkOps.commitVersion(Seq((1L, "a")).toDF("id", "s"), path)
+    SinkOps.commitVersion(Seq((2L, "b")).toDF("id", "s"), path)
     // startingVersion=1 (exclusive): only v2's delta arrives.
     val q = spark.readStream.format("graft")
       .option("startingVersion", "1").load(path)

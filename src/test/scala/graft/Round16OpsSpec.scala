@@ -39,7 +39,7 @@ class Round16OpsSpec extends SparkSpec {
       SinkOps.commitVersion(
         events.filter(col("event_id") % 2 === r)
           .repartitionByRange(4, col("ts")),
-        t, carryForward = true, Some("ts")); ()
+        t, SinkOps.CommitSpec(stats = Seq("ts"))); ()
     }
     assert(firstLine(new java.io.File(t, "stats/v1.txt")) == "ts#tsus")
     // Micros granularity: at least one stored bound carries sub-second
@@ -76,8 +76,8 @@ class Round16OpsSpec extends SparkSpec {
     assert(e1.getMessage.contains("tsus-kinded") &&
       e1.getMessage.contains("MicrosRange"))
     val tn = tmp("r16_tsus_num")
-    SinkOps.commitVersion(events, tn, carryForward = true,
-      Some("event_id"))
+    SinkOps.commitVersion(events, tn,
+      SinkOps.CommitSpec(stats = Seq("event_id")))
     assert(firstLine(new java.io.File(tn, "stats/v1.txt")) == "event_id",
       "plain numeric stats header grew a tag — pre-r16 sidecars " +
         "must stay byte-identical")
@@ -99,7 +99,7 @@ class Round16OpsSpec extends SparkSpec {
     val t = tmp("r16_day")
     val ev = events.withColumn("d", col("ts").cast("date"))
     SinkOps.commitVersion(ev.repartitionByRange(4, col("d")), t,
-      carryForward = true, Some("d"))
+      SinkOps.CommitSpec(stats = Seq("d")))
     assert(firstLine(new java.io.File(t, "stats/v1.txt")) == "d#day")
     val b = ev.agg(min("d"), max("d")).head()
     val (loD, hiD) = (b.getDate(0).toLocalDate, b.getDate(1).toLocalDate)
@@ -118,20 +118,43 @@ class Round16OpsSpec extends SparkSpec {
       "date range read != full-scan filter")
   }
 
+  /** A refused commit left the table untouched: no head, and no data
+    * dir or sidecar on disk.
+    */
+  private def assertUntouched(t: String): Unit = {
+    assert(SinkOps.currentVersion(spark, t) == 0,
+      "refused commit moved the head")
+    Seq("data", "stats", "blooms", "manifest").foreach(k =>
+      assert(!new java.io.File(t, k).exists, s"refused commit left $k/"))
+  }
+
   test("stats/bloom column names ending in a reserved kind tag refuse " +
       "at write (a '#str'-named column would mis-key every read)") {
     val t = tmp("r16_tagname")
     val df = Seq((1L, "v")).toDF("id", "x#str")
     val e1 = intercept[IllegalArgumentException] {
-      SinkOps.commitVersionStats(df, t, carryForward = true,
-        Seq("x#str"))
+      SinkOps.commitVersion(df, t, SinkOps.CommitSpec(stats = Seq("x#str")))
     }
     assert(e1.getMessage.contains("reserved kind tag"))
+    assertUntouched(t)
+    val tb = tmp("r16_tagname_b")
     val e2 = intercept[IllegalArgumentException] {
-      SinkOps.commitVersionBlooms(df, tmp("r16_tagname_b"),
-        Seq("x#str"))
+      SinkOps.commitVersion(df, tb,
+        SinkOps.CommitSpec(blooms = Seq("x#str")))
     }
     assert(e2.getMessage.contains("reserved kind tag"))
+    assertUntouched(tb)
+  }
+
+  test("an array-typed bloom column refuses before the commit publishes: " +
+      "head 0, no data dir, no bloom sidecar") {
+    val t = tmp("r16_bloom_array")
+    val df = Seq((1L, Seq(1L, 2L))).toDF("id", "xs")
+    val e = intercept[IllegalArgumentException] {
+      SinkOps.commitVersion(df, t, SinkOps.CommitSpec(blooms = Seq("xs")))
+    }
+    assert(e.getMessage.contains("point-lookup blooms need"), e.getMessage)
+    assertUntouched(t)
   }
 
   // ---- per-file zone maps inside partitioned commits ----
@@ -142,10 +165,12 @@ class Round16OpsSpec extends SparkSpec {
       "dirs planned whole, a partition column as stats column refuses") {
     val t = tmp("r16_pstats")
     (0 to 1).foreach { r =>
-      SinkOps.commitVersionPartitionedCols(
+      SinkOps.commitVersion(
         events.filter(col("event_id") % 2 === r)
           .repartitionByRange(4, col("event_id")),
-        t, Seq("event_type"), statsCols = Seq("event_id")); ()
+        t,
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")),
+          stats = Seq("event_id"))); ()
     }
     assert(new java.io.File(t, "stats/v1.txt").exists &&
       new java.io.File(t, "parts/v1.txt").exists,
@@ -180,10 +205,11 @@ class Round16OpsSpec extends SparkSpec {
       "composed read != resolved full-scan conjunction")
     // A partitioned dir WITHOUT stats is planned whole — never a
     // wrong skip; equality still holds on the mixed table.
-    SinkOps.commitVersionPartitionedCols(
+    SinkOps.commitVersion(
       events.filter(col("event_id") % 2 === 0)
         .withColumn("event_id", col("event_id") + lit(10000000L)),
-      t, Seq("event_type"))
+      t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     val got2 = SinkOps.readVersionWhere(spark, t, preds)
       .select("event_id", "user_id", "event_type")
     val want2 = SinkOps.readVersion(spark, t)
@@ -194,8 +220,9 @@ class Round16OpsSpec extends SparkSpec {
       want2.exceptAll(got2).isEmpty,
       "stat-less partitioned dir broke the composed read")
     val e = intercept[IllegalArgumentException] {
-      SinkOps.commitVersionPartitionedCols(events, tmp("r16_pstats_x"),
-        Seq("event_type"), statsCols = Seq("event_type"))
+      SinkOps.commitVersion(events, tmp("r16_pstats_x"),
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")),
+          stats = Seq("event_type")))
     }
     assert(e.getMessage.contains("is a partition column"))
   }
@@ -207,8 +234,9 @@ class Round16OpsSpec extends SparkSpec {
     val t = tmp("r16_pbloom")
     val ev = events.withColumn("ekey",
       concat(lit("k"), col("event_id")))
-    SinkOps.commitVersionPartitionedCols(ev.repartition(8), t,
-      Seq("event_type"), bloomCols = Seq("event_id", "ekey"))
+    SinkOps.commitVersion(ev.repartition(8), t,
+      SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")),
+        blooms = Seq("event_id", "ekey")))
     SinkOps.deleteVersionKeys(
       events.filter(col("event_id") % 7 === 0).select("event_id"),
       t, "event_id")
@@ -251,8 +279,9 @@ class Round16OpsSpec extends SparkSpec {
     assert(e2.getMessage.contains("numeric"))
     // Bloom on a partition column refuses at commit.
     val e3 = intercept[IllegalArgumentException] {
-      SinkOps.commitVersionPartitionedCols(ev, tmp("r16_pbloom_x"),
-        Seq("event_type"), bloomCols = Seq("event_type"))
+      SinkOps.commitVersion(ev, tmp("r16_pbloom_x"),
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")),
+          blooms = Seq("event_type")))
     }
     assert(e3.getMessage.contains("is a partition column"))
   }
@@ -264,9 +293,9 @@ class Round16OpsSpec extends SparkSpec {
       "initial window as snapshot inserts, and refuses a compaction " +
       "rewrite and a key mismatch loudly") {
     val t = tmp("r16_cdf")
-    SinkOps.commitVersionBloom(
+    SinkOps.commitVersion(
       Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
-        .toDF("id", "s", "v"), t, "id")
+        .toDF("id", "s", "v"), t, SinkOps.CommitSpec(blooms = Seq("id")))
     SinkOps.mergeVersion(
       Seq((2L, "b2", 25.0), (9L, "z", 90.0)).toDF("id", "s", "v"),
       t, "id")
@@ -329,8 +358,7 @@ class Round16OpsSpec extends SparkSpec {
       .outputMode("append").start()
     try {
       q.processAllAvailable()
-      SinkOps.commitVersion(Seq((2L, "b")).toDF("id", "s"), t,
-        carryForward = true)
+      SinkOps.commitVersion(Seq((2L, "b")).toDF("id", "s"), t)
       q.processAllAvailable()
     } finally q.stop()
     val rows = spark.table("r16_cdf_mem")
@@ -349,13 +377,13 @@ class Round16OpsSpec extends SparkSpec {
     SinkOps.commitVersion(Seq((0L, "init")).toDF("id", "s"), t)
     val b = Seq((1L, "a")).toDF("id", "s")
     var fired = false
-    val res = SinkOps.commitStreamBatch(b, t, batchId = 3,
+    val res = SinkOps.commitStreamBatch(b, t,3,
       beforeAttempt = n => {
         if (n == 1 && !fired) {
           fired = true
           // The zombie's twin incarnation lands the SAME batch between
           // this writer's version allocation and manifest attempt.
-          assert(SinkOps.commitStreamBatch(b, t, batchId = 3).isDefined)
+          assert(SinkOps.commitStreamBatch(b, t,3).isDefined)
         }
       })
     assert(res.isEmpty,
@@ -395,9 +423,9 @@ class Round16OpsSpec extends SparkSpec {
       "re-advises none, and flat tables report 0") {
     val t = tmp("r16_advleaf")
     (0 to 4).foreach { r =>
-      SinkOps.commitVersionPartitionedCols(
+      SinkOps.commitVersion(
         events.filter(col("event_id") % 5 === r), t,
-        Seq("event_type")); ()
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")))); ()
     }
     val adv = SinkOps.maintenanceAdvice(spark, t,
       targetRowsPerFile = 1L, maxFilesPerLeaf = 4).collect().head
@@ -411,8 +439,8 @@ class Round16OpsSpec extends SparkSpec {
       after.getAs[Long]("max_leaf_files") <= 4L,
       s"post-OPTIMIZE gauges: $after")
     val tf = tmp("r16_advleaf_flat")
-    SinkOps.commitVersion(events, tf, carryForward = true,
-      Some("event_id"))
+    SinkOps.commitVersion(events, tf,
+      SinkOps.CommitSpec(stats = Seq("event_id")))
     assert(SinkOps.maintenanceAdvice(spark, tf).collect().head
       .getAs[Long]("max_leaf_files") == 0L)
   }
