@@ -3,6 +3,7 @@ package graft.ops
 import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Sink operators — the reference's output surface, Spark-first.
   *
@@ -421,12 +422,15 @@ object SinkOps {
         }
         writeParquet(df, at(dir).toString, partCols)
         b.spec.constraints.foreach(gate(spark, path, at(dir), _))
+        // One footer read per written file serves every sidecar.
+        lazy val footers =
+          dirFooters(fs, at(dir), spark.sessionState.newHadoopConf())
         if (partCols.nonEmpty) writeDirParts(fs, root, dir, partCols,
-          spark.sessionState.newHadoopConf())
-        if (b.spec.stats.nonEmpty)
-          writeDirStats(spark, fs, root, dir, b.spec.stats)
-        if (b.spec.blooms.nonEmpty)
-          writeDirBloom(spark, fs, root, dir, b.spec.blooms)
+          footers)
+        if (b.spec.stats.nonEmpty) writeDirStats(spark, fs, root, dir,
+          b.spec.stats, df.schema, footers)
+        if (b.spec.blooms.nonEmpty) writeDirBloom(spark, fs, root, dir,
+          b.spec.blooms, df.schema, footers)
       }
       (s, b)
     }
@@ -549,18 +553,7 @@ object SinkOps {
     throw new IllegalStateException("unreachable")
   }
 
-  /** Per-file min/max of the declared columns for one immutable data
-    * dir, as `stats/<dirname>.txt`: first line the TAB-JOINED column
-    * names, then one line per file —
-    * `name<TAB>min1<TAB>max1<TAB>…<TAB>minK<TAB>maxK<TAB>rowcount`; a
-    * column with no non-null value in the file leaves its min/max
-    * EMPTY (unprunable on that column, still metadata-countable). The
-    * k=1 format is byte-identical to the original single-column
-    * sidecar; legacy 1- and 3-field lines parse statless/countless.
-    * One bounded read-back of the commit's own files computes ALL
-    * columns' stats in a single aggregate. Stats are per-dir immutable
-    * like the data they describe: a snapshot's full zone map is the
-    * union of its manifest dirs' stats files.
+  /** Code points kept in a string stats bound.
     *
     * STRING columns (r15) get Iceberg-style TRUNCATED bounds instead
     * of the silent all-null sidecar the long cast used to produce:
@@ -684,12 +677,17 @@ object SinkOps {
   /** The header kind of a stats sidecar column of type `dt` (with
     * `bloom`, of a bloom column: strings hash, everything else
     * long-casts). Nested and binary columns refuse — such a sidecar
-    * could never prune.
+    * could never prune. So do the types whose long cast can overflow
+    * — FLOAT, DOUBLE (NaN, ±Infinity, |x| ≥ 2^63) and a DECIMAL with
+    * more than 18 integer digits: under ANSI the cast throws, and the
+    * refusal must come here, before any file is written, rather than
+    * from the sidecar writer after the data dir exists.
     */
   private def sidecarKind(c: String,
                           dt: org.apache.spark.sql.types.DataType,
                           bloom: Boolean): String = {
     import org.apache.spark.sql.types._
+    val what = if (bloom) "bloom" else "stats"
     dt match {
       case StringType => StatKindStr
       case TimestampType | TimestampNTZType if !bloom => StatKindTsUs
@@ -701,6 +699,15 @@ object SinkOps {
           else s"stats column $c has type ${dt.sql} — zone maps need a " +
             "long-castable, string, timestamp, or date column (a " +
             "nested/binary sidecar could never prune)")
+      case FloatType | DoubleType => throw new IllegalArgumentException(
+        s"$what column $c has type ${dt.sql} — its long cast overflows " +
+          "on NaN, ±Infinity and |x| ≥ 2^63; declare the sidecar on an " +
+          "integral or decimal(p, s) column with p - s <= 18")
+      case d: DecimalType if d.precision - d.scale > 18 =>
+        throw new IllegalArgumentException(
+          s"$what column $c has type ${dt.sql} — more than 18 integer " +
+            "digits overflow its long cast; declare the sidecar on a " +
+            "decimal(p, s) column with p - s <= 18")
       case _ => ""
     }
   }
@@ -712,17 +719,21 @@ object SinkOps {
     * reader key per-file sidecar lines INSIDE kept partitions.
     */
   private def relFile(fs: org.apache.hadoop.fs.FileSystem,
-                      dirP: org.apache.hadoop.fs.Path, uri: String): String = {
+                      dirP: org.apache.hadoop.fs.Path,
+                      file: org.apache.hadoop.fs.Path): String = {
     val qdir = fs.makeQualified(dirP)
     val segs = scala.collection.mutable.ListBuffer.empty[String]
-    var cur = fs.makeQualified(
-      new org.apache.hadoop.fs.Path(new java.net.URI(uri)))
+    var cur = fs.makeQualified(file)
     while (cur != null && cur != qdir) {
       segs.prepend(cur.getName); cur = cur.getParent
     }
-    require(cur != null, s"sidecar file $uri is not under $qdir")
+    require(cur != null, s"sidecar file $file is not under $qdir")
     segs.mkString("/")
   }
+
+  /** `input_file_name()`'s URI as a path, for [[relFile]]. */
+  private def uriPath(uri: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(new java.net.URI(uri))
 
   /** Write `lines` as one UTF-8 text file (sidecars, markers,
     * manifests).
@@ -736,42 +747,185 @@ object SinkOps {
     finally out.close()
   }
 
+  private[graft] type Footers = Seq[(org.apache.hadoop.fs.Path,
+    org.apache.parquet.hadoop.metadata.ParquetMetadata)]
+
+  /** Every parquet file under `dirP` (recursively: a hive-partitioned
+    * dir keeps its files in leaf subtrees) with its full footer — one
+    * driver-side metadata read per file, zero data IO, no Spark job.
+    * The commit pipeline reads a new dir's footers once and derives
+    * every sidecar it declares from them.
+    */
+  private[graft] def dirFooters(fs: org.apache.hadoop.fs.FileSystem,
+                                dirP: org.apache.hadoop.fs.Path,
+                                conf: org.apache.hadoop.conf.Configuration)
+      : Footers = {
+    val it = fs.listFiles(dirP, true)
+    Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.endsWith(".parquet"))
+      .map(st => st.getPath -> org.apache.spark.sql.execution.datasources
+        .parquet.ParquetFooterReader.readFooter(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+          org.apache.parquet.format.converter.ParquetMetadataConverter
+            .NO_FILTER))
+      .toList
+  }
+
+  private def footerRows(
+      meta: org.apache.parquet.hadoop.metadata.ParquetMetadata): Long =
+    meta.getBlocks.asScala.map(_.getRowCount).sum
+
+  /** Per-file min/max of the declared columns for one immutable data
+    * dir, as `stats/<dirname>.txt`: first line the TAB-JOINED column
+    * names, then one line per file —
+    * `name<TAB>min1<TAB>max1<TAB>…<TAB>minK<TAB>maxK<TAB>rowcount`; a
+    * column with no non-null value in the file leaves its min/max
+    * EMPTY (unprunable on that column, still metadata-countable). The
+    * k=1 format is byte-identical to the original single-column
+    * sidecar; legacy 1- and 3-field lines parse statless/countless.
+    * Stats are per-dir immutable like the data they describe: a
+    * snapshot's full zone map is the union of its manifest dirs'
+    * stats files.
+    *
+    * The cells come from the footers the commit just wrote
+    * ([[footerStatsLines]]): driver-side, no Spark job. A dir whose
+    * footers cannot serve every cell takes the aggregate over its
+    * files instead ([[aggregateStatsLines]], two jobs), whole — both
+    * writers produce the same bytes, so the fallback is per dir.
+    * Column kinds come from the batch schema [[checkSpec]] checked.
+    */
   private def writeDirStats(spark: org.apache.spark.sql.SparkSession,
                             fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path,
-                            dataDir: String, cols: Seq[String]): Unit = {
+                            dataDir: String, cols: Seq[String],
+                            schema: org.apache.spark.sql.types.StructType,
+                            footers: Footers): Unit = {
     val dirP = new org.apache.hadoop.fs.Path(root, dataDir)
-    val df = Tables.parquet(spark, dirP.toString)
     val kinds = cols.map(c =>
-      sidecarKind(c, df.schema(c).dataType, bloom = false))
+      sidecarKind(c, schema(c).dataType, bloom = false))
+    val header = cols.zip(kinds)
+      .map { case (c, k) => if (k.isEmpty) c else s"$c#$k" }
+      .mkString("\t")
+    val lines = footerStatsLines(fs, dirP, cols, schema, footers)
+      .getOrElse(aggregateStatsLines(spark, fs, dirP, cols, kinds))
+    writeLines(fs, sidecarFile(root, dataDir, "stats"), header +: lines)
+  }
+
+  /** A file's min/max cells: a string bound truncated
+    * ([[truncCp]]/[[statUpperBound]]) and escaped, a long as decimal;
+    * two empty cells when the file has no non-null value.
+    */
+  private def statCells(bounds: Option[(Any, Any)]): Seq[String] =
+    bounds match {
+      case None => Seq("", "")
+      case Some((mn: String, mx: String)) => Seq(
+        escapeStat(truncCp(mn, StatStrTruncLen)),
+        escapeStat(statUpperBound(mx, StatStrTruncLen)))
+      case Some((mn, mx)) => Seq(mn.toString, mx.toString)
+    }
+
+  /** The stats sidecar's file lines, from one aggregate over the dir's
+    * files grouped by `input_file_name()`: [[statKindExpr]]'s min/max
+    * per column plus the row count. Serves any kind.
+    */
+  private[graft] def aggregateStatsLines(
+      spark: org.apache.spark.sql.SparkSession,
+      fs: org.apache.hadoop.fs.FileSystem, dirP: org.apache.hadoop.fs.Path,
+      cols: Seq[String], kinds: Seq[String]): Seq[String] = {
     val aggs = cols.zip(kinds).flatMap { case (c, k) =>
       if (k == StatKindStr)
         Seq(min(col(c)).as(s"mn_$c"), max(col(c)).as(s"mx_$c"))
       else Seq(min(statKindExpr(c, k)).as(s"mn_$c"),
         max(statKindExpr(c, k)).as(s"mx_$c"))
     } :+ count(lit(1)).as("n")
-    val rows = df
+    Tables.parquet(spark, dirP.toString)
       .groupBy(input_file_name().as("f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
-    val header = cols.zip(kinds)
-      .map { case (c, k) => if (k.isEmpty) c else s"$c#$k" }
-      .mkString("\t")
-    val lines = header +: rows.map { r =>
-      val name = relFile(fs, dirP, r.getString(0))
-      val mm = cols.indices.flatMap { i =>
-        if (r.isNullAt(1 + 2 * i) || r.isNullAt(2 + 2 * i)) Seq("", "")
-        else if (kinds(i) == StatKindStr) Seq(
-          escapeStat(truncCp(r.getString(1 + 2 * i), StatStrTruncLen)),
-          escapeStat(statUpperBound(r.getString(2 + 2 * i),
-            StatStrTruncLen)))
-        else Seq(r.getLong(1 + 2 * i).toString,
-          r.getLong(2 + 2 * i).toString)
-      }
-      (name +: mm :+ r.getLong(1 + 2 * cols.length).toString)
-        .mkString("\t")
-    }.sorted
-    writeLines(fs, sidecarFile(root, dataDir, "stats"), lines)
+      .map { r =>
+        val mm = cols.indices.flatMap { i =>
+          statCells(Option.when(!r.isNullAt(1 + 2 * i))(
+            (r.get(1 + 2 * i), r.get(2 + 2 * i))))
+        }
+        (relFile(fs, dirP, uriPath(r.getString(0))) +: mm :+
+          r.getLong(1 + 2 * cols.length).toString).mkString("\t")
+      }.toSeq.sorted
+  }
+
+  /** The stats sidecar's file lines from the dir's footers, or None
+    * when some file or column cannot serve them. Each file folds its
+    * row groups' statistics through the map [[statKindExpr]] applies
+    * ([[footerBounds]]); `n` is the sum of the row groups' counts; a
+    * file with no rows gets no line (the aggregate never grouped one).
+    */
+  private[graft] def footerStatsLines(fs: org.apache.hadoop.fs.FileSystem,
+      dirP: org.apache.hadoop.fs.Path, cols: Seq[String],
+      schema: org.apache.spark.sql.types.StructType, footers: Footers)
+      : Option[Seq[String]] = {
+    val live = footers.filter { case (_, m) => footerRows(m) > 0 }
+    val bounds = live.map { case (_, m) =>
+      cols.map(c => footerBounds(m, c, schema(c).dataType)) }
+    if (bounds.exists(_.contains(None))) None
+    else Some(live.zip(bounds).map { case ((f, m), bs) =>
+      (relFile(fs, dirP, f) +: bs.flatMap(b => statCells(b.get)) :+
+        footerRows(m).toString).mkString("\t")
+    }.sorted)
+  }
+
+  /** The footer key Spark writes when it rebased dates to the legacy
+    * hybrid calendar (`SPARK_LEGACY_DATETIME_METADATA_KEY`, private to
+    * Spark): such INT32 values are not the epoch day.
+    */
+  private val LegacyDateTimeKey = "org.apache.spark.legacyDateTime"
+
+  /** Column `c`'s (min, max) in one file from its footer — Some(None)
+    * when every row group holds only nulls — or None when the footer
+    * cannot give the value the aggregate would: a type it does not
+    * serve (timestamps, which Spark writes as INT96 with no order
+    * statistics; booleans; decimals), dates written in the legacy
+    * calendar, or a row group without statistics (parquet drops a
+    * string column's min/max over its size cap). Integral values map
+    * to their long, dates (INT32 epoch days) to the epoch day, strings
+    * to their UTF-8 decoding, ordered by code point as Spark orders
+    * them ([[cpCompare]]).
+    */
+  private def footerBounds(
+      meta: org.apache.parquet.hadoop.metadata.ParquetMetadata, c: String,
+      dt: org.apache.spark.sql.types.DataType): Option[Option[(Any, Any)]] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+    import org.apache.spark.sql.types._
+    if (dt == DateType &&
+        meta.getFileMetaData.getKeyValueMetaData.containsKey(LegacyDateTimeKey))
+      return None
+    val (physical, value) = dt match {
+      case ByteType | ShortType | IntegerType | DateType =>
+        (INT32, (v: Any) => v.asInstanceOf[Integer].toLong)
+      case LongType => (INT64, (v: Any) => v)
+      case StringType => (BINARY, (v: Any) =>
+        v.asInstanceOf[org.apache.parquet.io.api.Binary].toStringUsingUTF8)
+      case _ => return None
+    }
+    def order(a: Any, b: Any): Int = (a, b) match {
+      case (x: String, y: String) => cpCompare(x, y)
+      case (x: Long, y: Long) => java.lang.Long.compare(x, y)
+    }
+    val perGroup = meta.getBlocks.asScala.toSeq.map { g =>
+      g.getColumns.asScala.find(_.getPath.toArray.sameElements(Array(c)))
+        .filter(_.getPrimitiveType.getPrimitiveTypeName == physical)
+        .flatMap(ch => Option(ch.getStatistics))
+        .flatMap { st =>
+          if (st.hasNonNullValue)
+            Some(Some((value(st.genericGetMin), value(st.genericGetMax))))
+          else if (st.isNumNullsSet && st.getNumNulls == g.getRowCount)
+            Some(None)
+          else None
+        }
+    }
+    if (perGroup.contains(None)) None
+    else Some(perGroup.flatten.flatten.reduceOption { (a, b) =>
+      (if (order(a._1, b._1) <= 0) a._1 else b._1,
+        if (order(a._2, b._2) >= 0) a._2 else b._2)
+    })
   }
 
   /** Parsed stats sidecar of one data dir: the declared columns (with
@@ -2851,40 +3005,17 @@ object SinkOps {
     * data it describes; resolved against each data dir's own table
     * root like the stats/bloom sidecars, so shallow clones inherit it.
     */
-  /** Every parquet file under `dirP` (recursively: a hive-partitioned
-    * dir keeps its files in leaf subtrees) with its footer row count —
-    * driver-side metadata reads, zero data IO, no Spark job.
-    */
-  private def footerRowCounts(fs: org.apache.hadoop.fs.FileSystem,
-                              dirP: org.apache.hadoop.fs.Path,
-                              conf: org.apache.hadoop.conf.Configuration)
-      : Seq[(org.apache.hadoop.fs.Path, Long)] = {
-    val out = scala.collection.mutable.ListBuffer
-      .empty[(org.apache.hadoop.fs.Path, Long)]
-    val it = fs.listFiles(dirP, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-          org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromStatus(st, conf))
-        out += st.getPath -> (try r.getRecordCount finally r.close())
-      }
-    }
-    out.toList
-  }
-
   private def writeDirParts(fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path,
                             dataDir: String, partCols: Seq[String],
-                            conf: org.apache.hadoop.conf.Configuration)
-      : Unit = {
+                            footers: Footers): Unit = {
     val dirP = new org.apache.hadoop.fs.Path(root, dataDir)
     // Qualify before relativizing: listFiles returns scheme-qualified
     // paths (file:/…) while a caller-supplied root may be schemeless.
     val prefix = fs.makeQualified(dirP).toString + "/"
     val counts = scala.collection.mutable.Map.empty[String, (Long, Long)]
-    footerRowCounts(fs, dirP, conf).foreach { case (file, n) =>
+    footers.foreach { case (file, meta) =>
+      val n = footerRows(meta)
       val rel = file.getParent.toString.stripPrefix(prefix)
       val segs = rel.split('/')
       require(segs.length == partCols.length &&
@@ -3175,8 +3306,9 @@ object SinkOps {
   private def writeDirBloom(spark: org.apache.spark.sql.SparkSession,
                             fs: org.apache.hadoop.fs.FileSystem,
                             root: org.apache.hadoop.fs.Path,
-                            dataDir: String, cols: Seq[String]): Unit = {
-    val dirStr = new org.apache.hadoop.fs.Path(root, dataDir).toString
+                            dataDir: String, cols: Seq[String],
+                            schema: org.apache.spark.sql.types.StructType,
+                            footers: Footers): Unit = {
     // Size the dir's bitmaps to its LARGEST file: m = nextPow2(16·n),
     // clamped to [2^13, 2^24] bits (1 KiB..2 MiB per file) — beyond
     // the cap the false-positive rate degrades gracefully instead of
@@ -3186,8 +3318,7 @@ object SinkOps {
     // reads, zero data IO, no Spark job) — sizing must not cost a
     // scan of its own.
     val dirP = new org.apache.hadoop.fs.Path(root, dataDir)
-    val maxN = footerRowCounts(fs, dirP, spark.sessionState.newHadoopConf())
-      .map(_._2).foldLeft(1L)(math.max)
+    val maxN = footers.map(f => footerRows(f._2)).foldLeft(1L)(math.max)
     val m = math.min(1L << 24,
       math.max(1L << 13,
         java.lang.Long.highestOneBit(16L * maxN - 1) << 1)).toInt
@@ -3210,9 +3341,8 @@ object SinkOps {
     // (which ANSI-refuses strings) — point lookups on URLs/doc ids
     // are exactly what a dedup/decontam pipeline probes. Header tags
     // the column `name#str` so probes know to hash, not cast.
-    val src0 = Tables.parquet(spark, dirStr)
     val isStr = cols.map(c =>
-      sidecarKind(c, src0.schema(c).dataType, bloom = true) == StatKindStr)
+      sidecarKind(c, schema(c).dataType, bloom = true) == StatKindStr)
     val posArrays = cols.zip(isStr).map { case (c, str) =>
       val base = if (str) xxhash64(col(c)) else col(c).cast("long")
       val vn = pmod(base, lit(BloomP))
@@ -3222,7 +3352,7 @@ object SinkOps {
             lit(m.toLong)).cast("int"))
       }: _*).as(s"_pos_$c")
     }
-    val folded = src0
+    val folded = Tables.parquet(spark, dirP.toString)
       .select(input_file_name().as("f") +: posArrays: _*)
       .select(col("f") +: cols.map(c => col(s"_pos_$c")) :+
         explode(array((0 until BloomA.length).map(j => lit(j)): _*))
@@ -3240,7 +3370,7 @@ object SinkOps {
       .map { case (c, str) => if (str) s"$c#str" else c }.mkString("\t")
     val lines = header +: folded
       .map { r =>
-        val name = relFile(fs, dirP, r.getString(0))
+        val name = relFile(fs, dirP, uriPath(r.getString(0)))
         (name, cols.indices.map(i => r.getString(1 + i)))
       }
       .filter(_._2.exists(_ != zeroHex)) // null-in-every-column files
