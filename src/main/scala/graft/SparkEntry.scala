@@ -964,7 +964,7 @@ object SparkEntry {
     // iterations + int64 fixed-point math so ranks are bit-identical
     // across partitionings and engines (GraphOps scaladoc).
     "q_pagerank" -> ((s, d) =>
-      GraphOps.pageRankFixed(
+      GraphOps.pageRank(
         GraphOps.edgesFromLineitem(Tables.lineitem(s, d), PrMod), PrIters)),
     // HITS hubs/authorities — 8 mutual-reinforcement rounds with
     // max-normalization so every intermediate stays exact int64
@@ -975,9 +975,9 @@ object SparkEntry {
     // Personalized PageRank — teleport mass restricted to the mod-10
     // seed set; the related-page / topic-conditioned ranking query.
     "q_ppr" -> ((s, d) =>
-      GraphOps.personalizedPageRank(
+      GraphOps.pageRank(
         GraphOps.edgesFromLineitem(Tables.lineitem(s, d), PrMod),
-        PrIters, PprSeedMod)),
+        PrIters, seedMod = Some(PprSeedMod))),
     // Common-neighbor link prediction: wedge-join candidates (never all
     // pairs) on the sparse TriMod graph, exact Jaccard ppm, stable
     // top-100 under a deterministic total order.
@@ -993,14 +993,13 @@ object SparkEntry {
     "q_pagerank_incr" -> ((s, d) => {
       val li = Tables.lineitem(s, d)
       val path = tmpPath("graft_prwarm", d)
-      GraphOps.pageRankFixed(
+      GraphOps.pageRank(
           GraphOps.edgesFromLineitem(
             li.filter(col("l_linenumber") <= 4), PrMod), PrIters)
         .select("node", "rank_fp")
         .write.mode("overwrite").parquet(path)
-      GraphOps.pageRankWarmStart(
-        GraphOps.edgesFromLineitem(li, PrMod),
-        Tables.parquet(s, path), PrWarmIters)
+      GraphOps.pageRank(GraphOps.edgesFromLineitem(li, PrMod),
+        PrWarmIters, prior = Some(Tables.parquet(s, path)))
     }),
     // Convergence-driven variant (driver-side scalar L1 stop). Iteration
     // count is data-dependent → no SQL oracle; driver records a
@@ -1078,7 +1077,7 @@ object SparkEntry {
     // mod-9973 graph (the dense mod-997 fixture's weighted mass profile
     // adds nothing the unweighted q_pagerank doesn't already pin).
     "q_pagerank_weighted" -> ((s, d) =>
-      GraphOps.pageRankWeighted(
+      GraphOps.pageRank(
         GraphOps.weightedEdgesFromLineitem(Tables.lineitem(s, d), TriMod),
         PrwIters)),
 
@@ -1966,7 +1965,7 @@ object SparkEntry {
     // the production shape (extraction fused ahead of the iterative
     // rank loop, string node keys end-to-end).
     "q_crawl_rank" -> ((s, d) =>
-      GraphOps.pageRankWeighted(
+      GraphOps.pageRank(
         CurationOps.linkGraph(CurationOps.linkWrap(Tables.documents(s, d)))
           .select(col("src_domain").as("src"),
             col("dst_domain").as("dst"), col("n_links").as("w")),
@@ -3732,10 +3731,10 @@ object SparkEntry {
       val b = ev.agg(min("event_id"), max("event_id")).head()
       val (lo, hi) = (b.getLong(0), b.getLong(1))
       val path = tmpPath("graft_spart", d)
-      graft.streaming.StreamOps.versionedSinkReplayPartitioned(ev,
+      graft.streaming.StreamOps.versionedSinkReplay(ev,
         path, tmpPath("graft_spart_stage", d), "event_id",
         Seq(lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3),
-        Seq("event_type"))
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
       SinkOps.readVersionWhere(s, path,
           Seq(StringIn("event_type", Seq("click", "signup"))))
         .agg(count(lit(1)).as("n_rows"),
@@ -3777,10 +3776,10 @@ object SparkEntry {
       val b = o.agg(min("o_orderkey"), max("o_orderkey")).head()
       val (lo, hi) = (b.getLong(0), b.getLong(1))
       val span4 = (hi - lo + 1) / 4
-      val latest = graft.streaming.StreamOps.versionedSinkReplayDelta(o,
+      val latest = graft.streaming.StreamOps.versionedSinkReplay(o,
         tmpPath("graft_ttd", d), tmpPath("graft_ttd_stage", d),
         "o_orderkey", Seq(lo + span4, lo + 2 * span4, lo + 3 * span4),
-        checkpointEvery = 3)
+        SinkOps.CommitSpec(checkpointEvery = Some(3)))
       latest.agg(
           count(lit(1)).as("n_rows"),
           AggOps.exactSum(col("o_totalprice")).as("sum_price"),
@@ -6813,7 +6812,7 @@ object SparkEntry {
     * place the dialects split), traversed level by level and rolled up
     * per depth. Demonstrates WITH RECURSIVE as shared surface; for
     * 100 TB-scale iteration the dedicated broadcast-loop graph ops
-    * (pageRankFixed, connectedComponents) remain the right tool — a
+    * (pageRank, connectedComponents) remain the right tool — a
     * recursive CTE re-joins the frontier each level through the
     * general-purpose planner.
     */
@@ -7100,7 +7099,7 @@ object SparkEntry {
        ORDER BY c_custkey, totalprice DESC, o_orderkey"""
 
   /** DuckDB oracle for q_pagerank: same fixed-point integer recurrence as
-    * GraphOps.pageRankFixed, unrolled into one chained CTE per iteration
+    * GraphOps.pageRank, unrolled into one chained CTE per iteration
     * (`//` is DuckDB integer division = Spark's `div` on nonnegative
     * operands).
     */
@@ -7197,9 +7196,10 @@ object SparkEntry {
   }
 
   /** Personalized-PageRank oracle: the [[pageRankOracle]] unroll with
-    * teleport base only on the mod-`seedMod` seed set (engine's
-    * GraphOps.personalizedPageRank term-for-term, including the seeded
-    * r0).
+    * teleport base only on the mod-`seedMod` seed set: the integers of
+    * GraphOps.pageRank with `seedMod`, including the seeded r0 (the
+    * engine unions the no-in-edge nodes at their base where this
+    * left-joins the node set; both give base + 0 there).
     */
   private def pprOracle(iters: Int, mod: Int, seedMod: Int): String = {
     val base = "CASE WHEN n.node % " + seedMod +
@@ -7258,7 +7258,7 @@ object SparkEntry {
   /** Warm-start incremental-PageRank oracle: `baseIters` unrolled
     * rounds over the line-1..4 edge subset, then `warmIters` rounds
     * over the FULL edge set initialized from the base result (new
-    * nodes at the cold init) — GraphOps.pageRankWarmStart
+    * nodes at the cold init) — GraphOps.pageRank with `prior`
     * term-for-term.
     */
   private def pageRankIncrOracle(baseIters: Int, warmIters: Int,

@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * The merged symbol is `replace(pk, "||", "")` — `"|ab|"` — so the
   * pair key itself carries the rewrite.
   *
-  * Scale shape (the driver-loop discipline of GraphOps.pageRankFixed,
-  * GraphOps.scala:148): the corpus is scanned ONCE into the word
+  * Scale shape (the driver-loop discipline of GraphOps.pageRank's
+  * rank loop): the corpus is scanned ONCE into the word
   * frequency table; every round after that runs on the compressed vocab
   * (|distinct words| rows, orders of magnitude below |corpus|). Per
   * round: one generated pair explode + keyed int64 agg (map-side

@@ -67,19 +67,17 @@ object GraphOps {
 
   /** Adaptive broadcast guard shared by every graph loop: a per-node
     * int64 vector (node + payload ≈ `bytesPerRow`) is broadcast only if
-    * `rows × bytesPerRow` fits the session broadcast budget. `explicit`
-    * (the per-operator `bcast*` parameter) always wins when supplied —
-    * the caller who KNOWS the graph shape keeps the override — but the
-    * default no longer assumes the vector fits: a 10^9-node graph now
-    * selects the shuffled plan automatically instead of dying at plan
-    * time on a ~16 GB broadcast. `rows` comes from ONE aggregated count
-    * per decision (the sanctioned driver-side scalar), evaluated on the
-    * already-persisted/checkpointed vector.
+    * `rows × bytesPerRow` fits the session broadcast budget
+    * ([[broadcastBudget]]), so a 10^9-node graph selects the shuffled
+    * plan instead of dying at plan time on a ~16 GB broadcast. To force
+    * the shuffled plan, set `spark.sql.autoBroadcastJoinThreshold=-1`
+    * on the session; `rows` is then never evaluated. `rows` comes from
+    * ONE aggregated count per decision (the sanctioned driver-side
+    * scalar), evaluated on the already-persisted/checkpointed vector.
     */
-  private[graft] def decideBroadcast(explicit: Option[Boolean], rows: => Long,
-                                     budget: Long,
+  private[graft] def decideBroadcast(rows: => Long, budget: Long,
                                      bytesPerRow: Long = 16L): Boolean =
-    explicit.getOrElse(budget > 0 && rows * bytesPerRow <= budget)
+    budget > 0 && rows * bytesPerRow <= budget
 
   /** Distinct endpoints of the edge list. */
   def nodes(edges: DataFrame): DataFrame =
@@ -111,7 +109,7 @@ object GraphOps {
       .filter(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(min("l_linenumber").cast("long").as("w"))
 
-  /** Nodes with no incoming edges — their rank is the damping base every
+  /** Nodes with no incoming edges — their rank is the teleport base every
     * iteration, so it is computed ONCE and unioned in per step instead of
     * left-joining the whole node set against the contribution sums.
     */
@@ -119,158 +117,148 @@ object GraphOps {
     nodes(edges).join(edges.select(col("dst").as("node")).distinct(),
       Seq("node"), "left_anti")
 
-  /** One PageRank iteration: explode contributions along edges, re-sum per
-    * target, apply damping. `ew` = edges with outdegree attached; `noIn` =
-    * precomputed nodes without in-edges (their rank is the constant
-    * damping base — unioned in, no join). `bcastRanks` broadcasts the rank
-    * vector into the edge join — the right plan whenever |V| fits an
-    * executor (the rank table is 16 B/node; even 10^8 nodes ≈ 1.6 GB), so
-    * the big edge table never shuffles for the join and the only exchange
-    * per iteration is the contribution re-aggregation keyed on dst. For
-    * graphs whose rank vector exceeds broadcast budget, pass false to
-    * fall back to a shuffled join. Vs the previous formulation (left-join
-    * of the full node set against broadcast sums) this removes one
-    * broadcast barrier and one join per iteration.
+  /** Damping in percent: rank' = base + (DampPct · Σshare) div 100, with
+    * base = (100 − DampPct)% · [[Scale]]. The oracles replay 85.
     */
-  private def step(ew: DataFrame, noIn: DataFrame, ranks: DataFrame,
-                   dampPct: Int, bcastRanks: Boolean): DataFrame = {
-    val r = if (bcastRanks) broadcast(ranks) else ranks
-    val base = (100L - dampPct) * (Scale / 100)
-    val contrib = ew.join(r, ew("src") === r("node"))
-      .select(ew("dst").as("node"), expr("rank_fp div deg").as("share"))
-    contrib.groupBy("node").agg(sum("share").as("c"))
-      .select(col("node"),
-        (lit(base) + expr(s"($dampPct * c) div 100")).as("rank_fp"))
-      .union(noIn.select(col("node"), lit(base).as("rank_fp")))
-  }
+  private val DampPct = 85
+
+  /** Rounds between lineage cuts of the rank vector: a persist every
+    * `CutEvery` rounds, and the L1 probe of [[pageRankConverged]].
+    */
+  private val CutEvery = 3
 
   /** Fixed-iteration PageRank (deterministic, oracle-checkable).
     * Output: (node, rank_fp: int64 fixed-point, rank: double), globally
-    * sorted rank desc — the reference's step-3 contract.
+    * sorted rank desc — the reference's step-3 contract. One loop serves
+    * every variant, chosen by the arguments:
     *
-    * The rank lineage is cut with a persist every `persistEvery`
-    * iterations: a deeply nested unmaterialized chain of broadcast-join
-    * steps makes every replan/re-optimization pass over the whole chain
-    * (measured 2-3× slower end-to-end at 10 deep), and on a real cluster
-    * unbounded lineage is a failure-recovery hazard. The cached rank
-    * vector is |V| rows — 16 B/node — so the segments are cheap to hold.
+    *  - '''Weighted''' when `edges` carries a `w` column — the
+    *    `(src, dst, w: int64 > 0)` shape [[ssspWeighted]] and
+    *    [[labelPropagationWeighted]] take. Each node's rank splits across
+    *    its out-arcs by weight: share(u→v) = (rank_fp(u) · w) div wdeg(u),
+    *    wdeg = Σ outgoing w; with uniform weights this equals the
+    *    unweighted share rank_fp div outdeg (spec-pinned). The share
+    *    numerator is rank_fp·w BEFORE the div, so the headroom bound
+    *    tightens by max(w): max(w)·|V|·Scale < 2^63, enforced with one
+    *    aggregated max at entry (a BigInt check that cannot overflow);
+    *    ANSI mode still backstops any in-loop overflow loudly.
+    *  - '''Warm start''' from `prior` (node, rank_fp): the nightly-append
+    *    shape — re-rank a grown edge set for a few rounds from
+    *    yesterday's persisted vector instead of the full budget from
+    *    scratch. Nodes absent from the prior start at the cold init. The
+    *    result is bit-identical to unrolling base-rounds + warm-rounds,
+    *    which is what the oracle replays.
+    *  - '''Personalized''' with `seedMod`: teleport mass only on the seed
+    *    set (node % seedMod = 0) — "importance as seen FROM the seeds",
+    *    the query behind related-page and topic-conditioned ranking.
+    *    base(v) = (100 − DampPct)% · Scale for seeds, 0 otherwise, and
+    *    the cold init is that base vector; non-seed rank arrives only
+    *    through in-links, so mass decays through dangling nodes exactly
+    *    as the push-style formulation prescribes.
+    *
+    * Per round: the rank vector (16 B/node) broadcasts into the edge
+    * join under the adaptive guard ([[decideBroadcast]]), so the edge
+    * list never shuffles for the join and the only exchange is the
+    * contribution re-aggregation keyed on dst; nodes without in-edges
+    * take base(node), unioned in from a set computed once. The rank
+    * lineage is cut with a persist every [[CutEvery]] rounds: a deeply
+    * nested unmaterialized chain of broadcast-join steps makes every
+    * replan pass over the whole chain (measured 2-3× slower end-to-end
+    * at 10 deep), and on a real cluster unbounded lineage is a
+    * failure-recovery hazard.
     */
-  def pageRankFixed(edges: DataFrame, iters: Int, dampPct: Int = 85,
-                    bcastRanks: Option[Boolean] = None,
-                    persistEvery: Int = 3): DataFrame = {
-    require(iters >= 1 && dampPct >= 0 && dampPct <= 100 && persistEvery >= 1)
-    val e = edges
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // Reused every iteration — persist so the scan+distinct+join runs once.
-    val ew = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val noIn = noInNodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val n0 = nodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    // |V| is constant across iterations, so the broadcast-vs-shuffle
+  def pageRank(edges: DataFrame, iters: Int, prior: Option[DataFrame] = None,
+               seedMod: Option[Int] = None): DataFrame = {
+    require(iters >= 1 && seedMod.forall(_ >= 1))
+    rankLoop(edges, iters, prior, seedMod, tolFp = None)._1
+  }
+
+  /** Convergence-driven PageRank: the [[pageRank]] loop, stopped once the
+    * L1 rank diff (in fixed-point units) drops below `tolFp`, or after
+    * `maxIters` rounds. Convergence is tested every [[CutEvery]] rounds:
+    * each check materializes the current ranks (persist) and ships ONE
+    * aggregated long to the driver — no per-node driver state, and only
+    * maxIters/CutEvery driver round-trips. The L1 is measured across the
+    * whole block (diffs shrink geometrically, so the block diff
+    * upper-bounds the last per-round diff — the test is conservative);
+    * the loop may overshoot convergence by up to CutEvery−1 rounds,
+    * which only tightens the result. Returns (final ranks sorted desc,
+    * rounds run).
+    */
+  def pageRankConverged(edges: DataFrame, maxIters: Int,
+                        tolFp: Long): (DataFrame, Int) =
+    rankLoop(edges, maxIters, prior = None, seedMod = None, Some(tolFp))
+
+  /** The rank loop behind [[pageRank]] and [[pageRankConverged]]. One step
+    * is c = Σ share over in-arcs, rank' = base(node) + (DampPct · c) div
+    * 100, unioned with base(node) for the nodes without in-edges.
+    */
+  private def rankLoop(edges: DataFrame, iters: Int, prior: Option[DataFrame],
+                       seedMod: Option[Int],
+                       tolFp: Option[Long]): (DataFrame, Int) = {
+    val pin = StorageLevel.MEMORY_AND_DISK
+    val weighted = edges.columns.contains("w")
+    val deg = edges.groupBy("src")
+      .agg((if (weighted) sum("w") else count(lit(1))).as("deg"))
+    // Reused every round — persist so the scan+distinct+join runs once.
+    val ew = edges.join(deg, "src").persist(pin)
+    val noIn = noInNodes(edges).persist(pin)
+    val n0 = nodes(edges).persist(pin)
+    // |V| is constant across rounds, so the broadcast-vs-shuffle
     // decision is made ONCE from one aggregated count of the node set.
-    val bc = decideBroadcast(bcastRanks, n0.count(),
-      broadcastBudget(e.sparkSession))
-    var ranks = n0.select(col("node"), lit(Scale).as("rank_fp"))
-    for (i <- 1 to iters) {
-      ranks = step(ew, noIn, ranks, dampPct, bc)
-      if (i % persistEvery == 0 && i < iters)
-        ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    ranks.select(col("node"), col("rank_fp"),
-        (col("rank_fp").cast("double") / lit(Scale.toDouble)).as("rank"))
-      .orderBy(col("rank_fp").desc, col("node"))
-  }
-
-  /** PageRank WARM-STARTED from a persisted rank vector — the
-    * incremental-graph companion to [[pageRankFixed]] and the graph
-    * tier's entry in the persisted-artifact family: a nightly batch
-    * appends edges, re-ranking runs a few rounds from yesterday's
-    * persisted vector over the grown edge set instead of the full
-    * budget from scratch (on power-law graphs a handful of warm rounds
-    * re-converges the mass the new edges move; the full-rebuild cadence
-    * is periodic, exactly like the dedup index's snapshot re-mine).
-    * Nodes absent from the prior (brand-new pages) start at the cold
-    * init [[Scale]]. Same int64 fixed-point per-round contract, so the
-    * result is bit-identical to unrolling base-rounds + warm-rounds —
-    * which is what the oracle replays. One keyed exchange per round.
-    */
-  def pageRankWarmStart(edges: DataFrame, prior: DataFrame, iters: Int,
-                        dampPct: Int = 85,
-                        bcastRanks: Option[Boolean] = None,
-                        persistEvery: Int = 3): DataFrame = {
-    require(iters >= 1 && dampPct >= 0 && dampPct <= 100 && persistEvery >= 1)
-    val e = edges
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ew = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val noIn = noInNodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val n0 = nodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val bc = decideBroadcast(bcastRanks, n0.count(),
-      broadcastBudget(e.sparkSession))
-    var ranks = n0.join(prior.select("node", "rank_fp"), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("rank_fp"), lit(Scale)).as("rank_fp"))
-    for (i <- 1 to iters) {
-      ranks = step(ew, noIn, ranks, dampPct, bc)
-      if (i % persistEvery == 0 && i < iters)
-        ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    ranks.select(col("node"), col("rank_fp"),
-        (col("rank_fp").cast("double") / lit(Scale.toDouble)).as("rank"))
-      .orderBy(col("rank_fp").desc, col("node"))
-  }
-
-  /** Weighted PageRank over a general DIRECTED weighted edge list
-    * (src, dst, w: int64 > 0) — the companion to [[ssspWeighted]] on the
-    * same real-user graph shape: weights arrive as a COLUMN, not a
-    * synthesized function. Each node's rank splits across its out-arcs
-    * proportionally to weight: share(u→v) = (rank_fp(u) · w) div
-    * wdeg(u), wdeg = Σ outgoing w — integer arithmetic throughout, so
-    * ranks stay bit-identical across partitionings and engines (the
-    * [[pageRankFixed]] discipline; with uniform weights the two
-    * operators coincide, spec-pinned).
-    *
-    * Scale shape is [[pageRankFixed]]'s exactly: the rank vector
-    * (16 B/node) broadcasts into the edge join under the adaptive guard
-    * — the weighted edge list itself never shuffles for the join; the
-    * only per-iteration exchange is the contribution re-aggregation
-    * keyed on dst. Lineage is persist-cut every `persistEvery` rounds.
-    *
-    * Headroom: the share numerator is rank_fp·w BEFORE the div, so the
-    * worst case tightens from the unweighted bound by max(w):
-    * max(w)·|V|·Scale < 2^63. Enforced with one aggregated max at
-    * entry (BigInt check — the guard itself cannot overflow); ANSI mode
-    * still backstops any in-loop concentration overflow loudly.
-    */
-  def pageRankWeighted(wEdges: DataFrame, iters: Int, dampPct: Int = 85,
-                       bcastRanks: Option[Boolean] = None,
-                       persistEvery: Int = 3): DataFrame = {
-    require(iters >= 1 && dampPct >= 0 && dampPct <= 100 && persistEvery >= 1)
-    val wdeg = wEdges.groupBy("src").agg(sum("w").as("wdeg"))
-    val ew = wEdges.join(wdeg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val noIn = noInNodes(wEdges).persist(StorageLevel.MEMORY_AND_DISK)
-    val n0 = nodes(wEdges).persist(StorageLevel.MEMORY_AND_DISK)
-    val nNodes = n0.count()
-    val maxW = wEdges.agg(max("w")).head().getLong(0)
-    require(maxW >= 1, s"edge weights must be positive (max=$maxW)")
-    require(BigInt(maxW) * nNodes * Scale < BigInt(Long.MaxValue),
-      s"max(w)=$maxW at |V|=$nNodes exceeds int64 fixed-point headroom; " +
-        "lower GraphOps.Scale or rescale weights")
-    val bc = decideBroadcast(bcastRanks, nNodes, broadcastBudget(wEdges.sparkSession))
-    val base = (100L - dampPct) * (Scale / 100)
-    var ranks = n0.select(col("node"), lit(Scale).as("rank_fp"))
-    for (i <- 1 to iters) {
+    val budget = broadcastBudget(edges.sparkSession)
+    val bc =
+      if (!weighted) decideBroadcast(n0.count(), budget)
+      else {
+        val nNodes = n0.count()
+        // An empty edge set has no weight to bound (max is null).
+        val maxW = edges.agg(coalesce(max("w"), lit(1L))).head().getLong(0)
+        require(maxW >= 1, s"edge weights must be positive (max=$maxW)")
+        require(BigInt(maxW) * nNodes * Scale < BigInt(Long.MaxValue),
+          s"max(w)=$maxW at |V|=$nNodes exceeds int64 fixed-point " +
+            "headroom; lower GraphOps.Scale or rescale weights")
+        decideBroadcast(nNodes, budget)
+      }
+    val share =
+      expr(if (weighted) "(rank_fp * w) div deg" else "rank_fp div deg")
+    val base = (100L - DampPct) * (Scale / 100)
+    val baseOf = seedMod.fold(lit(base))(m =>
+      when(col("node") % m === 0, base).otherwise(0L))
+    val cold = if (seedMod.isDefined) baseOf else lit(Scale)
+    def step(ranks: DataFrame): DataFrame = {
       val r = if (bc) broadcast(ranks) else ranks
-      val contrib = ew.join(r, ew("src") === r("node"))
-        .select(ew("dst").as("node"), expr("(rank_fp * w) div wdeg").as("share"))
-      ranks = contrib.groupBy("node").agg(sum("share").as("c"))
+      ew.join(r, ew("src") === r("node"))
+        .select(ew("dst").as("node"), share.as("share"))
+        .groupBy("node").agg(sum("share").as("c"))
         .select(col("node"),
-          (lit(base) + expr(s"($dampPct * c) div 100")).as("rank_fp"))
-        .union(noIn.select(col("node"), lit(base).as("rank_fp")))
-      if (i % persistEvery == 0 && i < iters)
-        ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
+          (baseOf + expr(s"($DampPct * c) div 100")).as("rank_fp"))
+        .union(noIn.select(col("node"), baseOf.as("rank_fp")))
     }
-    ranks.select(col("node"), col("rank_fp"),
+    val init = prior.fold(n0.select(col("node"), cold.as("rank_fp")))(p =>
+      n0.join(p.select("node", "rank_fp"), Seq("node"), "left")
+        .select(col("node"), coalesce(col("rank_fp"), cold).as("rank_fp")))
+    var ranks = if (tolFp.isDefined) init.persist(pin) else init
+    var it = 0
+    var converged = false
+    while (it < iters && !converged) {
+      var next = ranks
+      for (_ <- 1 to math.min(CutEvery, iters - it)) next = step(next)
+      it = math.min(it + CutEvery, iters)
+      if (tolFp.isDefined || it < iters) next = next.persist(pin)
+      tolFp.foreach { tol =>
+        val prev0 = ranks.withColumnRenamed("rank_fp", "prev_fp")
+        val prev = if (bc) broadcast(prev0) else prev0
+        val l1 = next.join(prev, "node")
+          .agg(sum(abs(col("rank_fp") - col("prev_fp"))).as("l1"))
+          .head().getLong(0)
+        ranks.unpersist()
+        converged = l1 < tol
+      }
+      ranks = next
+    }
+    (ranks.select(col("node"), col("rank_fp"),
         (col("rank_fp").cast("double") / lit(Scale.toDouble)).as("rank"))
-      .orderBy(col("rank_fp").desc, col("node"))
+      .orderBy(col("rank_fp").desc, col("node")), it)
   }
 
   /** Connected components by min-label propagation — the dedup-cluster
@@ -300,8 +288,7 @@ object GraphOps {
     * node appearing in an edge. The label table is 16 B/node — broadcast
     * into the edge join for the same reason as the PageRank rank vector.
     */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 50,
-                          bcastLabels: Option[Boolean] = None): DataFrame = {
+  def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
     // Persist the input FIRST: the bidirectional union references the
     // edge subplan twice, and when edges are themselves the output of an
     // expensive pipeline (MinHash pair generation) each branch would
@@ -314,8 +301,7 @@ object GraphOps {
       .select(col("node"), col("node").as("cluster"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     // |V| is fixed for the whole propagation — one count decides the path.
-    val bc = decideBroadcast(bcastLabels, lbl.count(),
-      broadcastBudget(edges.sparkSession))
+    val bc = decideBroadcast(lbl.count(), broadcastBudget(edges.sparkSession))
     var it = 0
     var converged = false
     while (it < maxIters && !converged) {
@@ -389,8 +375,7 @@ object GraphOps {
     * internally, self-loops dropped. Output: (node, community) for
     * every node with ≥ 1 edge.
     */
-  def labelPropagation(edges: DataFrame, maxRounds: Int = 20,
-                       bcastLabels: Option[Boolean] = None): DataFrame = {
+  def labelPropagation(edges: DataFrame, maxRounds: Int = 20): DataFrame = {
     require(maxRounds >= 1)
     val e = edges.filter(col("src") =!= col("dst"))
     val sym = e.select(col("src").as("u"), col("dst").as("v"))
@@ -400,8 +385,7 @@ object GraphOps {
     var lbl = sym.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("community"))
       .localCheckpoint(true)
-    val bc = decideBroadcast(bcastLabels, lbl.count(),
-      broadcastBudget(edges.sparkSession))
+    val bc = decideBroadcast(lbl.count(), broadcastBudget(edges.sparkSession))
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -464,8 +448,8 @@ object GraphOps {
     * fixpoint-or-throw contract (unit votes + lazy damping converge
     * there, spec-pinned).
     */
-  def labelPropagationWeighted(wEdges: DataFrame, rounds: Int = 10,
-                               bcastLabels: Option[Boolean] = None): DataFrame = {
+  def labelPropagationWeighted(wEdges: DataFrame,
+                               rounds: Int = 10): DataFrame = {
     require(rounds >= 1)
     val und = wEdges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
@@ -477,8 +461,7 @@ object GraphOps {
     var lbl = sym.select(col("u").as("node")).distinct()
       .select(col("node"), col("node").as("community"))
       .localCheckpoint(true)
-    val bc = decideBroadcast(bcastLabels, lbl.count(),
-      broadcastBudget(wEdges.sparkSession))
+    val bc = decideBroadcast(lbl.count(), broadcastBudget(wEdges.sparkSession))
     for (_ <- 1 to rounds) {
       val l = if (bc) broadcast(lbl) else lbl
       val cand = sym.join(l, sym("u") === l("node"))
@@ -504,15 +487,14 @@ object GraphOps {
     * terminal IEEE expressions of exact integers, engine-identical.
     * Output: (community, n_nodes, intra_edges, deg_sum, q_contrib).
     */
-  def modularity(edges: DataFrame, labels: DataFrame,
-                 bcastLabels: Option[Boolean] = None): DataFrame = {
+  def modularity(edges: DataFrame, labels: DataFrame): DataFrame = {
     val und = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val bc = decideBroadcast(bcastLabels, labels.count(),
-      broadcastBudget(edges.sparkSession))
+    val bc =
+      decideBroadcast(labels.count(), broadcastBudget(edges.sparkSession))
     val l = if (bc) broadcast(labels) else labels
     val la = l.select(col("node").as("a"), col("community").as("ca"))
     val lb = l.select(col("node").as("b"), col("community").as("cb"))
@@ -533,53 +515,6 @@ object GraphOps {
         (coalesce(col("intra_edges"), lit(0L)).cast("double") / m -
           (col("deg_sum").cast("double") / (2.0 * m)) *
           (col("deg_sum").cast("double") / (2.0 * m))).as("q_contrib"))
-  }
-
-  /** Convergence-driven PageRank: iterate until the L1 rank diff (in
-    * fixed-point units) drops below `tolFp` or `maxIters` is hit.
-    * Convergence is tested every `checkEvery` iterations: each check
-    * materializes the current ranks (cache) and ships ONE aggregated
-    * long to the driver — no per-node driver state, and only
-    * maxIters/checkEvery driver round-trips. The L1 is measured across
-    * the whole block (diffs shrink geometrically, so the block diff
-    * upper-bounds the last per-iteration diff — the test is
-    * conservative); the loop may overshoot convergence by up to
-    * checkEvery−1 iterations, which only tightens the result. Returns
-    * (final ranks sorted desc, iterations run).
-    */
-  def pageRankConverged(edges: DataFrame, maxIters: Int, tolFp: Long,
-                        dampPct: Int = 85, bcastRanks: Option[Boolean] = None,
-                        checkEvery: Int = 3): (DataFrame, Int) = {
-    require(checkEvery >= 1)
-    val e = edges
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ew = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val noIn = noInNodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val n0 = nodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val bc = decideBroadcast(bcastRanks, n0.count(),
-      broadcastBudget(e.sparkSession))
-    var ranks = n0.select(col("node"), lit(Scale).as("rank_fp"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var it = 0
-    var converged = false
-    while (it < maxIters && !converged) {
-      val block = math.min(checkEvery, maxIters - it)
-      var next = ranks
-      for (_ <- 1 to block) next = step(ew, noIn, next, dampPct, bc)
-      next = next.persist(StorageLevel.MEMORY_AND_DISK)
-      val prev0 = ranks.withColumnRenamed("rank_fp", "prev_fp")
-      val prev = if (bc) broadcast(prev0) else prev0
-      val diff = next.join(prev, "node")
-        .agg(sum(abs(col("rank_fp") - col("prev_fp"))).as("l1"))
-        .head().getLong(0)
-      ranks.unpersist()
-      ranks = next
-      it += block
-      converged = diff < tolFp
-    }
-    (ranks.select(col("node"), col("rank_fp"),
-        (col("rank_fp").cast("double") / lit(Scale.toDouble)).as("rank"))
-      .orderBy(col("rank_fp").desc, col("node")), it)
   }
 
   /** Degree distribution — the graph-profiling pass run before choosing
@@ -616,16 +551,15 @@ object GraphOps {
     * duplicate/reciprocal pairs collapse. Output: (node, n_tri) for
     * nodes in ≥1 triangle.
     *
-    * `bcastDeg`: the degree table is 16 B/node — broadcastable to
-    * ~10^8 nodes, but a 10^9-node graph (plausible at a 100 TB edge
-    * list) would be a ~16 GB broadcast that dies at plan time. Pass
-    * false to fall back to a shuffled degree attach (two extra
-    * int64-only exchanges, same result) — the same escape hatch
-    * `pageRankFixed`/`connectedComponents` carry for their vectors.
+    * The degree table is 16 B/node — broadcastable to ~10^8 nodes, but
+    * a 10^9-node graph (plausible at a 100 TB edge list) would be a
+    * ~16 GB broadcast that dies at plan time. Past the session budget
+    * ([[decideBroadcast]]) the degree attach shuffles instead (two
+    * extra int64-only exchanges, same result); setting
+    * `spark.sql.autoBroadcastJoinThreshold=-1` forces that plan.
     */
-  def triangleCounts(edges: DataFrame,
-                     bcastDeg: Option[Boolean] = None): DataFrame =
-    triangleKernel(edges, bcastDeg)._3
+  def triangleCounts(edges: DataFrame): DataFrame =
+    triangleKernel(edges)._3
 
   /** The triangle computation with its internals exposed:
     * (und, deg, tri) — the de-duplicated undirected edge set, the
@@ -635,8 +569,8 @@ object GraphOps {
     * ([[clusteringCoefficient]]) reuse them instead of re-running the
     * distinct + degree agg scans.
     */
-  private[graft] def triangleKernel(edges: DataFrame,
-      bcastDeg: Option[Boolean]): (DataFrame, DataFrame, DataFrame) = {
+  private[graft] def triangleKernel(
+      edges: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val und = edges.filter(col("src") =!= col("dst"))
       .select(least(col("src"), col("dst")).as("a"),
         greatest(col("src"), col("dst")).as("b"))
@@ -648,12 +582,12 @@ object GraphOps {
       .persist(StorageLevel.MEMORY_AND_DISK)
     // (deg, id) total order orients each edge; broadcast the degree
     // table (16 B/node) so the edge list never shuffles to attach it —
-    // unless |V|·16 B exceeds the session broadcast budget (or the
-    // caller overrides), in which case the attach shuffles. One
-    // aggregated pass supplies both the broadcast decision (|V|) and
-    // the id span for the encoded closing key below.
+    // unless |V|·16 B exceeds the session broadcast budget, in which
+    // case the attach shuffles. One aggregated pass supplies both the
+    // broadcast decision (|V|) and the id span for the encoded closing
+    // key below.
     val degStats = deg.agg(count(lit(1)), max("node")).head()
-    val bc = decideBroadcast(bcastDeg, degStats.getLong(0),
+    val bc = decideBroadcast(degStats.getLong(0),
       broadcastBudget(edges.sparkSession))
     val idSpan = // empty graph ⇒ max is null; any span works (no rows)
       (if (degStats.isNullAt(1)) 0L else degStats.getLong(1)) + 1L
@@ -810,12 +744,10 @@ object GraphOps {
     * are reused, not recomputed, and the composition adds only the
     * node-id join and one division. Both int64 inputs are exact, so
     * the one IEEE division at the end is deterministic across engines
-    * and partitionings. Exchanges carry only (node, count) int64 rows;
-    * `bcastDeg` passes through to the kernel's degree attach.
+    * and partitionings. Exchanges carry only (node, count) int64 rows.
     */
-  def clusteringCoefficient(edges: DataFrame,
-                            bcastDeg: Option[Boolean] = None): DataFrame = {
-    val (_, deg, tri) = triangleKernel(edges, bcastDeg)
+  def clusteringCoefficient(edges: DataFrame): DataFrame = {
+    val (_, deg, tri) = triangleKernel(edges)
     deg.filter(col("deg") >= 2)
       .join(tri, Seq("node"), "left")
       .select(col("node"),
@@ -884,20 +816,20 @@ object GraphOps {
     * visited set so a node is labeled exactly once, at its first
     * (= minimum) depth. Rounds are O(eccentricity), not O(V).
     *
-    * Scale: the frontier is broadcast into the edge join by default
-    * (it is a set of int64s — even a 10^8-node frontier is ~800 MB,
-    * and real frontiers are far smaller), so the big edge table never
-    * shuffles for the probe; pass `bcastFrontier = false` to fall back
-    * to a shuffled join when a frontier could exceed broadcast budget
-    * (the [[pageRankFixed]] `bcastRanks` discipline). The visited set
+    * Scale: the frontier is broadcast into the edge join (it is a set
+    * of int64s — even a 10^8-node frontier is ~800 MB, and real
+    * frontiers are far smaller), so the big edge table never shuffles
+    * for the probe; a frontier past the session broadcast budget takes
+    * a shuffled join instead, decided per round from its size
+    * ([[decideBroadcast]]; `spark.sql.autoBroadcastJoinThreshold=-1`
+    * forces the shuffled join). The visited set
     * is joined, not broadcast — it grows toward |V|. Each round
     * localCheckpoints the new frontier and visited set: lineage
     * truncation per round, same as [[connectedComponents]]. The
     * per-round emptiness check is an aggregated driver-side scalar —
     * the sanctioned convergence pattern.
     */
-  def bfsLevels(edges: DataFrame, source: Long, maxDepth: Int,
-                bcastFrontier: Option[Boolean] = None): DataFrame = {
+  def bfsLevels(edges: DataFrame, source: Long, maxDepth: Int): DataFrame = {
     require(maxDepth >= 0)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -919,8 +851,7 @@ object GraphOps {
     var exhausted = false
     while (depth < maxDepth && !exhausted) {
       depth += 1
-      val bc = decideBroadcast(bcastFrontier, frontierRows, budget,
-        bytesPerRow = 8L)
+      val bc = decideBroadcast(frontierRows, budget, bytesPerRow = 8L)
       val f = if (bc) broadcast(frontier) else frontier
       val next = sym.join(f, sym("src") === f("node"))
         .select(sym("dst").as("node")).distinct()
@@ -950,18 +881,18 @@ object GraphOps {
     * contract that keeps both engines identical (the
     * [[connectedComponents]] fixpoint-or-throw discipline).
     *
-    * Scale: `bcastDist` broadcasts the 16 B/node distance vector into
-    * the edge join — the big edge list never shuffles, and the only
-    * exchange per round is the min re-aggregation keyed on node; pass
-    * false past broadcast budget for a shuffled join (the
-    * [[pageRankFixed]] `bcastRanks` escape hatch). Each round
+    * Scale: the 16 B/node distance vector broadcasts into the edge
+    * join — the big edge list never shuffles, and the only exchange
+    * per round is the min re-aggregation keyed on node; past the
+    * session broadcast budget the join shuffles instead
+    * ([[decideBroadcast]]; `spark.sql.autoBroadcastJoinThreshold=-1`
+    * forces it). Each round
     * localCheckpoints the merged vector (per-round lineage
     * truncation); the per-round improvement count is an aggregated
     * driver-side scalar — the sanctioned convergence pattern.
     * Output: (node, dist) for every node reachable from `source`.
     */
-  def sssp(edges: DataFrame, source: Long, maxRounds: Int,
-           bcastDist: Option[Boolean] = None): DataFrame = {
+  def sssp(edges: DataFrame, source: Long, maxRounds: Int): DataFrame = {
     val sym = edges.filter(col("src") =!= col("dst"))
       .select(col("src"), col("dst"))
       .union(edges.filter(col("src") =!= col("dst"))
@@ -969,7 +900,7 @@ object GraphOps {
       .distinct()
       .select(col("src"), col("dst"),
         (((col("src") + col("dst")) % 9) + 1).as("w"))
-    ssspWeighted(sym, source, maxRounds, bcastDist)
+    ssspWeighted(sym, source, maxRounds)
   }
 
   /** General weighted single-source shortest paths: `edges` is a
@@ -992,8 +923,8 @@ object GraphOps {
     * graph whose reachable set outgrows the broadcast budget flips to
     * the shuffled join mid-run instead of dying at plan time.
     */
-  def ssspWeighted(edges: DataFrame, source: Long, maxRounds: Int,
-                   bcastDist: Option[Boolean] = None): DataFrame = {
+  def ssspWeighted(edges: DataFrame, source: Long,
+                   maxRounds: Int): DataFrame = {
     require(maxRounds >= 1)
     val spark = edges.sparkSession
     import spark.implicits._
@@ -1006,7 +937,7 @@ object GraphOps {
     var round = 0
     while (!converged && round < maxRounds) {
       round += 1
-      val bc = decideBroadcast(bcastDist, distRows, budget)
+      val bc = decideBroadcast(distRows, budget)
       val dd = if (bc) broadcast(dist) else dist
       val relax = e.join(dd, e("src") === dd("node"))
         .select(e("dst").as("node"), (dd("dist") + e("w")).as("dist"),
@@ -1043,7 +974,7 @@ object GraphOps {
   /** HITS hubs/authorities (Kleinberg 1999) over a directed edge list —
     * fixed `iters` mutual-reinforcement rounds with MAX-normalization
     * instead of L2: dividing by the round's max score keeps every
-    * intermediate an exact int64 (the [[pageRankFixed]] fixed-point
+    * intermediate an exact int64 (the [[pageRank]] fixed-point
     * discipline), converges to the same principal direction, and makes
     * the result bit-identical across partitionings and engines. Each
     * round: a(v) = Σ_{u→v} h(u), rescaled to [0, HitsScale]; then
@@ -1054,16 +985,14 @@ object GraphOps {
     * edge join under the [[decideBroadcast]] guard — edges never
     * shuffle; per round the only corpus exchanges are the two keyed
     * re-aggregations, plus two 1-row max aggregates for the rescale
-    * (in-plan cross joins, no driver collect). Lineage persist-cut
-    * every `persistEvery` rounds.
+    * (in-plan cross joins, no driver collect). Lineage is cut every
+    * half-round: each raw sum is localCheckpointed.
     */
-  def hitsFixed(edges: DataFrame, iters: Int,
-                bcastScores: Option[Boolean] = None): DataFrame = {
+  def hitsFixed(edges: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1)
     val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
     val n0 = nodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val bc = decideBroadcast(bcastScores, n0.count(),
-      broadcastBudget(e.sparkSession))
+    val bc = decideBroadcast(n0.count(), broadcastBudget(e.sparkSession))
     // ONE action per half-round: the raw sums are localCheckpoint-
     // materialized (≤ 16 B/node — cheap, and it keeps lineage from
     // nesting round over round), and the round's max rides the SAME
@@ -1102,50 +1031,6 @@ object GraphOps {
         (col("a_fp").cast("double") / HitsScale.toDouble).as("auth"),
         (col("h_fp").cast("double") / HitsScale.toDouble).as("hub"))
       .orderBy(col("a_fp").desc, col("node"))
-  }
-
-  /** Personalized PageRank — the [[pageRankFixed]] loop with teleport
-    * mass restricted to the seed set (node % seedMod = 0): ranks answer
-    * "importance as seen FROM the seeds", the query behind related-page
-    * and topic-conditioned crawl ranking. base(v) = (100−damp)% · Scale
-    * for seeds, 0 otherwise; non-seed rank arrives only through
-    * in-links, so mass decays through dangling nodes exactly as the
-    * push-style formulation prescribes — deterministic int64 fixed
-    * point throughout. One keyed exchange per round (the contribution
-    * re-sum); rank vector broadcasts under the guard; node set left-
-    * joins the sums (the varying base forbids the no-in-union shortcut
-    * pageRankFixed uses).
-    */
-  def personalizedPageRank(edges: DataFrame, iters: Int, seedMod: Int,
-                           dampPct: Int = 85,
-                           bcastRanks: Option[Boolean] = None,
-                           persistEvery: Int = 3): DataFrame = {
-    require(iters >= 1 && seedMod >= 1 && dampPct >= 0 && dampPct <= 100)
-    val e = edges
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ew = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    val n0 = nodes(e).persist(StorageLevel.MEMORY_AND_DISK)
-    val bc = decideBroadcast(bcastRanks, n0.count(),
-      broadcastBudget(e.sparkSession))
-    val base = (100L - dampPct) * (Scale / 100)
-    val baseOf = when(col("node") % seedMod === 0, base).otherwise(0L)
-    var ranks = n0.select(col("node"), baseOf.as("rank_fp"))
-    for (i <- 1 to iters) {
-      val r = if (bc) broadcast(ranks) else ranks
-      val sums = ew.join(r, ew("src") === r("node"))
-        .select(ew("dst").as("node"),
-          expr("rank_fp div deg").as("share"))
-        .groupBy("node").agg(sum("share").as("c"))
-      ranks = n0.join(sums, Seq("node"), "left")
-        .select(col("node"),
-          (baseOf + expr(s"($dampPct * coalesce(c, 0L)) div 100"))
-            .as("rank_fp"))
-      if (i % persistEvery == 0 && i < iters)
-        ranks = ranks.persist(StorageLevel.MEMORY_AND_DISK)
-    }
-    ranks.select(col("node"), col("rank_fp"),
-        (col("rank_fp").cast("double") / Scale.toDouble).as("rank"))
-      .orderBy(col("rank_fp").desc, col("node"))
   }
 
   /** Common-neighbor link prediction over the symmetrized graph: for

@@ -122,15 +122,6 @@ object StreamOps {
     */
   val ReplayWatermark = "87600 hours"
 
-  /** Batch-equivalence replay harness — the driver-visible proof pattern
-    * for the streaming tier: stage the events as `nParts` parquet files,
-    * stream them back as REAL micro-batches (file source,
-    * maxFilesPerTrigger=1, Trigger.AvailableNow — event-time order across
-    * batches is arbitrary, i.e. the out-of-order case), run the streaming
-    * transform, and return the memory-sink table once the stream drains.
-    * Memory sink + AvailableNow are the harness binding only; production
-    * binds the same transforms to real sinks with finite watermarks.
-    */
   /** Memory-sink tables from earlier replays, dropped lazily at the next
     * replay() call: a memory sink pins its full result on the driver
     * heap for the temp view's lifetime, so without this a Bench/Verify
@@ -163,22 +154,24 @@ object StreamOps {
     }
   }
 
+  /** Shuffle (so state-store) partitions of a replay session. */
+  private val ReplayStatePartitions = 4
+
   /** One cloned session per replay — the replay-scoped conf carrier.
     * Stateful operators commit EVERY state-store partition every
     * micro-batch, so at fixture scale the 32-partition session default
     * makes commit fan-out, not data, the dominant replay cost (measured
     * ~2× on the stream-stream join); production tuning would size it to
-    * real per-key volume. The 8-partition setting lives on a
-    * `newSession()` CLONE (same SparkContext, forked SQL conf + temp
-    * views), so the parent session's conf is NEVER mutated — a
-    * concurrent batch query in the parent keeps planning at the session
-    * value, closing the r5/r6 set-restore visibility window.
+    * real per-key volume. The [[ReplayStatePartitions]]-partition
+    * setting lives on a `newSession()` CLONE (same SparkContext, forked
+    * SQL conf + temp views), so the parent session's conf is NEVER
+    * mutated — a concurrent batch query in the parent keeps planning at
+    * the session value, closing the r5/r6 set-restore visibility window.
     */
   private def replaySession(
       spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession = {
     val rs = spark.newSession()
-    rs.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("spark.graft.replay.statePartitions", "4"))
+    rs.conf.set("spark.sql.shuffle.partitions", ReplayStatePartitions)
     rs
   }
 
@@ -192,11 +185,8 @@ object StreamOps {
     * delivery property the replays demonstrate (cross-batch state is
     * separately proven by the xbatch/restart/late rows, which keep
     * their own granularity); production binds real trigger cadence.
-    * Conf-overridable for A/B and for callers staging more files.
     */
-  private def replayFilesPerTrigger(
-      spark: org.apache.spark.sql.SparkSession): String =
-    spark.conf.get("spark.graft.replay.maxFilesPerTrigger", "2")
+  private val ReplayFilesPerTrigger = 2
 
   /** Run a streaming transform result to a fresh memory-sink table
     * (AvailableNow) and return it; the table is dropped lazily at the
@@ -204,7 +194,7 @@ object StreamOps {
     *
     * `result` must be built on a [[replaySession]] clone (every caller
     * constructs its readStream there): the stream plans against the
-    * DataFrame's own session, so the clone's 8-partition state conf
+    * DataFrame's own session, so the clone's state-partition conf
     * applies to this replay only and the parent session is untouched.
     */
   private def runToMemory(result: DataFrame, mode: OutputMode): DataFrame = {
@@ -235,6 +225,16 @@ object StreamOps {
       .select(lit(-1L).as("event_id"), col("user_id"), col("tus"),
         lit("sentinel").as("event_type"), lit(0.0).as("value")))
 
+  /** Batch-equivalence replay harness — the driver-visible proof pattern
+    * for the streaming tier: stage the events as `nParts` parquet files,
+    * stream them back as REAL micro-batches (file source,
+    * [[ReplayFilesPerTrigger]] files per micro-batch, Trigger.AvailableNow
+    * — event-time order across batches is arbitrary, i.e. the
+    * out-of-order case), run the streaming transform, and return the
+    * memory-sink table once the stream drains.
+    * Memory sink + AvailableNow are the harness binding only; production
+    * binds the same transforms to real sinks with finite watermarks.
+    */
   private def replay(events: DataFrame, stagingDir: String, nParts: Int,
                      mode: OutputMode,
                      augment: DataFrame => DataFrame = identity,
@@ -252,7 +252,7 @@ object StreamOps {
     val rs = replaySession(spark)
     val staged = Tables.parquet(rs, stagingDir)
     val stream = rs.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", replayFilesPerTrigger(spark))
+      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
       .parquet(stagingDir)
       .withColumn("ts", timestamp_micros(col("tus")))
     runToMemory(f(stream), mode)
@@ -498,7 +498,7 @@ object StreamOps {
     // open sessions across every remaining batch boundary — the
     // cross-batch property this row exists to prove.
     val stream = rs.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", replayFilesPerTrigger(spark))
+      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
       .parquet(stagingDir)
       .withColumn("ts", timestamp_micros(col("tus")))
     import spark.implicits._
@@ -1138,22 +1138,33 @@ object StreamOps {
     Tables.parquet(spark, viewPath).drop("batch")
 
   /** Streaming sink into a MANIFEST-VERSIONED table — each micro-batch
-    * commits as its own snapshot version (SinkOps.commitVersion), so
-    * the stream's history is queryable: any past version is a pinned,
-    * immutable point-in-time read while the stream keeps appending —
-    * the exactly-once versioned-sink shape (commits are BATCH-KEYED,
-    * [[graft.ops.SinkOps.CommitSpec]] `batchKey`: a replayed micro-batch
+    * commits as its own snapshot version (SinkOps.commitVersion with
+    * `spec`), so the stream's history is queryable: any past version
+    * is a pinned, immutable point-in-time read while the stream keeps
+    * appending. Commits are BATCH-KEYED (`batchKey = batch-<id>` on
+    * every micro-batch, whatever `spec` says): a replayed micro-batch
     * reuses its recorded version instead of re-committing, so version
     * history stays bit-identical under at-least-once delivery; readers
     * of old versions never see torn state because a commit is
-    * data-files-then-manifest). Returns
-    * the latest snapshot; the oracle digests the whole input — streamed
-    * versioned commits ≡ one batch write. The table root resets per
-    * call so version history is per-run deterministic.
+    * data-files-then-manifest. `spec` picks the table shape:
+    *  - a `Partitioned` layout lands partition subtrees plus the counted
+    *    parts sidecar per micro-batch, so the partition skip tier and
+    *    the metadata counts stay armed WHILE the stream runs (a batch
+    *    empty in every partition refuses loudly like the batch API);
+    *  - `checkpointEvery` writes DELTA MANIFESTS — the production
+    *    pairing, since a per-batch sink is exactly where full manifests
+    *    grow O(versions · dirs): each commit carries only `base:<head>`
+    *    + its new dir, with a full checkpoint every `checkpointEvery`
+    *    commits bounding every reader's chain walk.
+    * Returns the latest snapshot; the oracle digests the whole input —
+    * streamed versioned commits ≡ one batch write. The table root
+    * resets per call so version history is per-run deterministic.
     */
   def versionedSinkReplay(rows: DataFrame, tablePath: String,
                           stagingDir: String, idCol: String,
-                          boundaries: Seq[Long]): DataFrame = {
+                          boundaries: Seq[Long],
+                          spec: graft.ops.SinkOps.CommitSpec =
+                            graft.ops.SinkOps.CommitSpec()): DataFrame = {
     val spark = rows.sparkSession
     val root = new org.apache.hadoop.fs.Path(tablePath)
     root.getFileSystem(spark.sessionState.newHadoopConf())
@@ -1165,77 +1176,7 @@ object StreamOps {
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.ops.SinkOps.commitVersion(batch, tablePath,
-          graft.ops.SinkOps.CommitSpec(batchKey = Some(s"batch-$batchId")))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    graft.ops.SinkOps.readVersion(spark, tablePath)
-  }
-
-  /** [[versionedSinkReplay]] into a HIVE-PARTITIONED versioned table
-    * ([[graft.ops.SinkOps.commitVersion]] with a `Partitioned` layout per
-    * micro-batch, batch-keyed): every commit lands partition subtrees
-    * plus the counted parts sidecar, so the partition skip tier and
-    * the metadata counts stay armed WHILE the stream runs — at 100 TB
-    * the streaming table is exactly the one whose reads most need the
-    * coarsest prune. Same replay-harness shape and oracle contract
-    * (streamed partitioned commits ≡ one batch write); a batch empty
-    * in every partition refuses loudly like the batch API.
-    */
-  def versionedSinkReplayPartitioned(rows: DataFrame, tablePath: String,
-                                     stagingDir: String, idCol: String,
-                                     boundaries: Seq[Long],
-                                     partCols: Seq[String]): DataFrame = {
-    val spark = rows.sparkSession
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    root.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(root, true)
-    stageSlices(rows, stagingDir, idCol, boundaries)
-    val staged = Tables.parquet(spark, stagingDir)
-    val stream = spark.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.SinkOps.commitVersion(batch,
-          tablePath,
-          graft.ops.SinkOps.CommitSpec(layout = graft.ops.SinkOps.Partitioned(
-            partCols), batchKey = Some(s"batch-$batchId")))
-        ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    try q.awaitTermination() finally q.stop()
-    graft.ops.SinkOps.readVersion(spark, tablePath)
-  }
-
-  /** [[versionedSinkReplay]] writing DELTA MANIFESTS
-    * (CommitSpec `checkpointEvery`) — the production
-    * pairing: a per-batch streaming sink is exactly where full
-    * manifests grow O(versions · dirs), so each micro-batch commit
-    * carries only `base:<head>` + its one new dir, with a full
-    * checkpoint manifest every `checkpointEvery` commits bounding
-    * every reader's chain walk. Same replay-harness shape and the same
-    * oracle contract (streamed delta commits ≡ one batch write); the
-    * table's history stays time-travelable through the chain.
-    */
-  def versionedSinkReplayDelta(rows: DataFrame, tablePath: String,
-                               stagingDir: String, idCol: String,
-                               boundaries: Seq[Long],
-                               checkpointEvery: Int = 3): DataFrame = {
-    val spark = rows.sparkSession
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    root.getFileSystem(spark.sessionState.newHadoopConf())
-      .delete(root, true)
-    stageSlices(rows, stagingDir, idCol, boundaries)
-    val staged = Tables.parquet(spark, stagingDir)
-    val stream = spark.readStream.schema(staged.schema)
-      .option("maxFilesPerTrigger", "1").parquet(stagingDir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.ops.SinkOps.commitVersion(batch, tablePath,
-          graft.ops.SinkOps.CommitSpec(checkpointEvery = Some(checkpointEvery)))
+          spec.copy(batchKey = Some(s"batch-$batchId")))
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1553,10 +1494,8 @@ object StreamOps {
     // divisibility guard: a real-slice count the cadence doesn't divide
     // would glue the flush onto the last real batch and strand the
     // corpus-tail evictions.
-    val mfpt = {
-      val c = replayFilesPerTrigger(spark)
-      if (c.toInt >= 1 && nSlices % c.toInt == 0) c else "1"
-    }
+    val mfpt =
+      if (nSlices % ReplayFilesPerTrigger == 0) ReplayFilesPerTrigger else 1
     def src() = rs.readStream.schema(schema)
       .option("maxFilesPerTrigger", mfpt).parquet(stagingDir)
       .withColumn("ts", timestamp_micros(col("tus")))
@@ -1640,10 +1579,8 @@ object StreamOps {
     // divisibility guard: a real-slice count the cadence doesn't divide
     // would glue the flush onto the last real batch and strand the
     // corpus-tail evictions.
-    val mfpt = {
-      val c = replayFilesPerTrigger(spark)
-      if (c.toInt >= 1 && nSlices % c.toInt == 0) c else "1"
-    }
+    val mfpt =
+      if (nSlices % ReplayFilesPerTrigger == 0) ReplayFilesPerTrigger else 1
     def src() = rs.readStream.schema(schema)
       .option("maxFilesPerTrigger", mfpt).parquet(stagingDir)
       .withColumn("ts", timestamp_micros(col("tus")))
@@ -1704,7 +1641,7 @@ object StreamOps {
     def src(dir: String) = {
       val staged = Tables.parquet(rs, dir)
       rs.readStream.schema(staged.schema)
-        .option("maxFilesPerTrigger", replayFilesPerTrigger(spark))
+        .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
         .parquet(dir)
         .withColumn("ts", timestamp_micros(col("tus")))
     }
@@ -1924,7 +1861,7 @@ object StreamOps {
     // (sum of partials is associative; batch_id is bookkeeping the
     // read-back aggregates away) — the collapsed cadence applies.
     val stream = rs.readStream.schema(schema)
-      .option("maxFilesPerTrigger", replayFilesPerTrigger(spark))
+      .option("maxFilesPerTrigger", ReplayFilesPerTrigger)
       .parquet(stagingDir)
     val q = stream.writeStream
       .foreachBatch { (batch: DataFrame, id: Long) =>

@@ -173,7 +173,7 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("pagerank on a single edge") {
-    val out = GraphOps.pageRankFixed(Seq((1L, 2L)).toDF("src", "dst"), 3)
+    val out = GraphOps.pageRank(Seq((1L, 2L)).toDF("src", "dst"), 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(out.keySet === Set(1L, 2L))
     assert(out(1L) === 150000000000L) // no inlinks → base rank
@@ -297,15 +297,17 @@ class EdgeCaseSpec extends SparkSpec {
     // graph ops: empty edge sets yield empty results, no throw
     val noEdges = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(GraphOps.hitsFixed(noEdges, 3).count() === 0)
-    assert(GraphOps.personalizedPageRank(noEdges, 3, 2).count() === 0)
+    assert(GraphOps.pageRank(noEdges, 3, seedMod = Some(2)).count() === 0)
+    assert(GraphOps.pageRank(
+      noEdges.select(col("src"), col("dst"), lit(1L).as("w")), 3).count() === 0)
     assert(GraphOps.linkPredict(noEdges, 10).count() === 0)
     val noPrior = Seq.empty[(Long, Long)].toDF("node", "rank_fp")
     // warm start with an empty prior == cold start
-    val cold = GraphOps.pageRankFixed(
+    val cold = GraphOps.pageRank(
       Seq((1L, 2L)).toDF("src", "dst"), 3).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val warm = GraphOps.pageRankWarmStart(
-      Seq((1L, 2L)).toDF("src", "dst"), noPrior, 3).collect()
+    val warm = GraphOps.pageRank(
+      Seq((1L, 2L)).toDF("src", "dst"), 3, prior = Some(noPrior)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(warm === cold)
     // retrieval: empty index serve returns empty, not a crash

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{AggOps, GraphOps}
 
@@ -26,14 +27,14 @@ class GraphOpsSpec extends SparkSpec {
   test("pageRankFixed matches an independent fixed-point model") {
     val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L))
     val df = edges.toDF("src", "dst")
-    val got = GraphOps.pageRankFixed(df, 10).collect()
+    val got = GraphOps.pageRank(df, 10).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === model(edges, 10))
   }
 
   test("pageRankFixed output is sorted desc and includes sink-only nodes") {
     val df = Seq((1L, 2L), (3L, 2L)).toDF("src", "dst") // 2 has no outlinks
-    val rows = GraphOps.pageRankFixed(df, 3).collect()
+    val rows = GraphOps.pageRank(df, 3).collect()
     assert(rows.map(_.getLong(0)).toSet === Set(1L, 2L, 3L))
     val ranks = rows.map(_.getLong(1))
     assert(ranks.sorted.reverse.sameElements(ranks))
@@ -43,8 +44,8 @@ class GraphOpsSpec extends SparkSpec {
 
   test("pageRankFixed is deterministic across partition layouts") {
     val edges = GraphOps.edgesFromLineitem(Tables.lineitem(spark, sfDir), 97)
-    val a = GraphOps.pageRankFixed(edges, 5).collect().toSeq
-    val b = GraphOps.pageRankFixed(edges.repartition(7), 5).collect().toSeq
+    val a = GraphOps.pageRank(edges, 5).collect().toSeq
+    val b = GraphOps.pageRank(edges.repartition(7), 5).collect().toSeq
     assert(a === b)
   }
 
@@ -55,7 +56,7 @@ class GraphOpsSpec extends SparkSpec {
     // damped multiplication must throw, not wrap to a wrong rank.
     val star = spark.range(1, 130001)
       .select(col("id").as("src"), lit(0L).as("dst"))
-    val e = intercept[Exception] { GraphOps.pageRankFixed(star, 1).collect() }
+    val e = intercept[Exception] { GraphOps.pageRank(star, 1).collect() }
     def chain(t: Throwable): Seq[Throwable] =
       Option(t).toSeq.flatMap(x => x +: chain(x.getCause))
     assert(chain(e).exists(t =>
@@ -189,17 +190,20 @@ class GraphOpsSpec extends SparkSpec {
   test("triangleCounts shuffled-degree fallback (bcastDeg=false) matches broadcast path") {
     // The 10^9-node escape hatch: degree attach via shuffled join must
     // produce bit-identical counts, and its plan must not broadcast deg.
+    // A disabled session broadcast budget forces the shuffled attach.
     val edges = Tables.lineitem(spark, sfDir)
       .select((col("l_orderkey") % 101).as("src"),
         (col("l_partkey") % 101).as("dst"))
     spark.catalog.clearCache()
-    val sh = GraphOps.triangleCounts(edges, bcastDeg = Some(false))
-    // The degree attach must honor the shuffle hint (other joins at
-    // fixture scale may still auto-broadcast — that's fine).
-    val plan = planText(sh.queryExecution.executedPlan)
-    assert(plan.contains("ShuffledHashJoin"),
-      s"bcastDeg=false must plan a shuffled degree attach:\n$plan")
-    val got = sh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val sh = GraphOps.triangleCounts(edges)
+      val plan = planText(sh.queryExecution.executedPlan)
+      assert(plan.contains("ShuffledHashJoin"),
+        s"a disabled budget must plan a shuffled degree attach:\n$plan")
+      assert(!plan.contains("BroadcastHashJoin"),
+        s"a disabled budget must plan a shuffled degree attach:\n$plan")
+      sh.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
     spark.catalog.clearCache()
     val bc = GraphOps.triangleCounts(edges).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -215,9 +219,11 @@ class GraphOpsSpec extends SparkSpec {
     val got = GraphOps.bfsLevels(edges, 1L, maxDepth = 2)
       .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
     assert(got === Map(1L -> 0, 2L -> 1, 3L -> 2)) // 4 is 3 hops: cut off
-    val full = GraphOps.bfsLevels(edges, 1L, maxDepth = 8,
-        bcastFrontier = Some(false))
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    // Shuffled frontier join (broadcast budget disabled).
+    val full = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      GraphOps.bfsLevels(edges, 1L, maxDepth = 8)
+        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    }
     assert(full === Map(1L -> 0, 2L -> 1, 3L -> 2, 4L -> 3))
   }
 
@@ -233,9 +239,12 @@ class GraphOpsSpec extends SparkSpec {
     val got = GraphOps.sssp(edges, 1L, maxRounds = 8)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === want)
-    // Shuffled-join fallback is bit-identical to the broadcast path.
-    val fb = GraphOps.sssp(edges, 1L, maxRounds = 8, bcastDist = Some(false))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // Shuffled-join fallback (broadcast budget disabled) is
+    // bit-identical to the broadcast path.
+    val fb = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      GraphOps.sssp(edges, 1L, maxRounds = 8)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(fb === want)
     // A round budget below the fixpoint hop count must throw, not
     // return a silently-unconverged vector.
@@ -259,14 +268,10 @@ class GraphOpsSpec extends SparkSpec {
   }
 
   test("adaptive broadcast guard: decision honors budget, override, and disable") {
-    // Unit contract of the shared helper behind every bcast* default.
-    assert(GraphOps.decideBroadcast(Some(true), sys.error("not evaluated"),
-      budget = -1L))
-    assert(!GraphOps.decideBroadcast(Some(false), sys.error("not evaluated"),
-      budget = Long.MaxValue))
-    assert(GraphOps.decideBroadcast(None, 1000L, budget = 16001L))
-    assert(!GraphOps.decideBroadcast(None, 1001L, budget = 16000L))
-    assert(!GraphOps.decideBroadcast(None, 1L, budget = -1L)) // -1 disables
+    // Unit contract of the shared helper behind every graph loop.
+    assert(GraphOps.decideBroadcast(1000L, budget = 16001L))
+    assert(!GraphOps.decideBroadcast(1001L, budget = 16000L))
+    assert(!GraphOps.decideBroadcast(1L, budget = -1L)) // -1 disables
   }
 
   test("adaptive broadcast guard: a vector past budget auto-selects the shuffled plan") {
@@ -275,14 +280,11 @@ class GraphOpsSpec extends SparkSpec {
     // the degree attach to the shuffled plan automatically (simulated by
     // shrinking the budget under the fixture's ~100-node vector), and
     // the default budget must still pick the broadcast attach.
-    val key = "spark.sql.autoBroadcastJoinThreshold"
-    val saved = spark.conf.get(key)
     val edges = Tables.lineitem(spark, sfDir)
       .select((col("l_orderkey") % 101).as("src"),
         (col("l_partkey") % 101).as("dst"))
-    try {
-      spark.catalog.clearCache()
-      spark.conf.set(key, "64")
+    spark.catalog.clearCache()
+    val got = withConf("spark.sql.autoBroadcastJoinThreshold" -> "64") {
       val auto = GraphOps.triangleCounts(edges)
       val plan = planText(auto.queryExecution.executedPlan)
       // The degree attach is the guarded join; the closing join is
@@ -293,15 +295,14 @@ class GraphOpsSpec extends SparkSpec {
         s"past-budget vector must auto-select a shuffled degree attach:\n$plan")
       assert(plan.contains("ShuffledHashJoin"),
         s"past-budget vector must auto-select a shuffled degree attach:\n$plan")
-      val got = auto.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      spark.catalog.clearCache()
-      spark.conf.set(key, saved)
-      val bc = GraphOps.triangleCounts(edges)
-      val bcPlan = planText(bc.queryExecution.executedPlan)
-      assert(bcPlan.contains("BroadcastHashJoin"),
-        s"in-budget vector must keep the broadcast degree attach:\n$bcPlan")
-      assert(bc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === got)
-    } finally spark.conf.set(key, saved)
+      auto.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    spark.catalog.clearCache()
+    val bc = GraphOps.triangleCounts(edges)
+    val bcPlan = planText(bc.queryExecution.executedPlan)
+    assert(bcPlan.contains("BroadcastHashJoin"),
+      s"in-budget vector must keep the broadcast degree attach:\n$bcPlan")
+    assert(bc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === got)
   }
 
   test("ssspWeighted: directed user-supplied weights, direction respected") {
@@ -313,45 +314,78 @@ class GraphOpsSpec extends SparkSpec {
     val got = GraphOps.ssspWeighted(e, 1L, maxRounds = 6)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === Map(1L -> 0L, 2L -> 1L, 3L -> 2L))
-    // Shuffled fallback is bit-identical.
-    val fb = GraphOps.ssspWeighted(e, 1L, maxRounds = 6,
-        bcastDist = Some(false))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // Shuffled fallback (broadcast budget disabled) is bit-identical.
+    val fb = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      GraphOps.ssspWeighted(e, 1L, maxRounds = 6)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(fb === got)
   }
 
-  test("pageRankWeighted with uniform weights equals pageRankFixed") {
+  test("pageRank variants (seedMod, w, converged, prior) equal their " +
+      "plain-loop twins") {
     import spark.implicits._
+    val small = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L))
+      .toDF("src", "dst")
     val edges = GraphOps.edgesFromLineitem(Tables.lineitem(spark, sfDir), 97)
-    val uni = edges.select(col("src"), col("dst"), lit(1L).as("w"))
-    val got = GraphOps.pageRankWeighted(uni, 5).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val want = GraphOps.pageRankFixed(edges, 5).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got === want)
+    val base = 150000000000L
+    def ranks(df: DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def converged(e: DataFrame, n: Int): DataFrame = {
+      val (df, ran) = GraphOps.pageRankConverged(e, n, tolFp = 0L)
+      assert(ran === n, "tolFp = 0 never converges: every round runs")
+      df
+    }
+    // (what, variant, its plain-loop twin)
+    val cases: Seq[(String, () => DataFrame, () => DataFrame)] = Seq(
+      // every node a seed: the plain loop started from the teleport
+      // vector, which is where a seeded run starts
+      ("seedMod = Some(1)",
+        () => GraphOps.pageRank(small, 6, seedMod = Some(1)),
+        () => GraphOps.pageRank(small, 6, prior = Some(
+          GraphOps.nodes(small).select(col("node"), lit(base).as("rank_fp"))))),
+      ("uniform w",
+        () => GraphOps.pageRank(
+          edges.select(col("src"), col("dst"), lit(1L).as("w")), 5),
+        () => GraphOps.pageRank(edges, 5)),
+      ("pageRankConverged(tolFp = 0), a partial last block",
+        () => converged(small, 7), () => GraphOps.pageRank(small, 7)),
+      ("pageRankConverged(tolFp = 0), whole blocks",
+        () => converged(edges, 6), () => GraphOps.pageRank(edges, 6)),
+      ("warm start from 7 rounds, 3 more",
+        () => GraphOps.pageRank(small, 3, prior = Some(
+          GraphOps.pageRank(small, 7).select("node", "rank_fp"))),
+        () => GraphOps.pageRank(small, 10)))
+    cases.foreach { case (what, variant, twin) =>
+      assert(ranks(variant()) === ranks(twin()), what)
+    }
+    // A node absent from the prior starts at the cold init: node 5 has
+    // no in-links, so after one round it holds the damping base.
+    val prior = GraphOps.pageRank(small, 7).select("node", "rank_fp")
+    val grown = small.union(Seq((5L, 3L)).toDF("src", "dst"))
+    assert(ranks(GraphOps.pageRank(grown, 1, prior = Some(prior)))(5L) === base)
     // Weights steer mass: 1→2 carries 9× the weight of 1→3, so after one
     // round node 2 must outrank node 3 (equal under uniform weights).
     val skew = Seq((1L, 2L, 9L), (1L, 3L, 1L)).toDF("src", "dst", "w")
-    val r1 = GraphOps.pageRankWeighted(skew, 1).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val r1 = ranks(GraphOps.pageRank(skew, 1))
     assert(r1(2L) > r1(3L))
     // share = (Scale·w) div wdeg: 9/10 and 1/10 of the damped unit mass.
-    assert(r1(2L) === 150000000000L + 85L * (GraphOps.Scale * 9 / 10) / 100L)
-    assert(r1(3L) === 150000000000L + 85L * (GraphOps.Scale / 10) / 100L)
+    assert(r1(2L) === base + 85L * (GraphOps.Scale * 9 / 10) / 100L)
+    assert(r1(3L) === base + 85L * (GraphOps.Scale / 10) / 100L)
   }
 
   test("pageRankWeighted rejects nonpositive weights and headroom overruns") {
     import spark.implicits._
     val bad = Seq((1L, 2L, 0L)).toDF("src", "dst", "w")
     intercept[IllegalArgumentException] {
-      GraphOps.pageRankWeighted(bad, 1).collect()
+      GraphOps.pageRank(bad, 1).collect()
     }
     // max(w)·|V|·Scale ≥ 2^63 must be refused at entry (BigInt check),
     // not left to wrap inside the loop.
     val huge = Seq((1L, 2L, Long.MaxValue / GraphOps.Scale))
       .toDF("src", "dst", "w")
     intercept[IllegalArgumentException] {
-      GraphOps.pageRankWeighted(huge, 1).collect()
+      GraphOps.pageRank(huge, 1).collect()
     }
   }
 
@@ -520,7 +554,7 @@ class GraphOpsSpec extends SparkSpec {
     // seeds = even nodes; node 1 (odd) has in-links only from 2.
     val edges = Seq((2L, 1L), (1L, 3L), (4L, 1L), (3L, 4L))
       .toDF("src", "dst")
-    val got = GraphOps.personalizedPageRank(edges, 6, 2).collect()
+    val got = GraphOps.pageRank(edges, 6, seedMod = Some(2)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val base = 150000000000L
     // seeds hold at least the teleport base
@@ -545,24 +579,6 @@ class GraphOpsSpec extends SparkSpec {
       r
     }
     assert(got === model(6))
-  }
-
-  test("pageRankWarmStart: resuming from a persisted vector equals " +
-      "one longer cold run") {
-    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L))
-      .toDF("src", "dst")
-    val prior = GraphOps.pageRankFixed(edges, 7).select("node", "rank_fp")
-    val warm = GraphOps.pageRankWarmStart(edges, prior, 3).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val cold = GraphOps.pageRankFixed(edges, 10).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(warm === cold)
-    // a node absent from the prior starts at the cold init
-    val grown = edges.union(Seq((5L, 3L)).toDF("src", "dst"))
-    val w2 = GraphOps.pageRankWarmStart(grown, prior, 1).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // node 5 has no in-links: after one round it holds the damping base
-    assert(w2(5L) === 150000000000L)
   }
 
   test("noveltyStats: first occurrence by id order, copies score 0") {

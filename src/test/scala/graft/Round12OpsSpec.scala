@@ -695,9 +695,9 @@ class Round12OpsSpec extends SparkSpec {
     import spark.implicits._
     val rows = (1L to 40L).map(i => (i, s"s$i")).toDF("id", "s")
     val tbl = tmp("r12_ttd")
-    val latest = graft.streaming.StreamOps.versionedSinkReplayDelta(
-      rows, tbl, tmp("r12_ttd_stage"), "id", Seq(11L, 21L, 31L),
-      checkpointEvery = 3)
+    val spec = SinkOps.CommitSpec(checkpointEvery = Some(3))
+    val latest = graft.streaming.StreamOps.versionedSinkReplay(
+      rows, tbl, tmp("r12_ttd_stage"), "id", Seq(11L, 21L, 31L), spec)
     assert(latest.count() == 40L)
     assert(SinkOps.currentVersion(spark, tbl) == 4)
     Seq(1, 2, 4).foreach { v =>
@@ -712,6 +712,12 @@ class Round12OpsSpec extends SparkSpec {
       "v3 should be the full checkpoint")
     // Pinned mid-stream read: v2 = the first two slices.
     assert(SinkOps.readVersion(spark, tbl, Some(2)).count() == 20L)
+    // Exactly-once like every versioned replay: micro-batch 0 delivered
+    // again returns its recorded version and commits nothing.
+    assert(SinkOps.commitVersion(rows.filter($"id" < 11L), tbl,
+      spec.copy(batchKey = Some("batch-0"))) == 1)
+    assert(SinkOps.currentVersion(spark, tbl) == 4)
+    assert(SinkOps.readVersion(spark, tbl).count() == 40L)
   }
 
   // ---- lakehouse SQL front door (table-valued functions) ----

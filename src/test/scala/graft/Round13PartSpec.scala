@@ -455,8 +455,9 @@ class Round13PartSpec extends SparkSpec {
     val b = events.agg(min("event_id"), max("event_id")).head()
     val (lo, hi) = (b.getLong(0), b.getLong(1))
     val latest = graft.streaming.StreamOps
-      .versionedSinkReplayPartitioned(events, t, stage, "event_id",
-        Seq(lo + (hi - lo) / 2), Seq("event_type"))
+      .versionedSinkReplay(events, t, stage, "event_id",
+        Seq(lo + (hi - lo) / 2),
+        SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
     assert(latest.count() == events.count())
     assert(SinkOps.currentVersion(spark, t) == 2)
     val fs = fsOf(t)

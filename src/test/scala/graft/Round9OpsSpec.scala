@@ -321,7 +321,7 @@ class Round9OpsSpec extends SparkSpec {
       ("a.example.com", "b.example.com", 3L), ("a.example.com", "c.com", 1L),
       ("b.example.com", "c.com", 1L), ("c.com", "a.example.com", 1L)
     ).toDF("src", "dst", "w")
-    val ranks = GraphOps.pageRankWeighted(edges, 10).collect()
+    val ranks = GraphOps.pageRank(edges, 10).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(ranks.keySet === Set("a.example.com", "b.example.com", "c.com"))
     // c receives from both a (1/4 share) and b (all) — highest;

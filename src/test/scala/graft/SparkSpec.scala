@@ -18,6 +18,19 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     try src.getLines().next() finally src.close()
   }
 
+  /** Run `body` with the given session confs set, then put back each
+    * conf's previous value (or unset it if it had none).
+    */
+  def withConf[T](confs: (String, String)*)(body: => T): T = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** Files a skip plan reads from flat (unpartitioned) dirs — a flat
     * dir is kept whole by partition predicates.
     */
