@@ -322,8 +322,7 @@ class GraphOpsSpec extends SparkSpec {
     assert(fb === got)
   }
 
-  test("pageRank variants (seedMod, w, converged, prior) equal their " +
-      "plain-loop twins") {
+  test("pageRank variants (seedMod, converged) equal their plain-loop twins") {
     import spark.implicits._
     val small = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L))
       .toDF("src", "dst")
@@ -344,34 +343,51 @@ class GraphOpsSpec extends SparkSpec {
         () => GraphOps.pageRank(small, 6, seedMod = Some(1)),
         () => GraphOps.pageRank(small, 6, prior = Some(
           GraphOps.nodes(small).select(col("node"), lit(base).as("rank_fp"))))),
-      ("uniform w",
-        () => GraphOps.pageRank(
-          edges.select(col("src"), col("dst"), lit(1L).as("w")), 5),
-        () => GraphOps.pageRank(edges, 5)),
       ("pageRankConverged(tolFp = 0), a partial last block",
         () => converged(small, 7), () => GraphOps.pageRank(small, 7)),
       ("pageRankConverged(tolFp = 0), whole blocks",
-        () => converged(edges, 6), () => GraphOps.pageRank(edges, 6)),
-      ("warm start from 7 rounds, 3 more",
-        () => GraphOps.pageRank(small, 3, prior = Some(
-          GraphOps.pageRank(small, 7).select("node", "rank_fp"))),
-        () => GraphOps.pageRank(small, 10)))
+        () => converged(edges, 6), () => GraphOps.pageRank(edges, 6)))
     cases.foreach { case (what, variant, twin) =>
       assert(ranks(variant()) === ranks(twin()), what)
     }
-    // A node absent from the prior starts at the cold init: node 5 has
-    // no in-links, so after one round it holds the damping base.
-    val prior = GraphOps.pageRank(small, 7).select("node", "rank_fp")
-    val grown = small.union(Seq((5L, 3L)).toDF("src", "dst"))
-    assert(ranks(GraphOps.pageRank(grown, 1, prior = Some(prior)))(5L) === base)
+  }
+
+  test("pageRankWeighted with uniform weights equals pageRankFixed") {
+    import spark.implicits._
+    val edges = GraphOps.edgesFromLineitem(Tables.lineitem(spark, sfDir), 97)
+    val uni = edges.select(col("src"), col("dst"), lit(1L).as("w"))
+    val got = GraphOps.pageRank(uni, 5).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val want = GraphOps.pageRank(edges, 5).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === want)
     // Weights steer mass: 1→2 carries 9× the weight of 1→3, so after one
     // round node 2 must outrank node 3 (equal under uniform weights).
     val skew = Seq((1L, 2L, 9L), (1L, 3L, 1L)).toDF("src", "dst", "w")
-    val r1 = ranks(GraphOps.pageRank(skew, 1))
+    val r1 = GraphOps.pageRank(skew, 1).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(r1(2L) > r1(3L))
     // share = (Scale·w) div wdeg: 9/10 and 1/10 of the damped unit mass.
-    assert(r1(2L) === base + 85L * (GraphOps.Scale * 9 / 10) / 100L)
-    assert(r1(3L) === base + 85L * (GraphOps.Scale / 10) / 100L)
+    assert(r1(2L) === 150000000000L + 85L * (GraphOps.Scale * 9 / 10) / 100L)
+    assert(r1(3L) === 150000000000L + 85L * (GraphOps.Scale / 10) / 100L)
+  }
+
+  test("pageRankWarmStart: resuming from a persisted vector equals " +
+      "one longer cold run") {
+    val edges = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 1L), (4L, 3L))
+      .toDF("src", "dst")
+    val prior = GraphOps.pageRank(edges, 7).select("node", "rank_fp")
+    val warm = GraphOps.pageRank(edges, 3, prior = Some(prior)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val cold = GraphOps.pageRank(edges, 10).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(warm === cold)
+    // a node absent from the prior starts at the cold init
+    val grown = edges.union(Seq((5L, 3L)).toDF("src", "dst"))
+    val w2 = GraphOps.pageRank(grown, 1, prior = Some(prior)).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // node 5 has no in-links: after one round it holds the damping base
+    assert(w2(5L) === 150000000000L)
   }
 
   test("pageRankWeighted rejects nonpositive weights and headroom overruns") {
