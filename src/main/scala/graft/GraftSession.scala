@@ -17,6 +17,12 @@ import org.apache.spark.sql.SparkSession
   *  - Shuffle partitions default to the local core count; a real cluster
   *    deployment overrides this to ~2-3× total executor cores (or leaves
   *    it to AQE coalescing).
+  *  - `file:` resolves to [[graft.sources.LocalFs]] ([[withLocalFs]]):
+  *    without libhadoop, Hadoop's stock local filesystem forks a
+  *    `chmod`, `ls -ld` or `readlink` process (~2.7 ms each) per file it
+  *    creates, lists or renames — every commit, sidecar, manifest,
+  *    stream checkpoint and state-store delta. LocalFs does the same
+  *    in-process; no plan, job or byte written changes.
   */
 object GraftSession {
 
@@ -49,8 +55,19 @@ object GraftSession {
     root.getPath
   }
 
+  /** Register [[graft.sources.LocalFs]] for `file:` through both
+    * Hadoop entry points: `FileSystem` (commits, sidecars, manifests,
+    * parquet writes) and `FileContext` (Spark's streaming checkpoint
+    * and state-store files).
+    */
+  def withLocalFs(b: SparkSession.Builder): SparkSession.Builder =
+    b.config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.LocalFs.Fs].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.LocalFs.Afs].getName)
+
   def configure(b: SparkSession.Builder, shufflePartitions: String): SparkSession.Builder =
-    b.config("spark.sql.shuffle.partitions", shufflePartitions)
+    withLocalFs(b).config("spark.sql.shuffle.partitions", shufflePartitions)
       // Graft's SQL surface: native expressions, lakehouse TVFs, and
       // the DML parser (MERGE INTO / DELETE FROM / INSERT INTO against
       // graft_table paths). Parser injection only works at build time,

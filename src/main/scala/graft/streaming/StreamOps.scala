@@ -159,10 +159,10 @@ object StreamOps {
 
   /** One cloned session per replay — the replay-scoped conf carrier.
     * Stateful operators commit EVERY state-store partition every
-    * micro-batch, so at fixture scale the 32-partition session default
-    * makes commit fan-out, not data, the dominant replay cost (measured
-    * ~2× on the stream-stream join); production tuning would size it to
-    * real per-key volume. The [[ReplayStatePartitions]]-partition
+    * micro-batch (a delta file per partition), so at fixture scale the
+    * 32-partition session default makes commit fan-out, not data, the
+    * dominant replay cost; production tuning would size it to real
+    * per-key volume. The [[ReplayStatePartitions]]-partition
     * setting lives on a `newSession()` CLONE (same SparkContext, forked
     * SQL conf + temp views), so the parent session's conf is NEVER
     * mutated — a concurrent batch query in the parent keeps planning at
@@ -179,12 +179,12 @@ object StreamOps {
     * huge-ReplayWatermark family, whose drained result is provably
     * independent of batch granularity): every micro-batch pays a full
     * state-store commit across every state partition plus a planning
-    * round-trip, so at fixture scale the batch count — not data — is
-    * the dominant replay cost (profiled ~1.3-4 task-seconds PER BATCH
-    * of pure state-commit stages). 2 keeps the multi-batch/out-of-order
-    * delivery property the replays demonstrate (cross-batch state is
-    * separately proven by the xbatch/restart/late rows, which keep
-    * their own granularity); production binds real trigger cadence.
+    * round-trip and its offset and commit log files, so at fixture
+    * scale the batch count — not data — is the dominant replay cost.
+    * 2 keeps the multi-batch/out-of-order delivery property the
+    * replays demonstrate (cross-batch state is separately proven by the
+    * xbatch/restart/late rows, which keep their own granularity);
+    * production binds real trigger cadence.
     */
   private val ReplayFilesPerTrigger = 2
 

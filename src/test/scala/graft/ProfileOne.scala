@@ -4,8 +4,9 @@ import org.apache.spark.scheduler._
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 /** Scratch profiling harness: run one registered query once (warm) and
-  * report Spark job count, stage count, task count, summed task time,
-  * and wall time — separates cluster-side work from driver overhead.
+  * report Spark job count, stage count, task count, child processes
+  * started (JFR, [[ProcessStarts]]), summed task time, and wall time —
+  * separates cluster-side work from driver overhead.
   * Usage: sbt "Test/runMain graft.ProfileOne q_kmeans[,q_x]"
   */
 object ProfileOne {
@@ -51,9 +52,9 @@ object ProfileOne {
       Thread.sleep(500)
       jobs.set(0); stages.set(0); tasks.set(0); taskMs.set(0L)
       stageAgg.clear(); stageTaskMs.clear()
-      val wall = run()
+      val (wall, procs) = ProcessStarts.during(run())
       Thread.sleep(500) // let listener drain
-      println(f"PROFILE $name wall=$wall%.2f jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} taskSec=${taskMs.get / 1e3}%.1f")
+      println(f"PROFILE $name wall=$wall%.2f jobs=${jobs.get} stages=${stages.get} tasks=${tasks.get} procs=${procs.size} taskSec=${taskMs.get / 1e3}%.1f")
       import scala.jdk.CollectionConverters._
       stageAgg.asScala.toSeq.sortBy(-_._2._2).take(8).foreach {
         case (id, (nm, ms, nt)) =>

@@ -40,7 +40,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    // Hadoop's file: filesystem as every graft session has it
+    val s = GraftSession.withLocalFs(SparkSession.builder())
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
