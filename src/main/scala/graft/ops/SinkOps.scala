@@ -146,16 +146,13 @@ object SinkOps {
     * plain-parquet lake needs — Spark correctly refuses to overwrite
     * a path it is still reading lazily from), then written with
     * DYNAMIC partition overwrite so exactly the affected directories
-    * swap. The overwrite mode is scoped to a cloned session — no conf
-    * mutation is visible to concurrent queries (the streaming-replay
-    * discipline).
+    * swap. The overwrite mode is an option of that one write — no
+    * session conf changes, so concurrent queries never see it.
     */
   def deleteWhere(spark: org.apache.spark.sql.SparkSession, path: String,
                   partitionCol: String,
                   forget: org.apache.spark.sql.Column): Unit = {
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    val t = Tables.parquet(s2, path)
+    val t = Tables.parquet(spark, path)
     val affected = t.filter(forget).select(partitionCol).distinct()
       .localCheckpoint(true)
     val survivors = t.join(broadcast(affected), Seq(partitionCol))
@@ -176,13 +173,14 @@ object SinkOps {
       .collect().map(_.get(0))
     if (emptied.nonEmpty) {
       val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
-        s2.sessionState.newHadoopConf())
+        spark.sessionState.newHadoopConf())
       emptied.foreach { v =>
         fs.delete(new org.apache.hadoop.fs.Path(path, s"$partitionCol=$v"),
           true)
       }
     }
     survivors.write.mode(SaveMode.Overwrite)
+      .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionCol).parquet(path)
   }
 

@@ -20,10 +20,11 @@ import graft.sources.LocalFs
   *    `file:` class's (Hive's `ProxyLocalFileSystem` on Spark's
   *    classpath) and never replaces an existing file; FileContext
   *    renames lay out the stock files.
-  *  - NO FORKS: a stats commit with its skipping read-back and a
-  *    windowed CMS micro-batch replay start no process, and the
-  *    session's hadoop conf resolves `file:` to LocalFs through both
-  *    `FileSystem` and `FileContext`.
+  *  - NO FORKS: a stats commit with its skipping read-back, a
+  *    windowed CMS micro-batch replay, a two-phase checkpoint-restart
+  *    replay and a foreachBatch versioned-sink replay start no process,
+  *    and the session's hadoop conf resolves `file:` to LocalFs through
+  *    both `FileSystem` and `FileContext`.
   */
 class LocalFsSpec extends SparkSpec {
 
@@ -211,7 +212,10 @@ class LocalFsSpec extends SparkSpec {
     // when the garbage collector finds the session, whenever that is;
     // those are not this query's files
     val artifacts = new java.io.File(System.getProperty("java.io.tmpdir"), "artifacts-").getPath
-    for (q <- Seq("q_version_skip", "q_stream_cms")) {
+    // q_stream_restart drains twice into a checkpointed parquet sink,
+    // q_stream_delta commits a version per foreachBatch micro-batch
+    for (q <- Seq("q_version_skip", "q_stream_cms", "q_stream_restart",
+        "q_stream_delta")) {
       val (rows, started) = ProcessStarts.during(SparkEntry.queries(q)(spark, sfDir).collect())
       val procs = started.filterNot(_.startsWith(s"rm -rf $artifacts"))
       assert(rows.nonEmpty, q)

@@ -636,6 +636,50 @@ class MultimodalStreamSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  /** Slice files of a staging dir, by name: (name, mtime). */
+  private def stagedSlices(dir: String): Seq[(String, Long)] =
+    new java.io.File(dir).listFiles().toSeq
+      .map(f => f.getName -> f.lastModified()).sortBy(_._1)
+
+  test("slice staging: one file per slice, ascending mtimes, flush slice " +
+      "last, no build dir left") {
+    val ev = Tables.events(spark, sfDir)
+    val staging = java.nio.file.Files
+      .createTempDirectory("graft-slices").toString + "/staged"
+    assert(StreamOps.streamOuterJoinReplay(ev, staging).count() > 0)
+    // four time slices plus the far-future flush slice; the listing is
+    // the whole dir, so no _slice_build/_flush_build dir survives
+    val idx = Seq(0, 1, 2, 3, 9998)
+    val slices = stagedSlices(staging)
+    assert(slices.map(_._1) === idx.map(i => f"slice-$i%04d.parquet"))
+    assert(slices.map(_._2) === idx.map(StreamOps.SliceMtime0 + _ * 60000L))
+    assert(slices.map(_._2).sliding(2).forall { case Seq(a, b) => a < b })
+
+    // id-range staging: one slice per boundary interval, each holding
+    // exactly its interval's ids
+    val docs = Seq((1L, "en", "hello world"), (2L, "en", "hello world"),
+      (3L, "de", "hallo welt"), (4L, "de", "hallo welt"))
+      .toDF("doc_id", "lang", "text")
+    val tmp = java.nio.file.Files.createTempDirectory("graft-idslices")
+    val wpath = tmp.resolve("weights").toString
+    graft.ops.TextStatsOps.trainWriteClassifier(docs, wpath)
+    val arrivals = docs.union(
+      docs.select((col("doc_id") + 100L).as("doc_id"), col("lang"), col("text")))
+    val idStaging = tmp.resolve("staged").toString
+    val bounds = Seq(2L, 100L)
+    assert(StreamOps.classifierScoreReplay(arrivals, wpath, idStaging, bounds)
+      .count() === 8)
+    val idSlices = stagedSlices(idStaging)
+    assert(idSlices.map(_._1) ===
+      (0 to bounds.size).map(i => f"slice-$i%04d.parquet"))
+    assert(idSlices.map(_._2).sliding(2).forall { case Seq(a, b) => a < b })
+    val ids = idSlices.map { case (name, _) =>
+      spark.read.parquet(s"$idStaging/$name").select("doc_id").as[Long]
+        .collect().sorted.toSeq
+    }
+    assert(ids === Seq(Seq(1L), Seq(2L, 3L, 4L), Seq(101L, 102L, 103L, 104L)))
+  }
+
   test("intervalJoin pairs within the lag, inclusive bounds, per key") {
     val base = 1700000000000L
     def ts(offsetSec: Long) = new Timestamp(base + offsetSec * 1000)
