@@ -131,10 +131,7 @@ object SparkEntry {
     "q_commit_checked" -> ((s, d) => {
       import QualityOps._
       val o = Tables.orders(s, d)
-      val path = tmpPath("graft_checked", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_checked", d)
       SinkOps.commitVersion(
         o.filter(col("o_orderkey") % 3 === 0), path,
         SinkOps.CommitSpec(constraints = Some(SinkOps.Constraints(
@@ -166,16 +163,10 @@ object SparkEntry {
     // the staging is deleted), so the head is only ever clean slices.
     "q_sql_check_expr" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      val dim = tmpPath("graft_ckx_dim", d)
-      val dimRoot = new org.apache.hadoop.fs.Path(dim)
-      dimRoot.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(dimRoot, true)
+      val dim = freshTmpPath(s, "graft_ckx_dim", d)
       SinkOps.commitVersion(
         Tables.customer(s, d).select("c_custkey"), dim)
-      val path = tmpPath("graft_ckx", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_ckx", d)
       Tables.orders(s, d).createOrReplaceTempView("r14_ckx_orders")
       s.sql(
         s"""INSERT INTO graft_table('$path')
@@ -226,10 +217,7 @@ object SparkEntry {
     // relationally with the rename as an alias.
     "q_rename_col" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_rename", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_rename", d)
       SinkOps.commitVersion(ev.filter(col("event_id") % 2 === 0), path)
       SinkOps.deleteVersionKeys(
         ev.filter(col("event_id") % 5 === 0).select("event_id"),
@@ -250,10 +238,7 @@ object SparkEntry {
     // manifest position.
     "q_drop_col" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_drop", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_drop", d)
       SinkOps.commitVersion(ev.filter(col("event_id") % 3 === 0), path)
       s.sql(s"ALTER TABLE graft_table('$path') DROP COLUMN props")
       SinkOps.commitVersion(
@@ -273,10 +258,7 @@ object SparkEntry {
     "q_widen_col" -> ((s, d) => {
       val ev = Tables.events(s, d).withColumn("vint",
         (col("event_id") % 100000).cast("int"))
-      val path = tmpPath("graft_widen", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_widen", d)
       SinkOps.commitVersion(ev.filter(col("event_id") % 2 === 0), path)
       s.sql(s"ALTER TABLE graft_table('$path') " +
         "ALTER COLUMN vint TYPE BIGINT")
@@ -1227,7 +1209,7 @@ object SparkEntry {
     "q_dedup_minhash_incr" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
-      val idx = tmpPath("graft_mhidx", d)
+      val idx = freshTmpPath(s, "graft_mhidx", d)
       DedupOps.writeMinhashIndex(docs.select("doc_id", "text"), idx)
       val arrivals = docs.filter(col("doc_id") % 3 === 0)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text"))
@@ -1244,13 +1226,13 @@ object SparkEntry {
     // APPEND batch-1 survivors' bands + digests, then judge batch 2 —
     // exact and near twins of batch-1 survivors (+1M/+2M id spaces) are
     // caught ONLY because the append landed, twins of the original
-    // known half (+4M) by the base index. writeMinhashIndex's overwrite
-    // resets the index each run, so warmup + timed passes stay
-    // deterministic. Output: the batch-2 verdict table.
+    // known half (+4M) by the base index. freshTmpPath empties the
+    // index root each run, so warmup + timed passes stay deterministic.
+    // Output: the batch-2 verdict table.
     "q_dedup_index_update" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
-      val idx = tmpPath("graft_mhidx_upd", d)
+      val idx = freshTmpPath(s, "graft_mhidx_upd", d)
       val evens = docs.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
       val odds = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
       DedupOps.writeMinhashIndex(evens, idx)
@@ -1271,14 +1253,14 @@ object SparkEntry {
     // two-cycle flow as q_dedup_index_update, but the survivor append is
     // REPLAYED (appended twice — the at-least-once re-delivery a real
     // ingest loop suffers) and the index then compacted to its distinct
-    // row set through a Hadoop-FS generation swap before batch 2 is
-    // judged. The oracle is the SAME SQL as the single-append update
-    // query: double-append + compact ≡ single append is exactly the
-    // invariant under test, pinned bit-for-bit by the driver gate.
+    // row set, committed as a new version of each index table, before
+    // batch 2 is judged. The oracle is the SAME SQL as the single-append
+    // update query: double-append + compact ≡ single append is exactly
+    // the invariant under test, pinned bit-for-bit by the oracle gate.
     "q_dedup_index_compact" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
-      val idx = tmpPath("graft_mhidx_cmp", d)
+      val idx = freshTmpPath(s, "graft_mhidx_cmp", d)
       val evens = docs.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
       val odds = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
       DedupOps.writeMinhashIndex(evens, idx)
@@ -1310,7 +1292,7 @@ object SparkEntry {
       // +3M, so the base table must stay below 1M ids.
       requireIdHeadroom(docs, "doc_id")
       val known = DedupOps.dupCorpus(docs).select("doc_id", "text")
-      val idx = tmpPath("graft_mhidx_clu", d)
+      val idx = freshTmpPath(s, "graft_mhidx_clu", d)
       DedupOps.writeMinhashIndex(known, idx)
       DedupOps.writeMinhashClusterMap(known, idx)
       val arrivals = docs.filter(col("doc_id") % 3 === 0)
@@ -1334,7 +1316,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
       val known = DedupOps.dupCorpus(docs).select("doc_id", "text")
-      val idx = tmpPath("graft_mhidx_canon", d)
+      val idx = freshTmpPath(s, "graft_mhidx_canon", d)
       DedupOps.writeMinhashIndex(known, idx)
       DedupOps.writeMinhashClusterMap(known, idx)
       DedupOps.writeCanonicalLedger(known, idx)
@@ -1359,7 +1341,7 @@ object SparkEntry {
     "q_stream_dedup_index" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
-      val idx = tmpPath("graft_mhidx_stream", d)
+      val idx = freshTmpPath(s, "graft_mhidx_stream", d)
       val staging = tmpPath("graft_mhidx_stage", d)
       val evens = docs.filter(col("doc_id") % 2 === 0).select("doc_id", "text")
       val odds = docs.filter(col("doc_id") % 2 === 1).select("doc_id", "text")
@@ -1383,7 +1365,7 @@ object SparkEntry {
     "q_stream_canonical" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
-      val idx = tmpPath("graft_mhidx_canonstream", d)
+      val idx = freshTmpPath(s, "graft_mhidx_canonstream", d)
       val staging = tmpPath("graft_canonstream_stage", d)
       val evens = docs.filter(col("doc_id") % 2 === 0)
         .select("doc_id", "text")
@@ -1539,7 +1521,7 @@ object SparkEntry {
     "q_dedup_embed_incr" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       requireIdHeadroom(emb, "vec_id")
-      val idx = tmpPath("graft_embidx", d)
+      val idx = freshTmpPath(s, "graft_embidx", d)
       SimilarityOps.writeEmbedIndex(emb, idx)
       val arrivals = emb.filter(col("vec_id") % 3 === 0)
         .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding"))
@@ -1565,7 +1547,7 @@ object SparkEntry {
     "q_embed_index_update" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       requireIdHeadroom(emb, "vec_id")
-      val idx = tmpPath("graft_embidx_upd", d)
+      val idx = freshTmpPath(s, "graft_embidx_upd", d)
       val evens = emb.filter(col("vec_id") % 2 === 0)
         .select("vec_id", "embedding")
       val odds = emb.filter(col("vec_id") % 2 === 1)
@@ -1587,13 +1569,14 @@ object SparkEntry {
     // Embed-index COMPACTION: the q_embed_index_update flow with the
     // survivor append REPLAYED (at-least-once re-delivery) and the
     // index then compacted — row dedup + GLOBAL occupancy recompute
-    // (restoring the writeEmbedIndex snapshot invariant appends erode)
-    // — before batch 2 is judged. Oracle = the single-append update
-    // SQL: double-append + compact ≡ one clean append.
+    // (restoring the writeEmbedIndex snapshot invariant appends erode),
+    // committed as a new version of each index table — before batch 2
+    // is judged. Oracle = the single-append update SQL: double-append +
+    // compact ≡ one clean append.
     "q_embed_index_compact" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       requireIdHeadroom(emb, "vec_id")
-      val idx = tmpPath("graft_embidx_cmp", d)
+      val idx = freshTmpPath(s, "graft_embidx_cmp", d)
       val evens = emb.filter(col("vec_id") % 2 === 0)
         .select("vec_id", "embedding")
       val odds = emb.filter(col("vec_id") % 2 === 1)
@@ -1626,7 +1609,7 @@ object SparkEntry {
       val emb = Tables.embeddings(s, d)
       requireIdHeadroom(emb, "vec_id")
       val known = SimilarityOps.embedDupCorpus(emb)
-      val idx = tmpPath("graft_embidx_clu", d)
+      val idx = freshTmpPath(s, "graft_embidx_clu", d)
       SimilarityOps.writeEmbedIndex(known, idx)
       SimilarityOps.writeEmbedClusterMap(known, idx)
       val arrivals = emb.filter(col("vec_id") % 3 === 0)
@@ -1652,7 +1635,7 @@ object SparkEntry {
     "q_stream_embed_index" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       requireIdHeadroom(emb, "vec_id")
-      val idx = tmpPath("graft_embidx_stream", d)
+      val idx = freshTmpPath(s, "graft_embidx_stream", d)
       val staging = tmpPath("graft_embidx_stage", d)
       val evens = emb.filter(col("vec_id") % 2 === 0)
         .select("vec_id", "embedding")
@@ -1677,7 +1660,7 @@ object SparkEntry {
     "q_simsearch_incr" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       requireIdHeadroom(emb, "vec_id")
-      val idx = tmpPath("graft_embidx_topk", d)
+      val idx = freshTmpPath(s, "graft_embidx_topk", d)
       SimilarityOps.writeEmbedIndex(emb, idx,
         SimilarityOps.LshTables, SimilarityOps.LshPlanes)
       val queries = emb.filter(col("vec_id") < 5)
@@ -1696,7 +1679,7 @@ object SparkEntry {
     "q_simsearch_ivf_incr" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       requireIdHeadroom(emb, "vec_id")
-      val idx = tmpPath("graft_ivfidx", d)
+      val idx = freshTmpPath(s, "graft_ivfidx", d)
       SimilarityOps.writeIvfIndex(emb, idx)
       val queries = emb.filter(col("vec_id") < 5)
         .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -1713,7 +1696,7 @@ object SparkEntry {
     "q_simsearch_pq_incr" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       requireIdHeadroom(emb, "vec_id")
-      val idx = tmpPath("graft_pqidx", d)
+      val idx = freshTmpPath(s, "graft_pqidx", d)
       SimilarityOps.writePqIndex(emb, idx)
       val queries = emb.filter(col("vec_id") < 5)
         .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -1941,7 +1924,7 @@ object SparkEntry {
     "q_dedup_substring_incr" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
-      val path = tmpPath("graft_gramidx", d)
+      val path = freshTmpPath(s, "graft_gramidx", d)
       DedupOps.writeGramIndex(docs, path)
       DedupOps.substringDupIncremental(
         DedupOps.quoteCorpus(docs).filter(col("doc_id") >= 1000000L), path)
@@ -2132,7 +2115,7 @@ object SparkEntry {
     // scoring — which is what the oracle pins.
     "q_stream_bm25" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val path = tmpPath("graft_bm25_sidx", d)
+      val path = freshTmpPath(s, "graft_bm25_sidx", d)
       CurationOps.writeBm25Index(docs, path)
       import s.implicits._
       graft.streaming.StreamOps.bm25ServeReplay(
@@ -2145,7 +2128,7 @@ object SparkEntry {
     // query's term set (PushedFilters In).
     "q_bm25_persist" -> ((s, d) => {
       val docs = Tables.documents(s, d)
-      val path = tmpPath("graft_bm25idx", d)
+      val path = freshTmpPath(s, "graft_bm25idx", d)
       CurationOps.writeBm25Index(docs, path)
       CurationOps.bm25TopKIndexed(s, path, Bm25QueriesB)
     }),
@@ -2156,7 +2139,7 @@ object SparkEntry {
     "q_bm25_incr" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
-      val path = tmpPath("graft_bm25inc", d)
+      val path = freshTmpPath(s, "graft_bm25inc", d)
       CurationOps.writeBm25Index(docs, path)
       CurationOps.appendToBm25Index(
         docs.select((col("doc_id") + 1000000L).as("doc_id"),
@@ -2164,15 +2147,16 @@ object SparkEntry {
       CurationOps.bm25TopKIndexed(s, path, Bm25QueriesB)
     }),
     // BM25-index COMPACTION: base + append partials re-AGGREGATED into
-    // one generation (termdf folds per term, stats to one totals row,
-    // postings re-clustered by term — the prune-tightness appends
-    // erode); serve after compaction must equal BM25 over the union
-    // corpus, which the q_bm25_incr oracle replays. Query set A keeps
-    // the result from being a byte-twin of q_bm25_incr.
+    // one new version of each index table (termdf folds per term, stats
+    // to one totals row, postings re-clustered by term — the
+    // prune-tightness appends erode); serve after compaction must equal
+    // BM25 over the union corpus, which the q_bm25_incr oracle replays.
+    // Query set A keeps the result from being a byte-twin of
+    // q_bm25_incr.
     "q_bm25_compact" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       requireIdHeadroom(docs, "doc_id")
-      val path = tmpPath("graft_bm25cmp", d)
+      val path = freshTmpPath(s, "graft_bm25cmp", d)
       CurationOps.writeBm25Index(docs, path)
       CurationOps.appendToBm25Index(
         docs.select((col("doc_id") + 1000000L).as("doc_id"),
@@ -2191,8 +2175,8 @@ object SparkEntry {
     "q_hybrid_retrieval" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val emb = Tables.embeddings(s, d)
-      val bmPath = tmpPath("graft_hyb_bm25", d)
-      val ivfPath = tmpPath("graft_hyb_ivf", d)
+      val bmPath = freshTmpPath(s, "graft_hyb_bm25", d)
+      val ivfPath = freshTmpPath(s, "graft_hyb_ivf", d)
       CurationOps.writeBm25Index(docs, bmPath)
       SimilarityOps.writeIvfIndex(emb, ivfPath, trainIters = 0)
       CurationOps.hybridTopK(s, bmPath, ivfPath, Bm25Queries,
@@ -2205,8 +2189,8 @@ object SparkEntry {
     "q_hybrid_eval" -> ((s, d) => {
       val docs = Tables.documents(s, d)
       val emb = Tables.embeddings(s, d)
-      val bmPath = tmpPath("graft_hybev_bm25", d)
-      val ivfPath = tmpPath("graft_hybev_ivf", d)
+      val bmPath = freshTmpPath(s, "graft_hybev_bm25", d)
+      val ivfPath = freshTmpPath(s, "graft_hybev_ivf", d)
       CurationOps.writeBm25Index(docs, bmPath)
       SimilarityOps.writeIvfIndex(emb, ivfPath, trainIters = 0)
       // Each ranked list is ≤ depth·|queries| rows but its probe plan
@@ -2229,7 +2213,7 @@ object SparkEntry {
       // Truth from the just-written postings artifact (one row per
       // (doc_id, w) by construction) — not a second corpus tokenize.
       CurationOps.rankEvalMulti(docs, Bm25Queries, tagged, 10,
-        docTerms = Some(Tables.parquet(s, s"$bmPath/postings")
+        docTerms = Some(SinkOps.readVersion(s, s"$bmPath/postings")
           .select("doc_id", "w")))
     }),
     // Target-mix resampling by language: hash-thresholded downsampling
@@ -2558,7 +2542,7 @@ object SparkEntry {
     // so the oracle's closed-form all-pairs verdict is EXACT.
     "q_image_dedup_incr" -> ((s, d) => {
       val base = Tables.documents(s, d).filter(col("doc_id") < 256)
-      val idx = tmpPath("graft_imgidx", d)
+      val idx = freshTmpPath(s, "graft_imgidx", d)
       MultimodalOps.writeImageIndex(
         MultimodalOps.imageAHash(base).select("asset_id", "ahash"), idx)
       val third = (r: Int) => base.filter(col("doc_id") % 3 === r)
@@ -2579,7 +2563,7 @@ object SparkEntry {
     // holds if the in-stream update ran.
     "q_stream_image_index" -> ((s, d) => {
       val base = Tables.documents(s, d).filter(col("doc_id") < 256)
-      val idx = tmpPath("graft_imgidx_stream", d)
+      val idx = freshTmpPath(s, "graft_imgidx_stream", d)
       val staging = tmpPath("graft_imgidx_stage", d)
       MultimodalOps.writeImageIndex(
         MultimodalOps.imageAHash(base).select("asset_id", "ahash"), idx)
@@ -2978,12 +2962,7 @@ object SparkEntry {
     // by the oracle from date arithmetic alone.
     "q_time_travel" -> ((s, d) => {
       val o = Tables.orders(s, d)
-      val path = tmpPath("graft_tt", d)
-      // tmpPath survives within a JVM across bench warmup+timed passes;
-      // version history must restart per run, so clear the root first.
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_tt", d)
       val bd = lit(IvmBoundary).cast("date")
       SinkOps.commitVersion(
         o.filter(col("o_orderdate").cast("date") < bd), path)
@@ -3009,10 +2988,7 @@ object SparkEntry {
     "q_sql_time_travel" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val o = Tables.orders(s, d)
-      val path = tmpPath("graft_sqltt", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqltt", d)
       val bd = lit(IvmBoundary).cast("date")
       SinkOps.commitVersion(
         o.filter(col("o_orderdate").cast("date") < bd), path)
@@ -3038,10 +3014,7 @@ object SparkEntry {
     "q_sql_changefeed" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_sqlcf", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlcf", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(ev.filter(col("event_id") % 3 === r),
           path); ()
@@ -3060,10 +3033,7 @@ object SparkEntry {
     // old pinned versions untouched (spec).
     "q_compact_versions" -> ((s, d) => {
       val o = Tables.orders(s, d)
-      val path = tmpPath("graft_ttc", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_ttc", d)
       val bd = lit(IvmBoundary).cast("date")
       SinkOps.commitVersion(
         o.filter(col("o_orderdate").cast("date") < bd), path)
@@ -3086,10 +3056,7 @@ object SparkEntry {
     // files-read < files-total is spec-pinned.
     "q_version_skip" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_vskip", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_vskip", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 3 === r)
@@ -3112,10 +3079,7 @@ object SparkEntry {
     // spec-pinned (Round15OpsSpec).
     "q_stats_string" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_strskip", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_strskip", d)
       (0L to 1L).foreach { r =>
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 2 === r)
@@ -3139,10 +3103,7 @@ object SparkEntry {
     // spec-pinned (Round16OpsSpec).
     "q_stats_ts" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_tsskip", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_tsskip", d)
       (0L to 1L).foreach { r =>
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 2 === r)
@@ -3171,10 +3132,7 @@ object SparkEntry {
     // kept-leaf files < total is spec-pinned (Round16OpsSpec).
     "q_part_skip" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_pskip", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_pskip", d)
       (0L to 1L).foreach { r =>
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 2 === r)
@@ -3204,10 +3162,7 @@ object SparkEntry {
     // spec-pinned (Round16OpsSpec).
     "q_part_bloom" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_pbloom", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_pbloom", d)
       SinkOps.commitVersion(ev.repartition(8), path,
         SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type")),
           blooms = Seq("event_id")))
@@ -3230,10 +3185,7 @@ object SparkEntry {
       val docs = Tables.documents(s, d).withColumn("url",
         concat(lit("https://crawl.example.com/"), col("source"),
           lit("/"), col("doc_id")))
-      val path = tmpPath("graft_strbloom", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_strbloom", d)
       SinkOps.commitVersion(docs.repartition(8), path,
         SinkOps.CommitSpec(blooms = Seq("url")))
       val probe = docs.filter(col("doc_id") === 7L)
@@ -3251,10 +3203,7 @@ object SparkEntry {
     // manifest is spec-pinned (Round12OpsSpec).
     "q_skip_dv" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_dvskip", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_dvskip", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 3 === r)
@@ -3280,10 +3229,7 @@ object SparkEntry {
     // listing is spec-pinned (Round13PartSpec).
     "q_part_prune" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_part", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_part", d)
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 3 === 0), path,
         SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
@@ -3307,10 +3253,7 @@ object SparkEntry {
     "q_part_multi" -> ((s, d) => {
       val ev = Tables.events(s, d).withColumn("vbkt",
         (col("event_id") % 4).cast("string"))
-      val path = tmpPath("graft_partk", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_partk", d)
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 3 === 0), path,
         SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type",
@@ -3335,10 +3278,7 @@ object SparkEntry {
     "q_part_evolve" -> ((s, d) => {
       val ev = Tables.events(s, d).withColumn("vbkt",
         (col("event_id") % 4).cast("string"))
-      val path = tmpPath("graft_pevo", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_pevo", d)
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 2 === 0), path,
         SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
@@ -3360,10 +3300,7 @@ object SparkEntry {
     "q_part_counts" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_partcnt", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_partcnt", d)
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 2 === 0), path,
         SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
@@ -3387,10 +3324,7 @@ object SparkEntry {
     // partition tier.
     "q_sql_part" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_sqlpart", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlpart", d)
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 2 === 0), path,
         SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
@@ -3405,10 +3339,7 @@ object SparkEntry {
     // O(changed files) planning and IO, never a two-snapshot diff.
     "q_version_changes" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_vchg", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_vchg", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(ev.filter(col("event_id") % 3 === r),
           path); ()
@@ -3428,10 +3359,7 @@ object SparkEntry {
       val o = Tables.orders(s, d)
       val li = Tables.lineitem(s, d)
       val bd = lit(IvmBoundary).cast("date")
-      val tbl = tmpPath("graft_cfivm_tbl", d)
-      val troot = new org.apache.hadoop.fs.Path(tbl)
-      troot.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(troot, true)
+      val tbl = freshTmpPath(s, "graft_cfivm_tbl", d)
       val ld = li.filter(col("l_shipdate").cast("date") >= bd)
       SinkOps.commitVersion(
         li.filter(col("l_shipdate").cast("date") < bd), tbl)
@@ -3484,10 +3412,7 @@ object SparkEntry {
     // key happens to collide with a live key at larger scale factors.
     "q_changefeed_classify" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_cfc", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_cfc", d)
       SinkOps.commitVersion(e, path,
         SinkOps.CommitSpec(blooms = Seq("event_id")))
       val batch = e.filter(col("event_id") % 5 === 0)
@@ -3514,10 +3439,7 @@ object SparkEntry {
       val o = Tables.orders(s, d)
       val li = Tables.lineitem(s, d)
       val bd = lit(IvmBoundary).cast("date")
-      val tbl = tmpPath("graft_scf_tbl", d)
-      val troot = new org.apache.hadoop.fs.Path(tbl)
-      troot.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(troot, true)
+      val tbl = freshTmpPath(s, "graft_scf_tbl", d)
       val ld = li.filter(col("l_shipdate").cast("date") >= bd)
       SinkOps.commitVersion(
         li.filter(col("l_shipdate").cast("date") < bd), tbl)
@@ -3543,14 +3465,9 @@ object SparkEntry {
     // protocol. Oracle: streamed bytes ≡ the table's full content.
     "q_stream_graft_source" -> ((s, d) => {
       val li = Tables.lineitem(s, d)
-      val tbl = tmpPath("graft_gss_tbl", d)
-      val out = tmpPath("graft_gss_out", d)
-      val ckpt = tmpPath("graft_gss_ckpt", d)
-      val hconf = s.sessionState.newHadoopConf()
-      Seq(tbl, out, ckpt).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(hconf).delete(hp, true); ()
-      }
+      val tbl = freshTmpPath(s, "graft_gss_tbl", d)
+      val out = freshTmpPath(s, "graft_gss_out", d)
+      val ckpt = freshTmpPath(s, "graft_gss_ckpt", d)
       SinkOps.commitVersion(li.filter(col("l_orderkey") % 3 === 0),
         tbl)
       val q = s.readStream.format("graft")
@@ -3584,14 +3501,9 @@ object SparkEntry {
     "q_stream_graft_sink" -> ((s, d) => {
       val o = Tables.orders(s, d)
         .select("o_orderkey", "o_custkey", "o_totalprice")
-      val src = tmpPath("graft_gsk_src", d)
-      val dst = tmpPath("graft_gsk_dst", d)
-      val ckpt = tmpPath("graft_gsk_ckpt", d)
-      val hconf = s.sessionState.newHadoopConf()
-      Seq(src, dst, ckpt).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(hconf).delete(hp, true); ()
-      }
+      val src = freshTmpPath(s, "graft_gsk_src", d)
+      val dst = freshTmpPath(s, "graft_gsk_dst", d)
+      val ckpt = freshTmpPath(s, "graft_gsk_ckpt", d)
       SinkOps.commitVersion(o.filter(col("o_orderkey") % 3 === 0), src)
       SinkOps.commitVersion(o.limit(0), dst) // initialize the sink
       val q = s.readStream.format("graft")
@@ -3628,14 +3540,9 @@ object SparkEntry {
     // stream.
     "q_stream_cdf" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_cdf_tbl", d)
-      val out = tmpPath("graft_cdf_out", d)
-      val ckpt = tmpPath("graft_cdf_ckpt", d)
-      val hconf = s.sessionState.newHadoopConf()
-      Seq(path, out, ckpt).foreach { p =>
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(hconf).delete(hp, true); ()
-      }
+      val path = freshTmpPath(s, "graft_cdf_tbl", d)
+      val out = freshTmpPath(s, "graft_cdf_out", d)
+      val ckpt = freshTmpPath(s, "graft_cdf_ckpt", d)
       SinkOps.commitVersion(e, path,
         SinkOps.CommitSpec(blooms = Seq("event_id")))
       val q = s.readStream.format("graft")
@@ -3679,10 +3586,7 @@ object SparkEntry {
     // recomputes the view from the merged table from scratch.
     "q_changefeed_retract" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_cfr", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_cfr", d)
       SinkOps.commitVersion(e, path)
       val v1state = AggOps.aggState(
         SinkOps.readVersion(s, path, Some(1)), "event_type", "value")
@@ -3750,10 +3654,7 @@ object SparkEntry {
     // included (spec pins the all-partitioned planning).
     "q_part_merge" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_pmerge", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_pmerge", d)
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 2 === 0), path,
         SinkOps.CommitSpec(layout = SinkOps.Partitioned(Seq("event_type"))))
@@ -3797,10 +3698,9 @@ object SparkEntry {
     // monolith + packed), and the digest proves the pack lossless.
     "q_compact_small" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_bp", d)
+      val path = freshTmpPath(s, "graft_bp", d)
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(s.sessionState.newHadoopConf())
-      fs.delete(root, true)
       SinkOps.commitVersion(e.filter(col("event_id") % 4 =!= 3), path,
         SinkOps.CommitSpec(stats = Seq("event_id")))
       (0 to 2).foreach { r =>
@@ -3833,10 +3733,7 @@ object SparkEntry {
     // filter keeps results exact. Spec pins files-planned < total.
     "q_bloom_skip" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_bloom", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_bloom", d)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(
           e.filter(col("user_id") % 3 === r)
@@ -3855,10 +3752,7 @@ object SparkEntry {
     // either single probe). Exact residual keeps equality.
     "q_bloom_multi" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_bloommulti", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_bloommulti", d)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(
           e.filter((col("event_id") + col("user_id")) % 3 === r)
@@ -3880,10 +3774,7 @@ object SparkEntry {
     // filters keep the read equal to the full-scan conjunction.
     "q_skip_compose" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_skip2", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_skip2", d)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(
           e.filter(col("event_id") % 3 === r)
@@ -3908,10 +3799,7 @@ object SparkEntry {
     // DVs. The Delta OPTIMIZE ZORDER production op.
     "q_compact_zorder" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_zoptim", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_zoptim", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(ev.filter(col("event_id") % 3 === r),
           path); ()
@@ -3935,10 +3823,7 @@ object SparkEntry {
     // spec-pinned.
     "q_dv_coalesce" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_dvcoal", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_dvcoal", d)
       SinkOps.commitVersion(ev, path)
       Seq(5L, 7L, 11L).foreach { m =>
         SinkOps.deleteVersionKeys(
@@ -3959,10 +3844,7 @@ object SparkEntry {
     // evolution without rewriting history, through the same skip path.
     "q_skip_evo" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_skipevo", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_skipevo", d)
       SinkOps.commitVersion(
         ev.filter(col("event_id") % 2 === 1)
           .select(col("event_id"), col("user_id"))
@@ -3987,10 +3869,7 @@ object SparkEntry {
     // the head v4 (delta on the v3 checkpoint) both digest exactly.
     "q_version_delta" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_vdelta", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_vdelta", d)
       (0L to 3L).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 4 === r),
           path, SinkOps.CommitSpec(checkpointEvery = Some(3))); ()
@@ -4015,10 +3894,7 @@ object SparkEntry {
     // conjunction keeps the read equal to the full-scan filter.
     "q_stats_multi" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_statsmulti", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_statsmulti", d)
       val b = e.agg(min("user_id"), max("user_id"),
         min("event_id"), max("event_id")).head()
       val (umin, umax, emin, emax) =
@@ -4052,10 +3928,7 @@ object SparkEntry {
     "q_sql_skip" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_sqlskip", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlskip", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 3 === r)
@@ -4074,10 +3947,7 @@ object SparkEntry {
     "q_sql_history" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_sqlvh", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlvh", d)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 3 === r), path,
           SinkOps.CommitSpec(stats = Seq("event_id"))); ()
@@ -4097,10 +3967,7 @@ object SparkEntry {
     "q_sql_insert" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       Tables.orders(s, d).createOrReplaceTempView("r13_sqlins_orders")
-      val path = tmpPath("graft_sqlins", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlins", d)
       s.sql(s"""INSERT INTO graft_table('$path')
              SELECT * FROM r13_sqlins_orders
              WHERE CAST(o_orderdate AS DATE) < DATE '$IvmBoundary'""")
@@ -4128,10 +3995,7 @@ object SparkEntry {
     "q_sql_delete" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       Tables.events(s, d).createOrReplaceTempView("r13_sqldel_events")
-      val path = tmpPath("graft_sqldel", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqldel", d)
       s.sql(s"""INSERT INTO graft_table('$path')
              SELECT * FROM r13_sqldel_events WHERE event_id % 2 = 0""")
         .collect()
@@ -4164,10 +4028,7 @@ object SparkEntry {
     "q_sql_merge" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       Tables.events(s, d).createOrReplaceTempView("r13_sqlmrg_events")
-      val path = tmpPath("graft_sqlmrg", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlmrg", d)
       s.sql(s"""INSERT INTO graft_table('$path')
              SELECT * FROM r13_sqlmrg_events""").collect()
       s.sql(s"""MERGE INTO graft_table('$path') USING (
@@ -4199,10 +4060,7 @@ object SparkEntry {
     "q_sql_update" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       Tables.events(s, d).createOrReplaceTempView("r13_sqlupd_events")
-      val path = tmpPath("graft_sqlupd", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlupd", d)
       s.sql(s"""INSERT INTO graft_table('$path')
              SELECT * FROM r13_sqlupd_events""").collect()
       s.sql(s"""UPDATE graft_table('$path')
@@ -4226,10 +4084,7 @@ object SparkEntry {
     "q_sql_stats_dv" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_sqlstatsdv", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlstatsdv", d)
       (0L to 1L).foreach { r =>
         SinkOps.commitVersion(
           e.filter(col("event_id") % 3 === r)
@@ -4257,10 +4112,7 @@ object SparkEntry {
     "q_sql_maintenance" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       Tables.events(s, d).createOrReplaceTempView("r13_sqlmaint_events")
-      val path = tmpPath("graft_sqlmaint", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlmaint", d)
       (0 to 2).foreach { r =>
         s.sql(s"""INSERT INTO graft_table('$path')
                SELECT * FROM r13_sqlmaint_events
@@ -4287,10 +4139,7 @@ object SparkEntry {
     "q_maintain" -> ((s, d) => {
       val ev = Tables.events(s, d)
         .select("event_id", "user_id", "event_type", "value")
-      val path = tmpPath("graft_maint", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_maint", d)
       SinkOps.commitVersion(ev, path,
         SinkOps.CommitSpec(stats = Seq("event_id")))
       Seq(5, 7).foreach { m =>
@@ -4322,10 +4171,7 @@ object SparkEntry {
     // partition-pruned path; counts ≡ the relational filter (oracle).
     "q_maintain_part" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_maintp", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_maintp", d)
       (0L to 5L).foreach { r =>
         SinkOps.commitVersion(
           ev.filter(col("event_id") % 6 === r), path,
@@ -4357,10 +4203,7 @@ object SparkEntry {
     // derives both snapshots relationally.
     "q_format_read" -> ((s, d) => {
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_fmt", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_fmt", d)
       SinkOps.commitVersion(ev.filter(col("event_id") % 2 === 0), path)
       SinkOps.commitVersion(ev.filter(col("event_id") % 2 === 1), path)
       def dig(df: DataFrame, snap: String) = df.agg(
@@ -4386,14 +4229,8 @@ object SparkEntry {
     "q_maintenance_advice" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val ev = Tables.events(s, d)
-      def fresh(prefix: String): String = {
-        val p = tmpPath(prefix, d)
-        val r = new org.apache.hadoop.fs.Path(p)
-        r.getFileSystem(s.sessionState.newHadoopConf()).delete(r, true)
-        p
-      }
       // Adjacent delete run of 3 → coalesce_deletes.
-      val pc = fresh("graft_adv_c")
+      val pc = freshTmpPath(s, "graft_adv_c", d)
       SinkOps.commitVersion(ev, pc,
         SinkOps.CommitSpec(stats = Seq("event_id")))
       Seq(5, 7, 11).foreach { m =>
@@ -4402,7 +4239,7 @@ object SparkEntry {
           pc, "event_id"); ()
       }
       // Interleaved commits and deletes: 4 epoch groups, no run → optimize.
-      val po = fresh("graft_adv_o")
+      val po = freshTmpPath(s, "graft_adv_o", d)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(ev.filter(col("event_id") % 4 === r),
           po, SinkOps.CommitSpec(stats = Seq("event_id")))
@@ -4414,7 +4251,7 @@ object SparkEntry {
         SinkOps.CommitSpec(stats = Seq("event_id")))
       // Clean 4-file commit: under a 1M-rows/file target → bin_pack;
       // the SAME table under target 1 → none.
-      val pb = fresh("graft_adv_b")
+      val pb = freshTmpPath(s, "graft_adv_b", d)
       SinkOps.commitVersion(ev.repartition(4), pb,
         SinkOps.CommitSpec(stats = Seq("event_id")))
       s.sql(s"""
@@ -4486,10 +4323,7 @@ object SparkEntry {
     "q_sql_insert_skip" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       Tables.events(s, d).createOrReplaceTempView("r13_sqlik_events")
-      val path = tmpPath("graft_sqlik", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlik", d)
       (0 to 2).foreach { r =>
         s.sql(s"""INSERT INTO graft_table('$path', 'event_id')
                SELECT /*+ REPARTITION_BY_RANGE(4, event_id) */ *
@@ -4511,10 +4345,7 @@ object SparkEntry {
     "q_time_travel_ts" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val o = Tables.orders(s, d)
-      val path = tmpPath("graft_ttts", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_ttts", d)
       val bd = lit(IvmBoundary).cast("date")
       SinkOps.commitVersion(
         o.filter(col("o_orderdate").cast("date") < bd), path)
@@ -4549,10 +4380,7 @@ object SparkEntry {
     "q_sql_restore" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       Tables.events(s, d).createOrReplaceTempView("r13_sqlres_events")
-      val path = tmpPath("graft_sqlres", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_sqlres", d)
       s.sql(s"""INSERT INTO graft_table('$path')
              SELECT * FROM r13_sqlres_events""").collect()
       s.sql(s"""DELETE FROM graft_table('$path')
@@ -4589,12 +4417,8 @@ object SparkEntry {
     "q_sql_clone" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       Tables.events(s, d).createOrReplaceTempView("r13_sqlcl_events")
-      val src = tmpPath("graft_sqlcl_src", d)
-      val dst = tmpPath("graft_sqlcl_dst", d)
-      Seq(src, dst).foreach { p =>
-        val r = new org.apache.hadoop.fs.Path(p)
-        r.getFileSystem(s.sessionState.newHadoopConf()).delete(r, true)
-      }
+      val src = freshTmpPath(s, "graft_sqlcl_src", d)
+      val dst = freshTmpPath(s, "graft_sqlcl_dst", d)
       s.sql(s"""INSERT INTO graft_table('$src')
              SELECT * FROM r13_sqlcl_events WHERE event_id % 2 = 0""")
         .collect()
@@ -4624,10 +4448,7 @@ object SparkEntry {
     "q_changefeed_ts" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       val ev = Tables.events(s, d)
-      val path = tmpPath("graft_cfts", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_cfts", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(ev.filter(col("event_id") % 3 === r),
           path); ()
@@ -4653,10 +4474,7 @@ object SparkEntry {
     // all three slices, no lost update by construction.
     "q_occ_retry" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_occ", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_occ", d)
       SinkOps.commitVersion(e.filter(col("event_id") % 3 === 0), path)
       val v = SinkOps.commitVersion(
         e.filter(col("event_id") % 3 === 2), path,
@@ -4685,10 +4503,7 @@ object SparkEntry {
     "q_occ_retry_dv" -> ((s, d) => {
       val e = Tables.events(s, d)
         .select("event_id", "user_id", "event_type", "value")
-      val path = tmpPath("graft_occdv", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_occdv", d)
       SinkOps.commitVersion(e.filter(col("event_id") % 2 === 0), path)
       val vMerge = SinkOps.mergeVersion(
         e.filter(col("event_id") % 10 === 0)
@@ -4734,10 +4549,7 @@ object SparkEntry {
       val e = Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
           (col("event_id") % 1000).cast("int").as("vint"))
-      val path = tmpPath("graft_occmaint", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_occmaint", d)
       SinkOps.commitVersion(e.filter(col("event_id") % 2 === 0), path)
       val vWiden = SinkOps.widenVersionColumn(s, path, "vint",
         "bigint", maxTries = 2, beforeAttempt = n => if (n == 1) {
@@ -4769,10 +4581,7 @@ object SparkEntry {
     // Oracle recomputes count/min/max on the resolved survivors.
     "q_stats_dv" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_statsdv", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_statsdv", d)
       (0L to 1L).foreach { r =>
         SinkOps.commitVersion(
           e.filter(col("event_id") % 3 === r)
@@ -4803,10 +4612,7 @@ object SparkEntry {
         pmod(col("event_id") * 37 + col("user_id"), lit(4096L))
           .as("zkey"),
         col("event_type"))
-      val path = tmpPath("graft_zoptk", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_zoptk", d)
       (0L to 1L).foreach { r =>
         SinkOps.commitVersion(t.filter(col("event_id") % 2 === r),
           path); ()
@@ -4839,10 +4645,7 @@ object SparkEntry {
     // three pre-compaction dirs.
     "q_vacuum_grace" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_vacgrace", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_vacgrace", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 3 === r),
           path); ()
@@ -4874,10 +4677,7 @@ object SparkEntry {
     // snapshot digest.
     "q_vacuum_dryrun" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_vacdry", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_vacdry", d)
       (0L to 2L).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 3 === r),
           path); ()
@@ -4898,10 +4698,7 @@ object SparkEntry {
     // digest from the residue-class construction.
     "q_version_history" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_vh", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_vh", d)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 3 === r), path,
           SinkOps.CommitSpec(stats = Seq("event_id"))); ()
@@ -4916,10 +4713,7 @@ object SparkEntry {
     // recomputes the same digest the hard way.
     "q_stats_only" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_statsonly", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_statsonly", d)
       (0 to 2).foreach { r =>
         SinkOps.commitVersion(e.filter(col("event_id") % 3 === r),
           path, SinkOps.CommitSpec(stats = Seq("event_id"))); ()
@@ -4933,10 +4727,7 @@ object SparkEntry {
     // still reads clean (the digest proves no live file was GC'd).
     "q_expire_versions" -> ((s, d) => {
       val o = Tables.orders(s, d)
-      val path = tmpPath("graft_tte", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_tte", d)
       val bd = lit(IvmBoundary).cast("date")
       SinkOps.commitVersion(
         o.filter(col("o_orderdate").cast("date") < bd), path)
@@ -4961,10 +4752,7 @@ object SparkEntry {
     // hash.
     "q_wap" -> ((s, d) => {
       val o = Tables.orders(s, d)
-      val path = tmpPath("graft_wap", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_wap", d)
       val bd = lit(IvmBoundary).cast("date")
       val rest = o.filter(col("o_orderdate").cast("date") >= bd)
       SinkOps.commitVersion(
@@ -4996,10 +4784,7 @@ object SparkEntry {
     // order — the ordered-fold semantics that make DV merges sound).
     "q_version_delete" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_dv", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_dv", d)
       SinkOps.commitVersion(e.filter(col("event_id") % 2 === 0), path)
       SinkOps.commitVersion(e.filter(col("event_id") % 2 === 1), path)
       SinkOps.deleteVersionKeys(
@@ -5022,10 +4807,7 @@ object SparkEntry {
     // read as their new rows, unmatched pass the anti-join untouched.
     "q_version_merge" -> ((s, d) => {
       val e = Tables.events(s, d)
-      val path = tmpPath("graft_mrg", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_mrg", d)
       SinkOps.commitVersion(e, path)
       val batch = e.filter(col("event_id") % 5 === 0)
         .withColumn("event_type", lit("updated"))
@@ -5058,10 +4840,7 @@ object SparkEntry {
     // history is never rewritten. Digest split by legacy/evolved.
     "q_evolve_versions" -> ((s, d) => {
       val o = Tables.orders(s, d)
-      val path = tmpPath("graft_ttev", d)
-      val root = new org.apache.hadoop.fs.Path(path)
-      root.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(root, true)
+      val path = freshTmpPath(s, "graft_ttev", d)
       val bd = lit(IvmBoundary).cast("date")
       SinkOps.commitVersion(o.filter(col("o_orderdate").cast("date") < bd)
         .select("o_orderkey", "o_custkey", "o_totalprice"), path)
@@ -5854,14 +5633,8 @@ object SparkEntry {
     // before re-creation (bench warmup + timed passes).
     "q_sql_ctas" -> ((s, d) => {
       Tables.orders(s, d).createOrReplaceTempView("orders")
-      val loc = tmpPath("graft_ctas", d)
       s.sql("DROP TABLE IF EXISTS graft_ctas_sales")
-      // Hadoop FS recursive delete (the SinkOps.deleteWhere pattern), not
-      // java.io.File: on an object-store lake the local-File recursion
-      // would silently no-op and CTAS would land on a dirty location.
-      val locPath = new org.apache.hadoop.fs.Path(loc)
-      locPath.getFileSystem(s.sessionState.newHadoopConf())
-        .delete(locPath, true)
+      val loc = freshTmpPath(s, "graft_ctas", d)
       s.sql(s"""CREATE TABLE graft_ctas_sales USING PARQUET LOCATION '$loc'
                 AS SELECT o_orderkey, o_custkey, o_orderstatus,
                           o_totalprice, o_orderpriority
@@ -6470,6 +6243,21 @@ object SparkEntry {
   private def tmpPath(prefix: String, d: String): String =
     new java.io.File(GraftSession.runTmpRoot,
       prefix + "_" + d.replaceAll("[^a-zA-Z0-9.]", "_")).getPath
+
+  /** [[tmpPath]], emptied first. A tmpPath survives within a JVM across
+    * the bench's warm and timed passes, so a builder that commits
+    * versions or builds an index under it starts each pass on an empty
+    * root — version history and index generations restart per run.
+    * The delete is the Hadoop FileSystem's, not `java.io.File`
+    * recursion, which would silently no-op on an object store.
+    */
+  private def freshTmpPath(s: SparkSession, prefix: String,
+                           d: String): String = {
+    val p = tmpPath(prefix, d)
+    val root = new org.apache.hadoop.fs.Path(p)
+    root.getFileSystem(s.sessionState.newHadoopConf()).delete(root, true)
+    p
+  }
 
   /** q_ivm_join / q_join_hotcold constants (shared by oracles). */
   private val IvmBoundary = "1997-01-01"

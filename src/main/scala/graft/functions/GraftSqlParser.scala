@@ -709,8 +709,8 @@ case class GraftOptimizeCommand(path: String, zorderCols: Seq[String],
 }
 
 /** `RESTORE graft_table(path) VERSION AS OF v | TIMESTAMP AS OF ms`
-  * → [[graft.ops.SinkOps.restoreVersion]]/
-  * [[graft.ops.SinkOps.restoreVersionAsOf]] — the head rolls back as a
+  * → [[graft.ops.SinkOps.restoreVersion]], with a timestamp resolved
+  * through [[graft.ops.SinkOps.versionAsOf]] — the head rolls back as a
   * NEW commit (zero data IO, history and changefeed intact). Returns
   * the restore commit's version.
   */

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -491,7 +490,7 @@ object CurationOps {
     * is O(batch) with no read-modify-write cycle.
     */
   def writeBm25Index(docs: DataFrame, path: String): Unit =
-    writeBm25Index(docs, path, org.apache.spark.sql.SaveMode.Overwrite)
+    commitBm25Index(docs, path, SinkOps.CommitSpec(carryForward = false))
 
   /** Append one arrival batch to a persisted BM25 index — O(batch):
     * postings/doclen rows for the batch plus termdf/stats partials the
@@ -499,10 +498,14 @@ object CurationOps {
     * caller's contract, as with appendToMinhashIndex).
     */
   def appendToBm25Index(docs: DataFrame, path: String): Unit =
-    writeBm25Index(docs, path, org.apache.spark.sql.SaveMode.Append)
+    commitBm25Index(docs, path, SinkOps.CommitSpec())
 
-  private def writeBm25Index(docs: DataFrame, path: String,
-                             mode: org.apache.spark.sql.SaveMode): Unit = {
+  /** The one body of [[writeBm25Index]] (a replacing commit) and
+    * [[appendToBm25Index]] (an appending one): each index table is a
+    * [[SinkOps.commitVersion]] table under `path`.
+    */
+  private def commitBm25Index(docs: DataFrame, path: String,
+                              spec: SinkOps.CommitSpec): Unit = {
     // Every table is derivable from the (doc_id, w, tf) postings
     // aggregate: dl = Σ tf per doc, df = #postings rows per term,
     // ntok = Σ tf, ndl = #distinct doc_ids with postings. Pinning the
@@ -516,17 +519,18 @@ object CurationOps {
       .groupBy("doc_id", "w").agg(count(lit(1)).as("tf"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      postings.repartition(col("w"))
-        .write.mode(mode).parquet(s"$path/postings")
-      postings.groupBy("doc_id").agg(sum("tf").as("dl"))
-        .write.mode(mode).parquet(s"$path/doclen")
-      postings.groupBy("w").agg(count(lit(1)).as("df"))
-        .write.mode(mode).parquet(s"$path/termdf")
-      docs.agg(count(lit(1)).as("nd"))
+      SinkOps.commitVersion(postings.repartition(col("w")),
+        s"$path/postings", spec)
+      SinkOps.commitVersion(postings.groupBy("doc_id").agg(sum("tf").as("dl")),
+        s"$path/doclen", spec)
+      SinkOps.commitVersion(postings.groupBy("w").agg(count(lit(1)).as("df")),
+        s"$path/termdf", spec)
+      SinkOps.commitVersion(docs.agg(count(lit(1)).as("nd"))
         .crossJoin(postings.agg(sum("tf").as("ntok"),
-          countDistinct(col("doc_id")).as("ndl")))
-        .write.mode(mode).parquet(s"$path/stats")
+          countDistinct(col("doc_id")).as("ndl"))),
+        s"$path/stats", spec)
     } finally { postings.unpersist(); () }
+    ()
   }
 
   /** BM25-index COMPACTION — a third compaction semantics beside the
@@ -541,29 +545,20 @@ object CurationOps {
     * by term, so clustering is what keeps that prune tight at scale).
     * Serve results are unchanged by construction: the serve path
     * already re-aggregates partials, and aggregation is associative.
-    * Generation swap through the Hadoop FileSystem API.
+    * Each table's rewrite commits as a new version that replaces the
+    * snapshot ([[SinkOps.rewriteVersion]]).
     */
-  def compactBm25Index(path: String, targetFiles: Int = 1): Unit = {
+  def compactBm25Index(path: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    def swap(live: String, df: DataFrame): Unit = {
-      val tmp = live + "_compact_tmp"
-      df.write.mode("overwrite").parquet(tmp)
-      val liveP = new org.apache.hadoop.fs.Path(live)
-      val fs = liveP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(liveP, true)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), liveP))
-        throw new IllegalStateException(
-          s"compactBm25Index: rename $tmp -> $live failed")
-    }
-    swap(s"$path/postings", Tables.parquet(spark, s"$path/postings")
-      .repartition(targetFiles, col("w")))
-    swap(s"$path/doclen", Tables.parquet(spark, s"$path/doclen")
-      .coalesce(targetFiles))
-    swap(s"$path/termdf", Tables.parquet(spark, s"$path/termdf")
-      .groupBy("w").agg(sum("df").as("df")).coalesce(targetFiles))
-    swap(s"$path/stats", Tables.parquet(spark, s"$path/stats")
-      .agg(sum("nd").as("nd"), sum("ntok").as("ntok"),
+    SinkOps.rewriteVersion(spark, s"$path/postings")(
+      (p, n) => p.repartition(n, col("w")))
+    SinkOps.rewriteVersion(spark, s"$path/doclen")(_.coalesce(_))
+    SinkOps.rewriteVersion(spark, s"$path/termdf")(
+      _.groupBy("w").agg(sum("df").as("df")).coalesce(_))
+    SinkOps.rewriteVersion(spark, s"$path/stats")((st, _) =>
+      st.agg(sum("nd").as("nd"), sum("ntok").as("ntok"),
         sum("ndl").as("ndl")))
+    ()
   }
 
   /** Serve BM25 top-k from the PERSISTED index: the corpus is never
@@ -581,13 +576,13 @@ object CurationOps {
                       k: Int = 10): DataFrame = {
     val qwords = queries.flatMap(_._2.split(TextOps.WsRegex))
       .filter(_.nonEmpty).distinct
-    val tf = Tables.parquet(spark, s"$path/postings")
+    val tf = SinkOps.readVersion(spark, s"$path/postings")
       .filter(col("w").isin(qwords: _*))
-    val dfT = Tables.parquet(spark, s"$path/termdf")
+    val dfT = SinkOps.readVersion(spark, s"$path/termdf")
       .filter(col("w").isin(qwords: _*))
       .groupBy("w").agg(sum("df").as("df"))
-    val dl = Tables.parquet(spark, s"$path/doclen")
-    val stats = Tables.parquet(spark, s"$path/stats")
+    val dl = SinkOps.readVersion(spark, s"$path/doclen")
+    val stats = SinkOps.readVersion(spark, s"$path/stats")
       .agg(sum("nd").as("nd"), sum("ntok").as("ntok"),
         sum("ndl").as("ndl"))
       .select(col("nd"), avgdlOf)
@@ -707,28 +702,17 @@ object CurationOps {
       .drop("ranker")
   }
 
-  /** [[rankEval]] generalized to judge ANY ranked list (q_id, doc_id,
-    * rnk ≤ k) against the same conjunctive-term ground truth — the
-    * side-by-side harness the hybrid tier needs: the sparse (BM25),
-    * dense (IVF ANN), and fused (RRF) rankers are all scored by one
-    * metric block over one shared truth set, so "hybrid beats both" is
-    * a readable integer comparison, not three incomparable reports.
-    * Truth stays text-side (doc contains EVERY query term) for all
-    * rankers — deterministic, label-free, and identical across them by
-    * construction.
-    */
-  def rankEvalOf(docs: DataFrame, queries: Seq[(Long, String)],
-                 ranked: DataFrame, k: Int): DataFrame =
-    rankEvalMulti(docs, queries,
-      ranked.withColumn("ranker", lit("r")), k, Seq("r")).drop("ranker")
-
-  /** [[rankEvalOf]] over a TAGGED union of ranked lists (ranker, q_id,
-    * doc_id, rnk ≤ k) — the side-by-side form: the conjunctive-truth
-    * derivation (the one corpus-token pass) runs ONCE and every
-    * ranker's metric block keys on (ranker, q_id), so judging three
-    * rankers costs one truth pass + a ≤ 3·k·|queries|-row metric agg,
-    * not three corpus scans. Output adds the `ranker` column; the rest
-    * of the schema matches [[rankEval]].
+  /** [[rankEval]] generalized to judge ANY ranked lists against the
+    * same conjunctive-term ground truth, given as a TAGGED union
+    * (ranker, q_id, doc_id, rnk ≤ k) — the side-by-side harness the
+    * hybrid tier needs: the sparse (BM25), dense (IVF ANN) and fused
+    * (RRF) rankers are scored by one metric block over one shared truth
+    * set, so "hybrid beats both" is a readable integer comparison. The
+    * conjunctive-truth derivation (the one corpus-token pass) runs ONCE
+    * and every ranker's metric block keys on (ranker, q_id), so judging
+    * three rankers costs one truth pass + a ≤ 3·k·|queries|-row metric
+    * agg, not three corpus scans. Output adds the `ranker` column; the
+    * rest of the schema matches [[rankEval]].
     */
   def rankEvalMulti(docs: DataFrame, queries: Seq[(Long, String)],
                     ranked: DataFrame, k: Int,

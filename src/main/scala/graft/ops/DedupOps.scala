@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -214,11 +213,20 @@ object DedupOps {
     * co-locates without shuffling the index. The digest table is one
     * 16-byte md5 per distinct text.
     */
-  def writeMinhashIndex(known: DataFrame, path: String): Unit = {
-    val k = known.filter(col("text").isNotNull)
-    bandRowsOf(k).write.mode("overwrite").parquet(path + "/bands")
-    k.select(md5(col("text")).as("text_md5")).distinct()
-      .write.mode("overwrite").parquet(path + "/digests")
+  def writeMinhashIndex(known: DataFrame, path: String): Unit =
+    commitMinhashIndex(known, path, SinkOps.CommitSpec(carryForward = false))
+
+  /** The one body of [[writeMinhashIndex]] (a replacing commit) and
+    * [[appendToMinhashIndex]] (an appending one): each index table is a
+    * [[SinkOps.commitVersion]] table under `path`.
+    */
+  private def commitMinhashIndex(docs: DataFrame, path: String,
+                                 spec: SinkOps.CommitSpec): Unit = {
+    val k = docs.filter(col("text").isNotNull)
+    SinkOps.commitVersion(bandRowsOf(k), path + "/bands", spec)
+    SinkOps.commitVersion(k.select(md5(col("text")).as("text_md5"))
+      .distinct(), path + "/digests", spec)
+    ()
   }
 
   /** Persist the known corpus's near-dup CLUSTER MAP alongside the
@@ -241,11 +249,12 @@ object DedupOps {
     // the direct [[minhashPairs]] re-mine); `known` identifies the
     // session and documents the call-after-write contract.
     val spark = known.sparkSession
-    GraphOps.connectedComponents(
-        pairsFromBandRows(Tables.parquet(spark, path + "/bands"), minEst)
+    SinkOps.commitVersion(GraphOps.connectedComponents(
+        pairsFromBandRows(SinkOps.readVersion(spark, path + "/bands"), minEst)
           .select(col("doc_a").as("a"), col("doc_b").as("b")))
-      .select(col("node").as("doc_id"), col("cluster"))
-      .write.mode("overwrite").parquet(path + "/clusters")
+      .select(col("node").as("doc_id"), col("cluster")),
+      path + "/clusters", SinkOps.CommitSpec(carryForward = false))
+    ()
   }
 
   /** Incremental cluster ASSIGNMENT — the O(arrivals) companion to
@@ -266,8 +275,8 @@ object DedupOps {
   def assignClustersIncremental(arrivals: DataFrame, indexPath: String,
                                 minEst: Double = 0.5): DataFrame = {
     val spark = arrivals.sparkSession
-    val idxBands = Tables.parquet(spark, indexPath + "/bands")
-    val clusters = Tables.parquet(spark, indexPath + "/clusters")
+    val idxBands = SinkOps.readVersion(spark, indexPath + "/bands")
+    val clusters = SinkOps.readVersion(spark, indexPath + "/clusters")
       .withColumnRenamed("doc_id", "idx_id")
     val arr = arrivals.filter(col("text").isNotNull)
     val assigned = nearIndexMatches(arr, idxBands, minEst)
@@ -285,31 +294,23 @@ object DedupOps {
   /** Index MAINTENANCE — the other half of the daily loop: append an
     * admitted batch's band rows and digests to the persisted index, so
     * the NEXT batch's twins of these documents are caught. Appends are
-    * O(batch) parquet writes — the index never rewrites; duplicate
-    * digests across appends are tolerated by the read path's distinct
+    * O(batch) commits — the index never rewrites; duplicate digests
+    * across appends are tolerated by the read path's distinct
     * ([[dedupMinhashIncremental]]), and duplicate band rows collapse in
-    * its candidate distinct. On a real lake this is the same
-    * append-only discipline as a streaming file sink; compaction is
-    * [[SinkOps]]' existing small-file job.
+    * its candidate distinct. Compaction is [[compactMinhashIndex]].
     */
-  def appendToMinhashIndex(admitted: DataFrame, path: String): Unit = {
-    val a = admitted.filter(col("text").isNotNull)
-    bandRowsOf(a).write.mode("append").parquet(path + "/bands")
-    a.select(md5(col("text")).as("text_md5")).distinct()
-      .write.mode("append").parquet(path + "/digests")
-  }
+  def appendToMinhashIndex(admitted: DataFrame, path: String): Unit =
+    commitMinhashIndex(admitted, path, SinkOps.CommitSpec())
 
   /** Index COMPACTION — the periodic maintenance that closes the
     * append-only loop (write → probe → append → COMPACT): replayed
     * appends (task retries, at-least-once foreachBatch re-deliveries)
     * and re-admitted digests accumulate duplicate rows across many
-    * small files, which the read path tolerates by distinct-ing but
-    * pays for on every probe. Compaction rewrites each index table as
-    * its DISTINCT row set in one generation swap: write the distinct
-    * rows beside the live table, then delete-and-rename through the
-    * Hadoop FileSystem API (correct on HDFS/object stores, not just
-    * local disk — the `java.io.File` recursion this repo already
-    * retired from its CTAS cleanup would silently no-op there).
+    * small dirs, which the read path tolerates by distinct-ing but
+    * pays for on every probe. Compaction commits each index table's
+    * DISTINCT row set as a new version that replaces the snapshot
+    * ([[SinkOps.rewriteVersion]]); the pre-compaction generation stays
+    * readable at its version until VACUUM.
     *
     * Probe semantics are unchanged BY CONSTRUCTION:
     * [[dedupMinhashIncremental]]'s candidate distinct and digest
@@ -321,27 +322,13 @@ object DedupOps {
     * cluster-map snapshot rebuild; between compactions appends stay
     * O(batch).
     */
-  def compactMinhashIndex(path: String, targetFiles: Int = 0): Unit = {
+  def compactMinhashIndex(path: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    for (sub <- Seq("bands", "digests")) {
-      val live = s"$path/$sub"
-      val tmp = s"$path/_${sub}_compact_tmp"
-      // targetFiles sizes the compacted generation; 0 (the default)
-      // derives it from table bytes / 512 MB, so a 1 B-row index
-      // rewrites across as many tasks as it has data. repartition,
-      // not coalesce — coalesce would glue the distinct's output into
-      // few partitions and cap the write's parallelism.
-      val n = if (targetFiles >= 1) targetFiles
-              else graft.ops.SinkOps.derivedFileCount(spark, live)
-      Tables.parquet(spark, live).distinct().repartition(n)
-        .write.mode("overwrite").parquet(tmp)
-      val liveP = new org.apache.hadoop.fs.Path(live)
-      val fs = liveP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(liveP, true)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), liveP))
-        throw new IllegalStateException(
-          s"compactMinhashIndex: rename $tmp -> $live failed")
-    }
+    // repartition, not coalesce: coalesce would glue the distinct's
+    // output into few partitions and cap the write's parallelism.
+    for (sub <- Seq("bands", "digests"))
+      SinkOps.rewriteVersion(spark, s"$path/$sub")(
+        _.distinct().repartition(_))
   }
 
   /** Distinct (arrival doc_id, index doc_id) pairs whose signature
@@ -381,8 +368,8 @@ object DedupOps {
   def dedupMinhashIncremental(arrivals: DataFrame, indexPath: String,
                               minEst: Double = 0.5): DataFrame = {
     val spark = arrivals.sparkSession
-    val idxBands = Tables.parquet(spark, indexPath + "/bands")
-    val idxDigests = Tables.parquet(spark, indexPath + "/digests")
+    val idxBands = SinkOps.readVersion(spark, indexPath + "/bands")
+    val idxDigests = SinkOps.readVersion(spark, indexPath + "/digests")
     val arr = arrivals.filter(col("text").isNotNull)
     val near = nearIndexMatches(arr, idxBands, minEst)
       .groupBy("doc_id").agg(count(lit(1)).as("n_near"))
@@ -1053,10 +1040,12 @@ object DedupOps {
     * [[writeMinhashIndex]]. Built once per snapshot; arrivals probe it
     * in O(arrival grams).
     */
-  def writeGramIndex(known: DataFrame, path: String, k: Int = 8): Unit =
-    gramPositions(known, k)
-      .groupBy("sh").agg(countDistinct(col("doc_id")).as("df"))
-      .write.mode("overwrite").parquet(path + "/grams")
+  def writeGramIndex(known: DataFrame, path: String, k: Int = 8): Unit = {
+    SinkOps.commitVersion(gramPositions(known, k)
+        .groupBy("sh").agg(countDistinct(col("doc_id")).as("df")),
+      path + "/grams", SinkOps.CommitSpec(carryForward = false))
+    ()
+  }
 
   /** Incremental span-level dedup against the persisted gram index:
     * arrivals compute THEIR OWN k-gram positions only and left-join the
@@ -1074,7 +1063,7 @@ object DedupOps {
     */
   def substringDupIncremental(arrivals: DataFrame, path: String,
                               k: Int = 8): DataFrame = {
-    val idx = Tables.parquet(arrivals.sparkSession, path + "/grams")
+    val idx = SinkOps.readVersion(arrivals.sparkSession, path + "/grams")
     dupSpanTail(gramPositions(arrivals, k), idx.select("sh"))
   }
 
@@ -1095,7 +1084,7 @@ object DedupOps {
       .select(col("doc_id"),
         size(filter(split(col("text"), TextOps.WsRegex), x => x =!= ""))
           .cast("long").as("n_tok"))
-    val clusters = Tables.parquet(known.sparkSession, path + "/clusters")
+    val clusters = SinkOps.readVersion(known.sparkSession, path + "/clusters")
       .select(col("doc_id").as("node"), col("cluster"))
     val elected = clusters.join(toks, clusters("node") === toks("doc_id"))
       .groupBy("cluster")
@@ -1107,8 +1096,9 @@ object DedupOps {
       .join(clusters, toks("doc_id") === clusters("node"), "left_anti")
       .select(col("doc_id").as("cluster"), col("doc_id").as("canon_id"),
         col("n_tok").as("tok_kept"))
-    elected.union(singles).write.mode("overwrite")
-      .parquet(path + "/canonicals")
+    SinkOps.commitVersion(elected.union(singles), path + "/canonicals",
+      SinkOps.CommitSpec(carryForward = false))
+    ()
   }
 
   /** Incremental canonical MAINTENANCE — the daily-batch decision the
@@ -1137,7 +1127,8 @@ object DedupOps {
     */
   def canonicalIncremental(arrivals: DataFrame,
                            indexPath: String): DataFrame = {
-    val led = Tables.parquet(arrivals.sparkSession, indexPath + "/canonicals")
+    val led = SinkOps.readVersion(arrivals.sparkSession,
+      indexPath + "/canonicals")
     val arrTok = arrivals.filter(col("text").isNotNull)
       .select(col("doc_id"),
         size(filter(split(col("text"), TextOps.WsRegex), x => x =!= ""))

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.Tables
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -228,11 +227,6 @@ object MultimodalOps {
     */
   def resizeImage(a: Asset, factor: Int = 2): Asset =
     Asset(a.asset_id, a.fmt, encodePng(resizeRaster(readImg(a), factor)))
-
-  def resizeImages(assets: Dataset[Asset], factor: Int = 2): Dataset[Asset] = {
-    import assets.sparkSession.implicits._
-    assets.mapPartitions(_.map(resizeImage(_, factor)))
-  }
 
   /** The q_multimodal_decode query surface: synthesize real PNGs, run the
     * real decode AND the real resize→decode pipeline in one map-side
@@ -537,15 +531,21 @@ object MultimodalOps {
     * parquet-tiny next to the payloads it summarizes.
     */
   def writeImageIndex(fps: DataFrame, path: String): Unit =
-    ahashBandRows(fps).write.mode("overwrite").parquet(path + "/bands")
+    commitImageIndex(fps, path, SinkOps.CommitSpec(carryForward = false))
 
   /** Index MAINTENANCE: append an admitted batch's band rows —
-    * O(batch) appends, the index never rewrites; duplicate band rows
+    * O(batch) commits, the index never rewrites; duplicate band rows
     * across replayed appends collapse in the probe's candidate
     * distinct.
     */
   def appendToImageIndex(admittedFps: DataFrame, path: String): Unit =
-    ahashBandRows(admittedFps).write.mode("append").parquet(path + "/bands")
+    commitImageIndex(admittedFps, path, SinkOps.CommitSpec())
+
+  /** The one commit of [[writeImageIndex]] and [[appendToImageIndex]]. */
+  private def commitImageIndex(fps: DataFrame, path: String,
+                               spec: SinkOps.CommitSpec): Unit = {
+    SinkOps.commitVersion(ahashBandRows(fps), path + "/bands", spec); ()
+  }
 
   /** Incremental image near-dup dedup against a PERSISTED aHash index
     * ([[writeImageIndex]]): each arriving fingerprint is judged by
@@ -559,7 +559,7 @@ object MultimodalOps {
     */
   def imageNearDupIncremental(arrivalFps: DataFrame, indexPath: String,
                               maxHamming: Int = 3): DataFrame = {
-    val idx = Tables.parquet(arrivalFps.sparkSession, indexPath + "/bands")
+    val idx = SinkOps.readVersion(arrivalFps.sparkSession, indexPath + "/bands")
     val near = ahashBandRows(arrivalFps).as("x").join(idx.as("y"),
         col("x.band") === col("y.band") && col("x.bk") === col("y.bk"))
       .select(col("x.asset_id").as("asset_id"),

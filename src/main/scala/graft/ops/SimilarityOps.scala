@@ -436,10 +436,12 @@ object SimilarityOps {
     val v = withQuant(corpus).filter(col("n2") > 0)
     val cent =
       if (trainIters == 0) seedCentroids(v) else kmeansCentroids(v, trainIters)
-    cent.write.mode("overwrite").parquet(path + "/centroids")
-    assignMin(v, cent).select("vec_id", "c_id")
-      .write.mode("overwrite").parquet(path + "/assign")
-    v.write.mode("overwrite").parquet(path + "/vectors")
+    val rebuild = SinkOps.CommitSpec(carryForward = false)
+    SinkOps.commitVersion(cent, path + "/centroids", rebuild)
+    SinkOps.commitVersion(assignMin(v, cent).select("vec_id", "c_id"),
+      path + "/assign", rebuild)
+    SinkOps.commitVersion(v, path + "/vectors", rebuild)
+    ()
   }
 
   /** Incremental IVF top-k SERVING against [[writeIvfIndex]]'s
@@ -454,9 +456,9 @@ object SimilarityOps {
   def ivfProbeIncremental(queries: DataFrame, indexPath: String,
                           k: Int = 10): DataFrame = {
     val spark = queries.sparkSession
-    val cent = Tables.parquet(spark, indexPath + "/centroids")
-    val assign = Tables.parquet(spark, indexPath + "/assign")
-    val idxV = Tables.parquet(spark, indexPath + "/vectors")
+    val cent = SinkOps.readVersion(spark, indexPath + "/centroids")
+    val assign = SinkOps.readVersion(spark, indexPath + "/assign")
+    val idxV = SinkOps.readVersion(spark, indexPath + "/vectors")
       .select(col("vec_id"), col("qv").as("vv"), col("n2").as("vn2"))
       .dropDuplicates("vec_id")
     val q = withQuant(queries).filter(col("n2") > 0)
@@ -562,17 +564,19 @@ object SimilarityOps {
     val cb = sub.filter(col("vec_id") < PqCodes)
       .select(col("m"), col("vec_id").cast("int").as("kc"),
         col("sv").as("cw"), col("svn2").as("cwn2"))
-    cb.write.mode("overwrite").parquet(path + "/codebooks")
+    val rebuild = SinkOps.CommitSpec(carryForward = false)
+    SinkOps.commitVersion(cb, path + "/codebooks", rebuild)
     val d2all = sub.join(broadcast(cb), "m")
       .select(col("vec_id"), col("m"), col("kc"),
         (col("svn2") + col("cwn2") - lit(2L) * dotL(col("sv"), col("cw")))
           .as("d2"))
     val wEnc = Window.partitionBy("vec_id", "m")
       .orderBy(col("d2").asc, col("kc").asc)
-    d2all.withColumn("rc", row_number().over(wEnc))
+    SinkOps.commitVersion(d2all.withColumn("rc", row_number().over(wEnc))
       .filter(col("rc") === 1)
-      .select(col("vec_id"), col("m"), col("kc").as("code"))
-      .write.mode("overwrite").parquet(path + "/codes")
+      .select(col("vec_id"), col("m"), col("kc").as("code")),
+      path + "/codes", rebuild)
+    ()
   }
 
   /** Incremental PQ top-k SERVING against [[writePqIndex]]'s artifact
@@ -587,8 +591,8 @@ object SimilarityOps {
   def pqProbeIncremental(queries: DataFrame, indexPath: String,
                          k: Int = 10): DataFrame = {
     val spark = queries.sparkSession
-    val cb = Tables.parquet(spark, indexPath + "/codebooks")
-    val codes = Tables.parquet(spark, indexPath + "/codes")
+    val cb = SinkOps.readVersion(spark, indexPath + "/codebooks")
+    val codes = SinkOps.readVersion(spark, indexPath + "/codes")
       .dropDuplicates("vec_id", "m")
     val q = withQuant(queries).filter(col("n2") > 0)
     val qdt = subVectors(q).join(broadcast(cb), "m")
@@ -749,40 +753,40 @@ object SimilarityOps {
     */
   def writeEmbedIndex(corpus: DataFrame, path: String,
                       tables: Int = PairTables,
-                      planes: Int = PairPlanes): Unit = {
-    // Two writes over one quantized frame — pin it so the second write
-    // re-reads the cache instead of re-quantizing (or re-running an
-    // expensive upstream subplan).
-    val v = withQuant(corpus).filter(col("n2") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      v.write.mode("overwrite").parquet(path + "/vectors")
-      buckets(v, tables, planes)
-        .withColumn("occ", count(lit(1)).over(Window.partitionBy("t", "bucket")))
-        .write.mode("overwrite").parquet(path + "/buckets")
-    } finally { v.unpersist(); () }
-  }
+                      planes: Int = PairPlanes): Unit =
+    commitEmbedIndex(corpus, path, tables, planes,
+      SinkOps.CommitSpec(carryForward = false))
 
   /** Index MAINTENANCE — append an admitted batch's vectors and bucket
     * rows so the NEXT batch's twins of these vectors are caught.
-    * O(batch) parquet appends; the index never rewrites. `occ` is the
+    * O(batch) commits; the index never rewrites. `occ` is the
     * within-batch occupancy (see [[writeEmbedIndex]]); duplicate
     * vec_ids across replayed appends are tolerated by the probe's
     * dropDuplicates read.
     */
   def appendToEmbedIndex(admitted: DataFrame, path: String,
                          tables: Int = PairTables,
-                         planes: Int = PairPlanes): Unit = {
-    // The admitted batch is typically a verdict-chain subplan (index
-    // probe + semi-join); two writes would re-run it end-to-end — pin.
-    val v = withQuant(admitted).filter(col("n2") > 0)
+                         planes: Int = PairPlanes): Unit =
+    commitEmbedIndex(admitted, path, tables, planes, SinkOps.CommitSpec())
+
+  /** The one body of [[writeEmbedIndex]] (a replacing commit) and
+    * [[appendToEmbedIndex]] (an appending one): each index table is a
+    * [[SinkOps.commitVersion]] table under `path`.
+    */
+  private def commitEmbedIndex(rows: DataFrame, path: String, tables: Int,
+                               planes: Int, spec: SinkOps.CommitSpec): Unit = {
+    // Two commits over one quantized frame — pin it so the second
+    // re-reads the cache instead of re-quantizing (or re-running an
+    // expensive upstream subplan, such as an append's verdict chain).
+    val v = withQuant(rows).filter(col("n2") > 0)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      v.write.mode("append").parquet(path + "/vectors")
-      buckets(v, tables, planes)
-        .withColumn("occ", count(lit(1)).over(Window.partitionBy("t", "bucket")))
-        .write.mode("append").parquet(path + "/buckets")
+      SinkOps.commitVersion(v, path + "/vectors", spec)
+      SinkOps.commitVersion(buckets(v, tables, planes)
+        .withColumn("occ", count(lit(1)).over(Window.partitionBy("t", "bucket"))),
+        path + "/buckets", spec)
     } finally { v.unpersist(); () }
+    ()
   }
 
   /** Embed-index COMPACTION — [[graft.ops.DedupOps.compactMinhashIndex]]'s
@@ -792,42 +796,27 @@ object SimilarityOps {
     * table — restoring the exact [[writeEmbedIndex]] snapshot
     * invariant that appends erode (each append only knows its own
     * within-batch occupancy, the documented drift accepted between
-    * compactions). Generation swap through the Hadoop FileSystem API;
-    * probe verdicts are unchanged wherever the occupancy guard was not
-    * binding, and wherever it WAS binding the refreshed occ is the
-    * correct one.
+    * compactions). Each table's rewrite commits as a new version that
+    * replaces the snapshot ([[SinkOps.rewriteVersion]]); probe verdicts
+    * are unchanged wherever the occupancy guard was not binding, and
+    * wherever it WAS binding the refreshed occ is the correct one.
     */
-  def compactEmbedIndex(path: String, targetFiles: Int = 0): Unit = {
+  def compactEmbedIndex(path: String): Unit = {
     val spark = org.apache.spark.sql.SparkSession.active
-    // targetFiles = 0 (default) derives the compacted generation's file
-    // count from table bytes / 512 MB — a 1 B-vector index rewrites in
-    // parallel instead of funneling through one task (repartition, not
-    // coalesce: coalesce caps the distinct's output parallelism too).
-    def files(live: String): Int =
-      if (targetFiles >= 1) targetFiles
-      else graft.ops.SinkOps.derivedFileCount(spark, live)
-    def swap(live: String, df: DataFrame): Unit = {
-      val tmp = live + "_compact_tmp"
-      df.write.mode("overwrite").parquet(tmp)
-      val liveP = new org.apache.hadoop.fs.Path(live)
-      val fs = liveP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(liveP, true)
-      if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), liveP))
-        throw new IllegalStateException(
-          s"compactEmbedIndex: rename $tmp -> $live failed")
-    }
-    val vLive = path + "/vectors"
-    swap(vLive, Tables.parquet(spark, vLive).distinct()
-      .repartition(files(vLive)))
+    // repartition, not coalesce: coalesce would cap the distinct's
+    // output parallelism too.
+    SinkOps.rewriteVersion(spark, path + "/vectors")(
+      _.distinct().repartition(_))
     // One exchange: hash-partitioning on exactly (t, bucket) satisfies
     // the occ window's required clustering, so the repartition both
     // sizes the write and feeds the window without a second shuffle.
-    val bLive = path + "/buckets"
-    val b = Tables.parquet(spark, bLive)
-      .select("vec_id", "t", "bucket").distinct()
-      .repartition(files(bLive), col("t"), col("bucket"))
-    swap(bLive, b.withColumn("occ",
-      count(lit(1)).over(Window.partitionBy("t", "bucket"))))
+    SinkOps.rewriteVersion(spark, path + "/buckets") { (b, n) =>
+      b.select("vec_id", "t", "bucket").distinct()
+        .repartition(n, col("t"), col("bucket"))
+        .withColumn("occ",
+          count(lit(1)).over(Window.partitionBy("t", "bucket")))
+    }
+    ()
   }
 
   /** Distinct (arrival vec_id, index vec_id, cos_sim) matches clearing
@@ -841,13 +830,13 @@ object SimilarityOps {
                                 minCos: Double, maxBucket: Int,
                                 tables: Int, planes: Int): DataFrame = {
     val spark = arr.sparkSession
-    val idxB = Tables.parquet(spark, indexPath + "/buckets")
+    val idxB = SinkOps.readVersion(spark, indexPath + "/buckets")
       .filter(col("occ") <= maxBucket)
       .select(col("vec_id").as("idx_id"), col("t"), col("bucket"))
     // dropDuplicates: a replayed append (task retry) may land the same
     // vector twice; a duplicated join key would duplicate match rows.
     // vec_id-keyed, linear.
-    val idxV = Tables.parquet(spark, indexPath + "/vectors")
+    val idxV = SinkOps.readVersion(spark, indexPath + "/vectors")
       .select(col("vec_id").as("idx_id"), col("qv").as("qb"),
         col("n2").as("nb"))
       .dropDuplicates("idx_id")
@@ -882,14 +871,14 @@ object SimilarityOps {
     // snapshot (spec-pinned); `known` identifies the session and
     // documents the call-after-write contract.
     val spark = known.sparkSession
-    val bo = Tables.parquet(spark, path + "/buckets")
+    val bo = SinkOps.readVersion(spark, path + "/buckets")
       .filter(col("occ") <= maxBucket)
     val pairs = bo.as("x").join(bo.as("y"),
         col("x.t") === col("y.t") && col("x.bucket") === col("y.bucket") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("vec_a"), col("y.vec_id").as("vec_b"))
       .distinct()
-    val v = Tables.parquet(spark, path + "/vectors")
+    val v = SinkOps.readVersion(spark, path + "/vectors")
     val va = v.select(col("vec_id").as("vec_a"), col("qv").as("qa"),
       col("n2").as("na"))
     val vb = v.select(col("vec_id").as("vec_b"), col("qv").as("qb"),
@@ -897,10 +886,11 @@ object SimilarityOps {
     val near = pairs.join(va, "vec_a").join(vb, "vec_b")
       .filter(cosine(dotL(col("qa"), col("qb")), col("na"), col("nb"))
         >= minCos)
-    GraphOps.connectedComponents(
+    SinkOps.commitVersion(GraphOps.connectedComponents(
         near.select(col("vec_a").as("a"), col("vec_b").as("b")))
-      .select(col("node").as("vec_id"), col("cluster"))
-      .write.mode("overwrite").parquet(path + "/clusters")
+      .select(col("node").as("vec_id"), col("cluster")),
+      path + "/clusters", SinkOps.CommitSpec(carryForward = false))
+    ()
   }
 
   /** Incremental cluster ASSIGNMENT for vectors — the O(arrivals)
@@ -916,7 +906,7 @@ object SimilarityOps {
   def assignEmbedClustersIncremental(arrivals: DataFrame, indexPath: String,
                                      minCos: Double = 0.95): DataFrame = {
     val spark = arrivals.sparkSession
-    val clusters = Tables.parquet(spark, indexPath + "/clusters")
+    val clusters = SinkOps.readVersion(spark, indexPath + "/clusters")
       .withColumnRenamed("vec_id", "idx_id")
     val arr = withQuant(arrivals).filter(col("n2") > 0)
     val assigned = embedIndexMatches(arr, indexPath, minCos,

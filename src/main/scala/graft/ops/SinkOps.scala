@@ -102,30 +102,30 @@ object SinkOps {
       .write.mode(SaveMode.Overwrite).parquet(outPath)
   }
 
-  /** The production compaction arithmetic as code: target file count
-    * for a rewrite of everything under `path` = ceil(total bytes /
-    * `desiredBytes`), min 1. Index compactions call this instead of
-    * defaulting to a single-task write — at a 1 B-vector index a
-    * hardcoded 1 funnels the whole rewrite through one core, while
-    * bytes/512MB keeps the write as parallel as the data is large.
-    * One recursive listing; no data read.
+  /** Replace the head snapshot of the [[commitVersion]] table at `path`
+    * with `rewrite(head, files)` as a new version — the persisted
+    * indexes' compaction (a distinct, an occupancy refresh, a
+    * re-aggregation of partials). `files` is the production compaction
+    * arithmetic: ceil(head bytes / 512 MB), min 1, so a 1 B-row index
+    * rewrites across as many tasks as it has data instead of
+    * funnelling through one core. Only the head's data dirs count —
+    * superseded generations stay under the root until VACUUM and are
+    * no part of the rewrite. The old generation stays readable at its
+    * version, and a rewrite that fails before its manifest leaves the
+    * head as it was. Returns the new version.
     */
-  def derivedFileCount(spark: org.apache.spark.sql.SparkSession,
-                       path: String,
-                       desiredBytes: Long = 512L << 20): Int = {
-    require(desiredBytes >= 1)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) 1
-    else {
-      var total = 0L
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val f = it.next()
-        if (!f.getPath.getName.startsWith("_")) total += f.getLen
-      }
-      math.max(1, ((total + desiredBytes - 1) / desiredBytes)).toInt
-    }
+  def rewriteVersion(spark: org.apache.spark.sql.SparkSession, path: String)
+                    (rewrite: (DataFrame, Int) => DataFrame): Int = {
+    val (root, fs) = tableAt(spark, path)
+    val head = versionOr(fs, root, None)
+    val bytes = manifestDirs(fs, root, head).filterNot(isOpLine)
+      .map(d => fs.getContentSummary(
+        new org.apache.hadoop.fs.Path(root, d)).getLength)
+      .sum
+    val fileBytes = 512L << 20
+    val files = math.max(1L, (bytes + fileBytes - 1) / fileBytes).toInt
+    commitVersion(rewrite(readVersion(spark, path, Some(head)), files),
+      path, CommitSpec(carryForward = false))
   }
 
   /** Targeted delete on a hive-partitioned parquet lake table — the
@@ -1592,14 +1592,6 @@ object SinkOps {
       manifestDirs(fs, root, v) // loud if v expired/absent
     }
   }
-
-  /** [[restoreVersion]] addressed by TIMESTAMP — "roll back to how the
-    * table looked at t": the target resolves through the same
-    * monotone-stamp binary search as TIMESTAMP AS OF reads.
-    */
-  def restoreVersionAsOf(spark: org.apache.spark.sql.SparkSession,
-                         path: String, tsMillis: Long): Int =
-    restoreVersion(spark, path, versionAsOf(spark, path, tsMillis))
 
   /** SHALLOW CLONE — fork a snapshot into a NEW table with ZERO data
     * copied (Delta's SHALLOW CLONE): the clone's first manifest

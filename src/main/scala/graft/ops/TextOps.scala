@@ -75,9 +75,6 @@ object TextOps {
   def hash60Builtin(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
 
-  /** hash60 reduced mod 2^31-1 — safe for modular multiply in int64. */
-  def hash31(c: Column): Column = hash60(c) % 2147483647L
-
   /** Sentence-boundary class: one-or-more enders followed by whitespace.
     * No lookbehind (RE2 has none), so the delimiter run is consumed —
     * identically in both engines; the oracle uses the same pattern.

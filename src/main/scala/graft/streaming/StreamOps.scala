@@ -816,8 +816,9 @@ object StreamOps {
     *  3. upsert the canonical ledger: per touched cluster the
     *     post-batch incumbent is the better of (old incumbent, best
     *     batch arrival) under the shared (n_tok desc, id asc) order —
-    *     a full-outer merge on the ≤|touched-clusters| ledger, the
-    *     old ledger eagerly checkpointed before the overwrite.
+    *     a full-outer merge on the ≤|touched-clusters| ledger,
+    *     committed as a new ledger version that replaces the snapshot
+    *     (the merge reads the old version's immutable dirs).
     *
     * A later-batch exact twin of a batch-1 dethroner must come back
     * `kept_existing` against the UPDATED incumbent — the outcome that
@@ -834,11 +835,11 @@ object StreamOps {
           .localCheckpoint(true) // judged vs the PRE-batch artifacts
         // Index + cluster-map maintenance (O(batch) appends).
         graft.ops.DedupOps.appendToMinhashIndex(batch, indexPath)
-        v.select(col("doc_id"), col("cluster"))
-          .write.mode(SaveMode.Append).parquet(indexPath + "/clusters")
-        // Ledger upsert: old ledger pinned eagerly, then overwritten.
-        val led = Tables.parquet(spark, indexPath + "/canonicals")
-          .localCheckpoint(true)
+        graft.ops.SinkOps.commitVersion(
+          v.select(col("doc_id"), col("cluster")), indexPath + "/clusters")
+        // Ledger upsert: a versioned read names the old generation's
+        // immutable dirs, so the replacing commit needs no pin.
+        val led = graft.ops.SinkOps.readVersion(spark, indexPath + "/canonicals")
         val bestArr = v.groupBy("cluster")
           .agg(max(struct(col("n_tok"), (-col("doc_id")).as("neg"),
             col("doc_id").as("node"))).as("b"))
@@ -848,7 +849,7 @@ object StreamOps {
           col("a_tok") > col("tok_kept") ||
           (col("a_tok") === col("tok_kept") &&
             col("a_id") < col("canon_id"))
-        led.join(bestArr, Seq("cluster"), "full")
+        val merged = led.join(bestArr, Seq("cluster"), "full")
           .select(col("cluster"),
             when(col("a_id").isNull, col("canon_id"))
               .when(arrWins, col("a_id"))
@@ -856,8 +857,8 @@ object StreamOps {
             when(col("a_id").isNull, col("tok_kept"))
               .when(arrWins, col("a_tok"))
               .otherwise(col("tok_kept")).as("tok_kept"))
-          .write.mode(SaveMode.Overwrite)
-          .parquet(indexPath + "/canonicals")
+        graft.ops.SinkOps.commitVersion(merged, indexPath + "/canonicals",
+          graft.ops.SinkOps.CommitSpec(carryForward = false))
         Some(v)
     }
   }
@@ -1393,12 +1394,13 @@ object StreamOps {
     val ev = stagingShape(events)
     val vDir = s"$stagingDir/views"
     val cDir = s"$stagingDir/clicks"
-    if (StagedDirs.add(stagingDir)) {
-      ev.filter(col("event_type") === "view").repartition(nParts)
-        .write.mode("overwrite").parquet(vDir)
-      ev.filter(col("event_type") === "click").repartition(nParts)
-        .write.mode("overwrite").parquet(cDir)
-    }
+    // One slice per file with ascending mtimes, so which files share a
+    // micro-batch — and so the batch count — is the same on every run.
+    if (StagedDirs.add(stagingDir))
+      for ((dir, kind) <- Seq(vDir -> "view", cDir -> "click");
+           i <- 0 until nParts)
+        writeSliceFile(ev.filter(col("event_type") === kind &&
+          pmod(col("event_id"), lit(nParts.toLong)) === i), dir, i)
     val rs = replaySession(events.sparkSession)
     // Inner join under the replay horizon: state is never evicted, so
     // the paired set is batch-granularity-independent — the collapsed

@@ -655,6 +655,18 @@ class MultimodalStreamSpec extends SparkSpec {
     assert(slices.map(_._2) === idx.map(StreamOps.SliceMtime0 + _ * 60000L))
     assert(slices.map(_._2).sliding(2).forall { case Seq(a, b) => a < b })
 
+    // stream-join staging: each side's four slices, one file each, so
+    // the micro-batch grouping is the same on every run
+    val joinStaging = java.nio.file.Files
+      .createTempDirectory("graft-join-slices").toString + "/staged"
+    assert(StreamOps.streamJoinReplay(ev, joinStaging).count() > 0)
+    for (side <- Seq("views", "clicks")) {
+      val js = stagedSlices(s"$joinStaging/$side")
+      assert(js.map(_._1) === (0 until 4).map(i => f"slice-$i%04d.parquet"))
+      assert(js.map(_._2) ===
+        (0 until 4).map(StreamOps.SliceMtime0 + _ * 60000L))
+    }
+
     // id-range staging: one slice per boundary interval, each holding
     // exactly its interval's ids
     val docs = Seq((1L, "en", "hello world"), (2L, "en", "hello world"),

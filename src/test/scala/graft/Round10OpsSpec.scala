@@ -662,7 +662,8 @@ class Round10OpsSpec extends SparkSpec {
     assert(got(250L).getAs[Long]("new_canon_id") === 150L)
     assert(got(250L).getAs[Long]("cluster") === 150L)
     // The persisted ledger after the run carries the updated incumbents.
-    val led = spark.read.parquet(idx + "/canonicals").collect()
+    val led = graft.ops.SinkOps.readVersion(spark, idx + "/canonicals")
+      .collect()
       .map(r => r.getAs[Long]("cluster") -> r.getAs[Long]("canon_id")).toMap
     assert(led(1L) === 100L)
     assert(led(150L) === 150L)

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.CurationOps
+import graft.ops.{CurationOps, SinkOps}
 
 /** Specs for the late-round-9 additions: retrieval-quality evaluation
   * (rankEval) and the streaming windowed top-k leaderboard.
@@ -129,11 +129,11 @@ class Round9cOpsSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2))))
       .toMap
     val before = verdict()
-    val rawBuckets = spark.read.parquet(s"$idx/buckets")
+    val rawBuckets = SinkOps.readVersion(spark, s"$idx/buckets")
     assert(rawBuckets.count() >
       rawBuckets.select("vec_id", "t", "bucket").distinct().count())
     SimilarityOps.compactEmbedIndex(idx)
-    val b = spark.read.parquet(s"$idx/buckets")
+    val b = SinkOps.readVersion(spark, s"$idx/buckets")
     assert(b.count() ===
       b.select("vec_id", "t", "bucket").distinct().count())
     // occ now equals the GLOBAL occupancy of each (t, bucket).
@@ -141,7 +141,7 @@ class Round9cOpsSpec extends SparkSpec {
       .agg(count(lit(1)).as("n"), max("occ").as("mx"), min("occ").as("mn"))
       .filter(col("n") =!= col("mx") || col("n") =!= col("mn"))
     assert(occBad.isEmpty, "occ must equal global bucket occupancy")
-    val v = spark.read.parquet(s"$idx/vectors")
+    val v = SinkOps.readVersion(spark, s"$idx/vectors")
     assert(v.count() === v.distinct().count())
     assert(verdict() === before)
   }
@@ -160,14 +160,62 @@ class Round9cOpsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getLong(3)))
       .toSet
     val before = serve()
-    val tdBefore = spark.read.parquet(s"$path/termdf")
+    val tdBefore = SinkOps.readVersion(spark, s"$path/termdf")
     assert(tdBefore.count() > tdBefore.select("w").distinct().count(),
       "two generations must hold per-batch termdf partials")
     CurationOps.compactBm25Index(path)
-    val td = spark.read.parquet(s"$path/termdf")
+    val td = SinkOps.readVersion(spark, s"$path/termdf")
     assert(td.count() === td.select("w").distinct().count())
-    assert(spark.read.parquet(s"$path/stats").count() === 1L)
+    assert(SinkOps.readVersion(spark, s"$path/stats").count() === 1L)
     assert(serve() === before, "compaction must be serve-neutral")
+  }
+
+  test("index compactions commit a new version: the pre-compaction " +
+      "generation stays readable at head - 1 and no tmp dir is left") {
+    import graft.ops.{DedupOps, SimilarityOps}
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+      .filter(col("doc_id") < 60)
+    val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+      .filter(col("vec_id") < 60)
+    // (family, its tables, build + append, compaction)
+    val cases = Seq[(String, Seq[String], String => Unit, String => Unit)](
+      ("minhash", Seq("bands", "digests"), { p =>
+        DedupOps.writeMinhashIndex(docs, p)
+        DedupOps.appendToMinhashIndex(docs, p) // replayed delivery
+      }, DedupOps.compactMinhashIndex),
+      ("embed", Seq("vectors", "buckets"), { p =>
+        SimilarityOps.writeEmbedIndex(emb, p)
+        SimilarityOps.appendToEmbedIndex(emb, p) // replayed delivery
+      }, SimilarityOps.compactEmbedIndex),
+      ("bm25", Seq("postings", "doclen", "termdf", "stats"), { p =>
+        CurationOps.writeBm25Index(docs.filter(col("doc_id") % 2 === 0), p)
+        CurationOps.appendToBm25Index(docs.filter(col("doc_id") % 2 === 1), p)
+      }, CurationOps.compactBm25Index))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toString).sorted.toSeq
+    def walk(f: java.io.File): Seq[java.io.File] =
+      f +: Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+    for ((family, tables, build, compact) <- cases) {
+      val idx = java.nio.file.Files
+        .createTempDirectory(s"graft_${family}_cmp_versions").toString
+      build(idx)
+      val before = tables.map { t =>
+        val path = s"$idx/$t"
+        t -> ((SinkOps.currentVersion(spark, path),
+          rows(SinkOps.readVersion(spark, path))))
+      }.toMap
+      compact(idx)
+      tables.foreach { t =>
+        val path = s"$idx/$t"
+        val head = SinkOps.currentVersion(spark, path)
+        assert(head === before(t)._1 + 1, s"$family/$t: one new version")
+        assert(rows(SinkOps.readVersion(spark, path, Some(head - 1))) ===
+          before(t)._2, s"$family/$t: pre-compaction rows at head - 1")
+      }
+      assert(!walk(new java.io.File(idx))
+          .exists(_.getName.contains("_compact_tmp")),
+        s"$family: a compaction must leave no tmp dir")
+    }
   }
 
   // ---- PNG metadata chunk walk ----
@@ -335,7 +383,7 @@ class Round9cOpsSpec extends SparkSpec {
       .createTempDirectory("graft_mhidx_cmspec").toString
     DedupOps.writeMinhashIndex(known, idx)
     DedupOps.writeMinhashClusterMap(known, idx)
-    val fromIndex = spark.read.parquet(s"$idx/clusters").collect()
+    val fromIndex = SinkOps.readVersion(spark, s"$idx/clusters").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val remined = GraphOps.connectedComponents(
         DedupOps.minhashPairs(known.filter(col("text").isNotNull))
@@ -352,7 +400,7 @@ class Round9cOpsSpec extends SparkSpec {
       .createTempDirectory("graft_embidx_cmspec").toString
     SimilarityOps.writeEmbedIndex(known, idx)
     SimilarityOps.writeEmbedClusterMap(known, idx)
-    val fromIndex = spark.read.parquet(s"$idx/clusters").collect()
+    val fromIndex = SinkOps.readVersion(spark, s"$idx/clusters").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val remined = GraphOps.connectedComponents(
         SimilarityOps.embedNearDupPairs(known)

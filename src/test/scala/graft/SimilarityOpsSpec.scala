@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.ops.SimilarityOps
+import graft.ops.{SimilarityOps, SinkOps}
 
 class SimilarityOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -329,7 +329,7 @@ class SimilarityOpsSpec extends SparkSpec {
     val known = SimilarityOps.embedDupCorpus(emb)
     SimilarityOps.writeEmbedIndex(known, idx)
     SimilarityOps.writeEmbedClusterMap(known, idx)
-    val mapBefore = spark.read.parquet(idx + "/clusters").collect()
+    val mapBefore = SinkOps.readVersion(spark, idx + "/clusters").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     // Exact copy of vec 4 (+3M): its matches are vec 4 itself (always —
     // identical buckets) and usually the zeroed-first +1M twin; the min
@@ -347,7 +347,7 @@ class SimilarityOpsSpec extends SparkSpec {
     assert(got(3000004L)._2 >= 1L)
     assert(got(4000005L) === ((4000005L, 0L))) // fresh singleton
     // Assignment never mutates the persisted map.
-    val mapAfter = spark.read.parquet(idx + "/clusters").collect()
+    val mapAfter = SinkOps.readVersion(spark, idx + "/clusters").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(mapAfter === mapBefore && mapBefore.nonEmpty)
   }
